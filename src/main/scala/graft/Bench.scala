@@ -146,14 +146,20 @@ object Bench {
     sample("start", sentinels) // before Spark: loadavg still uncontaminated
     // r16: shared engine shuffle tuning (GraftSession.shuffleTuning — the
     // Unsafe-writer + local-dir fix; same master/core-count contract, same
-    // timing methodology, every query still computes from parquet)
-    val spark = GraftSession.shuffleTuning(SparkSession.builder()
+    // timing methodology, every query still computes from parquet). The
+    // floors were pinned with shuffle and spill on tmpfs, so the bench
+    // opts in to it; SPARK_GRAFT_LOCAL_DIR still overrides.
+    val shm = new java.io.File("/dev/shm")
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.shuffleTuning(
+      if (shm.isDirectory && shm.canWrite) builder.config("spark.local.dir", "/dev/shm/graft-local")
+      else builder)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up on the smallest fixture: whole-stage codegen compilation is

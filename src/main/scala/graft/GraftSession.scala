@@ -25,11 +25,11 @@ object GraftSession {
     *    path only ever applies to shuffles with <= 200 reduce partitions,
     *    which at 100 TB are the tiny catalog-sized exchanges; the big
     *    shuffles already use the Unsafe writer.
-    *  - spark.local.dir on tmpfs (when /dev/shm exists): shuffle files
-    *    and block-manager spill are latency-bound here, not
-    *    capacity-bound. Parameterised: SPARK_GRAFT_LOCAL_DIR overrides
-    *    (production: point at the NVMe array; a 100 TB shuffle does NOT
-    *    belong in RAM — the default only stands on a one-box sandbox).
+    *  - spark.local.dir from SPARK_GRAFT_LOCAL_DIR when set, else Spark's
+    *    own default (production: point it at the NVMe array). tmpfs is
+    *    opt-in: shuffle files and spill of a one-box benchmark are
+    *    latency-bound, not capacity-bound, so `Bench` puts them on
+    *    /dev/shm, but a spill-heavy job must not fill RAM-backed tmpfs.
     *  - AQE coalesce floor 64k (default 1m): parallelism-first coalescing
     *    targets all cores but is FLOORED by minPartitionSize, so
     *    byte-small intermediates (candidate pairs, node tables — two
@@ -48,12 +48,8 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-local")
-      else None
-    }
-    localDir.fold(tuned)(d => tuned.config("spark.local.dir", d))
+    sys.env.get("SPARK_GRAFT_LOCAL_DIR")
+      .fold(tuned)(d => tuned.config("spark.local.dir", d))
   }
 
   def builder(appName: String = "graft",

@@ -35,10 +35,8 @@ object SparkEntry {
     val src = sources.Tables.events(s, dir)
       .select(col("event_id").as("row_id"), col("ts").as("TIME"),
         col("value").as("Traffic"))
-    val named = TrafficTransform.normalizeColumnNames(src)
-    val parsed = TrafficTransform.parseTimeColumn(named)
-    val enriched = TrafficTransform.addCreatedAt(parsed, runTs)
-    TrafficTransform.requireNumeric(enriched, "traffic")
+    val enriched = TrafficTransform.requireNumeric(
+      TrafficTransform.prepare(src, runTs), "traffic")
     enriched.select(
       col("row_id"),
       date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("time"),

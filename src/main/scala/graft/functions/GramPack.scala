@@ -22,6 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * text (per-char substring re-scans the string for multibyte safety)
   * and still net-slower from the gram itself; reading bytes is O(1).
   *
+  * A byte with the high bit set is outside that alphabet and would
+  * collide with its low seven bits, so it fails loudly instead (as
+  * [[HexPack]] does for a non-hex byte).
+  *
   * CodegenFallback: the surrounding stage stays whole-stage-codegen'd
   * (the MinHashSignature precedent); eval reads <= 8 bytes.
   */
@@ -47,7 +51,10 @@ case class GramPack(child: Expression, lo: Int, hi: Int)
     while (i <= hi) {
       // beyond-end bytes fold as 0: only reachable when hi >= k for a
       // k-byte gram, which the caller never does (bounds follow k)
-      v = (v << 7) | (if (i < n) (s.getByte(i) & 0x7fL) else 0L)
+      val b = if (i < n) s.getByte(i) else 0
+      if (b < 0) throw new IllegalArgumentException(
+        s"gram_pack: non-7-bit byte ${b & 0xff} at $i in '$s'")
+      v = (v << 7) | b
       i += 1
     }
     v

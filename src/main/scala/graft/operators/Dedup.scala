@@ -1378,12 +1378,12 @@ object Dedup {
     // operators hash/compare longs instead of strings, and the packed
     // projection is a flat codegen'd arithmetic chain computed straight
     // off the document text — the per-gram string is never materialized
-    // at all.
+    // at all. A gram of k <= 8 chars fits g1 alone; g2 is then constant.
     val byDoc = (if (k <= 16) {
       graft.functions.GraftFunctions.register(docs.sparkSession)
       gramRows(docs, k).select(col("doc_id"), col("pos"),
         expr(s"gram_pack(gram, 0, ${math.min(7, k - 1)})").as("g1"),
-        expr(s"gram_pack(gram, 8, ${k - 1})").as("g2"))
+        (if (k <= 8) lit(0L) else expr(s"gram_pack(gram, 8, ${k - 1})")).as("g2"))
     } else {
       // k > 16 exceeds two 7-bit longs: keep the exact string key
       gramRows(docs, k).select(col("doc_id"), col("pos"),

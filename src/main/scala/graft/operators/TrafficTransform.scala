@@ -14,9 +14,10 @@ import graft.TransformError
   * CollapseProject/ColumnPruning fuse the chain into a single
   * whole-stage-codegen'd projection over the scan.
   *
-  * Validation combinators that must inspect data (null checks) run as ONE
-  * single-pass aggregate — never a per-column `count()` loop — so the cost
-  * at 100 TB is one scan, not k scans.
+  * The checks that must inspect data (T2 strictness, T6 nulls) read ONE
+  * single-pass aggregate, [[census]] — never a per-check `count()` — so
+  * the cost at 100 TB is one scan, not k scans. The same pass carries the
+  * row count, so a caller that also needs it launches no second job.
   */
 object TrafficTransform {
 
@@ -28,9 +29,9 @@ object TrafficTransform {
     * The reference parses with `dayfirst=True` (docstring says dd/mm/YY) and
     * raises if ANY value fails to parse (transform.py:24-25). Spark's
     * `to_timestamp` returns null on failure, so strictness is enforced by
-    * a null-delta assertion in [[requireNoNewNulls]] at action time; here we
-    * only build the plan. Already-timestamp input passes through unchanged
-    * (the XLS path materializes TimestampType, SURVEY §1.4).
+    * [[requireValid]] on the [[census]] null count; here we only build the
+    * plan. Already-timestamp input passes through unchanged (the XLS path
+    * materializes TimestampType, SURVEY §1.4).
     */
   def parseTimeColumn(df: DataFrame, column: String = "time"): DataFrame =
     df.schema(column).dataType match {
@@ -38,7 +39,7 @@ object TrafficTransform {
       case StringType =>
         // day-first patterns, most-specific first. try_to_timestamp (null on
         // mismatch, even under ANSI mode) + coalesce; strictness is restored
-        // by assertParsedFully's null check, matching the reference's
+        // by requireValid's null check, matching the reference's
         // fail-on-any-unparsed contract.
         val patterns = Seq(
           "dd/MM/yyyy HH:mm:ss", "dd/MM/yyyy HH:mm", "dd/MM/yyyy",
@@ -53,18 +54,6 @@ object TrafficTransform {
       case other =>
         throw TransformError(s"Cannot parse '$column' of type $other as time")
     }
-
-  /** T2 strictness — fail if parsing introduced nulls (or input had NaT).
-    * Reference behavior: TransformationError on any unparseable value
-    * (transform.py:21-25). One aggregate pass.
-    */
-  def assertParsedFully(df: DataFrame, column: String = "time"): DataFrame = {
-    val bad = df.filter(col(column).isNull).limit(1).count()
-    if (bad > 0)
-      throw TransformError(
-        s"Failed to parse '$column' values as datetime (found nulls after parse)")
-    df
-  }
 
   /** T4 — run-constant ingestion timestamp (reference: transform.py:31-35).
     * The reference freezes ONE wall-clock value per run (transform.py:34);
@@ -88,20 +77,30 @@ object TrafficTransform {
     df
   }
 
-  /** T6 — no-null contract on the given columns (reference:
-    * transform.py:45-47). Single-pass aggregate over ALL columns at once
-    * (one scan regardless of column count), erroring with the first
-    * offending column name like the reference.
+  /** What the data-touching checks read: the row count and the nulls in
+    * `time` (after the T2 parse) and `traffic`.
     */
-  def requireNoNulls(df: DataFrame, columns: Seq[String]): DataFrame = {
-    val aggs = columns.map(c =>
-      count(when(col(c).isNull, lit(1))).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    columns.zipWithIndex.foreach { case (c, i) =>
-      if (row.getLong(i) > 0)
-        throw TransformError(s"Column '$c' contains ${row.getLong(i)} null values")
-    }
-    df
+  final case class Census(rows: Long, nullTime: Long, nullTraffic: Long)
+
+  /** The one aggregate pass over a [[prepare]]d frame that every strict
+    * check reads (one scan regardless of how many checks read it).
+    */
+  def census(df: DataFrame): Census = {
+    def nulls(c: String) = count(when(col(c).isNull, lit(1)))
+    val row = df.agg(count(lit(1)), nulls("time"), nulls("traffic")).head()
+    Census(row.getLong(0), row.getLong(1), row.getLong(2))
+  }
+
+  /** T2 strictness, then T6, in the reference's order: a null `time` after
+    * the parse is an unparseable value or NaT (transform.py:21-25), a null
+    * `traffic` breaks the no-null contract (transform.py:45-47).
+    */
+  def requireValid(c: Census): Unit = {
+    if (c.nullTime > 0)
+      throw TransformError(
+        "Failed to parse 'time' values as datetime (found nulls after parse)")
+    if (c.nullTraffic > 0)
+      throw TransformError(s"Column 'traffic' contains ${c.nullTraffic} null values")
   }
 
   /** T7 — numeric-dtype contract (reference: transform.py:49-50).
@@ -119,19 +118,27 @@ object TrafficTransform {
   def project(df: DataFrame, columns: Seq[String]): DataFrame =
     df.select(columns.map(col): _*)
 
+  /** T1-T5, all plan-building: lower → require columns → parse →
+    * created_at. Throws only on metadata (a missing column, a `time` type
+    * that cannot be parsed).
+    */
+  def prepare(df: DataFrame, runTs: Timestamp): DataFrame = {
+    val named = requireColumns(normalizeColumnNames(df), Seq("time", "traffic"))
+    addCreatedAt(parseTimeColumn(named), runTs)
+  }
+
+  /** T7-T8 on a [[prepare]]d frame: numeric `traffic`, final projection. */
+  def finish(df: DataFrame): DataFrame =
+    project(requireNumeric(df, "traffic"), Seq("time", "traffic", "created_at"))
+
   /** The full transform (reference: transform() transform.py:55-63):
-    * lower → parse(strict) → created_at → validate → project.
-    * Everything except the two data-touching assertions is plan-building.
+    * [[prepare]] → strict checks on one [[census]] → [[finish]]. The
+    * census is the only job. No step filters, so the output has exactly
+    * the input's rows.
     */
   def apply(df: DataFrame, runTs: Timestamp, strict: Boolean = true): DataFrame = {
-    val named = normalizeColumnNames(df)
-    requireColumns(named, Seq("time", "traffic"))
-    val parsed = parseTimeColumn(named)
-    val checked = if (strict) assertParsedFully(parsed) else parsed
-    val enriched = addCreatedAt(checked, runTs)
-    requireColumns(enriched, Seq("time", "traffic", "created_at"))
-    if (strict) requireNoNulls(enriched, Seq("time", "traffic"))
-    requireNumeric(enriched, "traffic")
-    project(enriched, Seq("time", "traffic", "created_at"))
+    val enriched = prepare(df, runTs)
+    if (strict) requireValid(census(enriched))
+    finish(enriched)
   }
 }

@@ -16,6 +16,11 @@ import graft.sources.XlsSource
 /** One pipeline run's outcome (reference logs these counts at
   * extract.py:79, transform.py:62, load.py:108-109 and banners them at
   * __main__.py:70).
+  *
+  * `rowsExtracted` and `rowsTransformed` both come from the run's one
+  * validation pass ([[TrafficTransform.census]]): the transform only
+  * projects and never drops or adds a row, so the two are equal by
+  * construction. `rowsLoaded` is counted by the warehouse write itself.
   */
 final case class RunReport(
     rowsExtracted: Long,
@@ -43,14 +48,21 @@ final class EtlPipeline(spark: SparkSession, config: EtlConfig) {
 
     log.info("=== EXTRACT ===")
     val raw = extract(config.inputUri)
-    val extracted = raw.count()
-    if (extracted == 0) throw ExtractError("Extracted 0 rows") // extract.py:76-77
-    log.info(s"Extracted $extracted rows")
+    // an empty source is an extract error even where its (inferred) types
+    // would fail the transform's metadata checks first
+    val enriched =
+      try TrafficTransform.prepare(raw, runTs)
+      catch { case _: TransformError if raw.isEmpty => throw emptySource }
+    // the run's one validation pass, before anything is written: a bad
+    // input fails the run with no artifact left behind
+    val census = TrafficTransform.census(enriched)
+    if (census.rows == 0) throw emptySource
+    log.info(s"Extracted ${census.rows} rows")
 
     log.info("=== TRANSFORM ===")
-    val transformed = TrafficTransform(raw, runTs)
-    val nTransformed = transformed.count()
-    log.info(s"Transformed $nTransformed rows")
+    TrafficTransform.requireValid(census)
+    val transformed = TrafficTransform.finish(enriched)
+    log.info(s"Transformed ${census.rows} rows")
 
     log.info("=== LOAD ===")
     // L3 backup of raw input (reference: __main__.py:61-63); keep the
@@ -74,13 +86,15 @@ final class EtlPipeline(spark: SparkSession, config: EtlConfig) {
     log.info(s"Loaded $loaded rows to ${config.tableId}")
 
     log.info("=== COMPLETE ===")
-    RunReport(extracted, nTransformed, loaded, backupUri, csvUri, warehousePath, stamp)
+    RunReport(census.rows, census.rows, loaded, backupUri, csvUri, warehousePath, stamp)
   }
+
+  private def emptySource = ExtractError("Extracted 0 rows") // extract.py:76-77
 
   /** S1/S2 — source scan. XLS goes through the driver-side BIFF8 decode;
     * CSV/parquet read natively (schema inferred for CSV like pandas does,
-    * extract.py:60). Post-read contract checks S3/S4 run in `run()` /
-    * TrafficTransform.
+    * extract.py:60). The post-read row-count check S3 runs in `run()`, on
+    * the validation pass.
     */
   private def extract(uri: String): DataFrame = {
     try {

@@ -36,10 +36,11 @@ object Sinks {
 
   /** L4 — warehouse load with append/truncate disposition (reference:
     * load_to_bigquery load.py:67-110). BigQuery's REQUIRED mode → we assert
-    * the frame's contract upstream (TrafficTransform.requireNoNulls) since
-    * Parquet happily stores nulls. Returns the loaded row count of THIS
-    * batch like the reference (load.py:108-109 reports the load job's own
-    * output_rows) — a table-total would over-report under Append.
+    * the frame's contract upstream (TrafficTransform.requireValid, before
+    * any write) since Parquet happily stores nulls. Returns the loaded row
+    * count of THIS batch like the reference (load.py:108-109 reports the
+    * load job's own output_rows) — a table-total would over-report under
+    * Append.
     */
   /** @param partitionOn optional column names to partition the table by
     *   (e.g. a derived date column). At warehouse scale a date-partitioned

@@ -37,12 +37,8 @@ object TrafficStream {
       .schema(RawSchema)
       .option("header", "true")
       .csv(rawDir)
-    val transformed = TrafficTransform.project(
-      TrafficTransform.addCreatedAt(
-        TrafficTransform.parseTimeColumn(
-          TrafficTransform.normalizeColumnNames(raw)), runTs),
-      Seq("time", "traffic", "created_at"))
-      // batch strictness (assertParsedFully) is an action, so streaming
+    val transformed = TrafficTransform.finish(TrafficTransform.prepare(raw, runTs))
+      // batch strictness (TrafficTransform.census) is an action, so streaming
       // validation is a filter: malformed rows are dropped, not fatal —
       // count them via the query's numOutputRows metric if auditing
       .filter(org.apache.spark.sql.functions.col("time").isNotNull &&

@@ -42,6 +42,17 @@ class GramPackSpec extends AnyFunSuite with SparkTestBase {
     assert(r.isNullAt(1))
   }
 
+  test("gram_pack rejects a byte with the high bit set instead of colliding") {
+    graft.functions.GraftFunctions.register(spark)
+    // 'é' is two UTF-8 bytes, both >= 0x80; masked to 7 bits they would
+    // pack equal to some 7-bit gram
+    val err = intercept[Exception] {
+      spark.sql("SELECT gram_pack('caf\u00e9', 0, 4)").collect()
+    }
+    assert(err.getMessage.contains("non-7-bit") ||
+      Option(err.getCause).exists(_.getMessage.contains("non-7-bit")))
+  }
+
   test("hex_pack is the base-16 positional fold and rejects non-hex bytes") {
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
@@ -99,10 +110,10 @@ class GramPackSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("substring dedup spans are identical through the packed and string key paths") {
-    // k = 16 packs (two longs); k = 17 exceeds the pack and keeps the
-    // string key — same algorithm either side of the branch. Compare the
-    // k = 16 packed output against a straight re-derivation that groups
-    // on the gram STRING (the pre-pack spelling) at the same k.
+    // every packed k: g1 alone for k <= 8, g1 + g2 up to k = 16 (k = 17
+    // exceeds the pack and keeps the string key). Compare against a
+    // straight re-derivation that groups on the gram STRING (the pre-pack
+    // spelling) at the same k.
     import graft.operators.Dedup
     import spark.implicits._
     val docs = Seq(
@@ -111,8 +122,21 @@ class GramPackSpec extends AnyFunSuite with SparkTestBase {
       (2L, "entirely unrelated content with no shared runs whatsoever!!"),
       (3L, "the quick brown fox jumps over the lazy dog again and again"))
       .toDF("doc_id", "text")
-    val packed = Dedup.substringDedupCore(docs, 16, 100L, 32L).collect()
-    val grams = Dedup.gramRows(docs, 16)
+    (2 to 16).foreach { k =>
+      val packed = Dedup.substringDedupCore(docs, k, 100L, 32L).collect()
+      val reference = stringKeySpans(docs, k, 32L)
+      assert(packed.nonEmpty, s"k = $k: fixture must produce at least one span")
+      assert(packed.map(_.toString).toSeq == reference.map(_.toString).toSeq, s"k = $k")
+    }
+  }
+
+  /** Substring dedup spans re-derived with the gram STRING as the group
+    * key (the pre-pack spelling), in the packed path's output order.
+    */
+  private def stringKeySpans(docs: org.apache.spark.sql.DataFrame, k: Int,
+                             minLen: Long): Array[org.apache.spark.sql.Row] = {
+    import graft.operators.Dedup
+    val grams = Dedup.gramRows(docs, k)
     val byDoc = grams.groupBy(col("gram"), col("doc_id"))
       .agg(collect_list(col("pos")).as("ps"))
     val kept = byDoc.withColumn("df", count(lit(1)).over(
@@ -128,10 +152,8 @@ class GramPackSpec extends AnyFunSuite with SparkTestBase {
                    struct(a.doc_id AS doc_a, b.doc_id AS doc_b,
                           pa AS pa, pb AS pb))))))))""")).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"), col("p.pa"), col("p.pb"))
-    val reference = Dedup.mergeSpans(m, 16, 32L)
+    Dedup.mergeSpans(m, k, minLen)
       .orderBy(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"))
       .collect()
-    assert(packed.nonEmpty, "fixture must produce at least one span")
-    assert(packed.map(_.toString).toSeq == reference.map(_.toString).toSeq)
   }
 }

@@ -1,6 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.config.{EtlConfig, WriteDisposition}
 import graft.pipeline.EtlPipeline
@@ -100,10 +106,77 @@ class PipelineSpec extends SparkTestBase {
 
   test("empty source rejects (extract.py:76-77)") {
     val bucket = freshBucket()
+    // header only: inferSchema types both columns as strings, which the
+    // transform would reject as non-numeric traffic if it ran first
     Files.write(Paths.get(s"$bucket/raw_data/traffic.csv"), "time,traffic\n".getBytes)
-    intercept[PipelineError] {
+    val e = intercept[ExtractError] {
       new EtlPipeline(spark, csvConfig(bucket, WriteDisposition.Append)).run()
     }
+    assert(e.getMessage == "Extracted 0 rows")
+  }
+
+  test("empty source rejects before the transform's type checks") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val bucket = freshBucket()
+    // a numeric time column fails T2's type check at plan time
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+        StructField("time", DoubleType), StructField("traffic", DoubleType))))
+      .write.parquet(s"$bucket/raw_data/traffic.parquet")
+    val cfg = csvConfig(bucket, WriteDisposition.Append)
+      .copy(sourceBlob = "raw_data/traffic.parquet")
+    val e = intercept[ExtractError](new EtlPipeline(spark, cfg).run())
+    assert(e.getMessage == "Extracted 0 rows")
+  }
+
+  /** Runs a CSV source through `run()`, expecting a TransformError with
+    * `message` and no artifact in any output zone.
+    */
+  private def assertRejectedBeforeLoad(csv: String, message: String): Unit = {
+    val bucket = freshBucket()
+    Files.write(Paths.get(s"$bucket/raw_data/traffic.csv"), csv.getBytes)
+    val e = intercept[TransformError] {
+      new EtlPipeline(spark, csvConfig(bucket, WriteDisposition.Append)).run()
+    }
+    assert(e.getMessage == message)
+    Seq("backups", "processed", "warehouse").foreach { zone =>
+      assert(!new java.io.File(s"$bucket/$zone").exists(), s"$zone written")
+    }
+  }
+
+  test("unparseable time rejects the run before anything is written (transform.py:24-25)") {
+    assertRejectedBeforeLoad("time,traffic\n23/05/2021 00:00,5.0\nnot-a-date,6.0\n",
+      "Failed to parse 'time' values as datetime (found nulls after parse)")
+  }
+
+  test("null traffic rejects the run before anything is written (transform.py:45-47)") {
+    assertRejectedBeforeLoad("time,traffic\n23/05/2021 00:00,5.0\n23/05/2021 00:05,\n",
+      "Column 'traffic' contains 1 null values")
+  }
+
+  test("an XLSX run launches three SQL executions: one validation pass, two writes") {
+    val bucket = freshBucket()
+    val t0 = Timestamp.valueOf("2021-05-23 00:00:00").getTime
+    XlsxTestWriter.write(new java.io.File(s"$bucket/raw_data/traffic.xlsx"),
+      Seq("Time", "TRAFFIC"),
+      (0 until 288).map(i => Seq[Any](new Timestamp(t0 + i * 300000L), 4.0 + i % 55 * 0.1)))
+    val cfg = EtlConfig(projectId = "test", bucketUri = s"file://$bucket",
+      dataset = "d", table = "t", sourceBlob = "raw_data/traffic.xlsx")
+    val executions = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext) // earlier tests' events stay uncounted
+    spark.listenerManager.register(listener)
+    try {
+      val report = new EtlPipeline(spark, cfg).run()
+      ListenerBusDrain(spark.sparkContext)
+      assert((report.rowsExtracted, report.rowsTransformed, report.rowsLoaded) == ((288, 288, 288)))
+      assert(executions.get == 3)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("missing required column rejects (extract.py:69-74)") {

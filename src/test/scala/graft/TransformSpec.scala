@@ -28,9 +28,17 @@ class TransformSpec extends SparkTestBase {
   test("T2 strictness: unparseable dates raise (transform.py:24-25)") {
     val src = df(Seq(Row("not-a-date", 1.0)), StructType(Seq(
       StructField("time", StringType), StructField("traffic", DoubleType))))
-    intercept[TransformError] {
-      TrafficTransform.assertParsedFully(TrafficTransform.parseTimeColumn(src))
-    }
+    val e = intercept[TransformError](TrafficTransform(src, runTs))
+    assert(e.getMessage ==
+      "Failed to parse 'time' values as datetime (found nulls after parse)")
+  }
+
+  test("census counts rows and post-parse nulls in one pass") {
+    val src = df(Seq(Row("23/05/2021 00:00", 1.0), Row("not-a-date", 2.0),
+      Row("23/05/2021 00:10", null), Row(null, null)), StructType(Seq(
+      StructField("time", StringType), StructField("traffic", DoubleType))))
+    val c = TrafficTransform.census(TrafficTransform.prepare(src, runTs))
+    assert(c == TrafficTransform.Census(rows = 4, nullTime = 2, nullTraffic = 2))
   }
 
   test("T4 created_at is run-constant, not per-row (transform.py:34)") {
@@ -51,11 +59,15 @@ class TransformSpec extends SparkTestBase {
   }
 
   test("T6 nulls raise with column name (transform.py:45-47)") {
-    val src = df(Seq(Row(null, 1.0)), StructType(Seq(
+    val src = df(Seq(Row(Timestamp.valueOf("2021-05-23 00:00:00"), null),
+      Row(Timestamp.valueOf("2021-05-23 00:05:00"), 2.0)), StructType(Seq(
       StructField("time", TimestampType), StructField("traffic", DoubleType))))
-    val e = intercept[TransformError](
-      TrafficTransform.requireNoNulls(src, Seq("time", "traffic")))
-    assert(e.getMessage.contains("'time'"))
+    val e = intercept[TransformError](TrafficTransform(src, runTs))
+    assert(e.getMessage == "Column 'traffic' contains 1 null values")
+    // a NaT time fails the T2 strictness check, which runs first
+    val nat = df(Seq(Row(null, null)), src.schema)
+    assert(intercept[TransformError](TrafficTransform(nat, runTs))
+      .getMessage.contains("'time'"))
   }
 
   test("T7 non-numeric traffic raises (transform.py:49-50)") {
