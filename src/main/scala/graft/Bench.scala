@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: headline queries at local[N] over SPARK_GRAFT_SF_DIR.
   * Each query is fully materialized through the noop sink (forces every
   * operator, unlike count() which lets Catalyst prune work), timed
@@ -144,23 +142,13 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sentinels = scala.collection.mutable.ListBuffer.empty[Sentinel]
     sample("start", sentinels) // before Spark: loadavg still uncontaminated
-    // r16: shared engine shuffle tuning (GraftSession.shuffleTuning — the
-    // Unsafe-writer + local-dir fix; same master/core-count contract, same
-    // timing methodology, every query still computes from parquet). The
-    // floors were pinned with shuffle and spill on tmpfs, so the bench
-    // opts in to it; SPARK_GRAFT_LOCAL_DIR still overrides.
+    // The floors were pinned with shuffle and spill on tmpfs, so the bench
+    // opts in to it; SPARK_GRAFT_LOCAL_DIR still wins when set.
     val shm = new java.io.File("/dev/shm")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = GraftSession.shuffleTuning(
-      if (shm.isDirectory && shm.canWrite) builder.config("spark.local.dir", "/dev/shm/graft-local")
-      else builder)
-      .getOrCreate()
+    val builder = GraftSession.builder(appName = "graft-bench", master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt)
+    val spark = (if (shm.isDirectory && shm.canWrite && !sys.env.contains("SPARK_GRAFT_LOCAL_DIR"))
+      builder.config("spark.local.dir", "/dev/shm/graft-local") else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up on the smallest fixture: whole-stage codegen compilation is
     // plan-shape-keyed and cached, so this amortizes janino + JIT cost out

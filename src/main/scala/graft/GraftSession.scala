@@ -40,14 +40,14 @@ object GraftSession {
     *    either floor, so the knob only acts where parallelism should
     *    win anyway. Measured (MinPartProbe, warm, sf0.1): prefix 1.68 ->
     *    1.36s, semantic_dedup 1.61 -> 1.39s, hybrid 1.32 -> 0.92s,
-    *    pagerank 2.99 -> 2.74s; none slower. SPARK_GRAFT_AQE_MIN_PART
-    *    overrides.
+    *    pagerank 2.99 -> 2.74s; none slower.
+    *
+    * Both settings are plain Spark conf keys, so a job overrides them the
+    * usual way (`--conf` or the builder).
     */
   def shuffleTuning(b: SparkSession.Builder): SparkSession.Builder = {
-    val tuned = b.config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
+    val tuned = b.config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     sys.env.get("SPARK_GRAFT_LOCAL_DIR")
       .fold(tuned)(d => tuned.config("spark.local.dir", d))
   }

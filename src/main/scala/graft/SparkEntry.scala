@@ -1579,15 +1579,15 @@ object SparkEntry {
          FROM j GROUP BY 1 ORDER BY 1""",
 
     // BPE merge learning: the unrolled-iteration template (pagerank
-    // pattern), DuckDB list dialect
+    // pattern)
     "q_bpe_train" ->
-      operators.TextAnalysis.bpeTrainSql(duck = true, Bpe.merges),
+      operators.TextAnalysis.bpeTrainSql(Bpe.merges),
     "q_bpe_encode" ->
-      operators.TextAnalysis.bpeEncodeSql(duck = true, Bpe.merges),
+      operators.TextAnalysis.bpeEncodeSql(Bpe.merges),
 
     // DSIR-style importance selection: integer-exact LM-ratio scoring
     "q_importance_weights" ->
-      operators.TextAnalysis.importanceWeightsSql(duck = true,
+      operators.TextAnalysis.importanceWeightsSql(
         Dsir.target, Dsir.k),
 
     // corpus snapshot diff: portable text (fabricated-prior discipline)
@@ -1597,23 +1597,23 @@ object SparkEntry {
     "q_bfs_levels" ->
       operators.Mining.bfsLevelsSql(Basket.maxItems, Basket.bfsHops),
 
-    // panel closeness: unrolled per-source reach sets; // the dialect point
+    // panel closeness: unrolled per-source reach sets
     "q_closeness_centrality" ->
-      operators.Mining.closenessCentralitySql("//", Basket.maxItems,
+      operators.Mining.closenessCentralitySql(Basket.maxItems,
         Basket.closenessSources, Basket.bfsHops),
 
-    // bounded Bellman-Ford: relaxations unrolled; // the only dialect point
+    // bounded Bellman-Ford: relaxations unrolled
     "q_shortest_paths" ->
-      operators.Mining.shortestPathsSql("//", Basket.maxItems,
+      operators.Mining.shortestPathsSql(Basket.maxItems,
         Basket.spRounds, Basket.topK),
 
-    // item-item neighbor Jaccard: portable text modulo // vs DIV
+    // item-item neighbor Jaccard
     "q_item_neighbor_jaccard" ->
-      operators.Mining.itemNeighborJaccardSql("//", Basket.maxItems,
+      operators.Mining.itemNeighborJaccardSql(Basket.maxItems,
         Basket.jaccardMinCo, Basket.jaccardTopN),
 
-    // k-anonymity generalization ladder: portable text modulo // vs DIV
-    "q_k_anonymity" -> operators.Quality.kAnonymitySql("//"),
+    // k-anonymity generalization ladder
+    "q_k_anonymity" -> operators.Quality.kAnonymitySql(),
 
     // vocabulary growth curve via the (token -> min doc_id)
     // first-occurrence aggregate — distinct vocab at checkpoint c is the
@@ -1991,10 +1991,9 @@ object SparkEntry {
     // weights over half-up cents, half-up 1e-4 quotient. DuckDB's `//`
     // on BIGINT truncates toward zero exactly like Spark DIV and Java
     // Long division, so the quotient agrees for any sign of cents.
-    // TWAP: step-function holds in whole seconds, half-up 1e-4 quotient;
-    // // + epoch_us are the only dialect points
+    // TWAP: step-function holds in whole seconds, half-up 1e-4 quotient
     "q_time_weighted_value" ->
-      operators.Analytics.timeWeightedValueSql("//", "epoch_us(ts)"),
+      operators.Analytics.timeWeightedValueSql,
 
     "q_ewma_user_value" ->
       """WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS t_us,
@@ -2206,16 +2205,15 @@ object SparkEntry {
          GROUP BY 1, 2 ORDER BY type_a, type_b""",
 
     // Kaplan-Meier signup->purchase survival with right-censoring: the
-    // recursive product-limit recurrence, generated from the same
-    // template as the Spark twin
+    // recursive product-limit recurrence
     "q_survival_signup_purchase" ->
-      operators.Analytics.survivalSql("//", "epoch_us"),
+      operators.Analytics.survivalSql,
 
     // strictly-ordered funnel: the oracle is the min-after JOIN-CHAIN,
     // a deliberately different algorithm than the operator's one-pass
     // sorted-group tracker — equality is an algorithmic cross-check
     "q_funnel_ordered" ->
-      operators.Analytics.funnelSql("//", "epoch_us"),
+      operators.Analytics.funnelSql,
 
     // power-of-two token-length histogram: bit-length bucket (bin() in
     // both engines), windowed cumulative fixed-point shares
@@ -2243,10 +2241,9 @@ object SparkEntry {
          ORDER BY bucket""",
 
     // weighted PageRank over the co-purchase graph: the ten iterations
-    // unrolled as chained CTEs, generated from the same template as the
-    // Spark twin (// vs DIV is the only difference)
+    // unrolled as chained CTEs
     "q_pagerank_copurchase" ->
-      operators.Mining.pagerankSql("//", Basket.maxItems, Basket.pagerankIters),
+      operators.Mining.pagerankSql(Basket.maxItems, Basket.pagerankIters),
 
     // exact triangle count: the oracle is the NAIVE id-ordered three-way
     // join; the operator runs degree-ordered orientation — equality is an
@@ -2254,17 +2251,14 @@ object SparkEntry {
     "q_triangle_count" ->
       operators.Mining.triangleSql(Basket.maxItems, Basket.topK),
 
-    // association-rule pricing (support/confidence/lift) from the shared
-    // template; // vs DIV is the only dialect point
+    // association-rule pricing (support/confidence/lift)
     "q_assoc_rules" ->
-      operators.Mining.assocRulesSql("//", Basket.maxItems, 5, Basket.topK),
+      operators.Mining.assocRulesSql(Basket.maxItems, 5, Basket.topK),
 
     // hour-of-week seasonal anomaly: dense grid + cross-multiplied
-    // baseline comparison; dialect points are strftime/dayofweek/range
+    // baseline comparison
     "q_seasonal_anomaly" ->
-      operators.Quality.seasonalSql("strftime(ts, '%Y-%m-%d')",
-        "dayofweek(ts)",
-        "(SELECT CAST(range AS BIGINT) AS hour FROM range(0, 24))"),
+      operators.Quality.seasonalSql,
 
     // functional-dependency audit: five two-level distinct blocks (the
     // operator runs ONE stacked scan with multi-distinct — different
@@ -2272,24 +2266,19 @@ object SparkEntry {
     "q_fd_discovery" -> operators.Quality.fdDiscoverySql,
 
     // A/B readout from the shared template (// vs DIV only)
-    "q_ab_test_readout" -> operators.Quality.abTestSql("//"),
+    "q_ab_test_readout" -> operators.Quality.abTestSql,
 
-    // two-sided CUSUM: the prefix recurrence as a recursive CTE from the
-    // shared template (strftime is the only dialect point)
+    // two-sided CUSUM: the prefix recurrence as a recursive CTE
     "q_cusum_changepoint" ->
-      operators.Analytics.cusumSql("strftime(ts, '%Y-%m-%d')"),
+      operators.Analytics.cusumSql,
 
     // Holt double-exponential smoothing: the same recursive-CTE pattern
-    // (dialect points: strftime + truncating integer division spelling)
     "q_holt_forecast" ->
-      operators.Analytics.holtSql("strftime(ts, '%Y-%m-%d')", "//"),
+      operators.Analytics.holtSql,
 
-    // Mann-Kendall + Theil-Sen trend audit (dialect: strftime, DuckDB
-    // date_diff arg order, //)
+    // Mann-Kendall + Theil-Sen trend audit
     "q_trend_audit" ->
-      operators.Analytics.trendAuditSql("strftime(ts, '%Y-%m-%d')",
-        "CAST(date_diff('day', CAST(a.day AS DATE), CAST(b.day AS DATE)) AS BIGINT)",
-        "//"),
+      operators.Analytics.trendAuditSql,
 
     // pairwise Pearson matrix; UNION ALL arms (no stack) — portable text
     // that also algorithmically cross-checks the operator's Expand path
@@ -2304,35 +2293,34 @@ object SparkEntry {
     "q_quantile_uplift" -> operators.Quality.quantileUpliftSql,
     "q_mannwhitney_value" -> operators.Quality.mannWhitneyValueSql,
     "q_bootstrap_ci_revenue" ->
-      operators.Quality.bootstrapRevenueCiSql(duck = true),
+      operators.Quality.bootstrapRevenueCiSql(),
     // merge == rescan: the incremental face's oracle IS the one-shot text
     "q_bootstrap_ci_incremental" ->
-      operators.Quality.bootstrapRevenueCiSql(duck = true),
-    // staleness per type behind the feed head; // + epoch_us dialect
+      operators.Quality.bootstrapRevenueCiSql(),
+    // staleness per type behind the feed head
     "q_freshness_audit" ->
-      operators.Quality.freshnessAuditSql("//", "epoch_us(ts)"),
-    // empirical-Bayes shrinkage; // is the only dialect point
-    "q_shrunken_rates" -> operators.Quality.shrunkenRatesSql("//", 20, 50),
+      operators.Quality.freshnessAuditSql,
+    // empirical-Bayes shrinkage
+    "q_shrunken_rates" -> operators.Quality.shrunkenRatesSql(20, 50),
     // merge == rescan: the oracle runs the one-shot statement
     "q_moment_profile_incremental" -> operators.Quality.momentProfileSql,
 
     // gapped sequential pairs: the oracle is the NAIVE EXISTS-over-raw-
     // row-pairs statement (no order-statistic collapse) — equality is an
     // algorithmic cross-check of the first/last-occurrence reduction
-    "q_seq_pair_support" -> operators.Mining.seqPairSupportSql("//", 2),
+    "q_seq_pair_support" -> operators.Mining.seqPairSupportSql(2),
 
     // daily P50/P90 bands (doubled-median + discrete rank quantile)
     "q_daily_value_bands" ->
-      operators.Analytics.dailyBandsSql("strftime(ts, '%Y-%m-%d')",
-        "quantile_cont(2 * cents, 0.5)", "//"),
+      operators.Analytics.dailyBandsSql,
 
     // Lorenz/Gini: the oracle's naive global row_number vs the operator's
     // range-partitioned distributed rank — equality proves the execution
     // strategy result-invisible
-    "q_revenue_lorenz" -> operators.Analytics.lorenzSql("//"),
+    "q_revenue_lorenz" -> operators.Analytics.lorenzSql,
 
     // proportional interleave audit: stride-keyed schedule deciles
-    "q_interleave_mix" -> operators.Curation.interleaveSql("//"),
+    "q_interleave_mix" -> operators.Curation.interleaveSql,
 
     // Bloom-screened semi join: the oracle is the PLAIN IN-subquery semi
     // join (portable), so equality proves the screen result-invisible
@@ -2600,16 +2588,17 @@ object SparkEntry {
            CAST(len(toks) AS BIGINT) AS n_tokens,
            CAST(len(list_filter(toks, t -> list_contains(
              ['the','a','of','and','to','in','is','it'], t))) AS BIGINT) AS stop_hits,
-           CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS BIGINT) AS punct_chars
+           CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS BIGINT) AS punct_chars,
+           CAST(length(text) AS BIGINT) AS text_len
            FROM t)
          SELECT doc_id, n_tokens,
          CAST((20000 * stop_hits + n_tokens) // (2 * n_tokens) AS BIGINT) AS stop_ratio_1e4,
-         CAST((20000 * punct_chars + CAST(length(text) AS BIGINT))
-              // (2 * CAST(length(text) AS BIGINT)) AS BIGINT) AS punct_ratio_1e4,
-         CASE WHEN n_tokens = 0 OR length(text) = 0 THEN NULL ELSE
+         CAST((20000 * punct_chars + text_len)
+              // (2 * text_len) AS BIGINT) AS punct_ratio_1e4,
+         CASE WHEN n_tokens = 0 OR text_len = 0 THEN NULL ELSE
          CAST(floor(
            least(CAST(1 AS DOUBLE), CAST(n_tokens AS DOUBLE) / CAST(50 AS DOUBLE))
-           * (CAST(1 AS DOUBLE) - CAST(punct_chars AS DOUBLE) / CAST(length(text) AS DOUBLE))
+           * (CAST(1 AS DOUBLE) - CAST(punct_chars AS DOUBLE) / CAST(text_len AS DOUBLE))
            * (CAST(0.5 AS DOUBLE) + CAST(stop_hits AS DOUBLE) / CAST(n_tokens AS DOUBLE))
            * CAST(10000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) END AS quality_1e4
          FROM m ORDER BY doc_id""",
@@ -2663,23 +2652,22 @@ object SparkEntry {
          FROM sel GROUP BY doc_id ORDER BY doc_id""",
 
     "q_dedup_winnow" ->
-      graft.operators.Dedup.winnowPairsSql(duck = true, Toks, "//"),
+      graft.operators.Dedup.winnowPairsSql(Toks),
 
     "q_dedup_substring" ->
-      graft.operators.Dedup.substringDedupSql(duck = true, Toks),
+      graft.operators.Dedup.substringDedupSql(Toks),
 
     // full-corpus spans restricted to greater-member-in-delta (ids are
     // append-monotone, so doc_b >= split IS membership here); the split
     // computed in SQL, the q_dedup_incremental oracle discipline
     "q_dedup_substring_incremental" ->
-      graft.operators.Dedup.substringDedupSql(duck = true, Toks,
-        incremental = true, div = "//"),
+      graft.operators.Dedup.substringDedupSql(Toks, incremental = true),
 
     "q_substring_dup_profile" ->
-      graft.operators.Dedup.substringDupProfileSql(duck = true, Toks, div = "//"),
+      graft.operators.Dedup.substringDupProfileSql(Toks),
 
     "q_dedup_substring_rewrite" ->
-      graft.operators.Dedup.substringDedupRewriteSql(duck = true, Toks),
+      graft.operators.Dedup.substringDedupRewriteSql(Toks),
 
     "q_date_parts_orders" ->
       """WITH p AS (SELECT
@@ -2715,12 +2703,12 @@ object SparkEntry {
     "q_volume_shipping" ->
       operators.Analytics.volumeShippingSql("NATION_18", "NATION_19"),
     "q_market_share" ->
-      operators.Analytics.marketShareSql("//", "NATION_15", "AFRICA", "ECONOMY"),
+      operators.Analytics.marketShareSql("NATION_15", "AFRICA", "ECONOMY"),
     "q_promotion_effect" ->
-      operators.Analytics.promotionEffectSql("//", "strftime(l_shipdate, '%Y-%m')"),
+      operators.Analytics.promotionEffectSql,
     "q_top_supplier" -> operators.Analytics.topSupplierSql,
     "q_small_qty_revenue" ->
-      operators.Analytics.smallQtyRevenueSql("//", "Brand#1"),
+      operators.Analytics.smallQtyRevenueSql("Brand#1"),
     "q_returned_item_report" ->
       operators.Analytics.returnedItemReportSql(20),
     "q_forecast_revenue" ->
@@ -2732,45 +2720,37 @@ object SparkEntry {
     "q_acf_daily_value" -> operators.Analytics.acfDailyValueSql(7),
 
     "q_theil_sen_trend" ->
-      operators.Analytics.theilSenTrendSql("date_diff('day', a.day, b.day)"),
+      operators.Analytics.theilSenTrendSql,
 
     "q_kendall_tau_daily" -> operators.Analytics.kendallTauDailySql,
     "q_spearman_daily" -> operators.Analytics.spearmanDailySql,
 
-    // day-of-week is the one dialect knob (DuckDB dayofweek is 0-based)
     "q_mann_kendall_seasonal" ->
-      operators.Analytics.mannKendallSeasonalSql("dayofweek(day)"),
+      operators.Analytics.mannKendallSeasonalSql,
 
     "q_hodges_lehmann_value" -> operators.Quality.hodgesLehmannValueSql,
     "q_qn_scale_value" -> operators.Quality.qnScaleValueSql,
 
-    // datediff argument order is the one dialect knob
-    "q_wilcoxon_signed_rank" -> operators.Quality.wilcoxonSignedRankSql(
-      "date_diff('day', DATE '1970-01-05', day)"),
+    "q_wilcoxon_signed_rank" -> operators.Quality.wilcoxonSignedRankSql,
 
-    // datediff argument order is the one dialect knob
     "q_siegel_slope" ->
-      operators.Analytics.siegelSlopeSql("date_diff('day', a.day, b.day)"),
+      operators.Analytics.siegelSlopeSql,
 
     "q_runs_test_daily" -> operators.Analytics.runsTestDailySql,
     "q_ljung_box_daily" -> operators.Analytics.ljungBoxDailySql(7),
     "q_pacf_daily" -> operators.Analytics.pacfDailySql(7),
 
-    // dayofweek base + // are the dialect knobs
     "q_seasonal_decompose" ->
-      operators.Analytics.seasonalDecomposeSql("dayofweek(day)", "//"),
+      operators.Analytics.seasonalDecomposeSql,
 
-    // epoch-micros + // are the dialect knobs
     "q_bot_likeness" ->
-      operators.Analytics.botLikenessSql("epoch_us", "//"),
+      operators.Analytics.botLikenessSql(),
 
-    // datediff + // are the dialect knobs
-    "q_mcnemar_conversion" -> operators.Quality.mcnemarConversionSql(
-      "date_diff('day', DATE '1970-01-05', day)", "//"),
+    "q_mcnemar_conversion" -> operators.Quality.mcnemarConversionSql,
     "q_ccf_click_purchase" ->
       operators.Analytics.ccfDailyValueSql("click", "purchase", 7),
     "q_traffic_kpi_report" ->
-      operators.Analytics.trafficKpiReportSql("//", "epoch_us", 30),
+      operators.Analytics.trafficKpiReportSql(30),
 
     "q_string_funcs" ->
       """SELECT c_custkey,
@@ -2920,7 +2900,7 @@ object SparkEntry {
 
     // cohort LTV: retention's cohort convention priced in cum cents
     "q_cohort_ltv" ->
-      operators.Analytics.cohortLtvSql("//", "epoch_us(ts)"),
+      operators.Analytics.cohortLtvSql,
 
     "q_cohort_retention" ->
       """WITH ud AS (SELECT DISTINCT user_id,
@@ -3055,7 +3035,7 @@ object SparkEntry {
     // per coordinate position (0-based dim)
     // per-dim Welch t^2 between two labels over the 2^20 integer codes
     "q_label_separability" ->
-      operators.Similarity.labelSeparabilitySql(duck = true, 0, 1),
+      operators.Similarity.labelSeparabilitySql(0, 1),
 
     "q_embed_dim_stats" ->
       """WITH codes AS (SELECT
@@ -3603,22 +3583,21 @@ object SparkEntry {
          FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
 
     // MMR diversified re-rank: the greedy unrolled as k argmax steps from
-    // the shared template (cos fold + // are the dialect points)
+    // the shared template
     "q_mmr_rerank" ->
       operators.Similarity.mmrSql(cosMicrosSql,
-        "CAST(embedding AS DOUBLE[])", "//"),
+        "CAST(embedding AS DOUBLE[])"),
 
     // bitext margin mining: CSLS ratio margin over the parity shards
-    // (cos fold, array cast, and // are the dialect points)
     "q_bitext_margin" ->
       operators.Similarity.bitextMarginSql(cosMicrosSql,
-        "CAST(embedding AS DOUBLE[])", "//"),
+        "CAST(embedding AS DOUBLE[])"),
 
     // index-approximated bitext mining (the production entry): first-N
     // IVF candidate screen + the same CSLS tail over candidates only
     "q_bitext_margin_index" ->
       operators.Similarity.bitextMarginIndexSql(cosMicrosSql,
-        "CAST(embedding AS DOUBLE[])", "//"),
+        "CAST(embedding AS DOUBLE[])"),
 
     // embedding-space decontamination: same first-N IVF candidate screen,
     // eval/corpus split on vec_id % 97, per-corpus-doc hit aggregate
@@ -3633,15 +3612,9 @@ object SparkEntry {
         "CAST(embedding AS DOUBLE[])"),
 
     // embedding drift monitor: cross-multiplied mean shifts over 2^20
-    // integer codes (template; list dialect + // are the only points)
+    // integer codes
     "q_embed_drift" ->
-      operators.Similarity.embedDriftSql(
-        "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576 + 0.5) AS BIGINT))",
-        """SELECT label, is_ref, CAST(i AS BIGINT) AS dim,
-                  code[CAST(i AS INT)] AS c
-           FROM (SELECT label, is_ref, code,
-                        unnest(range(1, len(code) + 1)) AS i FROM e) t""",
-        "//", operators.Sampling.hexThreshold(0.8)),
+      operators.Similarity.embedDriftSql(operators.Sampling.hexThreshold(0.8)),
 
     "q_embed_lsh_pairs" ->
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -4053,8 +4026,8 @@ object SparkEntry {
          WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '${Sampling.hexThreshold(0.25)}'
          ORDER BY doc_id""",
 
-    // alpha=1/2 temperature mixing: // is the one dialect knob
-    "q_temperature_mix" -> operators.Sampling.temperatureMixSql("//"),
+    // alpha=1/2 temperature mixing
+    "q_temperature_mix" -> operators.Sampling.temperatureMixSql(),
 
     "q_sample_weighted_mix" -> {
       val cases = Sampling.DefaultMixWeights.toSeq.sortBy(_._1).map { case (src, r) =>
@@ -4228,7 +4201,7 @@ object SparkEntry {
 
     // packing-efficiency rollup from the same derivation (shared template)
     "q_pack_efficiency" ->
-      operators.Curation.packEfficiencySql(s"len($Toks)", "//"),
+      operators.Curation.packEfficiencySql(),
 
     "q_split_stratified" ->
       s"""WITH d AS (SELECT doc_id, source, CAST(len($Toks) AS BIGINT) AS n_tokens,
@@ -4270,40 +4243,38 @@ object SparkEntry {
     },
 
     // zone-map prune audit: read-amplification per predicate box
-    "q_zone_prune_audit" -> operators.Layout.zonePruneSql("//"),
+    "q_zone_prune_audit" -> operators.Layout.zonePruneSql,
 
-    // two-sample KS over exact-integer CDFs; one // vs DIV dialect knob
-    "q_ks_drift" -> operators.Quality.ksDriftSql("//"),
+    // two-sample KS over exact-integer CDFs
+    "q_ks_drift" -> operators.Quality.ksDriftSql,
 
     // Benford first-digit audit: expected shares are pinned literals
-    "q_benford_audit" -> operators.Quality.benfordAuditSql("//"),
+    "q_benford_audit" -> operators.Quality.benfordAuditSql,
 
     // categorical concentration (HHI over half-up 1e-3 shares)
-    "q_column_hhi" -> operators.Quality.columnHhiSql("//"),
+    "q_column_hhi" -> operators.Quality.columnHhiSql,
 
     // class-balanced downsample: portable md5-ordered rank + derived quota
     "q_balanced_downsample" -> operators.Sampling.balancedDownsampleSql,
 
     // U-shaped attribution: oracle spells the quadratic pair join, the
     // operator the window form — parity proves them equivalent
-    "q_attribution_position" -> operators.Analytics.positionAttributionSql("//"),
+    "q_attribution_position" -> operators.Analytics.positionAttributionSql,
 
     // Markov removal-effect attribution: value iteration unrolled (the
-    // pagerank pattern); same text as the Spark twin modulo // and epoch_us
+    // pagerank pattern)
     "q_markov_attribution" ->
-      operators.Analytics.markovAttributionSql("//", "epoch_us(ts)", Markov.rounds),
+      operators.Analytics.markovAttributionSql(Markov.rounds),
 
-    // time-decay attribution: the oracle spells the quadratic pair join;
-    // dialect points are //, epoch_us, and the >> spelling
+    // time-decay attribution: the oracle spells the quadratic pair join
     "q_attribution_time_decay" ->
-      operators.Analytics.timeDecayAttributionSql("//", "epoch_us(ts)",
-        (a, b) => s"($a >> $b)", 9),
+      operators.Analytics.timeDecayAttributionSql(9),
 
     // Flesch-shape readability in portable integer fixed point
-    "q_readability" -> operators.TextAnalysis.readabilitySql(duck = true),
+    "q_readability" -> operators.TextAnalysis.readabilitySql,
 
     // tokenizer round-trip: encode, decode through the vocab, compare
-    "q_decode_roundtrip" -> operators.TextAnalysis.decodeRoundtripSql(duck = true),
+    "q_decode_roundtrip" -> operators.TextAnalysis.decodeRoundtripSql,
 
     // bounded min-label propagation, rounds unrolled; fully portable text
     "q_connected_components" ->
@@ -4319,20 +4290,20 @@ object SparkEntry {
 
     // naive id-ordered triangles per node; // vs DIV is the only knob
     "q_clustering_coeff" ->
-      operators.Mining.clusteringCoeffSql("//", Basket.maxItems,
+      operators.Mining.clusteringCoeffSql(Basket.maxItems,
         Basket.coeffMinDeg, Basket.topK),
 
     // rank*freq/f1 Zipf curve in exact integers (no libm log)
     "q_zipf_profile" ->
-      operators.TextAnalysis.zipfProfileSql(duck = true,
+      operators.TextAnalysis.zipfProfileSql(
         Seq(1, 2, 4, 8, 16, 32, 64)),
 
     // exact P5/P95 clamp + half-up mean over the value-domain CDF frame
-    "q_winsorized_stats" -> operators.Analytics.winsorizedStatsSql("//"),
+    "q_winsorized_stats" -> operators.Analytics.winsorizedStatsSql,
 
     // BM25 recall/MRR against the exact PPJoin near-dup ground truth
     "q_retrieval_eval" ->
-      operators.Retrieval.retrievalEvalSql(duck = true, Seq(1, 5, 10),
+      operators.Retrieval.retrievalEvalSql(Seq(1, 5, 10),
         Bm25.maxDfPermille, Bm25.k1Milli, Bm25.bMilli),
 
     // which feed copies which: exact near-dup pairs per source pair
@@ -4426,23 +4397,22 @@ object SparkEntry {
          FROM g ORDER BY decile""",
 
     // declared-vs-detected language confusion matrix
-    "q_lang_confusion" -> operators.TextAnalysis.langConfusionSql(duck = true),
+    "q_lang_confusion" -> operators.TextAnalysis.langConfusionSql,
 
-    // Simpson + inverse-Simpson language mix per source; // is the only
-    // dialect point
-    "q_lang_diversity" -> operators.TextAnalysis.langDiversitySql("//"),
+    // Simpson + inverse-Simpson language mix per source
+    "q_lang_diversity" -> operators.TextAnalysis.langDiversitySql,
 
-    // effective source count by token mass; // + tokenizer dialect
+    // effective source count by token mass
     "q_source_mix_diversity" ->
-      operators.TextAnalysis.sourceMixDiversitySql(duck = true, "//"),
+      operators.TextAnalysis.sourceMixDiversitySql,
 
     // token-mass-weighted length percentiles (max-rank threshold rule)
     "q_weighted_len_pctl" ->
-      operators.TextAnalysis.weightedLengthPercentilesSql(duck = true),
+      operators.TextAnalysis.weightedLengthPercentilesSql,
 
     // token-share drift between the first 80% and trailing 20% by doc_id
     "q_vocab_drift" ->
-      operators.TextAnalysis.vocabDriftSql(duck = true, 20, 25),
+      operators.TextAnalysis.vocabDriftSql(20, 25),
 
     // three-step journey mining; fully portable text
     "q_journey_trigrams" -> operators.Analytics.journeyTrigramsSql(25),
@@ -4480,20 +4450,19 @@ object SparkEntry {
 
     // variance-to-mean dispersion per token (boilerplate statistics)
     "q_token_burstiness" ->
-      operators.TextAnalysis.tokenBurstinessSql(duck = true, 50, 25),
+      operators.TextAnalysis.tokenBurstinessSql(50, 25),
 
     // dup density per ingestion decile (newer endpoint charged)
     "q_dup_rate_trend" ->
-      operators.Dedup.dupRateTrendSql("//", ShinglesCte, "len", "unnest"),
+      operators.Dedup.dupRateTrendSql(ShinglesCte),
 
     // systematic PPS draw over the cumulative token line; the oracle's
     // cumsum is the naive global window (the Lorenz contract)
-    "q_sample_pps" -> operators.Sampling.ppsSampleSql("//", "len", "", 100),
+    "q_sample_pps" -> operators.Sampling.ppsSampleSql(100),
 
     // log2-bucketed degree census of the co-purchase graph
     "q_degree_histogram" ->
-      operators.Mining.degreeHistogramSql(Basket.maxItems,
-        "CAST(CAST(1 AS BIGINT) << bucket AS BIGINT)"),
+      operators.Mining.degreeHistogramSql(Basket.maxItems),
 
     // BPE-ish pieces per whitespace word, by language (the q_token_estimate
     // piece regex, aggregated)

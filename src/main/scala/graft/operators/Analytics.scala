@@ -560,12 +560,10 @@ object Analytics {
       .orderBy(col("cohort_day"), col("day_offset"))
   }
 
-  /** [[cohortLtv]] as dialect-templated SQL (`div` + the epoch-micros
-    * spelling are the only dialect points).
-    */
-  private[graft] def cohortLtvSql(div: String, epoch: String): String =
+  /** [[cohortLtv]] as DuckDB SQL. */
+  private[graft] def cohortLtvSql: String =
     s"""WITH ud AS (SELECT DISTINCT user_id,
-           CAST($epoch $div 1000000 $div 86400 AS BIGINT) AS day_idx
+           CAST(epoch_us(ts) // 1000000 // 86400 AS BIGINT) AS day_idx
          FROM events),
        c AS (SELECT user_id, min(day_idx) AS cohort_day FROM ud
              GROUP BY user_id),
@@ -574,7 +572,7 @@ object Analytics {
        r AS (SELECT c.cohort_day, p.day_idx - c.cohort_day AS day_offset,
                     CAST(sum(p.cents) AS BIGINT) AS revenue_cents
              FROM (SELECT user_id,
-                          CAST($epoch $div 1000000 $div 86400 AS BIGINT) AS day_idx,
+                          CAST(epoch_us(ts) // 1000000 // 86400 AS BIGINT) AS day_idx,
                           CAST(floor(value * CAST(100 AS DOUBLE)
                             + CAST(0.5 AS DOUBLE)) AS BIGINT) AS cents
                    FROM events WHERE event_type = 'purchase') p
@@ -588,7 +586,7 @@ object Analytics {
        SELECT cohort_day, day_offset, revenue_cents, cum_revenue_cents,
               n_users,
               CAST((2 * 10000 * cum_revenue_cents + n_users)
-                $div (2 * n_users) AS BIGINT) AS ltv_per_user_1e4
+                // (2 * n_users) AS BIGINT) AS ltv_per_user_1e4
        FROM cum JOIN cs USING (cohort_day)
        ORDER BY cohort_day, day_offset"""
 
@@ -1544,7 +1542,7 @@ object Analytics {
     * touches-join-purchases spelling (oracle scale only; the operator's
     * window form is the one that survives 100 TB).
     */
-  private[graft] def positionAttributionSql(div: String): String =
+  private[graft] def positionAttributionSql: String =
     s"""WITH ev AS (SELECT user_id, ts, event_id, event_type,
                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
               FROM events),
@@ -1566,15 +1564,15 @@ object Analytics {
                      CASE WHEN n >= 2 AND i = n THEN 1 ELSE 0 END AS is_last,
                      CASE WHEN n = 1 THEN cents
                           WHEN i = n THEN
-                            CASE WHEN n = 2 THEN cents $div 2
-                                 ELSE (cents * 4) $div 10 END
+                            CASE WHEN n = 2 THEN cents // 2
+                                 ELSE (cents * 4) // 10 END
                           WHEN i = 1 THEN cents
-                            - (CASE WHEN n = 2 THEN cents $div 2
-                                    ELSE (cents * 4) $div 10 END)
+                            - (CASE WHEN n = 2 THEN cents // 2
+                                    ELSE (cents * 4) // 10 END)
                             - (CASE WHEN n >= 3 THEN
-                                 (n - 2) * ((cents * 2) $div (10 * (n - 2)))
+                                 (n - 2) * ((cents * 2) // (10 * (n - 2)))
                                ELSE 0 END)
-                          ELSE (cents * 2) $div (10 * (n - 2)) END AS credit
+                          ELSE (cents * 2) // (10 * (n - 2)) END AS credit
               FROM rk),
        np AS (SELECT '(none)' AS channel, 1 AS is_first, 1 AS is_last,
                      cents AS credit
@@ -1671,17 +1669,14 @@ object Analytics {
 
   /** [[timeDecayAttribution]] as templated SQL — the oracle spells the
     * quadratic touches-join-purchases form (oracle scale only; the
-    * operator's bounded-explode form is the one that survives 100 TB);
-    * `div` and the right-shift spelling are the dialect points.
+    * operator's bounded-explode form is the one that survives 100 TB).
     */
-  private[graft] def timeDecayAttributionSql(div: String, epoch: String,
-                                             shift: (String, String) => String,
-                                             horizon: Int): String = {
-    val w = shift("1024", "CAST(p.pday - t.tday AS INT)")
+  private[graft] def timeDecayAttributionSql(horizon: Int): String = {
+    val w = "(1024 >> CAST(p.pday - t.tday AS INT))"
     s"""WITH e AS (SELECT user_id, event_id, event_type,
              CAST(floor(value * CAST(100 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS cents,
-             $epoch AS t_us,
-             CAST($epoch $div 1000000 $div 86400 AS BIGINT) AS day
+             epoch_us(ts) AS t_us,
+             CAST(epoch_us(ts) // 1000000 // 86400 AS BIGINT) AS day
            FROM events),
        p AS (SELECT user_id, event_id AS pid, t_us, day AS pday, cents
              FROM e WHERE event_type = 'purchase'),
@@ -1700,8 +1695,8 @@ object Analytics {
                        ORDER BY w DESC, channel) AS rk
               FROM wrows JOIN p ON wrows.pid = p.pid),
        fl AS (SELECT pid, channel, rk, cents,
-                     (cents * w) $div wtot AS fl,
-                     sum((cents * w) $div wtot) OVER (PARTITION BY pid) AS flsum
+                     (cents * w) // wtot AS fl,
+                     sum((cents * w) // wtot) OVER (PARTITION BY pid) AS flsum
               FROM cr),
        credited AS (SELECT channel,
                      fl + CASE WHEN rk = 1 THEN cents - flsum ELSE 0 END AS credit
@@ -1870,14 +1865,11 @@ object Analytics {
   }
 
   /** [[markovAttribution]] as one SQL statement with the value iteration
-    * unrolled (the pagerank pattern): `div` = "//" is the DuckDB oracle,
-    * "DIV" + unix_micros the Spark twin — same text modulo dialect, so
-    * the three surfaces can never drift.
+    * unrolled (the pagerank pattern).
     */
-  private[graft] def markovAttributionSql(div: String, epoch: String,
-                                          iters: Int): String = {
+  private[graft] def markovAttributionSql(iters: Int): String = {
     val header =
-      s"""WITH ev AS (SELECT user_id, event_id, $epoch AS t_us,
+      s"""WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS t_us,
              CASE WHEN event_type = 'purchase' THEN 'CONV'
                   ELSE event_type END AS state
            FROM events),
@@ -1913,7 +1905,7 @@ object Analytics {
       s"""it$k AS (
            SELECT p.rm, t.src AS state,
                   CASE WHEN t.src = p.rm THEN CAST(0 AS BIGINT)
-                       ELSE sum(t.cnt * p.p) $div max(n2.n) END AS p
+                       ELSE sum(t.cnt * p.p) // max(n2.n) END AS p
            FROM tr t JOIN it${k - 1} p ON t.dst = p.state
            JOIN ns n2 ON t.src = n2.src
            GROUP BY p.rm, t.src
@@ -1928,7 +1920,7 @@ object Analytics {
          SELECT x.rm AS channel,
                 CAST(x.p AS BIGINT) AS p_removed_1e9,
                 CAST(CASE WHEN x.rm = '(base)' OR b.p_base = 0 THEN 0
-                     ELSE ((b.p_base - x.p) * 1000000) $div b.p_base
+                     ELSE ((b.p_base - x.p) * 1000000) // b.p_base
                      END AS BIGINT) AS removal_1e6
          FROM it$iters x CROSS JOIN bs b
          WHERE x.state = 'START'
@@ -1975,23 +1967,21 @@ object Analytics {
       .orderBy(col("user_id"))
   }
 
-  /** [[timeWeightedValue]] as dialect-templated SQL (`div` + the
-    * epoch-micros spelling are the only dialect points).
-    */
-  private[graft] def timeWeightedValueSql(div: String, epoch: String): String =
-    s"""WITH e AS (SELECT user_id, event_id, $epoch AS t_us,
+  /** [[timeWeightedValue]] as DuckDB SQL. */
+  private[graft] def timeWeightedValueSql: String =
+    s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t_us,
              CAST(floor(value * CAST(100 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS cents
            FROM events),
        d AS (SELECT user_id, cents,
              (lead(t_us) OVER (PARTITION BY user_id ORDER BY t_us, event_id)
-              - t_us) $div 1000000 AS dur_s
+              - t_us) // 1000000 AS dur_s
            FROM e),
        agg AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_held,
                       CAST(sum(dur_s) AS BIGINT) AS span_s,
                       CAST(sum(cents * dur_s) AS BIGINT) AS wsum
                FROM d WHERE dur_s IS NOT NULL GROUP BY user_id)
        SELECT user_id, n_held, span_s,
-              CAST((20000 * wsum + span_s) $div (2 * span_s) AS BIGINT) AS twap_1e4
+              CAST((20000 * wsum + span_s) // (2 * span_s) AS BIGINT) AS twap_1e4
        FROM agg WHERE span_s > 0 ORDER BY user_id"""
 
   /** Exponentially-weighted moving average of event value per user:
@@ -2484,18 +2474,17 @@ object Analytics {
   /** The funnel's SQL surface: the min-after JOIN-CHAIN formulation —
     * deliberately a different algorithm than the operator's sorted-group
     * pass, so equality is an algorithmic cross-check, not an echo.
-    * `div` = "//" (oracle) or "DIV" (Spark twin); `epochUs` likewise.
     */
-  private[graft] def funnelSql(div: String, epochUs: String): String =
-    s"""WITH s1 AS (SELECT user_id, min($epochUs(ts)) AS t1
+  private[graft] def funnelSql: String =
+    s"""WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1
            FROM events WHERE event_type = 'signup' GROUP BY user_id),
-         s2 AS (SELECT e.user_id, min($epochUs(e.ts)) AS t2
+         s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t2
            FROM events e JOIN s1 ON s1.user_id = e.user_id
-           WHERE e.event_type = 'click' AND $epochUs(e.ts) > s1.t1
+           WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1
            GROUP BY e.user_id),
-         s3 AS (SELECT e.user_id, min($epochUs(e.ts)) AS t3
+         s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t3
            FROM events e JOIN s2 ON s2.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND $epochUs(e.ts) > s2.t2
+           WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t2
            GROUP BY e.user_id),
          n AS (SELECT CAST(count(*) AS BIGINT) AS n_entered FROM s1),
          c AS (SELECT CAST(1 AS BIGINT) AS stage,
@@ -2505,28 +2494,24 @@ object Analytics {
                UNION ALL
                SELECT CAST(3 AS BIGINT), CAST(count(*) AS BIGINT) FROM s3)
          SELECT stage, n_users,
-                (20000 * n_users + n_entered) $div (2 * n_entered) AS share_1e4
+                (20000 * n_users + n_entered) // (2 * n_entered) AS share_1e4
          FROM c CROSS JOIN n WHERE n_users > 0 ORDER BY stage"""
 
-  /** The KM computation as one SQL statement — oracle (`div` = "//",
-    * `epochUs` = "epoch_us") and Spark twin (`div` = "DIV", `epochUs` =
-    * "unix_micros") are the same text modulo dialect spellings, recursion
-    * included (both engines support WITH RECURSIVE).
-    */
-  private[graft] def survivalSql(div: String, epochUs: String): String =
+  /** The KM computation as one SQL statement, recursion included. */
+  private[graft] def survivalSql: String =
     s"""WITH RECURSIVE su AS (
-           SELECT user_id, min($epochUs(ts)) AS t0
+           SELECT user_id, min(epoch_us(ts)) AS t0
            FROM events WHERE event_type = 'signup' GROUP BY user_id),
          pu AS (
-           SELECT e.user_id, min($epochUs(e.ts)) AS tp
+           SELECT e.user_id, min(epoch_us(e.ts)) AS tp
            FROM events e JOIN su ON su.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND $epochUs(e.ts) >= su.t0
+           WHERE e.event_type = 'purchase' AND epoch_us(e.ts) >= su.t0
            GROUP BY e.user_id),
-         bounds AS (SELECT max($epochUs(ts)) AS h_us FROM events),
+         bounds AS (SELECT max(epoch_us(ts)) AS h_us FROM events),
          durs AS (
            SELECT CASE WHEN pu.tp IS NOT NULL
-                       THEN (pu.tp - su.t0) $div 86400000000
-                       ELSE (b.h_us - su.t0) $div 86400000000 END AS t_day,
+                       THEN (pu.tp - su.t0) // 86400000000
+                       ELSE (b.h_us - su.t0) // 86400000000 END AS t_day,
                   CASE WHEN pu.tp IS NOT NULL THEN CAST(1 AS BIGINT)
                        ELSE CAST(0 AS BIGINT) END AS ev
            FROM su LEFT JOIN pu ON su.user_id = pu.user_id
@@ -2550,11 +2535,11 @@ object Analytics {
            FROM risk WHERE d_events > 0),
          km AS (
            SELECT t_day, n_risk, d_events, c_censored, rk,
-                  (1000000000 * (n_risk - d_events)) $div n_risk AS surv_1e9
+                  (1000000000 * (n_risk - d_events)) // n_risk AS surv_1e9
            FROM steps WHERE rk = 1
            UNION ALL
            SELECT s.t_day, s.n_risk, s.d_events, s.c_censored, s.rk,
-                  (km.surv_1e9 * (s.n_risk - s.d_events)) $div s.n_risk
+                  (km.surv_1e9 * (s.n_risk - s.d_events)) // s.n_risk
            FROM km JOIN steps s ON s.rk = km.rk + 1)
          SELECT t_day, n_risk, d_events, c_censored, surv_1e9
          FROM km ORDER BY t_day"""
@@ -2608,14 +2593,12 @@ object Analytics {
       .orderBy(col("day"))
   }
 
-  /** The bands statement; dialect points are the day formatter and the
-    * median spelling (quantile_cont in DuckDB, percentile in Spark —
-    * identical linear interpolation, verified across the percentile
+  /** The bands statement (quantile_cont and Spark's percentile share
+    * the same linear interpolation, verified across the percentile
     * family).
     */
-  private[graft] def dailyBandsSql(dayE: String, median: String,
-                                   div: String): String =
-    s"""WITH ev AS (SELECT $dayE AS day,
+  private[graft] def dailyBandsSql: String =
+    s"""WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day,
               CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents, event_id
             FROM events),
          r AS (SELECT day, cents,
@@ -2624,9 +2607,9 @@ object Analytics {
                       CAST(count(*) OVER (PARTITION BY day) AS BIGINT) AS n
                FROM ev),
          p90 AS (SELECT day, cents AS p90_cents FROM r
-                 WHERE rk = (9 * n + 9) $div 10),
+                 WHERE rk = (9 * n + 9) // 10),
          ag AS (SELECT day, CAST(count(*) AS BIGINT) AS n_events,
-                       CAST($median AS BIGINT) AS p50_x2
+                       CAST(quantile_cont(2 * cents, 0.5) AS BIGINT) AS p50_x2
                 FROM ev GROUP BY day)
          SELECT ag.day, ag.n_events, ag.p50_x2, p90.p90_cents
          FROM ag JOIN p90 ON p90.day = ag.day
@@ -2691,9 +2674,8 @@ object Analytics {
     * row_number formulation (fine single-node; the operator's
     * range-partitioned rank is the distributed execution strategy —
     * equality proves strategy-invisibility, the salted-join contract).
-    * `div` is the only dialect point.
     */
-  private[graft] def lorenzSql(div: String): String =
+  private[graft] def lorenzSql: String =
     s"""WITH pc AS (SELECT user_id,
               CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
                 AS cents
@@ -2706,18 +2688,18 @@ object Analytics {
                       CAST(sum(cents) AS BIGINT) AS total,
                       CAST(sum(rank * cents) AS BIGINT) AS rank_cents
                FROM r),
-         d AS (SELECT (10 * (rank - 1)) $div t.n AS decile,
+         d AS (SELECT (10 * (rank - 1)) // t.n AS decile,
                       CAST(count(*) AS BIGINT) AS n_customers,
                       CAST(sum(cents) AS BIGINT) AS cents_sum,
                       max(t.n) AS n, max(t.total) AS total,
                       max(t.rank_cents) AS rank_cents
-               FROM r CROSS JOIN t GROUP BY (10 * (rank - 1)) $div t.n)
+               FROM r CROSS JOIN t GROUP BY (10 * (rank - 1)) // t.n)
          SELECT decile, n_customers, cents_sum,
                 CAST(sum(cents_sum) OVER w AS BIGINT) AS cum_cents,
                 (20000 * CAST(sum(cents_sum) OVER w AS BIGINT) + total)
-                  $div (2 * total) AS cum_share_1e4,
+                  // (2 * total) AS cum_share_1e4,
                 ((2 * rank_cents - (n + 1) * total) * 10000
-                 + (n * total) $div 2) $div (n * total) AS gini_1e4
+                 + (n * total) // 2) // (n * total) AS gini_1e4
          FROM d
          WINDOW w AS (ORDER BY decile
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -2788,13 +2770,10 @@ object Analytics {
       .orderBy(col("day"))
   }
 
-  /** The CUSUM recurrence as one recursive-CTE statement; `dayE` is the
-    * only dialect point (strftime vs date_format). Same text feeds the
-    * DuckDB oracle and the Spark front-door twin.
-    */
-  private[graft] def cusumSql(dayE: String): String =
+  /** The CUSUM recurrence as one recursive-CTE statement. */
+  private[graft] def cusumSql: String =
     s"""WITH RECURSIVE d AS (
-           SELECT $dayE AS day,
+           SELECT strftime(ts, '%Y-%m-%d') AS day,
                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
                     AS cents
            FROM events GROUP BY 1),
@@ -2873,10 +2852,8 @@ object Analytics {
       .orderBy(col("priority"))
   }
 
-  /** The winsorized mean as portable SQL (only the integer-division
-    * spelling differs between engines).
-    */
-  private[graft] def winsorizedStatsSql(div: String): String =
+  /** The winsorized mean as DuckDB SQL. */
+  private[graft] def winsorizedStatsSql: String =
     s"""WITH o AS (SELECT o_orderpriority AS priority,
                 CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
             FROM orders),
@@ -2889,9 +2866,9 @@ object Analytics {
                            AS BIGINT) AS n
                FROM cells),
        b AS (SELECT priority, n,
-                    min(CASE WHEN cum >= (n + 19) $div 20
+                    min(CASE WHEN cum >= (n + 19) // 20
                              THEN cents END) AS p05_cents,
-                    min(CASE WHEN cum >= (19 * n + 19) $div 20
+                    min(CASE WHEN cum >= (19 * n + 19) // 20
                              THEN cents END) AS p95_cents
              FROM cum GROUP BY priority, n),
        m AS (SELECT c.priority,
@@ -2904,7 +2881,7 @@ object Analytics {
              FROM cells c JOIN b ON b.priority = c.priority
              GROUP BY c.priority)
        SELECT b.priority, b.n, b.p05_cents, b.p95_cents, m.n_clamped,
-              CAST((2 * m.sumw + b.n) $div (2 * b.n) AS BIGINT)
+              CAST((2 * m.sumw + b.n) // (2 * b.n) AS BIGINT)
                 AS win_mean_cents
        FROM b JOIN m ON m.priority = b.priority
        ORDER BY b.priority"""
@@ -3059,8 +3036,7 @@ object Analytics {
       .orderBy(col("o_year"))
   }
 
-  private[graft] def marketShareSql(div: String, nation: String,
-                                    region: String, ptype: String): String =
+  private[graft] def marketShareSql(nation: String, region: String, ptype: String): String =
     s"""WITH base AS (
          SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
                 n2.n_name AS supp_nation,
@@ -3082,7 +3058,7 @@ object Analytics {
                 CAST(sum(cents) AS BIGINT) AS total_cents
          FROM base GROUP BY o_year)
        SELECT o_year, nation_cents, total_cents,
-              CAST((20000 * nation_cents + total_cents) $div (2 * total_cents) AS BIGINT)
+              CAST((20000 * nation_cents + total_cents) // (2 * total_cents) AS BIGINT)
                 AS share_1e4
        FROM agg ORDER BY o_year"""
 
@@ -3107,13 +3083,10 @@ object Analytics {
       .orderBy(col("ship_month"))
   }
 
-  /** `month` is the dialect's yyyy-MM formatter applied to l_shipdate —
-    * DuckDB `strftime(l_shipdate, '%Y-%m')`, Spark
-    * `date_format(l_shipdate, 'yyyy-MM')`.
-    */
-  private[graft] def promotionEffectSql(div: String, month: String): String =
+  /** [[promotionEffect]] as DuckDB SQL. */
+  private[graft] def promotionEffectSql: String =
     s"""WITH base AS (
-         SELECT $month AS ship_month, p_type,
+         SELECT strftime(l_shipdate, '%Y-%m') AS ship_month, p_type,
                 CAST(floor(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
                   * CAST(100 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS cents
          FROM lineitem JOIN part ON l_partkey = p_partkey),
@@ -3124,7 +3097,7 @@ object Analytics {
                 CAST(sum(cents) AS BIGINT) AS total_cents
          FROM base GROUP BY ship_month)
        SELECT ship_month, promo_cents, total_cents,
-              CAST((20000 * promo_cents + total_cents) $div (2 * total_cents) AS BIGINT)
+              CAST((20000 * promo_cents + total_cents) // (2 * total_cents) AS BIGINT)
                 AS promo_share_1e4
        FROM agg ORDER BY ship_month"""
 
@@ -3183,7 +3156,7 @@ object Analytics {
         expr("CAST((2 * revenue_cents + 7) div 14 AS BIGINT)"))
   }
 
-  private[graft] def smallQtyRevenueSql(div: String, brand: String): String =
+  private[graft] def smallQtyRevenueSql(brand: String): String =
     s"""WITH li AS (
          SELECT p_partkey, l_quantity,
                 CAST(floor(l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)
@@ -3196,7 +3169,7 @@ object Analytics {
                 CAST(coalesce(sum(cents), 0) AS BIGINT) AS revenue_cents
          FROM li WHERE l_quantity < 0.2 * avg_qty)
        SELECT n_items, revenue_cents,
-              CAST((2 * revenue_cents + 7) $div 14 AS BIGINT) AS avg_weekly_cents
+              CAST((2 * revenue_cents + 7) // 14 AS BIGINT) AS avg_weekly_cents
        FROM agg"""
 
   /** TPC-H Q6-style forecast revenue change: the discount revenue that
@@ -3423,7 +3396,7 @@ object Analytics {
   }
 
   /** Fully portable text (lead/UNION ALL/decimal sums spell identically in
-    * DuckDB and Spark) — rides `SqlFrontDoor.portable`.
+    * DuckDB and Spark).
     */
   private[graft] def acfDailyValueSql(maxLag: Int): String = {
     val leadCols = (1 to maxLag)
@@ -3691,8 +3664,8 @@ object Analytics {
           .as("slope_cents_per_day_1e6"))
   }
 
-  /** Portable text except the datediff spelling (the one dialect knob). */
-  private[graft] def theilSenTrendSql(datediff: String): String =
+  /** [[theilSenTrend]] as DuckDB SQL. */
+  private[graft] def theilSenTrendSql: String =
     s"""WITH daily AS (
          SELECT CAST(ts AS DATE) AS day,
                 CAST(sum(CAST(floor(value * CAST(100 AS DOUBLE)
@@ -3700,7 +3673,7 @@ object Analytics {
          FROM events GROUP BY CAST(ts AS DATE)),
        pairs AS (SELECT a.day AS da, b.day AS db,
                         b.v - a.v AS num,
-                        CAST($datediff AS BIGINT) AS den
+                        CAST(date_diff('day', a.day, b.day) AS BIGINT) AS den
                  FROM daily a JOIN daily b ON a.day < b.day),
        ranked AS (SELECT num, den,
                     row_number() OVER (ORDER BY
@@ -3769,8 +3742,8 @@ object Analytics {
           .as("slope_cents_per_day_1e6"))
   }
 
-  /** Portable text except the datediff spelling (the one dialect knob). */
-  private[graft] def siegelSlopeSql(datediff: String): String =
+  /** [[siegelSlope]] as DuckDB SQL. */
+  private[graft] def siegelSlopeSql: String =
     s"""WITH daily AS (
          SELECT CAST(ts AS DATE) AS day,
                 CAST(sum(CAST(floor(value * CAST(100 AS DOUBLE)
@@ -3778,7 +3751,7 @@ object Analytics {
          FROM events GROUP BY CAST(ts AS DATE)),
        pairs AS (SELECT a.day AS da, b.day AS db,
                         b.v - a.v AS num,
-                        CAST($datediff AS BIGINT) AS den
+                        CAST(date_diff('day', a.day, b.day) AS BIGINT) AS den
                  FROM daily a JOIN daily b ON a.day <> b.day),
        sl AS (SELECT da, db, num, den,
                 CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS slope
@@ -3859,14 +3832,10 @@ object Analytics {
       .orderBy(col("user_id"))
   }
 
-  /** Portable text except the epoch-micros spelling (the one dialect
-    * knobs: DuckDB epoch_us + //, Spark unix_micros + DIV; the DIV
-    * operands are non-negative, so truncation and flooring agree).
-    */
-  private[graft] def botLikenessSql(epochUs: String, div: String,
-                                    minEvents: Long = 10): String =
+  /** [[botLikeness]] as DuckDB SQL. */
+  private[graft] def botLikenessSql(minEvents: Long = 10): String =
     s"""WITH ev AS (SELECT user_id, event_id, event_type,
-                $epochUs(ts) AS t_us
+                epoch_us(ts) AS t_us
               FROM events),
        gaps AS (SELECT user_id, event_type,
                 t_us - lag(t_us, 1) OVER (PARTITION BY user_id
@@ -3886,7 +3855,7 @@ object Analytics {
               FROM gaps GROUP BY user_id),
        flagged AS (SELECT user_id, n_events, n_purchases, k_gaps,
                 CASE WHEN k_gaps > 0
-                  THEN CAST(sg $div (k_gaps * 1000) AS BIGINT)
+                  THEN CAST(sg // (k_gaps * 1000) AS BIGINT)
                   ELSE CAST(0 AS BIGINT) END AS mean_gap_ms,
                 CASE WHEN k_gaps >= 5 AND sg > 0
                   AND 100 * (k_gaps * sg2 - CAST(sg AS DECIMAL(38,0)) * sg)
@@ -3964,21 +3933,21 @@ object Analytics {
       .orderBy(col("day"))
   }
 
-  /** Portable text except the day-of-week and integer-division
-    * spellings (the two dialect knobs; both signed quotients — seasonal
-    * and trend — are two-branch so truncating DIV and flooring // agree).
+  /** [[seasonalDecompose]] as DuckDB SQL (both signed quotients —
+    * seasonal and trend — are two-branch, so truncating and flooring
+    * division agree).
     */
-  private[graft] def seasonalDecomposeSql(dow: String, div: String): String =
+  private[graft] def seasonalDecomposeSql: String =
     s"""WITH daily AS (
          SELECT CAST(ts AS DATE) AS day,
                 CAST(sum(CAST(floor(value * CAST(100 AS DOUBLE)
                   + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS v
          FROM events GROUP BY CAST(ts AS DATE)),
-       trended AS (SELECT day, v, CAST($dow AS BIGINT) AS dow,
+       trended AS (SELECT day, v, CAST(dayofweek(day) AS BIGINT) AS dow,
                 CAST(sum7 AS BIGINT) AS sum7, 7 * v - sum7 AS d7,
                 CASE WHEN sum7 >= 0
-                     THEN CAST((sum7 * 1000) $div 7 AS BIGINT)
-                     ELSE -CAST(((-sum7) * 1000) $div 7 AS BIGINT) END
+                     THEN CAST((sum7 * 1000) // 7 AS BIGINT)
+                     ELSE -CAST(((-sum7) * 1000) // 7 AS BIGINT) END
                   AS trend_milli
               FROM (SELECT day, v,
                       sum(v) OVER (ORDER BY day
@@ -3988,8 +3957,8 @@ object Analytics {
                     FROM daily) t
               WHERE cnt7 = 7),
        seasonal AS (SELECT dow,
-                CASE WHEN sd >= 0 THEN CAST((sd * 1000) $div (7 * n_dow) AS BIGINT)
-                     ELSE -CAST(((-sd) * 1000) $div (7 * n_dow) AS BIGINT) END
+                CASE WHEN sd >= 0 THEN CAST((sd * 1000) // (7 * n_dow) AS BIGINT)
+                     ELSE -CAST(((-sd) * 1000) // (7 * n_dow) AS BIGINT) END
                   AS seasonal_milli
               FROM (SELECT dow, CAST(sum(d7) AS BIGINT) AS sd,
                       CAST(count(*) AS BIGINT) AS n_dow
@@ -4360,12 +4329,10 @@ object Analytics {
                 END""").as("z_micro"))
   }
 
-  /** Portable text except the day-of-week spelling (the one dialect
-    * knob: DuckDB dayofweek is already 0-based Sunday; Spark subtracts 1).
-    */
-  private[graft] def mannKendallSeasonalSql(dow: String): String =
+  /** [[mannKendallSeasonal]] as DuckDB SQL. */
+  private[graft] def mannKendallSeasonalSql: String =
     s"""WITH daily AS (
-         SELECT day, CAST($dow AS BIGINT) AS season, v FROM (
+         SELECT day, CAST(dayofweek(day) AS BIGINT) AS season, v FROM (
            SELECT CAST(ts AS DATE) AS day,
                   CAST(sum(CAST(floor(value * CAST(100 AS DOUBLE)
                     + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS v
@@ -4543,12 +4510,8 @@ object Analytics {
       .orderBy(col("day"))
   }
 
-  /** Shared template: `div` is the dialect's integer division, `micros`
-    * the epoch-microseconds function (DuckDB `epoch_us`, Spark
-    * `unix_micros`).
-    */
-  private[graft] def trafficKpiReportSql(div: String, micros: String,
-                                         gapMinutes: Int): String = {
+  /** [[trafficKpiReport]] as DuckDB SQL. */
+  private[graft] def trafficKpiReportSql(gapMinutes: Int): String = {
     val gapUs = gapMinutes * 60L * 1000000L
     s"""WITH daily AS (
          SELECT CAST(ts AS DATE) AS day,
@@ -4558,7 +4521,7 @@ object Analytics {
                   + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS value_cents
          FROM events GROUP BY CAST(ts AS DATE)),
        g AS (
-         SELECT ts, $micros(ts) - lag($micros(ts), 1) OVER (PARTITION BY user_id
+         SELECT ts, epoch_us(ts) - lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
                   ORDER BY ts, event_id) AS gap_us
          FROM events),
        starts AS (
@@ -4569,7 +4532,7 @@ object Analytics {
               CAST(coalesce(n_sessions, 0) AS BIGINT) AS n_sessions,
               CASE WHEN coalesce(n_sessions, 0) = 0 THEN CAST(0 AS BIGINT)
                    ELSE CAST((20000 * n_events + n_sessions)
-                     $div (2 * n_sessions) AS BIGINT) END AS events_per_session_1e4
+                     // (2 * n_sessions) AS BIGINT) END AS events_per_session_1e4
        FROM daily LEFT JOIN starts ON daily.day = starts.day
        ORDER BY daily.day"""
   }
@@ -4713,14 +4676,10 @@ object Analytics {
         col("slope_1e4"))
   }
 
-  /** The trend audit as one naive statement; dialect points are the day
-    * extractor, the day-difference expression, and the truncating
-    * division spelling.
-    */
-  private[graft] def trendAuditSql(dayE: String, dxE: String,
-                                   div: String): String =
+  /** The trend audit as one naive statement. */
+  private[graft] def trendAuditSql: String =
     s"""WITH d AS (
-           SELECT $dayE AS day,
+           SELECT strftime(ts, '%Y-%m-%d') AS day,
                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
                     AS cents
            FROM events GROUP BY 1),
@@ -4733,19 +4692,19 @@ object Analytics {
                            WHEN b.cents < a.cents THEN -1 ELSE 0 END AS BIGINT)
                         AS sgn,
                       b.cents - a.cents AS dy,
-                      $dxE AS dx,
+                      CAST(date_diff('day', CAST(a.day AS DATE), CAST(b.day AS DATE)) AS BIGINT) AS dx,
                       a.day AS d1, b.day AS d2
                FROM d a JOIN d b ON a.day < b.day),
          st AS (SELECT CAST(sum(sgn) AS BIGINT) AS s_stat,
                        CAST(count(*) AS BIGINT) AS n_pairs FROM p),
-         med AS (SELECT CASE WHEN dy >= 0 THEN (20000 * dy + dx) $div (2 * dx)
-                        ELSE -((20000 * -dy + dx) $div (2 * dx)) END AS slope_1e4
+         med AS (SELECT CASE WHEN dy >= 0 THEN (20000 * dy + dx) // (2 * dx)
+                        ELSE -((20000 * -dy + dx) // (2 * dx)) END AS slope_1e4
                  FROM (SELECT dy, dx,
                          CAST(row_number() OVER (ORDER BY
                            CAST(dy AS DOUBLE) / CAST(dx AS DOUBLE), d1, d2)
                            AS BIGINT) AS rk
                        FROM p) r CROSS JOIN st
-                 WHERE rk = (n_pairs + 1) $div 2)
+                 WHERE rk = (n_pairs + 1) // 2)
          SELECT nn.n AS n_days, st.n_pairs, st.s_stat,
                 nn.n * (nn.n - 1) * (2 * nn.n + 5) - tie.tie18 AS var18,
                 CAST(CASE WHEN 180000 * st.s_stat * st.s_stat >
@@ -4755,14 +4714,10 @@ object Analytics {
                 med.slope_1e4
          FROM st CROSS JOIN nn CROSS JOIN tie CROSS JOIN med"""
 
-  /** The Holt recurrence as one recursive-CTE statement; dialect points
-    * are the day extractor (strftime vs date_format) and the truncating
-    * integer division spelling (// vs DIV). Same text feeds the DuckDB
-    * oracle and the Spark front-door twin.
-    */
-  private[graft] def holtSql(dayE: String, div: String): String =
+  /** The Holt recurrence as one recursive-CTE statement. */
+  private[graft] def holtSql: String =
     s"""WITH RECURSIVE d AS (
-           SELECT $dayE AS day,
+           SELECT strftime(ts, '%Y-%m-%d') AS day,
                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
                     AS cents
            FROM events GROUP BY 1),
@@ -4776,8 +4731,8 @@ object Analytics {
            FROM s WHERE rk = 1
            UNION ALL
            SELECT s.day, s.cents, s.rk,
-                  (10000 * s.cents + h.l + h.b) $div 2,
-                  (((10000 * s.cents + h.l + h.b) $div 2 - h.l) + h.b) $div 2,
+                  (10000 * s.cents + h.l + h.b) // 2,
+                  (((10000 * s.cents + h.l + h.b) // 2 - h.l) + h.b) // 2,
                   h.l + h.b
            FROM h JOIN s ON s.rk = h.rk + 1)
          SELECT day, cents, l AS level_1e4, b AS trend_1e4,

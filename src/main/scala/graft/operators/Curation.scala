@@ -393,13 +393,10 @@ object Curation {
   }
 
   /** The efficiency statement from the same packed-sequence derivation as
-    * the q_pack_sequences oracle; dialect points are the token-count
-    * expression (len/list vs size/array regex forms) and integer
-    * division.
+    * the q_pack_sequences oracle.
     */
-  private[graft] def packEfficiencySql(nTokensExpr: String, div: String,
-                                       budget: Int = 512): String =
-    s"""WITH d AS (SELECT doc_id, source, CAST($nTokensExpr AS BIGINT)
+  private[graft] def packEfficiencySql(budget: Int = 512): String =
+    s"""WITH d AS (SELECT doc_id, source, CAST(len(regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')) AS BIGINT)
               AS n_tokens
             FROM documents),
          st AS (SELECT doc_id, source, n_tokens,
@@ -407,9 +404,9 @@ object Curation {
                   ORDER BY doc_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
                   AS strt FROM d),
-         seqs AS (SELECT source, CAST(strt $div $budget AS BIGINT) AS seq_id,
+         seqs AS (SELECT source, CAST(strt // $budget AS BIGINT) AS seq_id,
                          CAST(sum(n_tokens) AS BIGINT) AS seq_tokens
-                  FROM st GROUP BY source, CAST(strt $div $budget AS BIGINT)),
+                  FROM st GROUP BY source, CAST(strt // $budget AS BIGINT)),
          fin AS (SELECT source, max(seq_id) AS final_seq
                  FROM seqs GROUP BY source)
          SELECT seqs.source, CAST(count(*) AS BIGINT) AS n_seqs,
@@ -424,7 +421,7 @@ object Curation {
                           ELSE 0 END) AS BIGINT) AS pad_tokens,
                 (20000 * CAST(sum(seq_tokens) AS BIGINT)
                  + CAST(count(*) AS BIGINT) * $budget)
-                  $div (2 * CAST(count(*) AS BIGINT) * $budget) AS fill_1e4
+                  // (2 * CAST(count(*) AS BIGINT) * $budget) AS fill_1e4
          FROM seqs JOIN fin ON fin.source = seqs.source
          GROUP BY seqs.source ORDER BY seqs.source"""
 
@@ -486,12 +483,11 @@ object Curation {
       .orderBy(col("source"), col("decile"))
   }
 
-  /** The interleave audit as one statement; `div` is the only dialect
-    * point ("//" in DuckDB, "DIV" in Spark). share_1e4 is the decile-
+  /** The interleave audit as one statement. share_1e4 is the decile-
     * local share ((n_docs·10)/n_total, half-up 1e-4): a perfect schedule
     * makes it equal source_share_1e4 in every decile.
     */
-  private[graft] def interleaveSql(div: String): String =
+  private[graft] def interleaveSql: String =
     s"""WITH r AS (SELECT doc_id, source,
                CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id)
                  AS BIGINT) AS r
@@ -501,16 +497,16 @@ object Curation {
          t AS (SELECT CAST(sum(n_s) AS BIGINT) AS n_total FROM c),
          k AS (SELECT r.source,
                       (2 * r.r - 1) *
-                        (CAST(1099511627776 AS BIGINT) $div (2 * c.n_s))
+                        (CAST(1099511627776 AS BIGINT) // (2 * c.n_s))
                         AS skey
                FROM r JOIN c ON c.source = r.source),
-         d AS (SELECT source, (skey * 10) $div 1099511627776 AS decile,
+         d AS (SELECT source, (skey * 10) // 1099511627776 AS decile,
                       CAST(count(*) AS BIGINT) AS n_docs
-               FROM k GROUP BY source, (skey * 10) $div 1099511627776)
+               FROM k GROUP BY source, (skey * 10) // 1099511627776)
          SELECT d.source, d.decile, d.n_docs,
-                (20000 * d.n_docs * 10 + t.n_total) $div (2 * t.n_total)
+                (20000 * d.n_docs * 10 + t.n_total) // (2 * t.n_total)
                   AS share_1e4,
-                (20000 * c.n_s + t.n_total) $div (2 * t.n_total)
+                (20000 * c.n_s + t.n_total) // (2 * t.n_total)
                   AS source_share_1e4
          FROM d CROSS JOIN t JOIN c ON c.source = d.source
          ORDER BY d.source, d.decile"""

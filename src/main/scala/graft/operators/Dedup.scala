@@ -1088,14 +1088,12 @@ object Dedup {
       .orderBy(col("decile"))
   }
 
-  /** [[dupRateTrend]] as SQL for either engine (`div` knob only; the
-    * exact-pairs CTE is the naive any-shared-shingle form the other
-    * truth-composed oracles use).
+  /** [[dupRateTrend]] as DuckDB SQL (the exact-pairs CTE is the naive
+    * any-shared-shingle form the other truth-composed oracles use).
     */
-  private[graft] def dupRateTrendSql(div: String, shingles: String,
-                                     sz: String, un: String): String =
+  private[graft] def dupRateTrendSql(shingles: String): String =
     s"""WITH $shingles,
-       ex AS (SELECT doc_id, CAST($sz(sh) AS BIGINT) AS n_sh, $un(sh) AS shingle FROM shd),
+       ex AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_sh, unnest(sh) AS shingle FROM shd),
        pairs AS (
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                 a.n_sh AS na, b.n_sh AS nb, count(*) AS common
@@ -1103,20 +1101,20 @@ object Dedup {
          GROUP BY a.doc_id, b.doc_id, a.n_sh, b.n_sh),
        tp AS (SELECT doc_a, doc_b FROM pairs
               WHERE (20000 * common + (na + nb - common))
-                    $div (2 * (na + nb - common)) >= 5000),
+                    // (2 * (na + nb - common)) >= 5000),
        mx AS (SELECT max(doc_id) AS max_id FROM documents),
-       dd AS (SELECT (10 * doc_id) $div (max_id + 1) AS decile
+       dd AS (SELECT (10 * doc_id) // (max_id + 1) AS decile
               FROM documents CROSS JOIN mx),
        dc AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_docs
               FROM dd GROUP BY decile),
-       pd AS (SELECT (10 * greatest(doc_a, doc_b)) $div (max_id + 1) AS decile
+       pd AS (SELECT (10 * greatest(doc_a, doc_b)) // (max_id + 1) AS decile
               FROM tp CROSS JOIN mx),
        pc AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_pairs
               FROM pd GROUP BY decile)
        SELECT CAST(dc.decile AS BIGINT) AS decile, dc.n_docs,
               CAST(coalesce(pc.n_pairs, 0) AS BIGINT) AS n_pairs,
               CAST((2000000 * coalesce(pc.n_pairs, 0) + dc.n_docs)
-                   $div (2 * dc.n_docs) AS BIGINT) AS pairs_per_1e6_docs
+                   // (2 * dc.n_docs) AS BIGINT) AS pairs_per_1e6_docs
        FROM dc LEFT JOIN pc ON pc.decile = dc.decile
        ORDER BY decile"""
 
@@ -1210,41 +1208,25 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** [[winnowPairs]] as dialect-templated SQL — one text for both
-    * engines so the three surfaces cannot drift; unnest/posexplode and
-    * `div` are the dialect points, the operating point is parameterized
-    * in lockstep with the operator defaults.
+  /** [[winnowPairs]] as DuckDB SQL, the operating point parameterized in
+    * lockstep with the operator defaults.
     */
-  private[graft] def winnowPairsSql(duck: Boolean, toks: String, div: String,
-                                    k: Int = 16, w: Int = 8,
+  private[graft] def winnowPairsSql(toks: String, k: Int = 16, w: Int = 8,
                                     minShared: Long = 3, dfCap: Long = 100,
-                                    overlapMin1e4: Long = 2500): String = {
-    val join = if (duck) "array_to_string" else "array_join"
+                                    overlapMin1e4: Long = 2500): String =
     // the pos-desc tiebreak packs as lpad(999999 - pos): past 1e6 grams
     // the subtraction goes negative and would silently mis-order the
     // (hash, pos) tiebreak — fail LOUDLY instead, exactly like the Scala
     // operator's raise_error guard (r11 advisory)
-    val gramCtes = if (duck)
-      s"""g AS (SELECT doc_id, txt, unnest(range(0, length(txt) - ${k - 1})) AS pos FROM f),
+    s"""WITH t AS (SELECT doc_id, array_to_string($toks, ' ') AS txt FROM documents),
+       f AS (SELECT doc_id, txt FROM t WHERE length(txt) >= $k),
+       g AS (SELECT doc_id, txt, unnest(range(0, length(txt) - ${k - 1})) AS pos FROM f),
          h AS (SELECT doc_id, pos,
                concat(md5(substr(txt, CAST(pos AS INT) + 1, $k)),
                       CASE WHEN pos < 999999
                            THEN lpad(CAST(999999 - pos AS VARCHAR), 6, '0')
                            ELSE error('winnow: document exceeds the 1e6-gram packing range') END) AS pk
-               FROM g)"""
-    else
-      s"""h AS (SELECT doc_id, pos,
-               concat(md5(gram),
-                      CASE WHEN pos < 999999
-                           THEN lpad(CAST(999999 - pos AS STRING), 6, '0')
-                           ELSE raise_error('winnow: document exceeds the 1e6-gram packing range') END) AS pk
-               FROM (SELECT doc_id,
-                       posexplode(transform(sequence(0, length(txt) - $k),
-                         i -> substring(txt, i + 1, $k))) AS (pos, gram)
-                     FROM f))"""
-    s"""WITH t AS (SELECT doc_id, $join($toks, ' ') AS txt FROM documents),
-       f AS (SELECT doc_id, txt FROM t WHERE length(txt) >= $k),
-       $gramCtes,
+               FROM g),
        wm AS (SELECT doc_id, pos,
              min(pk) OVER (PARTITION BY doc_id ORDER BY pos
                ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS wmin,
@@ -1264,13 +1246,12 @@ object Dedup {
               HAVING count(*) >= $minShared),
        sc AS (SELECT doc_a, doc_b, n_shared,
               CAST((20000 * n_shared + least(sa.n_fp, sb.n_fp))
-                $div (2 * least(sa.n_fp, sb.n_fp)) AS BIGINT) AS overlap_1e4
+                // (2 * least(sa.n_fp, sb.n_fp)) AS BIGINT) AS overlap_1e4
               FROM pr JOIN sz sa ON pr.doc_a = sa.doc_id
                       JOIN sz sb ON pr.doc_b = sb.doc_id)
        SELECT doc_a, doc_b, n_shared, overlap_1e4
        FROM sc WHERE overlap_1e4 >= $overlapMin1e4
        ORDER BY doc_a, doc_b"""
-  }
 
   /** 7. Exact substring dedup (Lee et al. 2022, arXiv:2107.06499 —
     * "Deduplicating Training Data Makes Language Models Better"):
@@ -1596,101 +1577,64 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** [[substringDedup]] as dialect-templated SQL — one text for both
-    * engines (the winnowPairsSql discipline); unnest/posexplode is the
-    * dialect point, parameters in lockstep with the operator defaults.
+  /** The exact-substring span CTEs shared by the substring SQL builders:
+    * tokens joined to text (t, f), k-char grams (g, h), rare grams,
+    * matching gram pairs on one diagonal (m, r) and the runs they form,
+    * left open for the caller's HAVING.
     */
-  private[graft] def substringDedupSql(duck: Boolean, toks: String,
-                                       k: Int = 16, dfCap: Long = 100,
+  private def spanCtes(toks: String, k: Int, dfCap: Long): String =
+    s"""WITH t AS (SELECT doc_id, array_to_string($toks, ' ') AS txt FROM documents),
+       f AS (SELECT doc_id, txt FROM t WHERE length(txt) >= $k),
+       g AS (SELECT doc_id, txt, unnest(range(0, length(txt) - ${k - 1})) AS pos FROM f),
+         h AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
+                      substr(txt, CAST(pos AS INT) + 1, $k) AS gram FROM g),
+       rare AS (SELECT gram FROM (
+                  SELECT gram, count(DISTINCT doc_id) AS df FROM h GROUP BY gram) d
+                WHERE df <= $dfCap),
+       m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                    a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
+             FROM (SELECT h2.doc_id, h2.pos, h2.gram FROM h h2 JOIN rare USING (gram)) a
+             JOIN (SELECT h3.doc_id, h3.pos, h3.gram FROM h h3 JOIN rare USING (gram)) b
+               ON a.gram = b.gram AND a.doc_id < b.doc_id),
+       r AS (SELECT doc_a, doc_b, diag, pa, pb,
+                    pa - row_number() OVER (
+                      PARTITION BY doc_a, doc_b, diag ORDER BY pa) AS grp
+             FROM m),
+       runs AS (SELECT doc_a, doc_b,
+                       CAST(min(pa) AS BIGINT) AS start_a,
+                       CAST(min(pb) AS BIGINT) AS start_b,
+                       CAST(count(*) + ${k - 1} AS BIGINT) AS match_len
+                FROM r GROUP BY doc_a, doc_b, diag, grp"""
+
+  /** [[substringDedup]] as DuckDB SQL, parameters in lockstep with the
+    * operator defaults.
+    */
+  private[graft] def substringDedupSql(toks: String, k: Int = 16, dfCap: Long = 100,
                                        minLen: Long = 32,
-                                       incremental: Boolean = false,
-                                       div: String = "//"): String = {
-    val join = if (duck) "array_to_string" else "array_join"
+                                       incremental: Boolean = false): String = {
     // incremental face: the full-corpus statement restricted to pairs
     // whose greater member is in the delta (ids append-monotone) — the
     // split computed IN SQL, the q_dedup_incremental oracle discipline
     val mxCte =
       if (incremental)
         s""",
-       mxd AS (SELECT max(doc_id) * 4 $div 5 AS split FROM documents)"""
+       mxd AS (SELECT max(doc_id) * 4 // 5 AS split FROM documents)"""
       else ""
     val fromRuns = if (incremental) "runs CROSS JOIN mxd" else "runs"
     val deltaPred = if (incremental) " AND doc_b >= split" else ""
-    val gramCtes = if (duck)
-      s"""g AS (SELECT doc_id, txt, unnest(range(0, length(txt) - ${k - 1})) AS pos FROM f),
-         h AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-                      substr(txt, CAST(pos AS INT) + 1, $k) AS gram FROM g)"""
-    else
-      s"""h AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos, gram
-               FROM (SELECT doc_id,
-                       posexplode(transform(sequence(0, length(txt) - $k),
-                         i -> substring(txt, i + 1, $k))) AS (pos, gram)
-                     FROM f))"""
-    s"""WITH t AS (SELECT doc_id, $join($toks, ' ') AS txt FROM documents),
-       f AS (SELECT doc_id, txt FROM t WHERE length(txt) >= $k),
-       $gramCtes,
-       rare AS (SELECT gram FROM (
-                  SELECT gram, count(DISTINCT doc_id) AS df FROM h GROUP BY gram) d
-                WHERE df <= $dfCap),
-       m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                    a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
-             FROM (SELECT h2.doc_id, h2.pos, h2.gram FROM h h2 JOIN rare USING (gram)) a
-             JOIN (SELECT h3.doc_id, h3.pos, h3.gram FROM h h3 JOIN rare USING (gram)) b
-               ON a.gram = b.gram AND a.doc_id < b.doc_id),
-       r AS (SELECT doc_a, doc_b, diag, pa, pb,
-                    pa - row_number() OVER (
-                      PARTITION BY doc_a, doc_b, diag ORDER BY pa) AS grp
-             FROM m),
-       runs AS (SELECT doc_a, doc_b,
-                       CAST(min(pa) AS BIGINT) AS start_a,
-                       CAST(min(pb) AS BIGINT) AS start_b,
-                       CAST(count(*) + ${k - 1} AS BIGINT) AS match_len
-                FROM r GROUP BY doc_a, doc_b, diag, grp)$mxCte
+    s"""${spanCtes(toks, k, dfCap)})$mxCte
        SELECT doc_a, doc_b, start_a, start_b, match_len
        FROM $fromRuns WHERE match_len >= $minLen$deltaPred
        ORDER BY doc_a, doc_b, start_a, start_b"""
   }
 
-  /** [[substringDupProfile]] as dialect-templated SQL — the span CTEs
-    * from [[substringDedupSql]]'s shape plus the per-doc interval merge
-    * (running-max island pass) and the permille readout; every document
-    * reports, zero-span docs read 0.
+  /** [[substringDupProfile]] as DuckDB SQL — the span CTEs plus the
+    * per-doc interval merge (running-max island pass) and the permille
+    * readout; every document reports, zero-span docs read 0.
     */
-  private[graft] def substringDupProfileSql(duck: Boolean, toks: String,
-                                            k: Int = 16, dfCap: Long = 100,
-                                            minLen: Long = 32,
-                                            div: String = "//"): String = {
-    val join = if (duck) "array_to_string" else "array_join"
-    val gramCtes = if (duck)
-      s"""g AS (SELECT doc_id, txt, unnest(range(0, length(txt) - ${k - 1})) AS pos FROM f),
-         h AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-                      substr(txt, CAST(pos AS INT) + 1, $k) AS gram FROM g)"""
-    else
-      s"""h AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos, gram
-               FROM (SELECT doc_id,
-                       posexplode(transform(sequence(0, length(txt) - $k),
-                         i -> substring(txt, i + 1, $k))) AS (pos, gram)
-                     FROM f))"""
-    s"""WITH t AS (SELECT doc_id, $join($toks, ' ') AS txt FROM documents),
-       f AS (SELECT doc_id, txt FROM t WHERE length(txt) >= $k),
-       $gramCtes,
-       rare AS (SELECT gram FROM (
-                  SELECT gram, count(DISTINCT doc_id) AS df FROM h GROUP BY gram) d
-                WHERE df <= $dfCap),
-       m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                    a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
-             FROM (SELECT h2.doc_id, h2.pos, h2.gram FROM h h2 JOIN rare USING (gram)) a
-             JOIN (SELECT h3.doc_id, h3.pos, h3.gram FROM h h3 JOIN rare USING (gram)) b
-               ON a.gram = b.gram AND a.doc_id < b.doc_id),
-       r AS (SELECT doc_a, doc_b, diag, pa, pb,
-                    pa - row_number() OVER (
-                      PARTITION BY doc_a, doc_b, diag ORDER BY pa) AS grp
-             FROM m),
-       runs AS (SELECT doc_a, doc_b,
-                       CAST(min(pa) AS BIGINT) AS start_a,
-                       CAST(min(pb) AS BIGINT) AS start_b,
-                       CAST(count(*) + ${k - 1} AS BIGINT) AS match_len
-                FROM r GROUP BY doc_a, doc_b, diag, grp
+  private[graft] def substringDupProfileSql(toks: String, k: Int = 16, dfCap: Long = 100,
+                                            minLen: Long = 32): String =
+    s"""${spanCtes(toks, k, dfCap)}
                 HAVING count(*) + ${k - 1} >= $minLen),
        sides AS (SELECT DISTINCT doc_id, st, en FROM (
                    SELECT doc_a AS doc_id, start_a AS st,
@@ -1720,72 +1664,28 @@ object Dedup {
               l.total_chars,
               CASE WHEN l.total_chars = 0 THEN CAST(0 AS BIGINT)
                    ELSE CAST((2000 * coalesce(p.dup_chars, 0) + l.total_chars)
-                        $div (2 * l.total_chars) AS BIGINT) END AS dup_permille
+                        // (2 * l.total_chars) AS BIGINT) END AS dup_permille
        FROM lens l LEFT JOIN per p ON p.doc_id = l.doc_id
        ORDER BY l.doc_id"""
-  }
 
-  /** [[substringDedupRewrite]] as dialect-templated SQL: the span CTEs,
-    * the doc_b-side island merge, and the gap-slice concat assembly —
-    * list indexing (0- vs 1-based) and the list-concat spelling are the
-    * dialect points; the integer boundaries are identical, so the
-    * rebuilt strings hash-match across engines.
+  /** [[substringDedupRewrite]] as DuckDB SQL: the span CTEs, the
+    * doc_b-side island merge, and the gap-slice concat assembly.
     */
-  private[graft] def substringDedupRewriteSql(duck: Boolean, toks: String,
-                                              k: Int = 16, dfCap: Long = 100,
+  private[graft] def substringDedupRewriteSql(toks: String, k: Int = 16, dfCap: Long = 100,
                                               minLen: Long = 32): String = {
-    val join = if (duck) "array_to_string" else "array_join"
-    val gramCtes = if (duck)
-      s"""g AS (SELECT doc_id, txt, unnest(range(0, length(txt) - ${k - 1})) AS pos FROM f),
-         h AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-                      substr(txt, CAST(pos AS INT) + 1, $k) AS gram FROM g)"""
-    else
-      s"""h AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos, gram
-               FROM (SELECT doc_id,
-                       posexplode(transform(sequence(0, length(txt) - $k),
-                         i -> substring(txt, i + 1, $k))) AS (pos, gram)
-                     FROM f))"""
-    val segsCte = if (duck)
+    val segsCte =
       """segs AS (SELECT doc_id, list(struct_pack(ist := ist, ien := ien)
                     ORDER BY ist) AS rs FROM reg GROUP BY doc_id)"""
-    else
-      """segs AS (SELECT doc_id, array_sort(collect_list(struct(ist, ien))) AS rs
-                  FROM reg GROUP BY doc_id)"""
     // gap i = (prev region's end .. next region's start); gap 0 starts at
     // char 0, the last gap ends at length(txt)
-    val assemble = if (duck)
+    val assemble =
       """list_aggregate(list_transform(range(0, len(s.rs) + 1), i ->
            substr(t.txt,
              CAST((CASE WHEN i = 0 THEN 0 ELSE s.rs[i].ien END) + 1 AS INT),
              CAST((CASE WHEN i = len(s.rs) THEN length(t.txt) ELSE s.rs[i + 1].ist END)
                - (CASE WHEN i = 0 THEN 0 ELSE s.rs[i].ien END) AS INT))),
          'string_agg', '')"""
-    else
-      """concat_ws('', transform(sequence(0, size(s.rs)), i ->
-           substring(t.txt,
-             (CASE WHEN i = 0 THEN CAST(0 AS BIGINT) ELSE s.rs[i - 1].ien END) + 1,
-             (CASE WHEN i = size(s.rs) THEN CAST(length(t.txt) AS BIGINT) ELSE s.rs[i].ist END)
-               - (CASE WHEN i = 0 THEN CAST(0 AS BIGINT) ELSE s.rs[i - 1].ien END))))"""
-    s"""WITH t AS (SELECT doc_id, $join($toks, ' ') AS txt FROM documents),
-       f AS (SELECT doc_id, txt FROM t WHERE length(txt) >= $k),
-       $gramCtes,
-       rare AS (SELECT gram FROM (
-                  SELECT gram, count(DISTINCT doc_id) AS df FROM h GROUP BY gram) d
-                WHERE df <= $dfCap),
-       m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                    a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
-             FROM (SELECT h2.doc_id, h2.pos, h2.gram FROM h h2 JOIN rare USING (gram)) a
-             JOIN (SELECT h3.doc_id, h3.pos, h3.gram FROM h h3 JOIN rare USING (gram)) b
-               ON a.gram = b.gram AND a.doc_id < b.doc_id),
-       r AS (SELECT doc_a, doc_b, diag, pa, pb,
-                    pa - row_number() OVER (
-                      PARTITION BY doc_a, doc_b, diag ORDER BY pa) AS grp
-             FROM m),
-       runs AS (SELECT doc_a, doc_b,
-                       CAST(min(pa) AS BIGINT) AS start_a,
-                       CAST(min(pb) AS BIGINT) AS start_b,
-                       CAST(count(*) + ${k - 1} AS BIGINT) AS match_len
-                FROM r GROUP BY doc_a, doc_b, diag, grp
+    s"""${spanCtes(toks, k, dfCap)}
                 HAVING count(*) + ${k - 1} >= $minLen),
        cut AS (SELECT DISTINCT doc_b AS doc_id, start_b AS st,
                       start_b + match_len AS en FROM runs),

@@ -153,11 +153,11 @@ object Layout {
       .orderBy(col("box_id"))
   }
 
-  /** [[zonePruneAudit]] as dialect-templated SQL (`div` the only dialect
-    * point; the cells CTE restates the zorderCells text).
+  /** [[zonePruneAudit]] as DuckDB SQL (the cells CTE restates the
+    * zorderCells text).
     */
-  private[graft] def zonePruneSql(div: String): String = {
-    def bit(e: String, i: Int) = s"(($e $div ${1L << i}) % 2)"
+  private[graft] def zonePruneSql: String = {
+    def bit(e: String, i: Int) = s"(($e // ${1L << i}) % 2)"
     val morton = (0 until BitsPerDim).map { i =>
       s"${bit("xn", i)} * ${1L << (2 * i)} + ${bit("yn", i)} * ${1L << (2 * i + 1)}"
     }.mkString(" + ")
@@ -168,21 +168,21 @@ object Layout {
     s"""WITH b AS (SELECT min(l_partkey) AS mnp, max(l_partkey) AS mxp,
                    min(l_suppkey) AS mns, max(l_suppkey) AS mxs FROM lineitem),
        n AS (SELECT l_partkey, l_suppkey,
-             ((CAST(l_partkey AS BIGINT) - mnp) * 65535) $div greatest(mxp - mnp, 1) AS xn,
-             ((CAST(l_suppkey AS BIGINT) - mns) * 65535) $div greatest(mxs - mns, 1) AS yn
+             ((CAST(l_partkey AS BIGINT) - mnp) * 65535) // greatest(mxp - mnp, 1) AS xn,
+             ((CAST(l_suppkey AS BIGINT) - mns) * 65535) // greatest(mxs - mns, 1) AS yn
              FROM lineitem CROSS JOIN b),
        zed AS (SELECT *, ($morton) AS z FROM n),
-       cells AS (SELECT z $div ${1L << (2 * BitsPerDim - 4)} AS z_cell,
+       cells AS (SELECT z // ${1L << (2 * BitsPerDim - 4)} AS z_cell,
                  CAST(count(*) AS BIGINT) AS n_rows,
                  min(l_partkey) AS min_part, max(l_partkey) AS max_part,
                  min(l_suppkey) AS min_supp, max(l_suppkey) AS max_supp
                  FROM zed GROUP BY 1),
        raw_boxes AS ($boxArms),
        boxes AS (SELECT box_id,
-                 mnp + ((mxp - mnp) * p0) $div 10000 AS plo,
-                 mnp + ((mxp - mnp) * p1) $div 10000 AS phi,
-                 mns + ((mxs - mns) * s0) $div 10000 AS slo,
-                 mns + ((mxs - mns) * s1) $div 10000 AS shi
+                 mnp + ((mxp - mnp) * p0) // 10000 AS plo,
+                 mnp + ((mxp - mnp) * p1) // 10000 AS phi,
+                 mns + ((mxs - mns) * s0) // 10000 AS slo,
+                 mns + ((mxs - mns) * s1) // 10000 AS shi
                  FROM raw_boxes CROSS JOIN b),
        rd AS (SELECT box_id,
               CAST(count(*) AS BIGINT) AS cells_total,
@@ -201,7 +201,7 @@ object Layout {
        SELECT rd.box_id, cells_total, cells_read, rows_read,
               CAST(coalesce(rows_match, 0) AS BIGINT) AS rows_match,
               CAST((20000 * rows_read + greatest(coalesce(rows_match, 0), 1))
-                $div (2 * greatest(coalesce(rows_match, 0), 1)) AS BIGINT)
+                // (2 * greatest(coalesce(rows_match, 0), 1)) AS BIGINT)
                 AS read_amp_1e4
        FROM rd LEFT JOIN mt ON rd.box_id = mt.box_id
        ORDER BY rd.box_id"""

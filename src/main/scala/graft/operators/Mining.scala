@@ -428,12 +428,9 @@ object Mining {
   }
 
   /** The PageRank computation as one SQL statement with the iteration
-    * unrolled (10 chained CTEs) — the oracle (`div` = "//") and the Spark
-    * front-door twin (`div` = "DIV") are the same text modulo the integer
-    * division spelling, so the three surfaces can never drift.
+    * unrolled (10 chained CTEs).
     */
-  private[graft] def pagerankSql(div: String, maxItems: Int,
-                                 iters: Int): String = {
+  private[graft] def pagerankSql(maxItems: Int, iters: Int): String = {
     val header =
       s"""WITH inc AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
                       FROM lineitem),
@@ -449,12 +446,12 @@ object Mining {
                   FROM e GROUP BY src),
          nodes AS (SELECT DISTINCT src AS node FROM e),
          nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-         it0 AS (SELECT node, 1000000000 $div n AS pr
+         it0 AS (SELECT node, 1000000000 // n AS pr
                  FROM nodes CROSS JOIN nn)"""
     val steps = (1 to iters).map { i =>
       s"""it$i AS (SELECT e.dst AS node,
-               (150000000 $div t.n)
-               + (85 * sum((r.pr * e.w) $div w2.wsum)) $div 100 AS pr
+               (150000000 // t.n)
+               + (85 * sum((r.pr * e.w) // w2.wsum)) // 100 AS pr
              FROM e JOIN it${i - 1} r ON e.src = r.node
              JOIN wout w2 ON e.src = w2.src CROSS JOIN nn t
              GROUP BY e.dst, t.n)"""
@@ -538,11 +535,9 @@ object Mining {
   }
 
   /** [[shortestPaths]] as one SQL statement with the relaxations unrolled
-    * (the pagerank pattern); `div` = "//" is the DuckDB oracle, "DIV" the
-    * Spark twin — same text otherwise.
+    * (the pagerank pattern).
     */
-  private[graft] def shortestPathsSql(div: String, maxItems: Int,
-                                      rounds: Int, topN: Int): String = {
+  private[graft] def shortestPathsSql(maxItems: Int, rounds: Int, topN: Int): String = {
     val header =
       s"""WITH inc AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
                       FROM lineitem),
@@ -550,7 +545,7 @@ object Mining {
                 HAVING count(*) <= $maxItems),
          kept AS (SELECT inc.basket, inc.item FROM inc JOIN ok USING (basket)),
          e AS (SELECT a.item AS src, b.item AS dst,
-                      1000000 $div CAST(count(*) AS BIGINT) AS len
+                      1000000 // CAST(count(*) AS BIGINT) AS len
                FROM kept a JOIN kept b
                  ON a.basket = b.basket AND a.item <> b.item
                GROUP BY a.item, b.item),
@@ -624,11 +619,8 @@ object Mining {
       .limit(topK)
   }
 
-  /** The rule pricing as one portable SQL statement (valid verbatim in
-    * DuckDB and Spark except the integer-division spelling, `div`).
-    */
-  private[graft] def assocRulesSql(div: String, maxItems: Int = 8,
-                                   minCount: Long = 5, topK: Int = 25): String =
+  /** The rule pricing as one DuckDB SQL statement. */
+  private[graft] def assocRulesSql(maxItems: Int = 8, minCount: Long = 5, topK: Int = 25): String =
     s"""WITH inc AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
                      FROM lineitem),
         ok AS (SELECT basket FROM inc GROUP BY basket
@@ -646,10 +638,10 @@ object Mining {
               HAVING count(*) >= $minCount)
         SELECT p.item_a, p.item_b, p.n_pair,
                ia.n_item AS n_a, ib.n_item AS n_b,
-               (20000 * p.n_pair + ia.n_item) $div (2 * ia.n_item)
+               (20000 * p.n_pair + ia.n_item) // (2 * ia.n_item)
                  AS conf_1e4,
                (20000 * p.n_pair * nb.n_baskets + ia.n_item * ib.n_item)
-                 $div (2 * ia.n_item * ib.n_item) AS lift_1e4
+                 // (2 * ia.n_item * ib.n_item) AS lift_1e4
         FROM p
         JOIN ic ia ON ia.item = p.item_a
         JOIN ic ib ON ib.item = p.item_b
@@ -974,11 +966,9 @@ object Mining {
   }
 
   /** The panel BFS as one SQL statement with hops unrolled — the
-    * bfsLevelsSql pattern carrying a src column through every reach set
-    * (integer division is the one dialect knob).
+    * bfsLevelsSql pattern carrying a src column through every reach set.
     */
-  private[graft] def closenessCentralitySql(div: String, maxItems: Int = 40,
-                                            nSources: Int = 8,
+  private[graft] def closenessCentralitySql(maxItems: Int = 40, nSources: Int = 8,
                                             maxHops: Int = 4): String = {
     val header =
       s"""WITH inc AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
@@ -1019,12 +1009,12 @@ object Mining {
                    CAST(coalesce(sum(CASE WHEN level > 0 THEN level ELSE 0 END), 0)
                      AS BIGINT) AS sum_dist,
                    CAST(coalesce(sum(CASE WHEN level > 0
-                     THEN CAST(1000000 $div level AS BIGINT) ELSE 0 END), 0)
+                     THEN CAST(1000000 // level AS BIGINT) ELSE 0 END), 0)
                      AS BIGINT) AS harmonic_1e6
                  FROM lv GROUP BY src)
          SELECT src, n_reached, sum_dist,
                 CASE WHEN sum_dist = 0 THEN CAST(0 AS BIGINT)
-                     ELSE CAST((n_reached * 1000000) $div sum_dist AS BIGINT)
+                     ELSE CAST((n_reached * 1000000) // sum_dist AS BIGINT)
                 END AS closeness_1e6,
                 harmonic_1e6
          FROM agg ORDER BY src"""
@@ -1082,8 +1072,7 @@ object Mining {
   /** The neighbor-similarity query as portable SQL (valid verbatim in
     * DuckDB and Spark modulo the integer-division spelling).
     */
-  private[graft] def itemNeighborJaccardSql(div: String, maxItems: Int,
-                                            minCo: Int, topN: Int): String =
+  private[graft] def itemNeighborJaccardSql(maxItems: Int, minCo: Int, topN: Int): String =
     s"""WITH inc AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
                     FROM lineitem),
        ok AS (SELECT basket FROM inc GROUP BY basket
@@ -1100,7 +1089,7 @@ object Mining {
                FROM kept GROUP BY item)
        SELECT item_a, item_b, co, da.deg AS deg_a, db.deg AS deg_b,
               CAST((2000000 * co + (da.deg + db.deg - co))
-                   $div (2 * (da.deg + db.deg - co)) AS BIGINT) AS jaccard_1e6
+                   // (2 * (da.deg + db.deg - co)) AS BIGINT) AS jaccard_1e6
        FROM co
        JOIN deg da ON da.item = co.item_a
        JOIN deg db ON db.item = co.item_b
@@ -1282,8 +1271,7 @@ object Mining {
     * triangle enumeration — the oracle pays the wedge cost the Spark
     * side's degree orientation avoids; identical output).
     */
-  private[graft] def clusteringCoeffSql(div: String, maxItems: Int,
-                                        minDeg: Int, topN: Int): String =
+  private[graft] def clusteringCoeffSql(maxItems: Int, minDeg: Int, topN: Int): String =
     s"""WITH inc AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
                      FROM lineitem),
         ok AS (SELECT basket FROM inc GROUP BY basket
@@ -1309,7 +1297,7 @@ object Mining {
         SELECT deg.node AS p_partkey, deg.deg,
                CAST(coalesce(tn.n_tri, 0) AS BIGINT) AS n_tri,
                CAST((4000000 * coalesce(tn.n_tri, 0) + deg.deg * (deg.deg - 1))
-                    $div (2 * deg.deg * (deg.deg - 1)) AS BIGINT) AS coeff_1e6
+                    // (2 * deg.deg * (deg.deg - 1)) AS BIGINT) AS coeff_1e6
         FROM deg LEFT JOIN tn ON tn.node = deg.node
         WHERE deg.deg >= $minDeg
         ORDER BY coeff_1e6 DESC, p_partkey LIMIT $topN"""
@@ -1340,10 +1328,8 @@ object Mining {
       .orderBy(col("bucket"))
   }
 
-  /** [[degreeHistogram]] as SQL for either engine (`shl` spells the
-    * power-of-two lower bound; everything else is shared text).
-    */
-  private[graft] def degreeHistogramSql(maxItems: Int, shl: String): String =
+  /** [[degreeHistogram]] as DuckDB SQL. */
+  private[graft] def degreeHistogramSql(maxItems: Int): String =
     s"""WITH inc AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
                      FROM lineitem),
         ok AS (SELECT basket FROM inc GROUP BY basket
@@ -1358,7 +1344,7 @@ object Mining {
                       UNION ALL SELECT v FROM e) d
                 GROUP BY node),
         b AS (SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket FROM deg)
-        SELECT bucket, $shl AS lo, CAST(count(*) AS BIGINT) AS n_nodes
+        SELECT bucket, CAST(CAST(1 AS BIGINT) << bucket AS BIGINT) AS lo, CAST(count(*) AS BIGINT) AS n_nodes
         FROM b GROUP BY bucket ORDER BY bucket"""
 
   /** k-core of the repeat-support co-purchase graph (same minCo >= 2
@@ -1522,10 +1508,9 @@ object Mining {
 
   /** The naive statement of the same support counts — an EXISTS over raw
     * row pairs, no order-statistic collapse — so oracle equality is an
-    * algorithmic cross-check, not a restatement. `div` is the only
-    * dialect point.
+    * algorithmic cross-check, not a restatement.
     */
-  private[graft] def seqPairSupportSql(div: String, minSupport: Long): String =
+  private[graft] def seqPairSupportSql(minSupport: Long): String =
     s"""WITH t AS (SELECT user_id, event_type, ts, event_id FROM events),
        pairs AS (
          SELECT DISTINCT a.user_id, a.event_type AS e1, b.event_type AS e2
@@ -1537,7 +1522,7 @@ object Mining {
        tot AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_total
                FROM t)
        SELECT e1, e2, n_users,
-              (20000 * n_users + n_total) $div (2 * n_total) AS supp_1e4
+              (20000 * n_users + n_total) // (2 * n_total) AS supp_1e4
        FROM sup CROSS JOIN tot
        WHERE n_users >= $minSupport
        ORDER BY e1, e2"""

@@ -269,10 +269,8 @@ object Quality {
       .orderBy(col("arm"), col("converted"))
   }
 
-  /** The A/B readout as one statement; `div` ("//" vs "DIV") is the only
-    * dialect point — md5/substring/CASE agree verbatim across engines.
-    */
-  private[graft] def abTestSql(div: String): String =
+  /** The A/B readout as one statement. */
+  private[graft] def abTestSql: String =
     s"""WITH u AS (SELECT user_id,
              CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                AS BIGINT) AS converted,
@@ -287,14 +285,14 @@ object Quality {
                 FROM c GROUP BY converted),
          t AS (SELECT CAST(sum(obs) AS BIGINT) AS n FROM c),
          e AS (SELECT c.arm, c.converted, c.obs, r.row_tot, cl.col_tot,
-                      (r.row_tot * cl.col_tot * 10000) $div t.n AS expected_1e4
+                      (r.row_tot * cl.col_tot * 10000) // t.n AS expected_1e4
                FROM c JOIN r ON r.arm = c.arm
                JOIN cl ON cl.converted = c.converted CROSS JOIN t)
          SELECT arm, converted, obs, row_tot, col_tot, expected_1e4,
                 (abs(obs * 10000 - expected_1e4)
                  * abs(obs * 10000 - expected_1e4))
-                $div (greatest(expected_1e4, 1) * 10000) AS chi2c_1e4,
-                (20000 * obs + row_tot) $div (2 * row_tot) AS cell_share_1e4
+                // (greatest(expected_1e4, 1) * 10000) AS chi2c_1e4,
+                (20000 * obs + row_tot) // (2 * row_tot) AS cell_share_1e4
          FROM e ORDER BY arm, converted"""
 
   /** Join-cardinality estimation by bucketed key histograms (the AGMS /
@@ -411,21 +409,16 @@ object Quality {
       .orderBy(col("day"), col("hour"))
   }
 
-  /** The seasonal-anomaly statement, parameterized on the two dialect
-    * points: `dayE`/`dowE` (strftime + native Sun=0 dayofweek in DuckDB,
-    * date_format + dayofweek-1 in Spark) and `hourGrid` (a one-column
-    * derived table producing hours 0..23: range() vs explode(sequence)).
-    */
-  private[graft] def seasonalSql(dayE: String, dowE: String,
-                                 hourGrid: String): String =
-    s"""WITH ev AS (SELECT $dayE AS day, CAST($dowE AS BIGINT) AS dow,
+  /** The seasonal-anomaly statement. */
+  private[graft] def seasonalSql: String =
+    s"""WITH ev AS (SELECT strftime(ts, '%Y-%m-%d') AS day, CAST(dayofweek(ts) AS BIGINT) AS dow,
                      CAST(hour(ts) AS BIGINT) AS hour FROM events),
         cells AS (SELECT day, dow, hour, CAST(count(*) AS BIGINT) AS n
                   FROM ev GROUP BY day, dow, hour),
         days AS (SELECT DISTINCT day, dow FROM cells),
         grid AS (SELECT d.day, d.dow, h.hour,
                         CAST(coalesce(c.n, 0) AS BIGINT) AS n_events
-                 FROM days d CROSS JOIN $hourGrid h
+                 FROM days d CROSS JOIN (SELECT CAST(range AS BIGINT) AS hour FROM range(0, 24)) h
                  LEFT JOIN cells c
                    ON c.day = d.day AND c.dow = d.dow AND c.hour = h.hour),
         nd AS (SELECT dow, CAST(count(*) AS BIGINT) AS n_days
@@ -570,10 +563,8 @@ object Quality {
       .orderBy(col("level"))
   }
 
-  /** The k-anonymity ladder as portable SQL (DuckDB oracle / Spark twin).
-    * `div` is the integer-division spelling ("//" or "DIV").
-    */
-  private[graft] def kAnonymitySql(div: String, k: Int = 5): String = {
+  /** The k-anonymity ladder as DuckDB SQL. */
+  private[graft] def kAnonymitySql(k: Int = 5): String = {
     val levels = Seq(
       (0, "c_nationkey, c_mktsegment, CAST(floor(c_acctbal / 100) AS BIGINT)"),
       (1, "c_nationkey, c_mktsegment, CAST(floor(c_acctbal / 1000) AS BIGINT)"),
@@ -587,7 +578,7 @@ object Quality {
                     AS BIGINT) AS rows_at_risk,
                CAST((20000 * coalesce(sum(CASE WHEN class_size < $k
                                                THEN class_size ELSE 0 END), 0)
-                     + sum(class_size)) $div (2 * sum(class_size))
+                     + sum(class_size)) // (2 * sum(class_size))
                     AS BIGINT) AS risk_1e4
             FROM (SELECT CAST(count(*) AS BIGINT) AS class_size
                   FROM customer GROUP BY $quasi) c"""
@@ -658,11 +649,10 @@ object Quality {
         col("n_values"), col("d_1e6"), col("v_at_max_cents"))
   }
 
-  /** [[ksDrift]] as portable SQL (DuckDB oracle / Spark twin); `div` is
-    * the integer-division spelling. Every output casts to BIGINT because
+  /** [[ksDrift]] as DuckDB SQL. Every output casts to BIGINT because
     * DuckDB promotes sum() and its window form to HUGEINT.
     */
-  private[graft] def ksDriftSql(div: String): String =
+  private[graft] def ksDriftSql: String =
     s"""WITH c AS (SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
                sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS a,
                sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 0 ELSE 1 END) AS b
@@ -671,10 +661,10 @@ object Quality {
        g AS (SELECT v,
                abs((2000000 * sum(a) OVER (ORDER BY v
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + n1)
-                     $div (2 * n1)
+                     // (2 * n1)
                  - (2000000 * sum(b) OVER (ORDER BY v
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + n2)
-                     $div (2 * n2)) AS gap
+                     // (2 * n2)) AS gap
              FROM c CROSS JOIN t),
        m AS (SELECT max(gap) AS d_1e6, count(*) AS n_values FROM g)
        SELECT CAST(t.n1 AS BIGINT) AS n_urgent,
@@ -727,7 +717,7 @@ object Quality {
   /** [[benfordAudit]] as portable SQL. The expected table is a UNION ALL
     * of literal SELECTs (portable where VALUES table syntax differs).
     */
-  private[graft] def benfordAuditSql(div: String): String = {
+  private[graft] def benfordAuditSql: String = {
     val lits = BenfordExpected1e6.toSeq.sorted
       .map { case (d, e) => s"SELECT $d AS digit, CAST($e AS BIGINT) AS exp_1e6" }
       .mkString("\nUNION ALL\n")
@@ -740,8 +730,8 @@ object Quality {
        SELECT o.digit,
               CAST(o.obs AS BIGINT) AS obs,
               e.exp_1e6,
-              CAST((2000000 * o.obs + t.n) $div (2 * t.n) AS BIGINT) AS obs_1e6,
-              CAST(abs((2000000 * o.obs + t.n) $div (2 * t.n) - e.exp_1e6)
+              CAST((2000000 * o.obs + t.n) // (2 * t.n) AS BIGINT) AS obs_1e6,
+              CAST(abs((2000000 * o.obs + t.n) // (2 * t.n) - e.exp_1e6)
                    AS BIGINT) AS dev_1e6
        FROM o JOIN e USING (digit) CROSS JOIN t
        ORDER BY digit"""
@@ -785,7 +775,7 @@ object Quality {
   }
 
   /** [[columnHhi]] as portable SQL. */
-  private[graft] def columnHhiSql(div: String): String = {
+  private[graft] def columnHhiSql: String = {
     val blocks = Seq(
       ("orders.o_orderstatus", "orders", "o_orderstatus"),
       ("orders.o_orderpriority", "orders", "o_orderpriority"),
@@ -796,10 +786,10 @@ object Quality {
         s"""SELECT '$name' AS column_name,
                CAST(t.n AS BIGINT) AS n,
                CAST(count(*) AS BIGINT) AS n_distinct,
-               CAST(max((2000 * cnt + t.n) $div (2 * t.n)) AS BIGINT)
+               CAST(max((2000 * cnt + t.n) // (2 * t.n)) AS BIGINT)
                  AS top_share_1e3,
-               CAST(sum(((2000 * cnt + t.n) $div (2 * t.n))
-                        * ((2000 * cnt + t.n) $div (2 * t.n))) AS BIGINT)
+               CAST(sum(((2000 * cnt + t.n) // (2 * t.n))
+                        * ((2000 * cnt + t.n) // (2 * t.n))) AS BIGINT)
                  AS hhi_1e6
             FROM (SELECT count(*) AS cnt FROM $tbl GROUP BY $c) v
             CROSS JOIN (SELECT sum(cnt) AS n
@@ -994,16 +984,14 @@ object Quality {
         expr("(head_us - last_us) DIV 1000000").as("lag_s"))
       .orderBy(col("event_type"))
 
-  /** [[freshnessAudit]] as dialect-templated SQL (`div` + epoch-micros
-    * are the only dialect points).
-    */
-  private[graft] def freshnessAuditSql(div: String, epoch: String): String =
+  /** [[freshnessAudit]] as DuckDB SQL. */
+  private[graft] def freshnessAuditSql: String =
     s"""WITH per AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-             CAST(max($epoch) AS BIGINT) AS last_us
+             CAST(max(epoch_us(ts)) AS BIGINT) AS last_us
            FROM events GROUP BY event_type),
        h AS (SELECT max(last_us) AS head_us FROM per)
        SELECT event_type, n_events, last_us,
-              CAST((head_us - last_us) $div 1000000 AS BIGINT) AS lag_s
+              CAST((head_us - last_us) // 1000000 AS BIGINT) AS lag_s
        FROM per CROSS JOIN h
        ORDER BY event_type"""
 
@@ -1400,14 +1388,14 @@ object Quality {
                 END""").as("z_micro"))
   }
 
-  /** Portable text except the datediff spelling (the one dialect knob). */
-  private[graft] def wilcoxonSignedRankSql(datediff: String): String =
+  /** [[wilcoxonSignedRank]] as DuckDB SQL. */
+  private[graft] def wilcoxonSignedRankSql: String =
     s"""WITH daily AS (
          SELECT day, v,
                 CASE WHEN ed >= 0 THEN CAST(floor(ed / CAST(7 AS DOUBLE)) AS BIGINT)
                      ELSE -CAST(floor((-ed + 6) / CAST(7 AS DOUBLE)) AS BIGINT) END AS week,
                 ((ed % 7) + 7) % 7 AS dow
-         FROM (SELECT day, v, CAST($datediff AS BIGINT) AS ed FROM (
+         FROM (SELECT day, v, CAST(date_diff('day', DATE '1970-01-05', day) AS BIGINT) AS ed FROM (
            SELECT CAST(ts AS DATE) AS day,
                   CAST(sum(CAST(floor(value * CAST(100 AS DOUBLE)
                     + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS v
@@ -1495,16 +1483,13 @@ object Quality {
                 END""").as("chi2_micro"))
   }
 
-  /** Portable text except the datediff and integer-division spellings
-    * (the two dialect knobs; the DIV operands are non-negative, so
-    * truncating DIV and flooring // agree). BIGINT headroom: the 1e6
+  /** [[mcnemarConversion]] as DuckDB SQL. BIGINT headroom: the 1e6
     * numerator holds while |b − c| stays under ~3e6 discordant users
     * (DECIMAL(38,0) hatch documented, cf. assocRules).
     */
-  private[graft] def mcnemarConversionSql(datediff: String,
-                                          div: String): String =
+  private[graft] def mcnemarConversionSql: String =
     s"""WITH ev AS (SELECT user_id, event_type,
-                CAST($datediff AS BIGINT) AS ed
+                CAST(date_diff('day', DATE '1970-01-05', day) AS BIGINT) AS ed
               FROM (SELECT user_id, event_type, CAST(ts AS DATE) AS day
                     FROM events) e0),
        bounds AS (SELECT min(ed) AS lo, max(ed) AS hi FROM ev),
@@ -1528,7 +1513,7 @@ object Quality {
               CASE WHEN b_early_only + c_late_only = 0 THEN CAST(0 AS BIGINT)
                    ELSE CAST(((abs(b_early_only - c_late_only) - 1)
                        * (abs(b_early_only - c_late_only) - 1) * 1000000)
-                       $div (b_early_only + c_late_only) AS BIGINT)
+                       // (b_early_only + c_late_only) AS BIGINT)
               END AS chi2_micro
        FROM census"""
 
@@ -1639,16 +1624,11 @@ object Quality {
         lit(b.toLong).as("n_reps"))
   }
 
-  /** Fully portable text for [[bootstrapRevenueCi]] (explode spells as
-    * unnest(range) in DuckDB — the one dialect knob, parameterized).
-    */
-  private[graft] def bootstrapRevenueCiSql(duck: Boolean, b: Int = 200): String = {
-    val repSrc =
-      if (duck) s"SELECT o_orderkey, o_totalprice, unnest(range(0, $b)) AS rep FROM orders"
-      else s"SELECT o_orderkey, o_totalprice, explode(sequence(0, ${b - 1})) AS rep FROM orders"
+  /** [[bootstrapRevenueCi]] as DuckDB SQL. */
+  private[graft] def bootstrapRevenueCiSql(b: Int = 200): String = {
     val wexpr = poissonWeightCase(
       "substring(md5(concat(CAST(o_orderkey AS STRING), ':', CAST(rep AS STRING))), 1, 8)")
-    s"""WITH r AS ($repSrc),
+    s"""WITH r AS (SELECT o_orderkey, o_totalprice, unnest(range(0, $b)) AS rep FROM orders),
        tot AS (SELECT rep,
                  CAST(sum(CAST(($wexpr) AS BIGINT)
                    * CAST(floor(o_totalprice * CAST(100 AS DOUBLE)
@@ -1700,11 +1680,8 @@ object Quality {
       .limit(topK)
   }
 
-  /** [[shrunkenRates]] as dialect-templated SQL (`div` the only dialect
-    * point).
-    */
-  private[graft] def shrunkenRatesSql(div: String, k: Long,
-                                      topK: Int): String =
+  /** [[shrunkenRates]] as DuckDB SQL. */
+  private[graft] def shrunkenRatesSql(k: Long, topK: Int): String =
     s"""WITH per AS (SELECT l_partkey AS p_partkey,
              CAST(count(*) AS BIGINT) AS n_items,
              CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT)
@@ -1713,11 +1690,11 @@ object Quality {
        g AS (SELECT CAST(sum(n_items) AS BIGINT) AS nn,
                     CAST(sum(n_returns) AS BIGINT) AS xx FROM per)
        SELECT p_partkey, n_items, n_returns,
-              CAST((20000 * n_returns + n_items) $div (2 * n_items) AS BIGINT)
+              CAST((20000 * n_returns + n_items) // (2 * n_items) AS BIGINT)
                 AS raw_1e4,
               CAST((2 * 10000 * (n_returns * nn + $k * xx)
                 + nn * (n_items + $k))
-                $div (2 * nn * (n_items + $k)) AS BIGINT) AS shrunk_1e4
+                // (2 * nn * (n_items + $k)) AS BIGINT) AS shrunk_1e4
        FROM per CROSS JOIN g
        ORDER BY shrunk_1e4 DESC, p_partkey
        LIMIT $topK"""
@@ -1757,7 +1734,7 @@ object Quality {
   }
 
   /** Fully portable text for [[abPowerAudit]] (shares the moment-profile
-    * power-sum CTE; rides `SqlFrontDoor.portable`).
+    * power-sum CTE).
     */
   private[graft] def abPowerAuditSql: String = {
     val d = "CAST(x AS DECIMAL(38,0))"
@@ -1817,9 +1794,7 @@ object Quality {
   }
 
   /** Fully portable text for [[momentProfile]] (decimal power sums + the
-    * final-double readout spell identically on both engines) — rides
-    * `SqlFrontDoor.portable`; `epoch` differs nowhere because the value
-    * column needs no timestamps.
+    * final-double readout spell identically on both engines).
     */
   private[graft] def momentProfileSql: String = {
     val d = "CAST(x AS DECIMAL(38,0))"
@@ -1864,7 +1839,7 @@ object Quality {
 
   /** Fully portable text (UNION ALL arms instead of stack; decimal sums
     * and the final-double readout spell identically in DuckDB and
-    * Spark) — rides `SqlFrontDoor.portable`.
+    * Spark).
     */
   private[graft] def corrMatrixSql: String = {
     val pairs = for {

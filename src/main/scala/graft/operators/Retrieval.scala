@@ -297,35 +297,18 @@ object Retrieval {
     ranked
   }
 
-  /** [[retrievalEval]] as SQL for either engine — the exact-truth CTEs,
-    * the BM25 chain, and the @k readout in one statement (`duck` toggles
-    * unnest/explode, len/size, list/array shingling, and // vs DIV).
+  /** [[retrievalEval]] as DuckDB SQL — the exact-truth CTEs, the BM25
+    * chain, and the @k readout in one statement.
     */
-  private[graft] def retrievalEvalSql(duck: Boolean, ks: Seq[Int],
+  private[graft] def retrievalEvalSql(ks: Seq[Int],
                                       maxDfPermille: Int, k1Milli: Int,
                                       bMilli: Int): String = {
-    val div = if (duck) "//" else "DIV"
-    val toks =
-      if (duck) "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
-      else "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+', 0)"
-    val shd =
-      if (duck)
-        """shd AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ws) - 1),
-                i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-                FROM d WHERE len(ws) >= 3)"""
-      else
-        """shd AS (SELECT doc_id, array_distinct(transform(sequence(1, size(ws) - 2),
-                i -> concat(element_at(ws, i), ' ', element_at(ws, i + 1), ' ', element_at(ws, i + 2)))) AS sh
-                FROM d WHERE size(ws) >= 3)"""
-    val sz = if (duck) "len" else "size"
-    val un = if (duck) "unnest" else "explode"
-    val kList =
-      if (duck) s"SELECT unnest([${ks.mkString(", ")}]) AS k"
-      else s"SELECT explode(array(${ks.mkString(", ")})) AS k"
     val kMax = ks.max
-    s"""WITH d AS (SELECT doc_id, $toks AS ws FROM documents),
-       $shd,
-       ex AS (SELECT doc_id, CAST($sz(sh) AS BIGINT) AS n_sh, $un(sh) AS shingle FROM shd),
+    s"""WITH d AS (SELECT doc_id, regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+') AS ws FROM documents),
+       shd AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ws) - 1),
+                i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+                FROM d WHERE len(ws) >= 3),
+       ex AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_sh, unnest(sh) AS shingle FROM shd),
        pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                         a.n_sh AS na, b.n_sh AS nb, count(*) AS common
                  FROM ex a JOIN ex b
@@ -333,14 +316,14 @@ object Retrieval {
                  GROUP BY a.doc_id, b.doc_id, a.n_sh, b.n_sh),
        tp AS (SELECT doc_a, doc_b FROM pairs
               WHERE (20000 * common + (na + nb - common))
-                    $div (2 * (na + nb - common)) >= 5000),
+                    // (2 * (na + nb - common)) >= 5000),
        rel AS (SELECT doc_a AS query_id, doc_b AS rel_id FROM tp
                UNION ALL SELECT doc_b AS query_id, doc_a AS rel_id FROM tp),
        q AS (SELECT DISTINCT query_id FROM rel),
        tf AS (SELECT doc_id, tok, count(*) AS tf FROM
-              (SELECT doc_id, $un(ws) AS tok FROM d)
+              (SELECT doc_id, unnest(ws) AS tok FROM d)
               GROUP BY doc_id, tok),
-       dlt AS (SELECT doc_id, CAST($sz(ws) AS BIGINT) AS dl FROM d),
+       dlt AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl FROM d),
        st AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_tokens FROM dlt),
        dfb AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok
                HAVING count(*) * 1000 <= (SELECT n_docs FROM st) * $maxDfPermille),
@@ -349,11 +332,11 @@ object Retrieval {
               JOIN q ON q.query_id = i.doc_id),
        sc AS (SELECT qq.query_id, i.doc_id,
               CAST(sum(
-                (((2 * (st.n_docs - i.df) + 1) * CAST(1000000 AS BIGINT) $div (2 * i.df + 1))
+                (((2 * (st.n_docs - i.df) + 1) * CAST(1000000 AS BIGINT) // (2 * i.df + 1))
                  * ((i.tf * ${k1Milli + 1000} * CAST(1000000000 AS BIGINT))
-                    $div (i.tf * 1000000 + $k1Milli *
-                       (1000 - $bMilli + ($bMilli * dlt.dl * st.n_docs) $div st.total_tokens))))
-                $div 1000000) AS BIGINT) AS score_micro
+                    // (i.tf * 1000000 + $k1Milli *
+                       (1000 - $bMilli + ($bMilli * dlt.dl * st.n_docs) // st.total_tokens))))
+                // 1000000) AS BIGINT) AS score_micro
               FROM idx i JOIN qt qq USING (tok)
               JOIN dlt ON dlt.doc_id = i.doc_id CROSS JOIN st
               WHERE i.doc_id <> qq.query_id
@@ -369,22 +352,22 @@ object Retrieval {
        fh AS (SELECT query_id, min(rank) AS first_rank FROM hits GROUP BY query_id),
        tot AS (SELECT (SELECT count(*) FROM q) AS n_queries,
                       (SELECT count(*) FROM rel) AS n_relevant),
-       kv AS ($kList),
+       kv AS (SELECT unnest([${ks.mkString(", ")}]) AS k),
        hk AS (SELECT kv.k, count(*) AS n_hits FROM kv
               JOIN hits ON hits.rank <= kv.k GROUP BY kv.k),
        rr AS (SELECT kv.k, count(*) AS n_q_hit,
-                     sum((2000000 + first_rank) $div (2 * first_rank)) AS sum_rr
+                     sum((2000000 + first_rank) // (2 * first_rank)) AS sum_rr
               FROM kv JOIN fh ON fh.first_rank <= kv.k GROUP BY kv.k)
        SELECT CAST(kv.k AS BIGINT) AS k,
               CAST(t.n_queries AS BIGINT) AS n_queries,
               CAST(t.n_relevant AS BIGINT) AS n_relevant,
               CAST(coalesce(hk.n_hits, 0) AS BIGINT) AS n_hits,
               CAST((20000 * coalesce(hk.n_hits, 0) + t.n_relevant)
-                   $div (2 * t.n_relevant) AS BIGINT) AS recall_1e4,
+                   // (2 * t.n_relevant) AS BIGINT) AS recall_1e4,
               CAST((20000 * coalesce(rr.n_q_hit, 0) + t.n_queries)
-                   $div (2 * t.n_queries) AS BIGINT) AS hit_rate_1e4,
+                   // (2 * t.n_queries) AS BIGINT) AS hit_rate_1e4,
               CAST((2 * coalesce(rr.sum_rr, 0) + t.n_queries)
-                   $div (2 * t.n_queries) AS BIGINT) AS mrr_1e6
+                   // (2 * t.n_queries) AS BIGINT) AS mrr_1e6
        FROM kv CROSS JOIN tot t
        LEFT JOIN hk ON hk.k = kv.k
        LEFT JOIN rr ON rr.k = kv.k

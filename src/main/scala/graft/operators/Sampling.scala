@@ -181,12 +181,8 @@ object Sampling {
       .orderBy(col("source"))
   }
 
-  /** Dialect-templated SQL twin (integer division is the one knob; the
-    * DIV operands are non-negative, so truncating DIV and flooring //
-    * agree).
-    */
-  private[graft] def temperatureMixSql(div: String,
-                                       budgetDocs: Long = 1000): String =
+  /** [[temperatureMix]] as DuckDB SQL. */
+  private[graft] def temperatureMixSql(budgetDocs: Long = 1000): String =
     s"""WITH docs AS (SELECT doc_id, source, n_chars,
                 md5(CAST(doc_id AS STRING)) AS hkey
               FROM documents),
@@ -197,7 +193,7 @@ object Sampling {
               FROM docs GROUP BY source),
        total AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM weights),
        targets AS (SELECT source, n_source, w AS weight_1e6,
-                CAST(($budgetDocs * w) $div w_total AS BIGINT) AS target
+                CAST(($budgetDocs * w) // w_total AS BIGINT) AS target
               FROM weights CROSS JOIN total),
        ranked AS (SELECT d.source, d.n_chars,
                 CAST(row_number() OVER (PARTITION BY d.source
@@ -311,28 +307,27 @@ object Sampling {
       .orderBy(col("doc_id"))
   }
 
-  /** [[ppsSample]] as SQL for either engine (`div` knob; the oracle's
-    * cumsum is the naive global window).
+  /** [[ppsSample]] as DuckDB SQL (the cumsum is the naive global
+    * window).
     */
-  private[graft] def ppsSampleSql(div: String, sz: String, rex: String,
-                                  m: Long): String =
+  private[graft] def ppsSampleSql(m: Long): String =
     s"""WITH d AS (SELECT doc_id, w FROM (
            SELECT doc_id,
-                  CAST($sz(regexp_extract_all(lower(coalesce(text, '')),
-                       '[a-z0-9]+'$rex)) AS BIGINT) AS w
+                  CAST(len(regexp_extract_all(lower(coalesce(text, '')),
+                       '[a-z0-9]+')) AS BIGINT) AS w
            FROM documents) x WHERE w > 0),
        c AS (SELECT doc_id, w,
                     CAST(sum(w) OVER (ORDER BY doc_id) AS BIGINT) AS cum_hi
              FROM d),
        t AS (SELECT CAST(sum(w) AS BIGINT) AS total FROM d),
        p AS (SELECT doc_id, w, cum_hi,
-                    greatest(total $div $m, 1) AS stride
+                    greatest(total // $m, 1) AS stride
              FROM c CROSS JOIN t)
        SELECT doc_id, w, cum_hi,
-              CAST(least(cum_hi $div stride, $m)
-                   - least((cum_hi - w) $div stride, $m) AS BIGINT) AS n_points
+              CAST(least(cum_hi // stride, $m)
+                   - least((cum_hi - w) // stride, $m) AS BIGINT) AS n_points
        FROM p
-       WHERE least(cum_hi $div stride, $m)
-             - least((cum_hi - w) $div stride, $m) >= 1
+       WHERE least(cum_hi // stride, $m)
+             - least((cum_hi - w) // stride, $m) >= 1
        ORDER BY doc_id"""
 }

@@ -1836,24 +1836,14 @@ object Similarity {
       .orderBy(col("dim"))
   }
 
-  /** [[labelSeparability]] as dialect-templated SQL (unnest-vs-posexplode
-    * is the only dialect point; the readout tree is identical text).
-    */
-  private[graft] def labelSeparabilitySql(duck: Boolean, labelA: Int,
-                                          labelB: Int): String = {
-    val codes = if (duck)
-      """SELECT label,
+  /** [[labelSeparability]] as DuckDB SQL. */
+  private[graft] def labelSeparabilitySql(labelA: Int, labelB: Int): String =
+    s"""WITH codes AS (SELECT label,
            unnest(range(0, len(embedding))) AS dim,
            unnest(list_transform(embedding,
              x -> CAST(floor(CAST(x AS DOUBLE) * CAST(1048576 AS DOUBLE)
                              + CAST(0.5 AS DOUBLE)) AS BIGINT))) AS code
-         FROM embeddings"""
-    else
-      """SELECT label, posexplode(transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * CAST(1048576 AS DOUBLE)
-                           + CAST(0.5 AS DOUBLE)) AS BIGINT))) AS (dim, code)
-         FROM embeddings"""
-    s"""WITH codes AS ($codes),
+         FROM embeddings),
        agg AS (SELECT CAST(dim AS BIGINT) AS dim,
            CAST(sum(CASE WHEN label = $labelA THEN 1 ELSE 0 END) AS BIGINT) AS n1,
            CAST(sum(CASE WHEN label = $labelA THEN code ELSE 0 END) AS BIGINT) AS s11,
@@ -1877,7 +1867,6 @@ object Similarity {
                    ELSE CAST(floor(num / den * CAST(1000000 AS DOUBLE)
                      + CAST(0.5 AS DOUBLE)) AS BIGINT) END AS t2_micro
        FROM fin ORDER BY dim"""
-  }
 
   /** Exact Gram / second-moment matrix of the embedding corpus over the
     * 2^20 integer codes: for every dimension pair (i, j), n and
@@ -2066,13 +2055,10 @@ object Similarity {
       .orderBy(col("label"))
   }
 
-  /** The drift statement; dialect points are the array cast/transform
-    * spelling, the positional-explode form, and integer division.
-    */
-  private[graft] def embedDriftSql(codeList: String, dimsFrom: String,
-                                   div: String, thr: String): String =
+  /** The drift statement as DuckDB SQL. */
+  private[graft] def embedDriftSql(thr: String): String =
     s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-              $codeList AS code,
+              list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576 + 0.5) AS BIGINT)) AS code,
               substring(md5(CAST(vec_id AS STRING)), 1, 8) < '$thr' AS is_ref
             FROM embeddings),
          cnt AS (SELECT label,
@@ -2081,7 +2067,10 @@ object Similarity {
                    CAST(sum(CASE WHEN is_ref THEN 0 ELSE 1 END) AS BIGINT)
                      AS n_cur
                  FROM e GROUP BY label),
-         d AS ($dimsFrom),
+         d AS (SELECT label, is_ref, CAST(i AS BIGINT) AS dim,
+                  code[CAST(i AS INT)] AS c
+           FROM (SELECT label, is_ref, code,
+                        unnest(range(1, len(code) + 1)) AS i FROM e) t),
          cell AS (SELECT label, dim,
                     CAST(sum(CASE WHEN is_ref THEN c ELSE 0 END) AS BIGINT)
                       AS s_ref,
@@ -2098,7 +2087,7 @@ object Similarity {
                  GROUP BY cell.label)
          SELECT label, n_ref, n_cur, l1_cross,
                 (20000 * l1_cross + greatest(1048576 * n_ref * n_cur * d, 1))
-                  $div (2 * greatest(1048576 * n_ref * n_cur * d, 1))
+                  // (2 * greatest(1048576 * n_ref * n_cur * d, 1))
                   AS drift_1e4
          FROM agg ORDER BY label"""
 
@@ -2195,17 +2184,13 @@ object Similarity {
   /** The MMR greedy as one SQL statement with the k selection steps
     * UNROLLED (the pagerank template pattern): each step anti-joins the
     * pool against the selected set, prices mmr = m - max(sim to
-    * selected), and takes the per-query argmax via row_number. The same
-    * text feeds the DuckDB oracle and the Spark twin — `cosMicros` and
-    * the array cast / integer-division spelling are the dialect points.
+    * selected), and takes the per-query argmax via row_number.
     */
-  private[graft] def mmrSql(cosMicros: (String, String) => String,
-                            embCast: String, div: String,
-                            nQueries: Int = 5, pool: Int = 10,
-                            k: Int = 5): String = {
+  private[graft] def mmrSql(cosMicros: (String, String) => String, embCast: String,
+                            nQueries: Int = 5, pool: Int = 10, k: Int = 5): String = {
     def micro4(c: String) =
-      s"CAST(CASE WHEN $c >= 0 THEN ($c + 50) $div 100 " +
-        s"ELSE -((-$c + 50) $div 100) END AS BIGINT)"
+      s"CAST(CASE WHEN $c >= 0 THEN ($c + 50) // 100 " +
+        s"ELSE -((-$c + 50) // 100) END AS BIGINT)"
     val header =
       s"""WITH e AS (SELECT vec_id, $embCast AS v FROM embeddings),
          q AS (SELECT vec_id AS query_id, v AS qv FROM e
@@ -2491,7 +2476,7 @@ object Similarity {
     bitextMarginFromIndex(s, dir, scratch, k, thresholdMicro, lists, nProbe)
   }
 
-  /** Dialect-templated SQL twin of [[bitextMarginIndexed]]: the
+  /** [[bitextMarginIndexed]] as DuckDB SQL: the
     * first-N-quantizer IVF candidate screen (assignment + top-nProbe
     * probes, the q_ann_ivf_topk oracle's CTE shape — row_number over
     * (cm DESC, centroid_id) is exactly the operator's packed max_by
@@ -2500,11 +2485,9 @@ object Similarity {
     * pairs only (index-approximated CSLS — what the operator computes).
     */
   private[graft] def bitextMarginIndexSql(cosMicros: (String, String) => String,
-                                          embCast: String, div: String,
-                                          k: Int = 4,
+                                          embCast: String, k: Int = 4,
                                           thresholdMicro: Long = 1060000L,
-                                          nLists: Int = 16,
-                                          nProbe: Int = 3): String =
+                                          nLists: Int = 16, nProbe: Int = 3): String =
     s"""WITH e AS (SELECT vec_id, $embCast AS v FROM embeddings),
        c AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < $nLists),
        scored_c AS (SELECT e.vec_id, c.centroid_id,
@@ -2547,7 +2530,7 @@ object Similarity {
                FROM br WHERE rk <= $k GROUP BY b_id),
        margins AS (SELECT p.a_id, p.b_id, p.m,
                      CAST((2 * p.m * f.fwd_k * w.bwd_k * 1000000)
-                          $div (f.fwd_sum * w.bwd_k + w.bwd_sum * f.fwd_k)
+                          // (f.fwd_sum * w.bwd_k + w.bwd_sum * f.fwd_k)
                           AS BIGINT) AS margin_micro
                    FROM pos p
                    JOIN fwd f ON p.a_id = f.a_id
@@ -2758,7 +2741,7 @@ object Similarity {
     stageDir
   }
 
-  /** Dialect-templated SQL twin of [[semanticDecontaminate]]: the same
+  /** [[semanticDecontaminate]] as DuckDB SQL: the same
     * first-N-quantizer IVF candidate screen as [[bitextMarginIndexSql]]
     * (assignment + top-nProbe probes via row_number over
     * (cm DESC, centroid_id) — exactly the operator's packed ordering),
@@ -2799,15 +2782,9 @@ object Similarity {
               CAST(max(m) AS BIGINT) AS max_cm
        FROM hits GROUP BY vec_id ORDER BY vec_id"""
 
-  /** Dialect-templated SQL twin of [[bitextMarginMine]] (cos fold,
-    * array cast, and integer division are the dialect points — the
-    * DIV operands are all-positive by construction, so truncating DIV
-    * and flooring // agree).
-    */
-  private[graft] def bitextMarginSql(cosMicros: (String, String) => String,
-                                     embCast: String, div: String,
-                                     k: Int = 4,
-                                     thresholdMicro: Long = 1060000L): String =
+  /** [[bitextMarginMine]] as DuckDB SQL. */
+  private[graft] def bitextMarginSql(cosMicros: (String, String) => String, embCast: String,
+                                     k: Int = 4, thresholdMicro: Long = 1060000L): String =
     s"""WITH e AS (SELECT vec_id, $embCast AS v FROM embeddings),
        aside AS (SELECT vec_id AS a_id, v AS av FROM e WHERE vec_id % 2 = 0),
        bside AS (SELECT vec_id AS b_id, v AS bv FROM e WHERE vec_id % 2 = 1),
@@ -2831,7 +2808,7 @@ object Similarity {
                FROM br WHERE rk <= $k GROUP BY b_id),
        margins AS (SELECT p.a_id, p.b_id, p.m,
                      CAST((2 * p.m * f.fwd_k * w.bwd_k * 1000000)
-                          $div (f.fwd_sum * w.bwd_k + w.bwd_sum * f.fwd_k)
+                          // (f.fwd_sum * w.bwd_k + w.bwd_sum * f.fwd_k)
                           AS BIGINT) AS margin_micro
                    FROM pos p
                    JOIN fwd f ON p.a_id = f.a_id

@@ -1173,24 +1173,12 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** The DSIR scoring as a SQL template — dialect point is only the
-    * token explode; all arithmetic is shared text.
-    */
-  private[graft] def importanceWeightsSql(duck: Boolean, target: String,
-                                          k: Int): String = {
-    val div = if (duck) "//" else "DIV"
-    val tokFrom =
-      if (duck)
-        """SELECT doc_id, source,
+  /** The DSIR scoring as DuckDB SQL. */
+  private[graft] def importanceWeightsSql(target: String, k: Int): String =
+    s"""WITH tok AS (SELECT doc_id, source,
                   unnest(regexp_extract_all(lower(coalesce(text, '')),
                                             '[a-z0-9]+')) AS w
-           FROM documents"""
-      else
-        """SELECT doc_id, source,
-                  explode(regexp_extract_all(lower(coalesce(text, '')),
-                                             '[a-z0-9]+', 0)) AS w
-           FROM documents"""
-    s"""WITH tok AS ($tokFrom),
+           FROM documents),
        lm AS (SELECT w,
                 CAST(sum(CASE WHEN source = '$target' THEN 1 ELSE 0 END)
                   AS BIGINT) AS ct,
@@ -1203,15 +1191,14 @@ object TextAnalysis {
        scored AS (SELECT tok.doc_id, tok.source,
                     CAST(count(*) AS BIGINT) AS n_tokens,
                     CAST(sum((20000 * (ct + 1) * (r + v) + (cr + 1) * (t + v))
-                             $div (2 * (cr + 1) * (t + v))) AS BIGINT) AS sr
+                             // (2 * (cr + 1) * (t + v))) AS BIGINT) AS sr
                   FROM tok JOIN lm ON lm.w = tok.w CROSS JOIN tot
                   WHERE tok.source <> '$target'
                   GROUP BY tok.doc_id, tok.source)
        SELECT doc_id, source, n_tokens,
-              (2 * sr + n_tokens) $div (2 * n_tokens) AS score_1e4
+              (2 * sr + n_tokens) // (2 * n_tokens) AS score_1e4
        FROM scored
        ORDER BY score_1e4 DESC, doc_id LIMIT $k"""
-  }
 
   /** Unit separator: bounds every symbol in the BPE work encoding; never
     * appears in `[a-z0-9]+` corpus words, so symbol boundaries are
@@ -1330,88 +1317,54 @@ object TextAnalysis {
 
   /** The BPE training loop as one SQL statement with the iteration
     * unrolled (the pagerank pattern) — per round: dictionary → weighted
-    * pair counts → 1-row argmax CTE → replace-applied dictionary. The
-    * oracle (DuckDB) and the Spark front-door twin differ only in list
-    * mechanics, generated from the same template so the three surfaces
-    * cannot drift.
+    * pair counts → 1-row argmax CTE → replace-applied dictionary.
     */
-  private[graft] def bpeTrainSql(duck: Boolean, nMerges: Int): String = {
+  private[graft] def bpeTrainSql(nMerges: Int): String = {
     val readout = (1 to nMerges).map { i =>
       s"""SELECT CAST($i AS BIGINT) AS rank, l AS left_sym, r AS right_sym,
                  cnt AS pair_count FROM t$i"""
     }.mkString("\nUNION ALL\n")
-    bpeCtes(duck, nMerges) + s"\n$readout\nORDER BY rank"
+    bpeCtes(nMerges) + s"\n$readout\nORDER BY rank"
   }
 
   /** The encode readout over the same unrolled chain: post-merge symbol
     * counts from the final dictionary, joined onto each document's
     * words.
     */
-  private[graft] def bpeEncodeSql(duck: Boolean, nMerges: Int): String = {
-    val sep = "chr(31)"
-    val div = if (duck) "//" else "DIV"
-    val nsym =
-      if (duck) s"len(list_filter(string_split(seq, $sep), x -> x <> ''))"
-      else s"size(filter(split(seq, $sep), x -> x <> ''))"
-    val tokFrom =
-      if (duck)
-        """SELECT doc_id,
+  private[graft] def bpeEncodeSql(nMerges: Int): String =
+    bpeCtes(nMerges) +
+      s""",
+       dict AS (SELECT w, CAST(len(list_filter(string_split(seq, chr(31)), x -> x <> '')) AS BIGINT) AS nsym
+                FROM d$nMerges),
+       tok AS (SELECT doc_id,
                   unnest(regexp_extract_all(lower(coalesce(text, '')),
                                             '[a-z0-9]+')) AS w
-           FROM documents"""
-      else
-        """SELECT doc_id,
-                  explode(regexp_extract_all(lower(coalesce(text, '')),
-                                             '[a-z0-9]+', 0)) AS w
-           FROM documents"""
-    bpeCtes(duck, nMerges) +
-      s""",
-       dict AS (SELECT w, CAST($nsym AS BIGINT) AS nsym FROM d$nMerges),
-       tok AS ($tokFrom)
+           FROM documents)
        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
               CAST(sum(nsym) AS BIGINT) AS n_bpe_tokens,
               (20000 * CAST(sum(nsym) AS BIGINT) + CAST(count(*) AS BIGINT))
-                $div (2 * CAST(count(*) AS BIGINT)) AS bpe_per_word_1e4
+                // (2 * CAST(count(*) AS BIGINT)) AS bpe_per_word_1e4
        FROM tok JOIN dict ON dict.w = tok.w
        GROUP BY doc_id ORDER BY doc_id"""
-  }
 
   /** Shared unrolled-iteration CTE chain (words → dictionary → K rounds
-    * of argmax t_i + merged dictionary d_i), dialect-parameterized.
+    * of argmax t_i + merged dictionary d_i).
     */
-  private def bpeCtes(duck: Boolean, nMerges: Int): String = {
+  private def bpeCtes(nMerges: Int): String = {
     val sep = "chr(31)"
-    // dialect points: symbol-list split/filter, pair enumeration, and the
-    // regexp_replace global flag (Spark replaces all matches by default)
     def pairs(d: String): String =
-      if (duck)
-        s"""SELECT c, ls[i] AS l, ls[i + 1] AS r
-            FROM (SELECT c, list_filter(string_split(seq, $sep),
-                    x -> x <> '') AS ls FROM $d) dx,
-                 UNNEST(range(1, len(ls))) AS t(i)"""
-      else
-        s"""SELECT c, element_at(ls, i) AS l, element_at(ls, i + 1) AS r
-            FROM (SELECT c, ls, explode(sequence(1, size(ls) - 1)) AS i
-                  FROM (SELECT c, filter(split(seq, $sep), x -> x <> '') AS ls
-                        FROM $d) dx0
-                  WHERE size(ls) >= 2) dx"""
+      s"""SELECT c, ls[i] AS l, ls[i + 1] AS r
+          FROM (SELECT c, list_filter(string_split(seq, $sep),
+                  x -> x <> '') AS ls FROM $d) dx,
+               UNNEST(range(1, len(ls))) AS t(i)"""
     // wrapped-symbol encoding (`␟a␟␟b␟`): see bpeTrain — a shared
     // boundary separator would make replace skip a symbol after every
     // match on repeated runs
-    val charSplit =
-      if (duck) s"regexp_replace(w, '(.)', $sep || '\\1' || $sep, 'g')"
-      else s"regexp_replace(w, '(.)', concat($sep, '$$1', $sep))"
-    val wordsFrom =
-      if (duck)
-        """SELECT unnest(regexp_extract_all(lower(coalesce(text, '')),
-                                            '[a-z0-9]+')) AS w
-           FROM documents"""
-      else
-        """SELECT explode(regexp_extract_all(lower(coalesce(text, '')),
-                                             '[a-z0-9]+', 0)) AS w
-           FROM documents"""
+    val charSplit = s"regexp_replace(w, '(.)', $sep || '\\1' || $sep, 'g')"
     val header =
-      s"""WITH words AS ($wordsFrom),
+      s"""WITH words AS (SELECT unnest(regexp_extract_all(lower(coalesce(text, '')),
+                                            '[a-z0-9]+')) AS w
+           FROM documents),
          wc AS (SELECT w, CAST(count(*) AS BIGINT) AS c
                 FROM words GROUP BY w),
          d0 AS (SELECT w, $charSplit AS seq, c FROM wc)"""
@@ -1539,20 +1492,15 @@ object TextAnalysis {
                - (84600 * spw_1e4 + 5000) DIV 10000"""))
       .orderBy(col("source"))
 
-  /** [[readability]] as SQL for either engine (`duck` toggles the
-    * regexp_extract_all arity, len/size, and // vs DIV).
-    */
-  private[graft] def readabilitySql(duck: Boolean): String = {
-    val div = if (duck) "//" else "DIV"
-    val sz = if (duck) "len" else "size"
-    val rex = if (duck) "" else ", 0"
+  /** [[readability]] as DuckDB SQL. */
+  private[graft] val readabilitySql: String =
     s"""WITH d AS (SELECT source,
-             CAST($sz(regexp_extract_all(lower(coalesce(text, '')),
-                  '[a-z0-9]+'$rex)) AS BIGINT) AS w,
-             CAST(greatest($sz(regexp_extract_all(coalesce(text, ''),
-                  '[.!?]+'$rex)), 1) AS BIGINT) AS sent,
-             CAST($sz(regexp_extract_all(lower(coalesce(text, '')),
-                  '[aeiouy]+'$rex)) AS BIGINT) AS syl
+             CAST(len(regexp_extract_all(lower(coalesce(text, '')),
+                  '[a-z0-9]+')) AS BIGINT) AS w,
+             CAST(greatest(len(regexp_extract_all(coalesce(text, ''),
+                  '[.!?]+')), 1) AS BIGINT) AS sent,
+             CAST(len(regexp_extract_all(lower(coalesce(text, '')),
+                  '[aeiouy]+')) AS BIGINT) AS syl
            FROM documents),
        c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                     CAST(sum(w) AS BIGINT) AS words,
@@ -1560,18 +1508,17 @@ object TextAnalysis {
                     CAST(sum(syl) AS BIGINT) AS syllables
              FROM d GROUP BY source)
        SELECT source, n_docs, words, sentences, syllables,
-              CAST((20000 * words + sentences) $div (2 * sentences)
+              CAST((20000 * words + sentences) // (2 * sentences)
                    AS BIGINT) AS wps_1e4,
               CAST((20000 * syllables + greatest(words, 1))
-                   $div (2 * greatest(words, 1)) AS BIGINT) AS spw_1e4,
+                   // (2 * greatest(words, 1)) AS BIGINT) AS spw_1e4,
               CAST(206835
-                - (1015 * ((20000 * words + sentences) $div (2 * sentences))
-                   + 5000) $div 10000
+                - (1015 * ((20000 * words + sentences) // (2 * sentences))
+                   + 5000) // 10000
                 - (84600 * ((20000 * syllables + greatest(words, 1))
-                            $div (2 * greatest(words, 1)))
-                   + 5000) $div 10000 AS BIGINT) AS flesch_1e3
+                            // (2 * greatest(words, 1)))
+                   + 5000) // 10000 AS BIGINT) AS flesch_1e3
        FROM c ORDER BY source"""
-  }
 
   /** Tokenizer round-trip integrity: encode every document against the
     * frequency-ranked top-V vocabulary ([[encodeDocs]]'s contract), then
@@ -1615,28 +1562,14 @@ object TextAnalysis {
       .orderBy(col("source"))
   }
 
-  /** [[decodeRoundtrip]] as SQL for either engine. The encode CTEs mirror
-    * the q_encode_docs oracle; decode re-joins the vocabulary on vid.
+  /** [[decodeRoundtrip]] as DuckDB SQL. The encode CTEs mirror the
+    * q_encode_docs oracle; decode re-joins the vocabulary on vid.
     */
-  private[graft] def decodeRoundtripSql(duck: Boolean): String = {
-    val toks = if (duck)
-      "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
-    else TokensExpr
-    val tokCte = if (duck)
-      """tk AS (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, ws FROM d),
+  private[graft] val decodeRoundtripSql: String =
+    s"""WITH d AS (SELECT doc_id, source, regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+') AS ws FROM documents),
+       tk AS (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, ws FROM d),
          tok AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-                        ws[CAST(pos AS INT)] AS w FROM tk)"""
-    else
-      """tok AS (SELECT doc_id, CAST(pos + 1 AS BIGINT) AS pos, w
-                 FROM d LATERAL VIEW posexplode(ws) t AS pos, w)"""
-    val agg = if (duck)
-      "string_agg(coalesce(v.w, '<unk>'), ' ' ORDER BY e.pos)"
-    else
-      """array_join(transform(sort_array(collect_list(struct(e.pos, coalesce(v.w, '<unk>') AS tk))),
-         x -> x.tk), ' ')"""
-    val orig = if (duck) "array_to_string(ws, ' ')" else "array_join(ws, ' ')"
-    s"""WITH d AS (SELECT doc_id, source, $toks AS ws FROM documents),
-       $tokCte,
+                        ws[CAST(pos AS INT)] AS w FROM tk),
        cnt AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY w),
        vocab AS (SELECT w, CAST(row_number() OVER (ORDER BY c DESC, w)
                     AS BIGINT) AS vid
@@ -1646,10 +1579,10 @@ object TextAnalysis {
        dec AS (SELECT e.doc_id,
                       CAST(sum(CASE WHEN e.id = 0 THEN 1 ELSE 0 END)
                            AS BIGINT) AS n_oov,
-                      $agg AS decoded
+                      string_agg(coalesce(v.w, '<unk>'), ' ' ORDER BY e.pos) AS decoded
                FROM enc e LEFT JOIN vocab v ON v.vid = e.id
                GROUP BY e.doc_id),
-       o AS (SELECT doc_id, source, $orig AS orig FROM d)
+       o AS (SELECT doc_id, source, array_to_string(ws, ' ') AS orig FROM d)
        SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
               CAST(sum(CASE WHEN coalesce(n_oov, 0) > 0 THEN 1 ELSE 0 END)
                    AS BIGINT) AS n_oov_docs,
@@ -1657,7 +1590,6 @@ object TextAnalysis {
                    AS BIGINT) AS n_roundtrip_ok
        FROM o LEFT JOIN dec USING (doc_id)
        GROUP BY source ORDER BY source"""
-  }
 
   /** Zipf-shape audit of the per-source token distribution: at rank r
     * (1, 2, 4, ..., 64 by frequency, token-lexicographic tiebreak) the
@@ -1693,21 +1625,10 @@ object TextAnalysis {
       .orderBy(col("source"), col("rk"))
   }
 
-  /** [[zipfProfile]] as SQL for either engine (`duck` toggles the
-    * regexp_extract_all arity, unnest-vs-explode, and // vs DIV).
-    */
-  private[graft] def zipfProfileSql(duck: Boolean,
-                                    ranks: Seq[Int]): String = {
-    val div = if (duck) "//" else "DIV"
-    val rex = if (duck) "" else ", 0"
-    val tok =
-      if (duck)
-        s"""SELECT source, unnest(regexp_extract_all(lower(coalesce(text, '')),
-              '[a-z0-9]+')) AS token FROM documents"""
-      else
-        s"""SELECT source, explode(regexp_extract_all(lower(coalesce(text, '')),
-              '[a-z0-9]+', 0)) AS token FROM documents"""
-    s"""WITH tok AS ($tok),
+  /** [[zipfProfile]] as DuckDB SQL. */
+  private[graft] def zipfProfileSql(ranks: Seq[Int]): String =
+    s"""WITH tok AS (SELECT source, unnest(regexp_extract_all(lower(coalesce(text, '')),
+              '[a-z0-9]+')) AS token FROM documents),
        tf AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n
               FROM tok GROUP BY source, token),
        r AS (SELECT source, token, n,
@@ -1716,11 +1637,10 @@ object TextAnalysis {
                     CAST(max(n) OVER (PARTITION BY source) AS BIGINT) AS f1
              FROM tf)
        SELECT source, rk, token, n,
-              CAST((20000 * rk * n + f1) $div (2 * f1) AS BIGINT)
+              CAST((20000 * rk * n + f1) // (2 * f1) AS BIGINT)
                 AS rf_ratio_1e4
        FROM r WHERE rk IN (${ranks.mkString(", ")})
        ORDER BY source, rk"""
-  }
 
   /** Language-label confusion matrix: the declared `lang` column against
     * the marker-word detector ([[langId]]) — the metadata-quality audit a
@@ -1806,18 +1726,13 @@ object TextAnalysis {
       .limit(topN)
   }
 
-  /** [[langConfusion]] as SQL for either engine. */
-  private[graft] def langConfusionSql(duck: Boolean): String = {
-    val div = if (duck) "//" else "DIV"
-    val toks =
-      if (duck) "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
-      else "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+', 0)"
+  /** [[langConfusion]] as DuckDB SQL. */
+  private[graft] val langConfusionSql: String = {
     def cnt(words: Seq[String]): String = {
       val lst = words.map(w => s"'$w'").mkString(",")
-      if (duck) s"CAST(len(list_filter(toks, t -> list_contains([$lst], t))) AS BIGINT)"
-      else s"CAST(size(filter(toks, t -> array_contains(array($lst), t))) AS BIGINT)"
+      s"CAST(len(list_filter(toks, t -> list_contains([$lst], t))) AS BIGINT)"
     }
-    s"""WITH t AS (SELECT lang, $toks AS toks FROM documents),
+    s"""WITH t AS (SELECT lang, regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+') AS toks FROM documents),
        sc AS (SELECT lang,
          ${cnt(Seq("the", "and", "of", "to", "in", "is"))} AS s_en,
          ${cnt(Seq("der", "die", "und", "ist", "nicht", "das"))} AS s_de,
@@ -1834,21 +1749,15 @@ object TextAnalysis {
              FROM p GROUP BY lang, pred_lang)
        SELECT lang, pred_lang, n_docs,
               CAST((20000 * n_docs + sum(n_docs) OVER (PARTITION BY lang))
-                   $div (2 * sum(n_docs) OVER (PARTITION BY lang)) AS BIGINT)
+                   // (2 * sum(n_docs) OVER (PARTITION BY lang)) AS BIGINT)
                 AS share_1e4
        FROM g ORDER BY lang, pred_lang"""
   }
 
-  /** [[vocabDrift]] as SQL for either engine. */
-  private[graft] def vocabDriftSql(duck: Boolean, minCount: Long,
-                                   topN: Int): String = {
-    val div = if (duck) "//" else "DIV"
-    val un = if (duck) "unnest" else "explode"
-    val toks =
-      if (duck) "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
-      else "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+', 0)"
+  /** [[vocabDrift]] as DuckDB SQL. */
+  private[graft] def vocabDriftSql(minCount: Long, topN: Int): String =
     s"""WITH mx AS (SELECT max(doc_id) AS max_id FROM documents),
-       tok AS (SELECT doc_id * 5 <= max_id * 4 AS is_old, $un($toks) AS token
+       tok AS (SELECT doc_id * 5 <= max_id * 4 AS is_old, unnest(regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')) AS token
                FROM documents CROSS JOIN mx),
        c AS (SELECT token,
                     CAST(sum(CASE WHEN is_old THEN 1 ELSE 0 END) AS BIGINT) AS n_old,
@@ -1857,16 +1766,15 @@ object TextAnalysis {
        tt AS (SELECT CAST(sum(n_old) AS BIGINT) AS t_old,
                      CAST(sum(n_new) AS BIGINT) AS t_new FROM c),
        sh AS (SELECT token, n_old, n_new,
-                     CAST((2000000000 * n_old + t_old) $div (2 * t_old) AS BIGINT)
+                     CAST((2000000000 * n_old + t_old) // (2 * t_old) AS BIGINT)
                        AS share_old_1e9,
-                     CAST((2000000000 * n_new + t_new) $div (2 * t_new) AS BIGINT)
+                     CAST((2000000000 * n_new + t_new) // (2 * t_new) AS BIGINT)
                        AS share_new_1e9
               FROM c CROSS JOIN tt
               WHERE n_old + n_new >= $minCount)
        SELECT token, n_old, n_new, share_old_1e9, share_new_1e9,
               abs(share_new_1e9 - share_old_1e9) AS shift_1e9
        FROM sh ORDER BY shift_1e9 DESC, token LIMIT $topN"""
-  }
 
   /** Token burstiness: the variance-to-mean ratio (index of dispersion)
     * of each token's per-document count, zeros included — a Poisson
@@ -1907,17 +1815,11 @@ object TextAnalysis {
       .limit(topN)
   }
 
-  /** [[tokenBurstiness]] as SQL for either engine. */
-  private[graft] def tokenBurstinessSql(duck: Boolean, minTotal: Long,
-                                        topN: Int): String = {
-    val div = if (duck) "//" else "DIV"
-    val un = if (duck) "unnest" else "explode"
-    val toks =
-      if (duck) "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
-      else "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+', 0)"
+  /** [[tokenBurstiness]] as DuckDB SQL. */
+  private[graft] def tokenBurstinessSql(minTotal: Long, topN: Int): String =
     s"""WITH nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
        pd AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS c FROM
-              (SELECT doc_id, $un($toks) AS token FROM documents)
+              (SELECT doc_id, unnest(regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')) AS token FROM documents)
               GROUP BY doc_id, token),
        m AS (SELECT token, CAST(count(*) AS BIGINT) AS df,
                     CAST(sum(c) AS BIGINT) AS total,
@@ -1927,11 +1829,10 @@ object TextAnalysis {
        SELECT token, df, total,
               CAST((20000 * (n_docs * sumsq - total * total)
                     + (n_docs - 1) * total)
-                   $div (2 * (n_docs - 1) * total) AS BIGINT)
+                   // (2 * (n_docs - 1) * total) AS BIGINT)
                 AS burstiness_1e4
        FROM m CROSS JOIN nd
        ORDER BY burstiness_1e4 DESC, token LIMIT $topN"""
-  }
 
   /** Tokenizer fertility by language: BPE-ish pieces per whitespace word
     * — THE number multilingual tokenizer evals report per language (a
@@ -1998,13 +1899,9 @@ object TextAnalysis {
   }
 
   /** [[weightedLengthPercentiles]] as fully portable SQL. */
-  private[graft] def weightedLengthPercentilesSql(duck: Boolean): String = {
-    val toks = if (duck)
-      "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
-    else TokensExpr
-    val sz = if (duck) s"len($toks)" else s"size($toks)"
+  private[graft] val weightedLengthPercentilesSql: String =
     s"""WITH m AS (SELECT len, CAST(sum(len) AS BIGINT) AS mass FROM
-           (SELECT CAST($sz AS BIGINT) AS len FROM documents) d
+           (SELECT CAST(len(regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')) AS BIGINT) AS len FROM documents) d
          GROUP BY len),
        c AS (SELECT len, sum(mass) OVER (ORDER BY len
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
@@ -2017,7 +1914,6 @@ object TextAnalysis {
        FROM c CROSS JOIN t CROSS JOIN q
        WHERE cum * 100 >= pct * total
        GROUP BY pct ORDER BY pct"""
-  }
 
   /** Corpus-level source-mix diversity by TOKEN MASS: the effective
     * number of sources (inverse Simpson over token-mass shares) plus the
@@ -2058,16 +1954,9 @@ object TextAnalysis {
         expr("CAST((20000 * top_mass + total_tokens) DIV (2 * total_tokens) AS BIGINT)")
           .as("top_share_1e4"))
 
-  /** [[sourceMixDiversity]] as dialect-templated SQL (`div` + the
-    * tokenizer regex spelling are the dialect points).
-    */
-  private[graft] def sourceMixDiversitySql(duck: Boolean,
-                                           div: String): String = {
-    val toks = if (duck)
-      "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
-    else TokensExpr
-    val sz = if (duck) s"len($toks)" else s"size($toks)"
-    s"""WITH m AS (SELECT source, CAST(sum(CAST($sz AS BIGINT)) AS BIGINT) AS mass
+  /** [[sourceMixDiversity]] as DuckDB SQL. */
+  private[graft] val sourceMixDiversitySql: String =
+    s"""WITH m AS (SELECT source, CAST(sum(CAST(len(regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')) AS BIGINT)) AS BIGINT) AS mass
                  FROM documents GROUP BY source),
        agg AS (SELECT CAST(count(*) AS BIGINT) AS n_sources,
                       CAST(sum(mass) AS BIGINT) AS total_tokens,
@@ -2083,9 +1972,8 @@ object TextAnalysis {
               CAST((effnum - effnum % effden) / effden AS BIGINT)
                 AS eff_sources_1e4,
               CAST((20000 * top_mass + total_tokens)
-                $div (2 * total_tokens) AS BIGINT) AS top_share_1e4
+                // (2 * total_tokens) AS BIGINT) AS top_share_1e4
        FROM fin"""
-  }
 
   /** Language-diversity audit per source: Simpson's diversity index
     * 1 - sum(p_i^2) over the source's language mix, plus the inverse
@@ -2139,10 +2027,8 @@ object TextAnalysis {
         expr("CAST((inum - inum % iden) / iden AS BIGINT)").as("inv_simpson_1e4"))
       .orderBy(col("source"))
 
-  /** [[langDiversity]] as dialect-templated SQL (`div` is the only
-    * dialect point).
-    */
-  private[graft] def langDiversitySql(div: String): String =
+  /** [[langDiversity]] as DuckDB SQL. */
+  private[graft] val langDiversitySql: String =
     s"""WITH cl AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS c
                   FROM documents GROUP BY source, lang),
        agg AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_docs,

@@ -18,14 +18,10 @@ class DocCountsSpec extends AnyFunSuite {
   }
 
   test("front-door partition is consistent and total") {
-    val twins = SqlFrontDoor.twins.keySet
-    val aliases = SqlFrontDoor.incrementalTwins.keySet
-    val portable = SqlFrontDoor.portable
-    assert(SqlFrontDoor.exemptions.isEmpty)
-    assert((twins intersect portable).isEmpty)
-    assert((aliases intersect twins).isEmpty)
-    assert((aliases intersect portable).isEmpty)
-    assert((twins union aliases union portable) === SparkEntry.queries.keySet)
+    val hand = SqlFrontDoor.handTwins.keySet
+    val derived = SqlFrontDoor.derived
+    assert((hand intersect derived).isEmpty)
+    assert((hand union derived) === SparkEntry.queries.keySet)
   }
 
   test("no duplicate registry keys in the source map literals") {
@@ -33,7 +29,7 @@ class DocCountsSpec extends AnyFunSuite {
     // a new query accidentally reusing an existing name would override
     // the old operator without any compile- or runtime signal. Each name
     // must appear exactly twice in SparkEntry (queries + oracleSql) and
-    // at most once in SqlFrontDoor (twin XOR portable pass-through).
+    // at most once in SqlFrontDoor (one hand twin).
     val key = """"(q_[a-z0-9_]+)" ->""".r
     val entry = key.findAllMatchIn(read("src/main/scala/graft/SparkEntry.scala"))
       .map(_.group(1)).toSeq
@@ -49,23 +45,17 @@ class DocCountsSpec extends AnyFunSuite {
     val readme = read("README.md")
     assert(readme.contains(s"${SparkEntry.queries.size} named queries"),
       s"README must say '${SparkEntry.queries.size} named queries'")
-    assert(readme.contains(s"${SqlFrontDoor.portable.size} portable"),
-      s"README must say '${SqlFrontDoor.portable.size} portable'")
-    assert(readme.contains(s"${SqlFrontDoor.twins.size} hand-written"),
-      s"README must say '${SqlFrontDoor.twins.size} hand-written'")
-    assert(readme.contains(
-      s"${SqlFrontDoor.incrementalTwins.size} incremental aliases"),
-      s"README must say '${SqlFrontDoor.incrementalTwins.size} incremental aliases'")
+    assert(readme.contains(s"${SqlFrontDoor.derived.size} derived"),
+      s"README must say '${SqlFrontDoor.derived.size} derived'")
+    assert(readme.contains(s"${SqlFrontDoor.handTwins.size} hand-written"),
+      s"README must say '${SqlFrontDoor.handTwins.size} hand-written'")
   }
 
   test("COVERAGE.md states the derived counts") {
     val coverage = read("COVERAGE.md")
-    assert(coverage.contains(s"${SqlFrontDoor.portable.size} portable"),
-      s"COVERAGE must say '${SqlFrontDoor.portable.size} portable'")
-    assert(coverage.contains(s"${SqlFrontDoor.twins.size} hand-written"),
-      s"COVERAGE must say '${SqlFrontDoor.twins.size} hand-written'")
-    assert(coverage.contains(
-      s"${SqlFrontDoor.incrementalTwins.size} incremental aliases"),
-      s"COVERAGE must say '${SqlFrontDoor.incrementalTwins.size} incremental aliases'")
+    assert(coverage.contains(s"${SqlFrontDoor.derived.size} derived"),
+      s"COVERAGE must say '${SqlFrontDoor.derived.size} derived'")
+    assert(coverage.contains(s"${SqlFrontDoor.handTwins.size} hand-written"),
+      s"COVERAGE must say '${SqlFrontDoor.handTwins.size} hand-written'")
   }
 }

@@ -4,26 +4,29 @@ import graft.sources.Tables
 import graft.sql.SqlFrontDoor
 
 /** The SQL front door's contract, generated over the ENTIRE registry: every
-  * SparkEntry query either has a spark.sql-runnable statement whose result
-  * equals the DataFrame operator's (schema names+types and multiset of
-  * rows), or carries an explicit exemption. One generated test per query so
-  * a single regression names its query instead of failing a monolith.
+  * SparkEntry query has a spark.sql-runnable statement whose result equals
+  * the DataFrame operator's (schema names+types and multiset of rows). One
+  * generated test per query so a single regression names its query instead
+  * of failing a monolith.
   */
 class SqlFrontDoorSpec extends SparkTestBase {
 
-  test("front door covers the whole registry (sql xor exemption)") {
+  test("front door covers the whole registry (derived xor hand-written)") {
     val names = SparkEntry.queries.keySet
-    val covered = names.filter(n => SqlFrontDoor.sql(n).isDefined)
-    val exempt = SqlFrontDoor.exemptions.keySet
-    assert((covered ++ exempt) == names,
-      s"uncovered: ${(names -- covered -- exempt).toSeq.sorted.mkString(", ")}")
-    assert((covered & exempt).isEmpty,
-      "a query must not be both runnable and exempt")
-    // twins/portable must not name queries that left the registry
-    assert((SqlFrontDoor.twins.keySet -- names).isEmpty)
-    assert((SqlFrontDoor.portable -- names).isEmpty)
-    // a twin overriding a portable entry would hide oracle drift
-    assert((SqlFrontDoor.twins.keySet & SqlFrontDoor.portable).isEmpty)
+    val hand = SqlFrontDoor.handTwins.keySet
+    val uncovered = names.filterNot(n => SqlFrontDoor.sql(n).isDefined)
+    assert(uncovered.isEmpty, s"uncovered: ${uncovered.toSeq.sorted.mkString(", ")}")
+    // hand twins must not name queries that left the registry
+    assert((hand -- names).isEmpty)
+    assert((SqlFrontDoor.derived & hand).isEmpty)
+    assert((SqlFrontDoor.derived ++ hand) == names)
+  }
+
+  test("DuckToSpark refuses every hand twin's oracle") {
+    // a hand twin of a derivable oracle would hide oracle drift
+    for (name <- SqlFrontDoor.handTwins.keys.toSeq.sorted)
+      intercept[graft.sql.DuckToSpark.Refused](
+        graft.sql.DuckToSpark.toSpark(SparkEntry.oracleSql(name)))
   }
 
   /** Row multiset as sorted canonical strings — array/binary cells render
@@ -37,8 +40,7 @@ class SqlFrontDoorSpec extends SparkTestBase {
       case x => String.valueOf(x)
     }.mkString("")).toSeq.sorted
 
-  for (name <- SparkEntry.queries.keys.toSeq.sorted
-       if !SqlFrontDoor.exemptions.contains(name)) {
+  for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"sql twin equals operator: $name") {
       Tables.registerAll(spark, Sf)
       val viaSql = spark.sql(SqlFrontDoor.sql(name).get)
