@@ -45,7 +45,7 @@ object GraftSession {
     * Both settings are plain Spark conf keys, so a job overrides them the
     * usual way (`--conf` or the builder).
     */
-  def shuffleTuning(b: SparkSession.Builder): SparkSession.Builder = {
+  private def shuffleTuning(b: SparkSession.Builder): SparkSession.Builder = {
     val tuned = b.config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     sys.env.get("SPARK_GRAFT_LOCAL_DIR")

@@ -550,7 +550,7 @@ object SparkEntry {
 
   // twin of TextAnalysis.TokensExpr (incl. the null-text -> empty-list
   // coalesce)
-  private val Toks = "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
+  private[graft] val Toks = "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
 
   /** Twin of TextAnalysis.chunkDocs (size 40 / stride 30). */
   private def chunkCtes: String =
@@ -589,7 +589,7 @@ object SparkEntry {
     * round(): engines disagree on round()'s tie-breaking and result type
     * across versions, while floor on an explicit DOUBLE is universal.
     */
-  private def cosMicrosSql(a: String, b: String): String =
+  private[graft] def cosMicrosSql(a: String, b: String): String =
     s"CAST(floor((${cosSql(a, b)}) * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)"
   private val micro4Sql =
     "CAST(CASE WHEN m >= 0 THEN (m + 50) // 100 ELSE -((-m + 50) // 100) END AS BIGINT)"
@@ -2652,22 +2652,22 @@ object SparkEntry {
          FROM sel GROUP BY doc_id ORDER BY doc_id""",
 
     "q_dedup_winnow" ->
-      graft.operators.Dedup.winnowPairsSql(Toks),
+      graft.operators.Dedup.winnowPairsSql(),
 
     "q_dedup_substring" ->
-      graft.operators.Dedup.substringDedupSql(Toks),
+      graft.operators.Dedup.substringDedupSql(),
 
     // full-corpus spans restricted to greater-member-in-delta (ids are
     // append-monotone, so doc_b >= split IS membership here); the split
     // computed in SQL, the q_dedup_incremental oracle discipline
     "q_dedup_substring_incremental" ->
-      graft.operators.Dedup.substringDedupSql(Toks, incremental = true),
+      graft.operators.Dedup.substringDedupSql(incremental = true),
 
     "q_substring_dup_profile" ->
-      graft.operators.Dedup.substringDupProfileSql(Toks),
+      graft.operators.Dedup.substringDupProfileSql(),
 
     "q_dedup_substring_rewrite" ->
-      graft.operators.Dedup.substringDedupRewriteSql(Toks),
+      graft.operators.Dedup.substringDedupRewriteSql(),
 
     "q_date_parts_orders" ->
       """WITH p AS (SELECT
@@ -3585,31 +3585,26 @@ object SparkEntry {
     // MMR diversified re-rank: the greedy unrolled as k argmax steps from
     // the shared template
     "q_mmr_rerank" ->
-      operators.Similarity.mmrSql(cosMicrosSql,
-        "CAST(embedding AS DOUBLE[])"),
+      operators.Similarity.mmrSql(),
 
     // bitext margin mining: CSLS ratio margin over the parity shards
     "q_bitext_margin" ->
-      operators.Similarity.bitextMarginSql(cosMicrosSql,
-        "CAST(embedding AS DOUBLE[])"),
+      operators.Similarity.bitextMarginSql(),
 
     // index-approximated bitext mining (the production entry): first-N
     // IVF candidate screen + the same CSLS tail over candidates only
     "q_bitext_margin_index" ->
-      operators.Similarity.bitextMarginIndexSql(cosMicrosSql,
-        "CAST(embedding AS DOUBLE[])"),
+      operators.Similarity.bitextMarginIndexSql(),
 
     // embedding-space decontamination: same first-N IVF candidate screen,
     // eval/corpus split on vec_id % 97, per-corpus-doc hit aggregate
     "q_semantic_decontaminate" ->
-      operators.Similarity.semanticDecontaminateSql(cosMicrosSql,
-        "CAST(embedding AS DOUBLE[])"),
+      operators.Similarity.semanticDecontaminateSql(),
 
     // incremental face: build(prefix) + append(delta) must equal the
     // one-shot scan — the SAME oracle text as the parent
     "q_semantic_decontaminate_incremental" ->
-      operators.Similarity.semanticDecontaminateSql(cosMicrosSql,
-        "CAST(embedding AS DOUBLE[])"),
+      operators.Similarity.semanticDecontaminateSql(),
 
     // embedding drift monitor: cross-multiplied mean shifts over 2^20
     // integer codes

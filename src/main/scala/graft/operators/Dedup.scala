@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry.Toks
 import graft.sources.Tables
 
 /** Deduplication operators for LLM training-data pipelines.
@@ -1211,14 +1212,13 @@ object Dedup {
   /** [[winnowPairs]] as DuckDB SQL, the operating point parameterized in
     * lockstep with the operator defaults.
     */
-  private[graft] def winnowPairsSql(toks: String, k: Int = 16, w: Int = 8,
-                                    minShared: Long = 3, dfCap: Long = 100,
-                                    overlapMin1e4: Long = 2500): String =
+  private[graft] def winnowPairsSql(k: Int = 16, w: Int = 8, minShared: Long = 3,
+                                    dfCap: Long = 100, overlapMin1e4: Long = 2500): String =
     // the pos-desc tiebreak packs as lpad(999999 - pos): past 1e6 grams
     // the subtraction goes negative and would silently mis-order the
     // (hash, pos) tiebreak — fail LOUDLY instead, exactly like the Scala
     // operator's raise_error guard (r11 advisory)
-    s"""WITH t AS (SELECT doc_id, array_to_string($toks, ' ') AS txt FROM documents),
+    s"""WITH t AS (SELECT doc_id, array_to_string($Toks, ' ') AS txt FROM documents),
        f AS (SELECT doc_id, txt FROM t WHERE length(txt) >= $k),
        g AS (SELECT doc_id, txt, unnest(range(0, length(txt) - ${k - 1})) AS pos FROM f),
          h AS (SELECT doc_id, pos,
@@ -1582,8 +1582,8 @@ object Dedup {
     * matching gram pairs on one diagonal (m, r) and the runs they form,
     * left open for the caller's HAVING.
     */
-  private def spanCtes(toks: String, k: Int, dfCap: Long): String =
-    s"""WITH t AS (SELECT doc_id, array_to_string($toks, ' ') AS txt FROM documents),
+  private def spanCtes(k: Int, dfCap: Long): String =
+    s"""WITH t AS (SELECT doc_id, array_to_string($Toks, ' ') AS txt FROM documents),
        f AS (SELECT doc_id, txt FROM t WHERE length(txt) >= $k),
        g AS (SELECT doc_id, txt, unnest(range(0, length(txt) - ${k - 1})) AS pos FROM f),
          h AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos,
@@ -1609,7 +1609,7 @@ object Dedup {
   /** [[substringDedup]] as DuckDB SQL, parameters in lockstep with the
     * operator defaults.
     */
-  private[graft] def substringDedupSql(toks: String, k: Int = 16, dfCap: Long = 100,
+  private[graft] def substringDedupSql(k: Int = 16, dfCap: Long = 100,
                                        minLen: Long = 32,
                                        incremental: Boolean = false): String = {
     // incremental face: the full-corpus statement restricted to pairs
@@ -1622,7 +1622,7 @@ object Dedup {
       else ""
     val fromRuns = if (incremental) "runs CROSS JOIN mxd" else "runs"
     val deltaPred = if (incremental) " AND doc_b >= split" else ""
-    s"""${spanCtes(toks, k, dfCap)})$mxCte
+    s"""${spanCtes(k, dfCap)})$mxCte
        SELECT doc_a, doc_b, start_a, start_b, match_len
        FROM $fromRuns WHERE match_len >= $minLen$deltaPred
        ORDER BY doc_a, doc_b, start_a, start_b"""
@@ -1632,9 +1632,9 @@ object Dedup {
     * per-doc interval merge (running-max island pass) and the permille
     * readout; every document reports, zero-span docs read 0.
     */
-  private[graft] def substringDupProfileSql(toks: String, k: Int = 16, dfCap: Long = 100,
+  private[graft] def substringDupProfileSql(k: Int = 16, dfCap: Long = 100,
                                             minLen: Long = 32): String =
-    s"""${spanCtes(toks, k, dfCap)}
+    s"""${spanCtes(k, dfCap)}
                 HAVING count(*) + ${k - 1} >= $minLen),
        sides AS (SELECT DISTINCT doc_id, st, en FROM (
                    SELECT doc_a AS doc_id, start_a AS st,
@@ -1671,7 +1671,7 @@ object Dedup {
   /** [[substringDedupRewrite]] as DuckDB SQL: the span CTEs, the
     * doc_b-side island merge, and the gap-slice concat assembly.
     */
-  private[graft] def substringDedupRewriteSql(toks: String, k: Int = 16, dfCap: Long = 100,
+  private[graft] def substringDedupRewriteSql(k: Int = 16, dfCap: Long = 100,
                                               minLen: Long = 32): String = {
     val segsCte =
       """segs AS (SELECT doc_id, list(struct_pack(ist := ist, ien := ien)
@@ -1685,7 +1685,7 @@ object Dedup {
              CAST((CASE WHEN i = len(s.rs) THEN length(t.txt) ELSE s.rs[i + 1].ist END)
                - (CASE WHEN i = 0 THEN 0 ELSE s.rs[i].ien END) AS INT))),
          'string_agg', '')"""
-    s"""${spanCtes(toks, k, dfCap)}
+    s"""${spanCtes(k, dfCap)}
                 HAVING count(*) + ${k - 1} >= $minLen),
        cut AS (SELECT DISTINCT doc_b AS doc_id, start_b AS st,
                       start_b + match_len AS en FROM runs),

@@ -1613,7 +1613,7 @@ object Quality {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("t"), col("rep"))
     // BOTH bounds from one pass over the ranked B-row frame — two
     // filtered consumers would re-run the corpus-scanning replicate
-    // aggregate per bound (ExplainAudit caught exactly that: 3 scans)
+    // aggregate per bound (the plan audit caught exactly that: 3 scans)
     val bounds = reps.withColumn("rn", row_number().over(w))
       .agg(
         min(when(expr(s"rn * 1000 >= 25 * $b"), col("t"))).as("boot_lo_cents"),

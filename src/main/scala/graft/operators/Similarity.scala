@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry.cosMicrosSql
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (vec_id, embedding
@@ -31,7 +32,7 @@ object Similarity {
     * 500/500/2000 vectors at the oracle-checked SFs — resolves to the
     * historical 16 and no DuckDB oracle moves), capped at the packed
     * centroid-id ceiling. The sf1 empirical probe
-    * (tools/SemDedupLeverProbe, SCALE.md) measured the U-shape minimum
+    * (SemDedupLeverProbe, recorded in SCALE.md) measured the U-shape minimum
     * near 64 at 20k vectors; n/320 lands 62 there and keeps the expected
     * cluster size — hence the O(Σ cluster²) within-cluster pair term —
     * constant as the corpus grows.
@@ -2186,16 +2187,15 @@ object Similarity {
     * pool against the selected set, prices mmr = m - max(sim to
     * selected), and takes the per-query argmax via row_number.
     */
-  private[graft] def mmrSql(cosMicros: (String, String) => String, embCast: String,
-                            nQueries: Int = 5, pool: Int = 10, k: Int = 5): String = {
+  private[graft] def mmrSql(nQueries: Int = 5, pool: Int = 10, k: Int = 5): String = {
     def micro4(c: String) =
       s"CAST(CASE WHEN $c >= 0 THEN ($c + 50) // 100 " +
         s"ELSE -((-$c + 50) // 100) END AS BIGINT)"
     val header =
-      s"""WITH e AS (SELECT vec_id, $embCast AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          q AS (SELECT vec_id AS query_id, v AS qv FROM e
                WHERE vec_id < $nQueries),
-         scored AS (SELECT query_id, vec_id, ${cosMicros("qv", "v")} AS m
+         scored AS (SELECT query_id, vec_id, ${cosMicrosSql("qv", "v")} AS m
                     FROM e CROSS JOIN q WHERE vec_id <> query_id),
          pool AS (SELECT query_id, vec_id, m FROM (
                   SELECT query_id, vec_id, m,
@@ -2205,7 +2205,7 @@ object Similarity {
          pe AS (SELECT p.query_id, p.vec_id, e.v
                 FROM pool p JOIN e ON e.vec_id = p.vec_id),
          sims AS (SELECT a.query_id, a.vec_id AS ca, b.vec_id AS cb,
-                         ${cosMicros("a.v", "b.v")} AS sim
+                         ${cosMicrosSql("a.v", "b.v")} AS sim
                   FROM pe a JOIN pe b
                     ON a.query_id = b.query_id AND a.vec_id <> b.vec_id),
          s1 AS (SELECT query_id, vec_id, m, m AS mmr FROM (
@@ -2484,14 +2484,13 @@ object Similarity {
     * [[bitextMarginSql]], with every k-NN sum taken over candidate
     * pairs only (index-approximated CSLS — what the operator computes).
     */
-  private[graft] def bitextMarginIndexSql(cosMicros: (String, String) => String,
-                                          embCast: String, k: Int = 4,
+  private[graft] def bitextMarginIndexSql(k: Int = 4,
                                           thresholdMicro: Long = 1060000L,
                                           nLists: Int = 16, nProbe: Int = 3): String =
-    s"""WITH e AS (SELECT vec_id, $embCast AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        c AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < $nLists),
        scored_c AS (SELECT e.vec_id, c.centroid_id,
-                    ${cosMicros("e.v", "c.cv")} AS cm
+                    ${cosMicrosSql("e.v", "c.cv")} AS cm
                     FROM e CROSS JOIN c),
        assign AS (SELECT vec_id, centroid_id FROM (
                   SELECT vec_id, centroid_id,
@@ -2509,7 +2508,7 @@ object Similarity {
        aside AS (SELECT vec_id AS a_id, v AS av FROM e WHERE vec_id % 2 = 0),
        bside AS (SELECT vec_id AS b_id, v AS bv FROM e WHERE vec_id % 2 = 1),
        pos AS (SELECT a_id, b_id, m FROM (
-                 SELECT cd.a_id, cd.b_id, ${cosMicros("av", "bv")} AS m
+                 SELECT cd.a_id, cd.b_id, ${cosMicrosSql("av", "bv")} AS m
                  FROM cand cd
                  JOIN aside ON aside.a_id = cd.a_id
                  JOIN bside ON bside.b_id = cd.b_id) s0
@@ -2749,13 +2748,12 @@ object Similarity {
     * vector contamination aggregate as the tail.
     */
   private[graft] def semanticDecontaminateSql(
-      cosMicros: (String, String) => String, embCast: String,
       thresholdMicro: Long = 350000L, evalMod: Int = 97,
       nLists: Int = 16, nProbe: Int = 3): String =
-    s"""WITH e AS (SELECT vec_id, $embCast AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        c AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < $nLists),
        scored_c AS (SELECT e.vec_id, c.centroid_id,
-                    ${cosMicros("e.v", "c.cv")} AS cm
+                    ${cosMicrosSql("e.v", "c.cv")} AS cm
                     FROM e CROSS JOIN c),
        assign AS (SELECT vec_id, centroid_id FROM (
                   SELECT vec_id, centroid_id,
@@ -2773,7 +2771,7 @@ object Similarity {
        ev AS (SELECT vec_id AS eval_id, v AS evv FROM e WHERE vec_id % $evalMod = 0),
        co AS (SELECT vec_id, v AS cov FROM e WHERE vec_id % $evalMod <> 0),
        hits AS (SELECT vec_id, eval_id, m FROM (
-                  SELECT cd.vec_id, cd.eval_id, ${cosMicros("cov", "evv")} AS m
+                  SELECT cd.vec_id, cd.eval_id, ${cosMicrosSql("cov", "evv")} AS m
                   FROM cand cd
                   JOIN co ON co.vec_id = cd.vec_id
                   JOIN ev ON ev.eval_id = cd.eval_id) s0
@@ -2783,13 +2781,12 @@ object Similarity {
        FROM hits GROUP BY vec_id ORDER BY vec_id"""
 
   /** [[bitextMarginMine]] as DuckDB SQL. */
-  private[graft] def bitextMarginSql(cosMicros: (String, String) => String, embCast: String,
-                                     k: Int = 4, thresholdMicro: Long = 1060000L): String =
-    s"""WITH e AS (SELECT vec_id, $embCast AS v FROM embeddings),
+  private[graft] def bitextMarginSql(k: Int = 4, thresholdMicro: Long = 1060000L): String =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        aside AS (SELECT vec_id AS a_id, v AS av FROM e WHERE vec_id % 2 = 0),
        bside AS (SELECT vec_id AS b_id, v AS bv FROM e WHERE vec_id % 2 = 1),
        pos AS (SELECT a_id, b_id, m FROM (
-                 SELECT a_id, b_id, ${cosMicros("av", "bv")} AS m
+                 SELECT a_id, b_id, ${cosMicrosSql("av", "bv")} AS m
                  FROM aside CROSS JOIN bside) s0
                WHERE m > 0),
        fr AS (SELECT a_id, b_id, m,

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{Bench, SparkEntry}
+import graft.{GraftSession, SparkEntry}
 import graft.plans.PlanFingerprint
 
 /** The bench-drift triage protocol as a tool (r3 established it by hand;
@@ -18,8 +16,10 @@ import graft.plans.PlanFingerprint
   *    noise or environment, don't touch code; with PLAN_CHANGED it's a
   *    plan regression with a named culprit.
   *
-  * The session mirrors SparkTestBase (local[4], 4 shuffle partitions,
-  * sf0.001) so the tool and PlanFingerprintSpec always agree.
+  * The session has SparkTestBase's shape (local[4], 4 shuffle
+  * partitions, sf0.001) so the tool and PlanFingerprintSpec always agree;
+  * fingerprints are planned with AQE off, so the engine's AQE settings
+  * do not reach them.
   *
   *  - `--check-bench <bench.json>`: no Spark — parse a graft.Bench output
   *    line and FAIL (exit 1) if any per-query time exceeds 2x its
@@ -117,12 +117,7 @@ object BenchGuard {
         checkBench(args(i + 1), requireQuiet = args.contains("--require-quiet")); return
       case _ =>
     }
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("bench-guard", "local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = PlanFingerprint.PinnedSf
     if (write) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixture scaler: synthesizes an f-times-larger scale
@@ -95,12 +95,7 @@ object FixtureScale {
     require(f >= 1 && f <= 400, "factor in [1, 400]")
     require(f <= 36 * Units36.length,
       s"factor $f exceeds the text substitution's distinct-map range")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("fixture-scale").getOrCreate()
+    val spark = graft.GraftSession.builder("fixture-scale", "local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")

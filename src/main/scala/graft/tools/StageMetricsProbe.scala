@@ -1,21 +1,13 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe: per-stage wall/CPU time for one registry query. */
 object StageMetricsProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "q_dedup_prefix_filter"
-    val spark = graft.GraftSession.shuffleTuning(
-      SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("stage-metrics", "local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm pass
     graft.SparkEntry.queries(name)(spark, dir)

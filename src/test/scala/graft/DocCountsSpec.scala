@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sql.SqlFrontDoor
@@ -39,6 +41,18 @@ class DocCountsSpec extends AnyFunSuite {
       .map(_.group(1)).toSeq
     val dupDoor = door.groupBy(identity).filter(_._2.size > 1).keys
     assert(dupDoor.isEmpty, s"names appearing more than once in SqlFrontDoor: $dupDoor")
+  }
+
+  test("only GraftSession builds a SparkSession in src/main") {
+    // every entry point takes the engine conf from GraftSession.builder;
+    // a hand-rolled builder drifts from it (missing shuffle tuning, AQE)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val hits = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => read(p.toString).contains("SparkSession.builder("))
+      .map(_.toString).toSeq.sorted
+    finally walk.close()
+    assert(hits === Seq("src/main/scala/graft/GraftSession.scala"))
   }
 
   test("README.md states the derived counts") {

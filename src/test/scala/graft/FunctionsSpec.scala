@@ -31,6 +31,18 @@ class FunctionsSpec extends SparkTestBase {
     assert(mismatch.isNullAt(0))
   }
 
+  test("dot_f rejects non-FLOAT arrays and a wrong arity at analysis") {
+    GraftFunctions.register(spark)
+    // no action: spark.sql analyzes eagerly, so these fail before any job
+    val wrongType = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT dot_f(array(1, 2), array(3, 4))"))
+    assert(wrongType.getMessage.contains("dot_f expects (ARRAY<FLOAT>, ARRAY<FLOAT>)"),
+      s"message was: ${wrongType.getMessage}")
+    val arity = intercept[Exception](spark.sql("SELECT dot_f(array(CAST(1 AS FLOAT)))"))
+    assert(arity.getMessage.contains("dot_f requires exactly 2 arguments"),
+      s"message was: ${arity.getMessage}")
+  }
+
   test("BloomBitset: exact bits set, order- and partitioning-independent, OR merge") {
     val agg = new graft.functions.BloomBitset(256)
     // direct semantics: position p sets word p/64, bit p%64
