@@ -378,7 +378,7 @@ object SparkEntry {
       // identical to the one-shot build, so the parent's oracle text is
       // exact — the incremental face moves index maintenance, never the
       // verdict arithmetic.
-      val maxId = s.read.parquet(s"$d/embeddings.parquet")
+      val maxId = sources.Tables.embeddings(s, d)
         .agg(max(col("vec_id"))).head().getLong(0)
       val split = maxId * 4 / 5
       // the frozen-quantizer invariant below (centroids = vec_id < 16 <

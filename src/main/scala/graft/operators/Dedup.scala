@@ -608,7 +608,7 @@ object Dedup {
   def minHashLshFromIndex(s: SparkSession, dir: String, indexDir: String,
                           threshold: Double = 0.5): DataFrame = {
     val docs = withShingles(s, dir).select(col("doc_id"), col("sh"))
-    verifyPairs(docs, candidatePairs(s.read.parquet(indexDir)), threshold)
+    verifyPairs(docs, candidatePairs(Tables.parquet(s, indexDir)), threshold)
   }
 
   /** INCREMENTAL MinHash-LSH — the steady-state dedup shape for a growing
@@ -627,7 +627,7 @@ object Dedup {
     graft.functions.GraftFunctions.register(s)
     val docs = withShingles(s, dir).select(col("doc_id"), col("sh"))
     val deltaBands = bandRowsInline(docs.filter(col("doc_id") >= minDeltaId))
-    val corpusBands = s.read.parquet(indexDir)
+    val corpusBands = Tables.parquet(s, indexDir)
     val cross = corpusBands.as("a").join(deltaBands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
@@ -1462,7 +1462,7 @@ object Dedup {
     require(minLen >= k, "a reportable span cannot be shorter than one gram")
     val delta = gramRows(Tables.spread(s, dir, "documents")
       .filter(col("doc_id") >= minDeltaId), k)
-    val all = s.read.parquet(indexDir).unionByName(delta)
+    val all = Tables.parquet(s, indexDir).unionByName(delta)
     val rare = all.select(col("gram"), col("doc_id")).distinct()
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)

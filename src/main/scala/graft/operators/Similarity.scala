@@ -841,7 +841,7 @@ object Similarity {
     new org.apache.hadoop.fs.Path(indexDir, "_codebooks")
 
   private[graft] def storedCodebooks(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(codebooksPath(indexDir).toString)
+    Tables.parquet(s, codebooksPath(indexDir).toString)
 
   /** Train the PQ codebooks and persist ONLY the `_codebooks` artifact —
     * the staging step graft.streaming.PqStream needs before its first
@@ -919,7 +919,7 @@ object Similarity {
     val qCodes = vectorCodes(queries)
     val lutArr = pqLuts(qCodes, subCodes(qCodes, m, subDim),
       storedCodebooks(s, indexDir), nQueries, ksub)
-    val scored = screenTombstones(s, indexDir, s.read.parquet(indexDir))
+    val scored = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
       // stream-built indexes carry a batch=<id> partition level; a query
       // only ever needs the payload columns
       .select(col("vec_id"), col("pcode"), col("xn"))
@@ -1018,7 +1018,7 @@ object Similarity {
     registerFunctions(s)
     val delta = embWithNorm(s, dir).filter(col("vec_id") >= minVecId)
     val codes = vectorCodes(delta)
-    val coarse = s.read.parquet(centroidsPath(indexDir).toString)
+    val coarse = Tables.parquet(s, centroidsPath(indexDir).toString)
     val books = storedCodebooks(s, indexDir)
     val assign = assignNearest(codes, coarse)
     pqEncode(subCodes(codes, m, subDim), books, ksub)
@@ -1045,7 +1045,7 @@ object Similarity {
     registerFunctions(s)
     val queries = embWithNorm(s, dir).filter(col("vec_id") < nQueries)
     val qCodes = vectorCodes(queries)
-    val coarse = s.read.parquet(centroidsPath(indexDir).toString)
+    val coarse = Tables.parquet(s, centroidsPath(indexDir).toString)
     val probes = scoreAgainstCentroids(qCodes, coarse)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("cm").desc, col("centroid_id"))))
@@ -1192,7 +1192,7 @@ object Similarity {
                                thresholdMicros: Long = 400000L,
                                maxBlock: Int = 1 << 16): DataFrame = {
     registerFunctions(s)
-    val cents = s.read.parquet(
+    val cents = Tables.parquet(s,
       centroidsPath(quantizerDir).toString)
     val emb = embWithNorm(s, dir)
     val delta = emb.filter(col("vec_id") >= minDeltaId)
@@ -1252,7 +1252,7 @@ object Similarity {
   private def storedCentroids(s: SparkSession, indexDir: String): Option[DataFrame] = {
     val p = centroidsPath(indexDir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(s.read.parquet(p.toString)) else None
+    if (fs.exists(p)) Some(Tables.parquet(s, p.toString)) else None
   }
 
   /** Train the coarse quantizer and persist ONLY the `_centroids`
@@ -1391,7 +1391,7 @@ object Similarity {
     // inflate CSLS k-NN sums. The check is a pushed-down vec_id >= min
     // scan with limit 1 (bounded driver readout), so a violated contract
     // fails loudly here instead of corrupting downstream arithmetic.
-    val clash = s.read.parquet(indexDir)
+    val clash = Tables.parquet(s, indexDir)
       .filter(col("vec_id") >= minVecId).select(col("vec_id")).limit(1).collect()
     require(clash.isEmpty,
       s"appendToIvfIndex: index at $indexDir already contains vec_id " +
@@ -1489,7 +1489,7 @@ object Similarity {
     // `_tombstones` in `artifacts`, clears them) — deletes become
     // physical here, so query-time screening never accumulates cost
     val data = screenTombstones(s, indexDir,
-      s.read.parquet(indexDir).select(cols.map(col): _*))
+      Tables.parquet(s, indexDir).select(cols.map(col): _*))
     (partitionCol match {
       case Some(pc) => data.repartition(nFiles, col(pc))
         .write.mode("overwrite").partitionBy(pc)
@@ -1575,7 +1575,7 @@ object Similarity {
     val fs = tp.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(tp)) df
     else df.join(
-      broadcast(s.read.parquet(tp.toString)
+      broadcast(Tables.parquet(s, tp.toString)
         .select(col("vec_id").as("__dead")).distinct()),
       df("vec_id") === col("__dead"), "left_anti")
   }
@@ -1611,7 +1611,7 @@ object Similarity {
         Window.partitionBy(col("vec_id")).orderBy(col("cm").desc, col("centroid_id"))))
       .filter(col("rn") <= nProbe)
       .select(col("vec_id").as("query_id"), col("centroid_id"))
-    val index = screenTombstones(s, indexDir, s.read.parquet(indexDir))
+    val index = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
     val candidates = index.join(broadcast(probes), Seq("centroid_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
@@ -2402,7 +2402,7 @@ object Similarity {
         selectListsFloat(aSide, centroids, nProbe)
           .select(col("vec_id").as("a_id"), col("centroid_id"))
     }
-    val index = screenTombstones(s, indexDir, s.read.parquet(indexDir))
+    val index = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
       .filter(col("vec_id") % 2 === 1)
       .select(col("centroid_id"), col("vec_id").as("b_id"),
         col("embedding").as("bv"), col("vnorm").as("bn"))
@@ -2622,7 +2622,7 @@ object Similarity {
         selectListsFloat(evalQ, centroids, nProbe)
           .select(col("vec_id").as("eval_id"), col("centroid_id"))
     }
-    val index = screenTombstones(s, indexDir, s.read.parquet(indexDir))
+    val index = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
       .filter(pmod(col("vec_id"), lit(evalMod)) =!= 0)
       .select(col("centroid_id"), col("vec_id"), col("embedding").as("bv"),
         col("vnorm").as("bn"))
@@ -2705,7 +2705,7 @@ object Similarity {
 
   /** The staged quantizer table of [[stageEvalScreen]]. */
   def stagedScreenCentroids(s: SparkSession, stageDir: String): DataFrame =
-    s.read.parquet(
+    Tables.parquet(s,
       new org.apache.hadoop.fs.Path(stageDir, "_centroids_f").toString)
 
   /** The staged eval-probe table, with pending `_tombstones` (retired
@@ -2714,7 +2714,7 @@ object Similarity {
     */
   def stagedEvalProbes(s: SparkSession, stageDir: String): DataFrame =
     screenTombstones(s, evalProbesDir(stageDir),
-      s.read.parquet(evalProbesDir(stageDir)))
+      Tables.parquet(s, evalProbesDir(stageDir)))
       .select(col("centroid_id"), col("vec_id").as("eval_id"),
         col("ev"), col("en"))
 

@@ -864,7 +864,7 @@ object TextAnalysis {
                             minDeltaId: Long): DataFrame =
     encodeWithVocab(
       tokenPositions(s, dir, col("doc_id") >= minDeltaId),
-      s.read.parquet(vocabDir))
+      Tables.parquet(s, vocabDir))
 
   /** Domain-affinity scoring for data selection (the DSIR idea — rank
     * corpus documents by how much their features lean toward a target

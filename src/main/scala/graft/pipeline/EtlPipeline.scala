@@ -11,7 +11,7 @@ import graft._
 import graft.config.{EtlConfig, WriteDisposition}
 import graft.operators.TrafficTransform
 import graft.sinks.Sinks
-import graft.sources.XlsSource
+import graft.sources.{Tables, XlsSource}
 
 /** One pipeline run's outcome (reference logs these counts at
   * extract.py:79, transform.py:62, load.py:108-109 and banners them at
@@ -104,7 +104,7 @@ final class EtlPipeline(spark: SparkSession, config: EtlConfig) {
         else if (lower.endsWith(".xls")) XlsSource.read(spark, uri)
         else if (lower.endsWith(".csv"))
           spark.read.option("header", "true").option("inferSchema", "true").csv(uri)
-        else spark.read.parquet(uri)
+        else Tables.parquet(spark, uri)
       // S4 — required source columns, case-insensitive (extract.py:69-74)
       val have = df.columns.map(_.toLowerCase).toSet
       val missing = Seq("time", "traffic").filterNot(have)

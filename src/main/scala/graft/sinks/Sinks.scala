@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.LoadError
 import graft.config.{EtlConfig, WriteDisposition}
+import graft.sources.Tables
 
 /** Sinks (reference §2.3): CSV artifact, warehouse table, backup copy.
   * The reference's GCS staging hop (load.py:18-47) disappears — Spark
@@ -163,7 +164,7 @@ object Sinks {
       cols.result()
     }
     val tmp = new Path(path + ".compact-tmp")
-    val writer = spark.read.parquet(path).repartition(nFiles)
+    val writer = Tables.parquet(spark, path).repartition(nFiles)
       .write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(tmp.toString)

@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
-/** Loaders for the testdata star schema (see /root/repo/FIXTURES.md §B).
+/** Loaders for the testdata star schema (see FIXTURES.md §B).
   *
   * All reads are plain parquet scans so Catalyst gets pushdown/pruning for
   * free; callers `select` only the columns they need so `ReadSchema` in the
@@ -13,8 +15,24 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The one way graft opens parquet. Spark's own schema inference runs a
+    * one-task job per open just to read one footer; here the driver lists
+    * the path with Spark's file index and converts that same footer with
+    * Spark's own code ([[FooterSchema]]), so an open launches no job. The
+    * schema carries only the data columns, so Spark still discovers
+    * partition columns (`dt=`, `centroid_id=`) from the directory names.
+    * With schema merging on (`spark.sql.parquet.mergeSchema`), or a path
+    * with no readable footer, the open goes through Spark's job unchanged
+    * (its merged schema, its error messages).
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    FooterSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, dir: String): DataFrame    = load(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame    = load(s, dir, "nation")
@@ -70,9 +88,11 @@ object Tables {
     * regime where the extra round-robin shuffle is cheap (it moves less
     * than one scan-split per core). At warehouse scale the same table spans
     * thousands of splits, the condition is false, and this is an identity —
-    * so operators can call it unconditionally.
+    * so operators can call it unconditionally. The scan's size is what
+    * Spark's file index already listed for it, so the table is not walked
+    * a second time; a frame with no file scan is always spread.
     */
-  def spreadForCompute(df: DataFrame, files: Seq[String] = Nil): DataFrame = {
+  def spreadForCompute(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val cores = sc.defaultParallelism
     // JavaUtils understands Spark byte strings ("128m", "1g") — a naive
@@ -80,29 +100,27 @@ object Tables {
     // spread everywhere
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
-    // Hadoop FS, not java.io — works for any scheme the scan itself reads
-    val hconf = sc.hadoopConfiguration
-    val bytes = files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    val bytes = df.queryExecution.analyzed.collect {
+      case r: LogicalRelation => r.relation.sizeInBytes
     }.sum
-    if (files.nonEmpty && bytes >= cores * maxSplit) df
-    else df.repartition(cores)
+    if (bytes >= cores * maxSplit) df else df.repartition(cores)
   }
 
-  /** spreadForCompute keyed off the table's backing file. */
+  /** spreadForCompute over one table. */
   def spread(s: SparkSession, dir: String, name: String): DataFrame =
-    spreadForCompute(load(s, dir, name), Seq(s"$dir/$name.parquet"))
+    spreadForCompute(load(s, dir, name))
 
-  /** Register all tables as temp views (for spark.sql callers). Events
-    * goes through [[events]] so SQL callers see the same micro-truncated
-    * TimestampType `ts` the operators (and DuckDB) see — the raw view
-    * would expose nanos-as-BIGINT.
+  /** Register the named tables as temp views (for spark.sql callers).
+    * Events goes through [[events]] so SQL callers see the same
+    * micro-truncated TimestampType `ts` the operators (and DuckDB) see —
+    * the raw view would expose nanos-as-BIGINT.
     */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    All.foreach { n =>
+  def register(spark: SparkSession, dir: String, names: Seq[String]): Unit =
+    names.foreach { n =>
       val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
       df.createOrReplaceTempView(n)
     }
+
+  /** Register every fixture table as a temp view. */
+  def registerAll(spark: SparkSession, dir: String): Unit = register(spark, dir, All)
 }

@@ -95,11 +95,23 @@ object SqlFrontDoor {
     handTwins.get(name).orElse(SparkEntry.oracleSql.get(name).map(o =>
       rewritten.getOrElseUpdate(name, DuckToSpark.toSpark(o))))
 
+  /** The fixture tables a statement names: every word of its text that is
+    * a table name. A name that only appears in a literal or a comment
+    * registers one view too many, which is harmless; a table the
+    * statement reads always appears as a word.
+    */
+  private def tablesNamed(statement: String): Seq[String] = {
+    val words = "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(statement).map(_.toLowerCase).toSet
+    Tables.All.filter(words)
+  }
+
   /** Run a registry query through the SQL surface (registers the sf-dir
-    * tables as temp views; statements need no graft-registered functions).
+    * tables it names as temp views; statements need no graft-registered
+    * functions).
     */
   def run(s: SparkSession, dir: String, name: String): DataFrame = {
-    Tables.registerAll(s, dir)
-    s.sql(sql(name).getOrElse(sys.error(s"no SQL surface for $name")))
+    val statement = sql(name).getOrElse(sys.error(s"no SQL surface for $name"))
+    Tables.register(s, dir, tablesNamed(statement))
+    s.sql(statement)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Continuous bitext mining: the streaming face of
   * [[graft.operators.Similarity.bitextMarginMine]] — a crawl stream of
@@ -67,7 +68,7 @@ object BitextStream {
         val fs = corpusPath.getFileSystem(s.sparkContext.hadoopConfiguration)
         require(fs.exists(corpusPath),
           s"BitextStream needs a staged counter-corpus — run BitextStream.stageCorpus($indexDir) first")
-        val bSide = s.read.parquet(corpusPath.toString)
+        val bSide = Tables.parquet(s, corpusPath.toString)
           .select(col("vec_id").as("b_id"), col("embedding").as("bv"),
             col("vnorm").as("bn"))
         val aSide = batch

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
+import graft.sources.Tables
 
 /** Continuous-ingestion benchmark decontamination: the streaming face of
   * [[graft.operators.Curation.decontaminate]].
@@ -50,7 +51,7 @@ object DecontaminateStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val eval = s.read.parquet(evalGramDir)
+        val eval = Tables.parquet(s, evalGramDir)
         val flagged = batch
           .filter(pmod(col("doc_id"), lit(evalMod)) =!= 0)
           .withColumn("ws", expr(TextAnalysis.TokensExpr))

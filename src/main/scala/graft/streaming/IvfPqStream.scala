@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Continuous embedding ingestion into a materialized IVF-PQ index: the
   * streaming face of Similarity.buildIvfPqIndex, composing IvfStream's
@@ -48,8 +49,8 @@ object IvfPqStream {
           require(fs.exists(new Path(indexDir, artifact)),
             s"IvfPqStream needs staged quantizers — run Similarity.stageIvfQuantizer " +
               s"and Similarity.stagePqCodebooks on $indexDir first")
-        val coarse = s.read.parquet(new Path(indexDir, "_centroids").toString)
-        val books = s.read.parquet(new Path(indexDir, "_codebooks").toString)
+        val coarse = Tables.parquet(s, new Path(indexDir, "_centroids").toString)
+        val books = Tables.parquet(s, new Path(indexDir, "_codebooks").toString)
         val withNorm = batch
           .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
         val codes = Similarity.vectorCodes(withNorm)

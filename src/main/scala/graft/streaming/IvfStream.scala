@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Continuous embedding ingestion into a materialized IVF index: the
   * streaming face of Similarity.buildIvfIndex, and the ANN sibling of
@@ -46,7 +47,7 @@ object IvfStream {
         val fs = centsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
         require(fs.exists(centsPath),
           s"IvfStream needs a staged quantizer — run Similarity.stageIvfQuantizer($indexDir) first")
-        val cents = s.read.parquet(centsPath.toString)
+        val cents = Tables.parquet(s, centsPath.toString)
         val withNorm = batch
           .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
         val assign = Similarity.nearestCentroid(

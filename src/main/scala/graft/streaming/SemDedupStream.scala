@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Continuous SemDeDup-style semantic deduplication: the streaming face
   * of Similarity.semanticDedup, completing the family's lifecycle
@@ -61,7 +62,7 @@ object SemDedupStream {
         val fs = centsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
         require(fs.exists(centsPath),
           s"SemDedupStream needs a staged quantizer — run Similarity.stageIvfQuantizer($labelsDir) first")
-        val cents = s.read.parquet(centsPath.toString)
+        val cents = Tables.parquet(s, centsPath.toString)
         val withNorm = batch
           .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
         val assign = Similarity.nearestCentroid(

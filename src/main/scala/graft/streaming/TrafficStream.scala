@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.TrafficTransform
+import graft.sources.Tables
 
 /** The reference ETL pipeline as an INCREMENTAL stream: CSV exports
   * landing in a raw directory are parsed with the same day-first
@@ -77,7 +78,7 @@ object TrafficStream {
           fs.listStatus(tablePath).exists(f =>
             f.getPath.getName.endsWith(".parquet") || f.isDirectory)
         val existing =
-          if (hasData) spark.read.parquet(tableDir)
+          if (hasData) Tables.parquet(spark, tableDir)
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         val merged = graft.sinks.Sinks

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Deterministic fixture scaler: synthesizes an f-times-larger scale
   * factor from an existing driver fixture (TESTDATA.md tables) as f
   * DISJOINT ISOMETRIC REPLICAS — the honest way to grow a benchmark
@@ -98,7 +100,7 @@ object FixtureScale {
     val spark = graft.GraftSession.builder("fixture-scale", "local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = Tables.load(spark, src, t)
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")
     def span(df: DataFrame, key: String): Long =
@@ -177,7 +179,7 @@ object FixtureScale {
     for (t <- Seq("customer", "supplier", "part", "orders", "lineitem",
       "events", "documents", "embeddings")) {
       val in = read(t).count()
-      val out = spark.read.parquet(s"$dst/$t.parquet").count()
+      val out = Tables.load(spark, dst, t).count()
       require(out == in * f, s"$t: expected ${in * f} rows, wrote $out")
     }
     val keyOf = Map("customer" -> "c_custkey", "supplier" -> "s_suppkey",
@@ -185,7 +187,7 @@ object FixtureScale {
       "events" -> "event_id", "documents" -> "doc_id",
       "embeddings" -> "vec_id")
     for ((t, k) <- keyOf) {
-      val d = spark.read.parquet(s"$dst/$t.parquet")
+      val d = Tables.load(spark, dst, t)
       require(d.select(k).distinct().count() == d.count(),
         s"$t: key $k not distinct after scaling")
     }

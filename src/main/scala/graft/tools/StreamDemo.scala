@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.sources.Tables
 import graft.streaming.EventsStream
 
 /** Runnable readStream -> transform -> writeStream demo over a file
@@ -43,10 +44,10 @@ object StreamDemo {
 
     stage("event_id % 2 = 0")
     runOnce()
-    val afterFirst = spark.read.parquet(outDir).count()
+    val afterFirst = Tables.parquet(spark, outDir).count()
     stage("event_id % 2 = 1")
     runOnce()
-    val out = spark.read.parquet(outDir)
+    val out = Tables.parquet(spark, outDir)
     println(s"[stream] windows after first batch: $afterFirst, " +
       s"after second: ${out.count()}")
     out.orderBy("bucket_start", "event_type").show(6, truncate = false)

@@ -55,6 +55,23 @@ class DocCountsSpec extends AnyFunSuite {
     assert(hits === Seq("src/main/scala/graft/GraftSession.scala"))
   }
 
+  test("only Tables opens parquet in src/main") {
+    // every read goes through Tables.parquet, which reads the schema from
+    // one footer on the driver; a bare spark.read.parquet runs a Spark
+    // job per open just to infer it
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val hits = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val text = read(p.toString)
+        text.contains(".read.parquet(") || text.contains("read.format(\"parquet\")")
+      }
+      .map(_.toString).toSeq.sorted
+    finally walk.close()
+    assert(hits.filterNot(_ == "src/main/scala/graft/sources/Tables.scala").isEmpty,
+      s"parquet opened outside Tables.parquet: ${hits.mkString(", ")}")
+  }
+
   test("README.md states the derived counts") {
     val readme = read("README.md")
     assert(readme.contains(s"${SparkEntry.queries.size} named queries"),

@@ -1046,8 +1046,7 @@ class OperatorSpec extends SparkTestBase {
     val old = spark.conf.get(key)
     try {
       spark.conf.set(key, "1b")
-      val noSpread = sources.Tables.spreadForCompute(
-        spark.read.parquet(docs), Seq(docs))
+      val noSpread = sources.Tables.spreadForCompute(spark.read.parquet(docs))
       assert(noSpread.queryExecution.logical ==
         spark.read.parquet(docs).queryExecution.logical)
     } finally spark.conf.set(key, old)

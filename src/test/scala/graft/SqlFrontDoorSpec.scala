@@ -29,6 +29,21 @@ class SqlFrontDoorSpec extends SparkTestBase {
         graft.sql.DuckToSpark.toSpark(SparkEntry.oracleSql(name)))
   }
 
+  test("run registers every table a statement reads") {
+    // temp views outlive a run, so a table run failed to register would be
+    // read from an earlier view: start each statement with none
+    val missed = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      spark.catalog.listTables().collect().filter(_.isTemporary)
+        .foreach(t => spark.catalog.dropTempView(t.name))
+      try { SqlFrontDoor.run(spark, Sf, name); None }
+      catch {
+        case e: org.apache.spark.sql.AnalysisException =>
+          Some(s"$name: ${e.getMessage.takeWhile(_ != '\n')}")
+      }
+    }
+    assert(missed.isEmpty, missed.mkString("\n"))
+  }
+
   /** Row multiset as sorted canonical strings — array/binary cells render
     * element-wise, so equality is structural. One execution per side
     * (exceptAll would re-execute both plans per direction).
