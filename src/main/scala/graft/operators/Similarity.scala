@@ -1056,7 +1056,7 @@ object Similarity {
     // stream-built indexes carry a batch=<id> level; a candidate row is
     // its list key plus the packed payload either way
     val index = screenTombstones(s, indexDir,
-      s.read.option("basePath", indexDir).parquet(indexDir))
+      Tables.parquet(s, indexDir))
       .select(col("centroid_id"), col("vec_id"), col("pcode"), col("xn"))
     val scored = index.join(broadcast(probes), Seq("centroid_id"))
       .filter(col("vec_id") =!= col("query_id"))

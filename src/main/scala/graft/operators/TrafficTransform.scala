@@ -136,9 +136,9 @@ object TrafficTransform {
     * census is the only job. No step filters, so the output has exactly
     * the input's rows.
     */
-  def apply(df: DataFrame, runTs: Timestamp, strict: Boolean = true): DataFrame = {
+  def apply(df: DataFrame, runTs: Timestamp): DataFrame = {
     val enriched = prepare(df, runTs)
-    if (strict) requireValid(census(enriched))
+    requireValid(census(enriched))
     finish(enriched)
   }
 }

@@ -11,7 +11,7 @@ import graft._
 import graft.config.{EtlConfig, WriteDisposition}
 import graft.operators.TrafficTransform
 import graft.sinks.Sinks
-import graft.sources.{Tables, XlsSource}
+import graft.sources.Tables
 
 /** One pipeline run's outcome (reference logs these counts at
   * extract.py:79, transform.py:62, load.py:108-109 and banners them at
@@ -91,39 +91,39 @@ final class EtlPipeline(spark: SparkSession, config: EtlConfig) {
 
   private def emptySource = ExtractError("Extracted 0 rows") // extract.py:76-77
 
-  /** S1/S2 — source scan. XLS goes through the driver-side BIFF8 decode;
-    * CSV/parquet read natively (schema inferred for CSV like pandas does,
-    * extract.py:60). The post-read row-count check S3 runs in `run()`, on
-    * the validation pass.
+  /** S1/S2 — source scan. A workbook (.xls or .xlsx) goes through the
+    * `excel` DataSource V2, which picks the decoder from the file's magic
+    * bytes as pandas does (extract.py:60); CSV/parquet read natively
+    * (schema inferred for CSV like pandas does). The post-read row-count
+    * check S3 runs in `run()`, on the validation pass.
     */
   private def extract(uri: String): DataFrame = {
-    try {
-      val lower = uri.toLowerCase
-      val df =
-        if (lower.endsWith(".xlsx")) graft.sources.XlsxSource.read(spark, uri)
-        else if (lower.endsWith(".xls")) XlsSource.read(spark, uri)
+    val lower = uri.toLowerCase
+    val df =
+      try {
+        if (lower.endsWith(".xls") || lower.endsWith(".xlsx"))
+          spark.read.format("excel").load(uri)
         else if (lower.endsWith(".csv"))
           spark.read.option("header", "true").option("inferSchema", "true").csv(uri)
         else Tables.parquet(spark, uri)
-      // S4 — required source columns, case-insensitive (extract.py:69-74)
-      val have = df.columns.map(_.toLowerCase).toSet
-      val missing = Seq("time", "traffic").filterNot(have)
-      if (missing.nonEmpty)
-        throw ExtractError(
-          s"Missing required columns: ${missing.mkString(", ")}. " +
-            s"Found: ${df.columns.mkString(", ")}")
-      df
-    } catch {
-      case e: PipelineError => throw e
-      case e: Exception =>
-        // actionable remediation, reference extract.py:26-29: a storage
-        // access failure most often means missing credentials for the
-        // bucket's filesystem
-        throw ExtractError(
-          s"Failed to extract from $uri: ${e.getMessage}\n" +
-            "If the source filesystem needs credentials, authenticate first " +
-            "(for gs:// buckets: run 'gcloud auth application-default login').", e)
-    }
+      } catch {
+        case e: Exception =>
+          // actionable remediation, reference extract.py:26-29: a storage
+          // access failure most often means missing credentials for the
+          // bucket's filesystem
+          throw ExtractError(
+            s"Failed to extract from $uri: ${e.getMessage}\n" +
+              "If the source filesystem needs credentials, authenticate first " +
+              "(for gs:// buckets: run 'gcloud auth application-default login').", e)
+      }
+    // S4 — required source columns, case-insensitive (extract.py:69-74)
+    val have = df.columns.map(_.toLowerCase).toSet
+    val missing = Seq("time", "traffic").filterNot(have)
+    if (missing.nonEmpty)
+      throw ExtractError(
+        s"Missing required columns: ${missing.mkString(", ")}. " +
+          s"Found: ${df.columns.mkString(", ")}")
+    df
   }
 }
 

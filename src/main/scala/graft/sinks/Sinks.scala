@@ -35,20 +35,6 @@ object Sinks {
     path
   }
 
-  /** L4 — warehouse load with append/truncate disposition (reference:
-    * load_to_bigquery load.py:67-110). BigQuery's REQUIRED mode → we assert
-    * the frame's contract upstream (TrafficTransform.requireValid, before
-    * any write) since Parquet happily stores nulls. Returns the loaded row
-    * count of THIS batch like the reference (load.py:108-109 reports the
-    * load job's own output_rows) — a table-total would over-report under
-    * Append.
-    */
-  /** @param partitionOn optional column names to partition the table by
-    *   (e.g. a derived date column). At warehouse scale a date-partitioned
-    *   layout is what makes downstream time-range queries prune files
-    *   instead of scanning history — pass Seq("dt") derived via
-    *   `withColumn("dt", to_date(col("time")))` to get it.
-    */
   /** Keep-latest upsert (MERGE emulation): rows in `updates` replace
     * same-key rows in `existing`; unmatched rows from both survive.
     * Plain parquet has no transactional MERGE, so the standard rewrite is
@@ -95,6 +81,20 @@ object Sinks {
     deduped.filter(col("__rn") === 1).drop("__src", "__rn")
   }
 
+  /** L4 — warehouse load with append/truncate disposition (reference:
+    * load_to_bigquery load.py:67-110). BigQuery's REQUIRED mode → we assert
+    * the frame's contract upstream (TrafficTransform.requireValid, before
+    * any write) since Parquet happily stores nulls. Returns the loaded row
+    * count of THIS batch like the reference (load.py:108-109 reports the
+    * load job's own output_rows) — a table-total would over-report under
+    * Append.
+    *
+    * @param partitionOn optional column names to partition the table by
+    *   (e.g. a derived date column). At warehouse scale a date-partitioned
+    *   layout is what makes downstream time-range queries prune files
+    *   instead of scanning history — pass Seq("dt") derived via
+    *   `withColumn("dt", to_date(col("time")))` to get it.
+    */
   def loadWarehouse(spark: SparkSession, df: DataFrame, path: String,
                     disposition: WriteDisposition,
                     partitionOn: Seq[String] = Nil): Long = {

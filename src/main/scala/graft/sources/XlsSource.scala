@@ -1,25 +1,21 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.ExtractError
 
-/** Driver-side XLS (BIFF8 / .xls) reader.
+/** XLS (BIFF8 / .xls) decoder.
   *
   * The reference ingests one small XLS via pandas+xlrd
   * (src/etl/extract.py:55-67, read at extract.py:60). Spark has no built-in
-  * Excel source and this image carries no POI jar, so we decode BIFF8
-  * directly — a deliberate *driver-side* path: the file is a single small
-  * blob by the reference's own design, so distributing the scan would buy
-  * nothing. The result feeds `spark.createDataFrame`, after which everything
-  * is a normal distributed plan. (For a multi-file/large Excel corpus the
-  * right evolution is a DataSource V2 `TableProvider`; out of scope here.)
+  * Excel source and graft carries no POI jar, so BIFF8 is decoded here
+  * directly, as a pure function of the file's bytes; the `xls`/`excel`
+  * DataSource V2 (`sources/xls/XlsDataSource.scala`) runs it inside the
+  * one task that reads each file.
   *
   * Format notes (public Microsoft BIFF8 spec):
   *  - The .xls container is an OLE2/CFB compound file; the workbook lives in
@@ -32,23 +28,11 @@ import graft.ExtractError
   */
 object XlsSource {
 
-  // ---------- public API ----------
-
-  /** Read the first worksheet of an XLS file into a DataFrame.
-    * First row = header (lowercased downstream by the transform, T1).
-    * Numeric columns → DoubleType; date-formatted columns → TimestampType;
-    * strings → StringType. Empty input rejects, mirroring extract.py:76-77.
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val (schema, rows) = decode(readAllBytes(spark, path), path)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map(Row.fromSeq), 1), schema)
-  }
-
   /** Core decode: XLS bytes -> (inferred schema, data rows as Seq[Any]
-    * aligned with the schema). Pure function of the bytes — callable on
-    * the driver (single-blob `read`, the reference's shape) or inside an
-    * executor task (the `xls` DataSource V2, one task per file).
+    * aligned with the schema) of the first worksheet. First row = header
+    * (lowercased downstream by the transform, T1). Numeric columns →
+    * DoubleType; date-formatted columns → TimestampType; strings →
+    * StringType. Empty input rejects, mirroring extract.py:76-77.
     */
   private[sources] def decode(bytes: Array[Byte], path: String): (StructType, Seq[Seq[Any]]) = {
     val cells = parseCells(bytes, path)
@@ -68,10 +52,15 @@ object XlsSource {
 
   // ---------- OLE2 (CFB) container ----------
 
+  /** Does the blob start with the OLE2 compound-file signature? */
+  private[sources] def isOle2(bytes: Array[Byte]): Boolean =
+    bytes.length >= 8 &&
+      ByteBuffer.wrap(bytes, 0, 8).order(ByteOrder.LITTLE_ENDIAN).getLong == 0xE11AB1A1E011CFD0L
+
   /** Extract the Workbook stream bytes from the compound file. */
   private def workbookStream(bytes: Array[Byte]): Array[Byte] = {
+    require(isOle2(bytes), "not an OLE2 compound file")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getLong(0) == 0xE11AB1A1E011CFD0L, "not an OLE2 compound file")
     val sectorShift = bb.getShort(30).toInt // usually 9 → 512-byte sectors
     val secSize = 1 << sectorShift
     val miniShift = bb.getShort(32).toInt
@@ -161,17 +150,6 @@ object XlsSource {
   }
 
   // ---------- BIFF8 record scan ----------
-
-  /** Read the whole blob via the Hadoop FileSystem API so any scheme works
-    * (file://, gs://, s3a://) — the reference's GCS download-to-tempfile hop
-    * (extract.py:18-52) collapses into this one call.
-    */
-  private def readAllBytes(spark: SparkSession, path: String): Array[Byte] =
-    readAllBytes(spark.sparkContext.hadoopConfiguration, path)
-
-  private[sources] def readAllBytes(conf: org.apache.hadoop.conf.Configuration,
-                                    path: String): Array[Byte] =
-    SheetGrid.readAllBytes(conf, path)
 
   private def parseCells(container: Array[Byte], path: String): Map[(Int, Int), Cell] = {
     val wb = workbookStream(container)

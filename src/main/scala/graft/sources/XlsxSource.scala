@@ -7,12 +7,12 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.ExtractError
 
-/** Driver-side XLSX (OOXML / .xlsx) reader — the modern half of the
+/** XLSX (OOXML / .xlsx) decoder — the modern half of the
   * reference's `pd.read_excel` surface (extract.py:60: pandas dispatches
   * .xls → xlrd and .xlsx → openpyxl on magic bytes; [[XlsSource]] covers
   * the former, this covers the latter — a real user hits .xlsx on day
@@ -34,27 +34,19 @@ import graft.ExtractError
   *    `t` = s (shared string) / str (formula result) / inlineStr / b /
   *    e (error → null), default numeric.
   *
-  * Like the BIFF8 path this is a deliberate driver-side decode of one
-  * small blob feeding `spark.createDataFrame`; the multi-file scale-out
-  * is the `xlsx` DataSource V2 (one file = one task = one input
-  * partition — an .xlsx is a whole-container ZIP, not splittable).
+  * The decode is a pure function of the bytes; the `xlsx`/`excel`
+  * DataSource V2 (`sources/xls/XlsDataSource.scala`) runs it inside the
+  * one task that reads each file.
   */
 object XlsxSource {
 
-  /** Read the first worksheet of an XLSX file into a DataFrame.
-    * Header/type contract identical to [[XlsSource.read]] (shared
-    * [[SheetGrid]] inference).
+  /** The first worksheet of an XLSX file as a DataFrame: the same
+    * `format("xlsx")` scan `EtlPipeline` reads through.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val (schema, rows) = decode(
-      SheetGrid.readAllBytes(spark.sparkContext.hadoopConfiguration, path), path)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map(Row.fromSeq), 1), schema)
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("xlsx").load(path)
 
-  /** Core decode: XLSX bytes -> (inferred schema, rows). Pure function of
-    * the bytes — driver or executor side (the DSv2 path).
-    */
+  /** Core decode: XLSX bytes -> (inferred schema, rows). */
   private[sources] def decode(bytes: Array[Byte], path: String): (StructType, Seq[Seq[Any]]) = {
     val parts = readZip(bytes, path)
     def part(name: String): Option[Array[Byte]] = parts.get(name)
@@ -84,7 +76,7 @@ object XlsxSource {
 
   private def readZip(bytes: Array[Byte], path: String): Map[String, Array[Byte]] = {
     if (bytes.length < 4 || bytes(0) != 'P' || bytes(1) != 'K')
-      throw ExtractError(s"$path is not a ZIP container (not an .xlsx)")
+      throw ExtractError(s"$path is not a ZIP container (.xlsx) or an OLE2 one (.xls)")
     val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
     val out = mutable.Map[String, Array[Byte]]()
     try {
@@ -108,13 +100,20 @@ object XlsxSource {
 
   // ---------- XML part parsers (StAX, namespace-blind on localName) ----------
 
-  private def xmlReader(bytes: Array[Byte]): XMLStreamReader = {
+  /** One factory per thread (StAX factories are not guaranteed
+    * thread-safe): a fresh one per part doubled the decode of a 288-row
+    * sheet, which the scan repeats once per query.
+    */
+  private val xmlFactory = ThreadLocal.withInitial[XMLInputFactory] { () =>
     val f = XMLInputFactory.newInstance()
     // hygiene for untrusted workbook XML: no DTDs, no external entities
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.createXMLStreamReader(new ByteArrayInputStream(bytes))
+    f
   }
+
+  private def xmlReader(bytes: Array[Byte]): XMLStreamReader =
+    xmlFactory.get.createXMLStreamReader(new ByteArrayInputStream(bytes))
 
   private def attr(r: XMLStreamReader, name: String): Option[String] = {
     var i = 0

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -18,92 +19,56 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{SheetGrid, XlsSource, XlsxSource}
 
-/** Which container decoder a file gets. Serializable case objects: the
-  * codec rides into executor tasks inside the reader factory.
+/** The one workbook decode, the reference's `pd.read_excel` posture
+  * (extract.py:60): a file with the OLE2 magic (D0CF11E0) is BIFF8
+  * `.xls`; anything else goes to the OOXML `.xlsx` decoder, which rejects
+  * a non-ZIP. A mixed directory of legacy and modern exports reads in one
+  * pass whichever short name loaded it.
   */
-private[xls] sealed trait ExcelCodec extends Serializable {
-  /** File-name filter for directory listings / match validation. */
-  def accepts(name: String): Boolean
-  def label: String
-  def decode(bytes: Array[Byte], path: String): (StructType, Seq[Seq[Any]])
-}
-
-private[xls] case object BiffCodec extends ExcelCodec {
-  def accepts(name: String): Boolean = name.toLowerCase.endsWith(".xls")
-  def label = "xls"
+private[xls] object Workbook {
   def decode(bytes: Array[Byte], path: String): (StructType, Seq[Seq[Any]]) =
-    XlsSource.decode(bytes, path)
+    if (XlsSource.isOle2(bytes)) XlsSource.decode(bytes, path)
+    else XlsxSource.decode(bytes, path)
 }
 
-private[xls] case object OoxmlCodec extends ExcelCodec {
-  def accepts(name: String): Boolean = name.toLowerCase.endsWith(".xlsx")
-  def label = "xlsx"
-  def decode(bytes: Array[Byte], path: String): (StructType, Seq[Seq[Any]]) =
-    XlsxSource.decode(bytes, path)
-}
-
-/** The `format("excel")` sniffing codec — the reference's pd.read_excel
-  * posture (extract.py:60): accept both extensions and dispatch each
-  * FILE on its magic bytes (PK zip → OOXML, OLE2 D0CF11E0 → BIFF8), so
-  * a mixed directory of legacy and modern exports reads in one pass.
-  */
-private[xls] case object SniffCodec extends ExcelCodec {
-  def accepts(name: String): Boolean = {
-    val l = name.toLowerCase
-    l.endsWith(".xls") || l.endsWith(".xlsx")
-  }
-  def label = "excel"
-  def decode(bytes: Array[Byte], path: String): (StructType, Seq[Seq[Any]]) =
-    if (bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == 'K')
-      XlsxSource.decode(bytes, path)
-    else if (bytes.length >= 8 &&
-      java.nio.ByteBuffer.wrap(bytes, 0, 8)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong == 0xE11AB1A1E011CFD0L)
-      XlsSource.decode(bytes, path)
-    else throw graft.ExtractError(
-      s"$path is neither an OLE2 (.xls) nor a ZIP (.xlsx) container")
-}
-
-/** DataSource V2 for Excel files — one provider per codec:
-  * `format("xls")` (BIFF8), `format("xlsx")` (OOXML), `format("excel")`
-  * (both, sniffed per file by magic bytes).
+/** DataSource V2 for Excel files, the only way a workbook becomes a
+  * DataFrame: `format("xls")`, `format("xlsx")` and `format("excel")`
+  * differ only in the file extensions they accept (`.xls`, `.xlsx`, both)
+  * and the label plans and errors show. Every file goes through the same
+  * [[Workbook.decode]].
   *
-  * The reference reads exactly one spreadsheet on the driver
-  * (extract.py:55-67, pandas + xlrd/openpyxl) — XlsSource.read /
-  * XlsxSource.read reproduce that single-blob shape. This connector is
-  * the multi-file scale-out of the same decoders: `load(dirOrGlob)`
-  * plans ONE input partition per file, each executor task decodes its
-  * file independently, and required-column pruning
+  * `load(fileDirOrGlob)` plans ONE input partition per file, each executor
+  * task decodes its file independently, and required-column pruning
   * (SupportsPushDownRequiredColumns) means a query that selects two
   * columns never materializes the rest. Excel workbooks are not
   * splittable (whole-container OLE2/ZIP), so file granularity is the
-  * natural parallel unit — the pattern for "ten thousand daily exports
-  * land in a bucket" ingestion.
+  * natural parallel unit: one task for the reference's single daily
+  * workbook, ten thousand for a bucket of daily exports.
   *
   * Schema: inferred from the FIRST file (or supplied explicitly via
   * .schema(...) — supportsExternalMetadata). All files must share the
   * header contract, the same assumption the reference's required-column
   * check makes per file.
   */
-abstract class ExcelDataSourceBase(codec: ExcelCodec) extends TableProvider with DataSourceRegister {
+abstract class ExcelDataSourceBase(label: String, extensions: Seq[String])
+    extends TableProvider with DataSourceRegister {
 
-  override def shortName(): String = codec.label
+  override def shortName(): String = label
 
   override def supportsExternalMetadata(): Boolean = true
 
   /** The SESSION's Hadoop configuration (spark.hadoop.* credentials,
     * filesystem impls for gs://, s3a://, ...) — a bare `new
     * Configuration()` would silently drop them and break every
-    * non-local-FS read that XlsSource.read (which uses the session conf)
-    * handles fine.
+    * non-local-FS read.
     */
   private def hadoopConf(): Configuration =
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
 
-  /** Expands paths/globs to the .xls file list. The .xls suffix filter is
-    * applied UNIFORMLY — to directory listings and to glob/direct matches
+  /** Expands paths/globs to the workbook file list. The extension filter
+    * is applied UNIFORMLY — to directory listings and to glob/direct matches
     * alike — so a stray .csv swept up by a glob fails here with a clear
-    * message instead of deep inside the BIFF8 decoder. Directory expansion
+    * message instead of deep inside a decoder. Directory expansion
     * is one level deep (non-recursive), like a non-globbed Spark file
     * source without recursiveFileLookup; use a nested glob for deeper
     * layouts.
@@ -117,9 +82,12 @@ abstract class ExcelDataSourceBase(codec: ExcelCodec) extends TableProvider with
       mapper.readValue(json, classOf[Array[String]]).toSeq
     }
     val raw = Option(options.get("path")).toSeq ++ multi
-    def isXls(name: String): Boolean = codec.accepts(name)
-    // directory listings filter to *.xls SILENTLY (a mixed directory is
-    // normal); files matched by name or glob must all be .xls — dropping
+    def isWorkbook(name: String): Boolean = {
+      val lower = name.toLowerCase
+      extensions.exists(lower.endsWith)
+    }
+    // directory listings filter by extension SILENTLY (a mixed directory
+    // is normal); files matched by name or glob must all match — dropping
     // one silently would lose explicitly-requested data, so any offender
     // is a loud, named error
     val (dirListed, fileMatched) = raw.foldLeft(
@@ -129,40 +97,40 @@ abstract class ExcelDataSourceBase(codec: ExcelCodec) extends TableProvider with
       val globbed = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
       val (dirs, files) = globbed.partition(_.isDirectory)
       val listed = dirs.flatMap(d => fs.listStatus(d.getPath).toSeq
-        .filter(f => f.isFile && isXls(f.getPath.getName)).map(_.getPath.toString))
+        .filter(f => f.isFile && isWorkbook(f.getPath.getName)).map(_.getPath.toString))
       (dl ++ listed, fm ++ files.map(_.getPath.toString))
     }
-    val badFiles = fileMatched.filterNot(f => isXls(new Path(f).getName))
+    val badFiles = fileMatched.filterNot(f => isWorkbook(new Path(f).getName))
     if (badFiles.nonEmpty)
       throw graft.ExtractError(
-        s"${codec.label} source: matched file(s) with an unexpected extension: " +
+        s"$label source: matched file(s) with an unexpected extension: " +
           s"${badFiles.take(5).mkString(", ")}${if (badFiles.length > 5) ", ..." else ""}")
     val expanded = dirListed ++ fileMatched
     if (expanded.isEmpty)
-      throw graft.ExtractError(s"${codec.label} source matched no files for ${raw.mkString(",")}")
+      throw graft.ExtractError(s"$label source matched no files for ${raw.mkString(",")}")
     expanded.sorted
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val first = paths(options).head
-    codec.decode(SheetGrid.readAllBytes(hadoopConf(), first), first)._1
+    Workbook.decode(SheetGrid.readAllBytes(hadoopConf(), first), first)._1
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new XlsTable(schema, paths(opts), codec)
+    new XlsTable(schema, paths(opts), label)
   }
 }
 
-/** `spark.read.format("xls")` — BIFF8 only. */
-class XlsDataSource extends ExcelDataSourceBase(BiffCodec)
+/** `spark.read.format("xls")` — `.xls` files. */
+class XlsDataSource extends ExcelDataSourceBase("xls", Seq(".xls"))
 
-/** `spark.read.format("xlsx")` — OOXML only. */
-class XlsxDataSource extends ExcelDataSourceBase(OoxmlCodec)
+/** `spark.read.format("xlsx")` — `.xlsx` files. */
+class XlsxDataSource extends ExcelDataSourceBase("xlsx", Seq(".xlsx"))
 
-/** `spark.read.format("excel")` — both, per-file magic-byte dispatch. */
-class ExcelDataSource extends ExcelDataSourceBase(SniffCodec)
+/** `spark.read.format("excel")` — both extensions. */
+class ExcelDataSource extends ExcelDataSourceBase("excel", Seq(".xls", ".xlsx"))
 
 /** Java-serializable Hadoop Configuration carrier (Spark's own
   * SerializableConfiguration is private[spark]).
@@ -180,19 +148,25 @@ class SerializableHadoopConf(@transient var value: Configuration) extends Serial
 }
 
 class XlsTable(tableSchema: StructType, files: Seq[String],
-               codec: ExcelCodec) extends Table with SupportsRead {
+               label: String) extends Table with SupportsRead {
   // keep the table name bounded: at 10k-files scale a full path list would
   // put megabytes into plan strings, the UI, and error messages
   override def name(): String =
-    if (files.length <= 3) s"${codec.label}(${files.mkString(",")})"
-    else s"${codec.label}(${files.length} files: ${files.head}, ...)"
+    if (files.length <= 3) s"$label(${files.mkString(",")})"
+    else s"$label(${files.length} files: ${files.head}, ...)"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
+  /** The session's Hadoop configuration as of the table's first scan,
+    * broadcast once and shared by every scan of this load: serialized
+    * into each task instead (~110 KB), it cost more than the decode.
+    */
+  private lazy val conf: Broadcast[SerializableHadoopConf] = {
+    val session = org.apache.spark.sql.SparkSession.active
+    session.sparkContext.broadcast(new SerializableHadoopConf(session.sessionState.newHadoopConf()))
+  }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new XlsScanBuilder(tableSchema, files, codec,
-      new SerializableHadoopConf(
-        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+    new XlsScanBuilder(tableSchema, files, label, conf)
 }
 
 /** Column pruning: Catalyst hands us the required columns; each task then
@@ -201,7 +175,7 @@ class XlsTable(tableSchema: StructType, files: Seq[String],
   * prune rows only after decode — no I/O saved, complexity for nothing.)
   */
 class XlsScanBuilder(fullSchema: StructType, files: Seq[String],
-                     codec: ExcelCodec, conf: SerializableHadoopConf)
+                     label: String, conf: Broadcast[SerializableHadoopConf])
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = fullSchema
 
@@ -210,32 +184,32 @@ class XlsScanBuilder(fullSchema: StructType, files: Seq[String],
     required = requiredSchema
   }
 
-  override def build(): Scan = new XlsScan(fullSchema, required, files, codec, conf)
+  override def build(): Scan = new XlsScan(fullSchema, required, files, label, conf)
 }
 
 class XlsScan(fullSchema: StructType, required: StructType, files: Seq[String],
-              codec: ExcelCodec, conf: SerializableHadoopConf)
+              label: String, conf: Broadcast[SerializableHadoopConf])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"XlsScan[${codec.label}, ${files.length} files, ${required.fieldNames.mkString(",")}]"
+    s"XlsScan[$label, ${files.length} files, ${required.fieldNames.mkString(",")}]"
 
   override def planInputPartitions(): Array[InputPartition] =
     files.map(f => XlsInputPartition(f): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new XlsReaderFactory(fullSchema, required, codec, conf)
+    new XlsReaderFactory(fullSchema, required, label, conf)
 }
 
 case class XlsInputPartition(path: String) extends InputPartition
 
 class XlsReaderFactory(fullSchema: StructType, required: StructType,
-                       codec: ExcelCodec, conf: SerializableHadoopConf)
+                       label: String, conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val path = partition.asInstanceOf[XlsInputPartition].path
-    new XlsPartitionReader(path, fullSchema, required, codec, conf)
+    new XlsPartitionReader(path, fullSchema, required, label, conf)
   }
 }
 
@@ -243,19 +217,19 @@ class XlsReaderFactory(fullSchema: StructType, required: StructType,
   * InternalRow (timestamps as micros, strings as UTF8String).
   */
 class XlsPartitionReader(path: String, fullSchema: StructType, required: StructType,
-                         codec: ExcelCodec, conf: SerializableHadoopConf)
+                         label: String, conf: Broadcast[SerializableHadoopConf])
     extends PartitionReader[InternalRow] {
 
   private lazy val rows: Iterator[Seq[Any]] = {
-    val (fileSchema, data) = codec.decode(
-      SheetGrid.readAllBytes(conf.value, path), path)
+    val (fileSchema, data) = Workbook.decode(
+      SheetGrid.readAllBytes(conf.value.value, path), path)
     // map required fields to the FILE's column positions by name — files
     // may order columns differently as long as names match
     val idx = required.fields.map { f =>
       val i = fileSchema.fieldIndex(f.name) // throws with a clear message if absent
       val ft = fileSchema.fields(i).dataType
       require(ft == f.dataType,
-        s"${codec.label} column '${f.name}' in $path is $ft, expected ${f.dataType}")
+        s"$label column '${f.name}' in $path is $ft, expected ${f.dataType}")
       i
     }
     data.iterator.map(row => idx.toSeq.map(row))

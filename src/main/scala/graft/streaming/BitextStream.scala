@@ -88,8 +88,7 @@ object BitextStream {
         val bwdDir = new Path(indexDir, "bwd")
         val prior =
           if (fs.exists(bwdDir))
-            s.read.option("basePath", bwdDir.toString)
-              .parquet(bwdDir.toString)
+            Tables.parquet(s, bwdDir.toString)
               // a replayed batch must not merge its own rows from a
               // failed earlier attempt
               .filter(col("batch") < batchId)

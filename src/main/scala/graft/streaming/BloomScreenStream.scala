@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** Continuous-ingestion Bloom screening: the streaming face of
   * [[Dedup.bloomScreen]], and the cheap front gate ahead of
@@ -52,7 +53,7 @@ object BloomScreenStream {
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         val prior =
           if (fs.exists(new Path(filterDir)))
-            s.read.option("basePath", filterDir).parquet(filterDir)
+            Tables.parquet(s, filterDir)
               .filter(col("batch") < batchId).select("pos")
           else newBands.select(explode(col("positions")).as("pos")).limit(0)
         val bloomAgg = udaf(new graft.functions.BloomBitset(nBits),

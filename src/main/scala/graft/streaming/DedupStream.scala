@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** Continuous-ingestion near-dup screening: the streaming face of the
   * materialized LSH band index.
@@ -46,7 +47,7 @@ object DedupStream {
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         val index =
           if (fs.exists(new Path(indexDir)))
-            s.read.option("basePath", indexDir).parquet(indexDir)
+            Tables.parquet(s, indexDir)
               // a replayed batch must not screen against its own rows from
               // a failed earlier attempt — that would emit every pair in
               // both orientations and break the idempotence contract

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Continuous embedding near-dup screening: the streaming face of
   * Similarity.embeddingLshPairs, and the embedding sibling of DedupStream.
@@ -57,7 +58,7 @@ object EmbedDedupStream {
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         val index =
           if (fs.exists(new Path(indexDir)))
-            s.read.option("basePath", indexDir).parquet(indexDir)
+            Tables.parquet(s, indexDir)
               .filter(col("batch") < batchId)
               .select("vec_id", "band_idx", "band_val", "embedding", "vnorm")
           else newRows.limit(0)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
+import graft.sources.Tables
 
 /** Continuous sequence packing: the streaming face of
   * [[graft.operators.Curation.packSequencesSlice]].
@@ -46,7 +47,7 @@ object PackStream {
               expr(s"CAST(size(${TextAnalysis.TokensExpr}) AS BIGINT)"))
             .withColumn("local_strt", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
           if (fs.exists(new Path(offsetsDir))) {
-            val prior = s.read.option("basePath", offsetsDir).parquet(offsetsDir)
+            val prior = Tables.parquet(s, offsetsDir)
               // a replayed batch must not see the offsets its own failed
               // attempt wrote
               .filter(col("batch") < batchId)

@@ -77,7 +77,7 @@ object SemDedupStream {
         val prior =
           if (Option(fs.globStatus(new Path(labelsDir, "batch=*")))
               .exists(_.nonEmpty))
-            s.read.option("basePath", labelsDir).parquet(labelsDir)
+            Tables.parquet(s, labelsDir)
               .filter(col("batch") < batchId)
               .select("cluster_id", "vec_id", "embedding", "vnorm")
           else newRows.limit(0)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** Continuous-ingestion EXACT substring screening: the streaming face of
   * [[graft.operators.Dedup.substringDedup]], completing the family's
@@ -59,7 +60,7 @@ object SubstringStream {
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         val prior =
           if (fs.exists(new Path(indexDir)))
-            s.read.option("basePath", indexDir).parquet(indexDir)
+            Tables.parquet(s, indexDir)
               // a replayed batch must not screen against its own rows
               // from a failed earlier attempt
               .filter(col("batch") < batchId)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
+import graft.sources.Tables
 
 /** Continuous-ingestion partial-copy screening: the streaming face of
   * the winnowed near-dup pair join ([[graft.operators.Dedup.winnowPairs]]).
@@ -62,7 +63,7 @@ object WinnowStream {
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         val prior =
           if (fs.exists(new Path(indexDir)))
-            s.read.option("basePath", indexDir).parquet(indexDir)
+            Tables.parquet(s, indexDir)
               // a replayed batch must not screen against its own rows
               // from a failed earlier attempt
               .filter(col("batch") < batchId)

@@ -19,6 +19,15 @@ class DocCountsSpec extends AnyFunSuite {
     try src.mkString finally src.close()
   }
 
+  /** `src/main` Scala files, paired with their text. */
+  private def mainSources(): Seq[(String, String)] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try walk.iterator().asScala
+      .map(_.toString).filter(_.endsWith(".scala")).toSeq.sorted
+      .map(p => p -> read(p))
+    finally walk.close()
+  }
+
   test("front-door partition is consistent and total") {
     val hand = SqlFrontDoor.handTwins.keySet
     val derived = SqlFrontDoor.derived
@@ -46,30 +55,35 @@ class DocCountsSpec extends AnyFunSuite {
   test("only GraftSession builds a SparkSession in src/main") {
     // every entry point takes the engine conf from GraftSession.builder;
     // a hand-rolled builder drifts from it (missing shuffle tuning, AQE)
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val hits = try walk.iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter(p => read(p.toString).contains("SparkSession.builder("))
-      .map(_.toString).toSeq.sorted
-    finally walk.close()
+    val hits = mainSources().collect {
+      case (p, text) if text.contains("SparkSession.builder(") => p
+    }
     assert(hits === Seq("src/main/scala/graft/GraftSession.scala"))
   }
 
   test("only Tables opens parquet in src/main") {
     // every read goes through Tables.parquet, which reads the schema from
     // one footer on the driver; a bare spark.read.parquet runs a Spark
-    // job per open just to infer it
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val hits = try walk.iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter { p =>
-        val text = read(p.toString)
-        text.contains(".read.parquet(") || text.contains("read.format(\"parquet\")")
-      }
-      .map(_.toString).toSeq.sorted
-    finally walk.close()
+    // job per open just to infer it. Any reader chain counts:
+    // `.read.option(...)...parquet(` as much as `.read.parquet(`
+    val chain = """\.read(\s*\.\w+\((?:[^()]|\([^()]*\))*\))*\s*\.parquet\(""".r
+    val hits = mainSources().collect {
+      case (p, text) if chain.findFirstIn(text).nonEmpty ||
+          text.contains("read.format(\"parquet\")") => p
+    }
     assert(hits.filterNot(_ == "src/main/scala/graft/sources/Tables.scala").isEmpty,
       s"parquet opened outside Tables.parquet: ${hits.mkString(", ")}")
+  }
+
+  test("only the Excel DataSource V2 decodes workbooks in src/main") {
+    // format("xls"/"xlsx"/"excel") is the one read path; a second caller
+    // of a decoder would be a second way a workbook becomes a DataFrame
+    val hits = mainSources().collect {
+      case (p, text) if text.contains("XlsSource.decode(") ||
+          text.contains("XlsxSource.decode(") => p
+    }
+    assert(hits.filterNot(_.startsWith("src/main/scala/graft/sources/xls/")).isEmpty,
+      s"workbook decoded outside sources/xls/: ${hits.mkString(", ")}")
   }
 
   test("README.md states the derived counts") {

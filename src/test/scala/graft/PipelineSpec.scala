@@ -84,8 +84,8 @@ class PipelineSpec extends SparkTestBase {
     val bucket = freshBucket()
     // convert the BIFF8 sample to OOXML (exact serial roundtrip) — the
     // reference's pd.read_excel covers both containers; so must we
-    val src = graft.sources.XlsSource
-      .read(spark, "/root/reference/data/traffic_spreadsheet.xls")
+    val src = spark.read.format("xls")
+      .load("/root/reference/data/traffic_spreadsheet.xls")
       .collect().map(r => Seq[Any](r.getTimestamp(0), r.getDouble(1))).toSeq
     XlsxTestWriter.write(new java.io.File(s"$bucket/raw_data/traffic.xlsx"),
       Seq("time", "traffic"), src)
@@ -179,6 +179,32 @@ class PipelineSpec extends SparkTestBase {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("an .xls and an .xlsx of the same rows load the same warehouse rows") {
+    // day-first strings, as a hand-kept sheet holds them: the transform's
+    // strict parse runs on both containers
+    val rows = (0 until 288).map { i =>
+      Seq[Any](f"23/05/2021 ${i / 12}%02d:${i % 12 * 5}%02d", 4.0 + i % 55 * 0.1)
+    }
+    val now = java.time.Instant.parse("2021-05-24T00:05:00Z")
+    val runs = Seq("xls", "xlsx").map { ext =>
+      val bucket = freshBucket()
+      val file = new java.io.File(s"$bucket/raw_data/traffic.$ext")
+      if (ext == "xls") XlsTestWriter.write(file, Seq("time", "traffic"), rows)
+      else XlsxTestWriter.write(file, Seq("time", "traffic"), rows)
+      val cfg = EtlConfig(projectId = "test", bucketUri = s"file://$bucket",
+        dataset = "d", table = "t", sourceBlob = s"raw_data/traffic.$ext")
+      val report = new EtlPipeline(spark, cfg).run(now)
+      val warehouse = spark.read.parquet(report.warehousePath)
+        .select("time", "traffic", "created_at", "dt").collect()
+        .map(_.toSeq).toSeq.sortBy(_.head.toString)
+      ((report.rowsExtracted, report.rowsTransformed, report.rowsLoaded), warehouse)
+    }
+    assert(runs(0)._1 == ((288L, 288L, 288L)))
+    assert(runs(0)._1 == runs(1)._1)
+    assert(runs(0)._2.length == 288)
+    assert(runs(0)._2 == runs(1)._2)
+  }
+
   test("missing required column rejects (extract.py:69-74)") {
     val bucket = freshBucket()
     Files.write(Paths.get(s"$bucket/raw_data/traffic.csv"),
@@ -190,12 +216,15 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("extract failure carries the auth remediation hint (extract.py:26-29)") {
-    val bucket = freshBucket()
-    // no raw_data file at all -> the read itself fails
-    val e = intercept[ExtractError] {
-      new EtlPipeline(spark, csvConfig(bucket, WriteDisposition.Append)).run()
+    Seq("raw_data/traffic.csv", "raw_data/traffic.xls", "raw_data/traffic.xlsx").foreach { blob =>
+      val bucket = freshBucket()
+      // no raw_data file at all -> the read itself fails
+      val e = intercept[ExtractError] {
+        new EtlPipeline(spark, csvConfig(bucket, WriteDisposition.Append)
+          .copy(sourceBlob = blob)).run()
+      }
+      assert(e.getMessage.contains("gcloud auth application-default login"), blob)
     }
-    assert(e.getMessage.contains("gcloud auth application-default login"))
   }
 
   test("load failure carries the dataset-creation hint (load.py:98-101)") {

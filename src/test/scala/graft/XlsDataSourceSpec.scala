@@ -3,8 +3,8 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
-/** DataSource V2 `xls` format: distributed multi-file scan of the same
-  * BIFF8 decoder XlsSource.read uses driver-side.
+/** DataSource V2 `xls` format: one task per file, each decoding its
+  * workbook with the BIFF8 decoder.
   */
 class XlsDataSourceSpec extends SparkTestBase {
   private val sample = "/root/reference/data/traffic_spreadsheet.xls"
@@ -58,6 +58,22 @@ class XlsDataSourceSpec extends SparkTestBase {
       StructField("traffic", DoubleType)))
     val df = spark.read.format("xls").schema(schema).load(sample)
     assert(df.count() == 287)
+  }
+
+  test("format(\"excel\") reads generated .xls and .xlsx files of one directory, a task each") {
+    val dir = tmpPath("excelgen")
+    val t0 = Timestamp.valueOf("2021-05-23 00:00:00").getTime
+    def day(d: Int) = (0 until 288).map(i =>
+      Seq[Any](new Timestamp(t0 + (d * 288 + i) * 300000L), 4.0 + i % 55 * 0.1))
+    XlsTestWriter.write(dir.resolve("a.xls").toFile, Seq("time", "traffic"), day(0))
+    XlsxTestWriter.write(dir.resolve("b.xlsx").toFile, Seq("time", "traffic"), day(1))
+    XlsTestWriter.write(dir.resolve("c.xls").toFile, Seq("time", "traffic"), day(2))
+    val df = spark.read.format("excel").load(dir.toString)
+    assert(df.rdd.getNumPartitions == 3)
+    val rows = df.orderBy("time").collect()
+    assert(rows.length == 3 * 288)
+    assert(rows.map(_.getTimestamp(0).getTime).toSeq == (0 until 3 * 288).map(t0 + _ * 300000L))
+    assert(rows.map(_.getDouble(1)).toSeq == (0 until 3).flatMap(_ => (0 until 288).map(4.0 + _ % 55 * 0.1)))
   }
 
   test("no matching files raises a clear error") {

@@ -2,14 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.sources.XlsSource
-
+/** The BIFF8 decoder, read through `format("xls")`. */
 class XlsSourceSpec extends SparkTestBase {
   private val sample = "/root/reference/data/traffic_spreadsheet.xls"
 
   test("decodes the reference sample: 287 rows, 5-min grid, known stats") {
     assume(new java.io.File(sample).exists())
-    val df = XlsSource.read(spark, sample)
+    val df = spark.read.format("xls").load(sample)
     assert(df.columns.toSeq == Seq("time", "traffic"))
     assert(df.schema("time").dataType.typeName == "timestamp")
     assert(df.schema("traffic").dataType.typeName == "double")
@@ -28,11 +27,16 @@ class XlsSourceSpec extends SparkTestBase {
   }
 
   test("rejects a non-XLS file") {
-    intercept[Exception](XlsSource.read(spark, "/root/repo/build.sbt"))
+    // text bytes behind an .xls name pass the extension filter and reach
+    // the decoder, which rejects the container
+    val f = tmpPath("notxls").resolve("notes.xls")
+    java.nio.file.Files.write(f, "time,traffic\n1,2\n".getBytes)
+    val e = intercept[Exception](spark.read.format("xls").load(f.toString))
+    assert(e.getMessage.contains("not a ZIP container"), e.getMessage)
   }
 
   test("missing file raises ExtractError with the path") {
-    val e = intercept[ExtractError](XlsSource.read(spark, "/tmp/nope.xls"))
+    val e = intercept[ExtractError](spark.read.format("xls").load("/tmp/nope.xls"))
     assert(e.getMessage.contains("/tmp/nope.xls"))
   }
 
@@ -40,65 +44,20 @@ class XlsSourceSpec extends SparkTestBase {
     // hand-built minimal OLE2 + BIFF8: header row (SST strings) + one data
     // row with an RK int-scaled cell and a MULRK pair — the record paths
     // the reference sample (NUMBER cells only) never exercises
-    import java.nio.{ByteBuffer, ByteOrder}
-    def rec(t: Int, body: Array[Byte]): Array[Byte] = {
-      val b = ByteBuffer.allocate(4 + body.length).order(ByteOrder.LITTLE_ENDIAN)
-      b.putShort(t.toShort).putShort(body.length.toShort).put(body); b.array()
-    }
-    def leShort(v: Int) = { val b = ByteBuffer.allocate(2).order(ByteOrder.LITTLE_ENDIAN); b.putShort(v.toShort); b.array() }
-    def leInt(v: Int) = { val b = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN); b.putInt(v); b.array() }
-    def sstStr(sx: String) = leShort(sx.length) ++ Array(0.toByte) ++ sx.getBytes("ISO-8859-1")
-    val sst = rec(0xFC, leInt(3) ++ leInt(3) ++ sstStr("a") ++ sstStr("b") ++ sstStr("c"))
-    val xf = rec(0xE0, leShort(0) ++ leShort(0) ++ new Array[Byte](16)) // ifmt 0: general
-    def labelSst(r: Int, c: Int, i: Int) = rec(0xFD, leShort(r) ++ leShort(c) ++ leShort(0) ++ leInt(i))
+    import XlsTestWriter._
     // RK: value 100.5 => int 10050 with div100|isInt flags (10050<<2 | 0b11)
     val rk = rec(0x27E, leShort(1) ++ leShort(0) ++ leShort(0) ++ leInt((10050 << 2) | 3))
     // MULRK: row 1, cols 1..2, two RK ints 7 and 9
     val mulrk = rec(0xBD, leShort(1) ++ leShort(1) ++
       leShort(0) ++ leInt((7 << 2) | 2) ++ leShort(0) ++ leInt((9 << 2) | 2) ++ leShort(2))
-    val wb = rec(0x809, new Array[Byte](16)) ++ sst ++ xf ++
-      rec(0x809, new Array[Byte](16)) ++
+    val wb = bof ++ sst(Seq("a", "b", "c")) ++ xf(0) ++ // ifmt 0: general
+      bof ++
       labelSst(0, 0, 0) ++ labelSst(0, 1, 1) ++ labelSst(0, 2, 2) ++
-      rk ++ mulrk ++ rec(0x0A, Array[Byte]())
-    // OLE2 container: header + FAT sector + dir sector + workbook sectors
-    val secSize = 512
-    val wbSectors = (wb.length + secSize - 1) / secSize
-    val total = 1 + wbSectors + 1 // FAT, workbook..., directory
-    val fat = ByteBuffer.allocate(secSize).order(ByteOrder.LITTLE_ENDIAN)
-    fat.putInt(-3) // sector 0: FAT itself
-    for (i <- 1 until wbSectors) fat.putInt(i + 1) // workbook chain
-    fat.putInt(-2) // end of workbook chain
-    fat.putInt(-2) // directory: single sector, end
-    while (fat.remaining() >= 4) fat.putInt(-1)
-    val dir = ByteBuffer.allocate(secSize).order(ByteOrder.LITTLE_ENDIAN)
-    def dirEntry(name: String, typ: Byte, start: Int, size: Int): Array[Byte] = {
-      val e = ByteBuffer.allocate(128).order(ByteOrder.LITTLE_ENDIAN)
-      val utf16 = name.getBytes("UTF-16LE")
-      e.put(utf16); e.position(64); e.putShort((utf16.length + 2).toShort)
-      e.put(66, typ); e.putInt(116, start); e.putInt(120, size)
-      e.array()
-    }
-    dir.put(dirEntry("Root Entry", 5, -2, 0))
-    dir.put(dirEntry("Workbook", 2, 1, wb.length))
-    while (dir.remaining() >= 128) dir.put(dirEntry("", 0, -1, 0))
-    val header = ByteBuffer.allocate(512).order(ByteOrder.LITTLE_ENDIAN)
-    header.putLong(0xE11AB1A1E011CFD0L)
-    header.putShort(30, 9); header.putShort(32, 6)
-    header.putInt(44, 1)              // one FAT sector
-    header.putInt(48, 1 + wbSectors)  // directory start sector
-    header.putInt(56, 0)              // mini cutoff 0: force the regular FAT
-                                      // chain path (no mini-stream in this file)
-    header.putInt(60, -2); header.putInt(68, -2); header.putInt(72, 0)
-    header.putInt(76, 0)              // DIFAT[0] = FAT sector id 0
-    for (i <- 1 until 109) header.putInt(76 + i * 4, -1)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(header.array()); out.write(fat.array())
-    val padded = java.util.Arrays.copyOf(wb, wbSectors * secSize)
-    out.write(padded); out.write(dir.array())
+      rk ++ mulrk ++ eof
     val f = java.io.File.createTempFile("synth", ".xls")
-    java.nio.file.Files.write(f.toPath, out.toByteArray)
+    java.nio.file.Files.write(f.toPath, ole2(wb))
 
-    val df = XlsSource.read(spark, f.getAbsolutePath)
+    val df = spark.read.format("xls").load(f.getAbsolutePath)
     assert(df.columns.toSeq == Seq("a", "b", "c"))
     val row = df.collect().head
     assert(row.getDouble(0) == 100.5) // RK div100

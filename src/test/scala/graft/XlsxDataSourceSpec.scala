@@ -6,8 +6,8 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.sources.XlsxSource
 
-/** OOXML `.xlsx` surface — `format("xlsx")`, the driver-side
-  * XlsxSource.read, and the sniffing `format("excel")` — held to the same
+/** OOXML `.xlsx` surface — `format("xlsx")`, XlsxSource.read (a forward
+  * to it), and the sniffing `format("excel")` — held to the same
   * contract XlsDataSourceSpec pins for BIFF8: the 287-row converted
   * reference fixture with exact stats, multi-file partitioning, column
   * pruning, and loud errors.
