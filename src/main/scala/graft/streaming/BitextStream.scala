@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sources.Tables
 
 /** Continuous bitext mining: the streaming face of
   * [[graft.operators.Similarity.bitextMarginMine]] — a crawl stream of
@@ -33,9 +31,9 @@ import graft.sources.Tables
   * semantics every streaming face here documents). A-side ids are
   * assumed unique across batches (new crawl documents).
   *
-  * Idempotence: both writes land under `batch=<id>` with overwrite, and
-  * a replayed batch filters its own earlier index rows out of the merge
-  * — the DedupStream discipline verbatim.
+  * Idempotence: both writes are per-batch overwrites, and a replayed
+  * batch merges only earlier batches' index rows — the [[Microbatch]]
+  * discipline.
   */
 object BitextStream {
 
@@ -51,57 +49,42 @@ object BitextStream {
   }
 
   /** @param vectors    streaming frame with vec_id and embedding columns
-    * @param indexDir   `_corpus` (staged) + `bwd/batch=<id>` per-b top-k rows
+    * @param indexDir   `_corpus` (staged) + `bwd/` per-batch per-b top-k rows
     * @param matchesDir match output (a_id, match_id, cos_micro,
     *                   margin_micro, accepted) per batch
     */
   def start(vectors: DataFrame, indexDir: String, matchesDir: String,
             checkpointDir: String, k: Int = 4,
             thresholdMicro: Long = 1060000L): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val corpusPath = new Path(indexDir, "_corpus")
-        val fs = corpusPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        require(fs.exists(corpusPath),
+    Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val bSide = Microbatch.staged(s, indexDir, "_corpus",
           s"BitextStream needs a staged counter-corpus — run BitextStream.stageCorpus($indexDir) first")
-        val bSide = Tables.parquet(s, corpusPath.toString)
-          .select(col("vec_id").as("b_id"), col("embedding").as("bv"),
-            col("vnorm").as("bn"))
-        val aSide = batch
-          .withColumn("an", expr("sqrt(dot_f(embedding, embedding))"))
-          .select(col("vec_id").as("a_id"), col("embedding").as("av"),
-            col("an"))
-        val scored = Similarity.bitextScored(aSide, bSide)
-        // this batch's own per-b top-k — the only rows the index needs
-        val enc = org.apache.spark.sql.Encoders
-          .product[graft.functions.ScoredNeighbor]
-        val topk = udaf(new graft.functions.TopKNeighbors(k), enc)
-        val batchTopK = scored.groupBy(col("b_id"))
-          .agg(topk(col("m"), col("a_id")).as("nn"))
-          .select(col("b_id"), posexplode(col("nn")).as(Seq("pos", "sn")))
-          .select(col("b_id"), col("sn.m").as("m"), col("sn.vecId").as("a_id"))
-          .localCheckpoint(true) // merged screen + index append
-        val bwdDir = new Path(indexDir, "bwd")
-        val prior =
-          if (fs.exists(bwdDir))
-            Tables.parquet(s, bwdDir.toString)
-              // a replayed batch must not merge its own rows from a
-              // failed earlier attempt
-              .filter(col("batch") < batchId)
-              .select("b_id", "m", "a_id")
-          else batchTopK.limit(0)
-        val merged = prior.unionByName(batchTopK)
-        val bwd = Similarity.bitextKnnSums(
-          merged.select(col("b_id"), col("a_id"), col("m")),
-          "b_id", "a_id", "bwd_sum", "bwd_k", k)
-        val matches =
-          Similarity.bitextMarginCore(scored, bwd, k, thresholdMicro)
-        matches.write.mode("overwrite").parquet(s"$matchesDir/batch=$batchId")
-        batchTopK.write.mode("overwrite").parquet(s"$indexDir/bwd/batch=$batchId")
-      }
-      .start()
+        .select(col("vec_id").as("b_id"), col("embedding").as("bv"),
+          col("vnorm").as("bn"))
+      val aSide = batch
+        .withColumn("an", expr("sqrt(dot_f(embedding, embedding))"))
+        .select(col("vec_id").as("a_id"), col("embedding").as("av"),
+          col("an"))
+      val scored = Similarity.bitextScored(aSide, bSide)
+      // this batch's own per-b top-k — the only rows the index needs
+      val enc = org.apache.spark.sql.Encoders
+        .product[graft.functions.ScoredNeighbor]
+      val topk = udaf(new graft.functions.TopKNeighbors(k), enc)
+      val batchTopK = scored.groupBy(col("b_id"))
+        .agg(topk(col("m"), col("a_id")).as("nn"))
+        .select(col("b_id"), posexplode(col("nn")).as(Seq("pos", "sn")))
+        .select(col("b_id"), col("sn.m").as("m"), col("sn.vecId").as("a_id"))
+        .localCheckpoint(true) // merged screen + index append
+      val merged = Microbatch.prior(s"$indexDir/bwd", batchId, batchTopK)
+        .unionByName(batchTopK)
+      val bwd = Similarity.bitextKnnSums(
+        merged.select(col("b_id"), col("a_id"), col("m")),
+        "b_id", "a_id", "bwd_sum", "bwd_k", k)
+      val matches =
+        Similarity.bitextMarginCore(scored, bwd, k, thresholdMicro)
+      Microbatch.write(matches, matchesDir, batchId)
+      Microbatch.write(batchTopK, s"$indexDir/bwd", batchId)
+    }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -25,7 +24,7 @@ import graft.operators.Similarity
   * exact geometry: candidate iff the corpus vector's ONE list is among
   * the eval doc's nProbe probed lists — and (3) scored/thresholded with
   * the batch's exact micro-cosine expression, landing per-corpus-vector
-  * contamination verdicts under `batch=<id>`.
+  * contamination verdicts in one directory per batch.
   *
   * Exactness contract: the verdict for a corpus vector depends only on
   * its own embedding and the frozen eval artifact — no cross-batch
@@ -39,8 +38,8 @@ import graft.operators.Similarity
   * `compactEvalScreen` folding them in physically, the ANN index
   * family's delete lifecycle.
   *
-  * Idempotence: a replayed microbatch overwrites its own `batch=<id>`
-  * directory — the [[DedupStream]] contract.
+  * Idempotence: a replayed microbatch overwrites its own batch
+  * directory — the [[Microbatch]] discipline.
   *
   * 100 TB shape: per batch ONE pass over the delta (assignment is a
   * JIT-compiled per-row loop against literal centroids, no join), then
@@ -54,7 +53,7 @@ object DeconSemStream {
   /** @param vectors        streaming frame with vec_id and embedding columns
     * @param stageDir       staged output of `Similarity.stageEvalScreen`
     *                       (frozen quantizer + eval probes)
-    * @param outDir         verdict output, one `batch=<id>` dir per batch
+    * @param outDir         verdict output, one dir per batch
     * @param checkpointDir  streaming checkpoint location
     * @param thresholdMicro micro-cosine at or above which a corpus vector
     *                       counts an eval collision (the batch default)
@@ -64,34 +63,26 @@ object DeconSemStream {
   def start(vectors: DataFrame, stageDir: String, outDir: String,
             checkpointDir: String, thresholdMicro: Long = 350000L,
             evalMod: Int = 97): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val centsPath = new Path(stageDir, "_centroids_f")
-        val fs = centsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        require(fs.exists(centsPath),
-          s"DeconSemStream needs a staged eval screen — run " +
-            s"Similarity.stageEvalScreen(..., $stageDir) first")
-        val cents = Similarity.stagedScreenCentroids(s, stageDir)
-        val probes = Similarity.stagedEvalProbes(s, stageDir)
-        val corpus = batch
-          .filter(pmod(col("vec_id"), lit(evalMod)) =!= 0)
-          .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-        val assign = Similarity.selectListsFloat(corpus, cents, 1)
-        corpus.join(assign.hint("shuffle_hash"), Seq("vec_id"))
-          .select(col("centroid_id"), col("vec_id"),
-            col("embedding").as("bv"), col("vnorm").as("bn"))
-          .join(broadcast(probes), Seq("centroid_id"))
-          .withColumn("m",
-            expr(Similarity.scoreMicrosFromNorms("dot_f(ev, bv)", "en", "bn")))
-          .filter(col("m") >= thresholdMicro)
-          .groupBy(col("vec_id"))
-          .agg(count(lit(1)).as("n_eval_hits"), max(col("m")).as("max_cm"))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val cents = Microbatch.staged(s, stageDir, "_centroids_f",
+        s"DeconSemStream needs a staged eval screen — run " +
+          s"Similarity.stageEvalScreen(..., $stageDir) first")
+      val probes = Similarity.stagedEvalProbes(s, stageDir)
+      val corpus = batch
+        .filter(pmod(col("vec_id"), lit(evalMod)) =!= 0)
+        .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
+      val assign = Similarity.selectListsFloat(corpus, cents, 1)
+      val verdicts = corpus.join(assign.hint("shuffle_hash"), Seq("vec_id"))
+        .select(col("centroid_id"), col("vec_id"),
+          col("embedding").as("bv"), col("vnorm").as("bn"))
+        .join(broadcast(probes), Seq("centroid_id"))
+        .withColumn("m",
+          expr(Similarity.scoreMicrosFromNorms("dot_f(ev, bv)", "en", "bn")))
+        .filter(col("m") >= thresholdMicro)
+        .groupBy(col("vec_id"))
+        .agg(count(lit(1)).as("n_eval_hits"), max(col("m")).as("max_cm"))
+      Microbatch.write(verdicts, outDir, batchId)
+    }
 }

@@ -19,9 +19,8 @@ import graft.sources.Tables
   * the streaming screen is exactly the batch operator run on the delta,
   * and per-batch outputs union to the full-corpus answer bit-for-bit.
   *
-  * Idempotence: flagged rows land under `batch=<id>` with overwrite, so a
-  * replayed microbatch rewrites its own output (same contract as
-  * [[DedupStream]]).
+  * Idempotence: flagged rows are a per-batch overwrite, so a replayed
+  * microbatch rewrites its own output (the [[Microbatch]] discipline).
   */
 object DecontaminateStream {
 
@@ -42,30 +41,24 @@ object DecontaminateStream {
     *
     * @param docs        streaming frame with doc_id and text columns
     * @param evalGramDir staged output of [[evalGrams]] (frozen)
-    * @param outDir      flagged-doc output, one `batch=<id>` dir per batch
+    * @param outDir      flagged-doc output, one dir per batch
     */
   def start(docs: DataFrame, evalGramDir: String, outDir: String,
             checkpointDir: String, n: Int = 4, evalMod: Int = 97): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val eval = Tables.parquet(s, evalGramDir)
-        val flagged = batch
-          .filter(pmod(col("doc_id"), lit(evalMod)) =!= 0)
-          .withColumn("ws", expr(TextAnalysis.TokensExpr))
-          .filter(expr(s"size(ws) >= $n"))
-          .select(col("doc_id"), explode(expr(ngrams(n))).as("g"))
-          .join(broadcast(eval), "g")
-          .groupBy(col("doc_id"))
-          .agg(
-            countDistinct(col("g")).as("n_overlap_ngrams"),
-            countDistinct(col("eval_doc")).as("n_eval_docs"))
-        flagged.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    Microbatch.start(docs, checkpointDir) { (batch, batchId) =>
+      val eval = Tables.parquet(batch.sparkSession, evalGramDir)
+      val flagged = batch
+        .filter(pmod(col("doc_id"), lit(evalMod)) =!= 0)
+        .withColumn("ws", expr(TextAnalysis.TokensExpr))
+        .filter(expr(s"size(ws) >= $n"))
+        .select(col("doc_id"), explode(expr(ngrams(n))).as("g"))
+        .join(broadcast(eval), "g")
+        .groupBy(col("doc_id"))
+        .agg(
+          countDistinct(col("g")).as("n_overlap_ngrams"),
+          countDistinct(col("eval_doc")).as("n_eval_docs"))
+      Microbatch.write(flagged, outDir, batchId)
+    }
 
   /** Convenience: stage the eval grams from a static corpus dir. */
   def stageEvalGrams(s: SparkSession, docs: DataFrame, evalGramDir: String,

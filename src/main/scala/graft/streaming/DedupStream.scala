@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
-import graft.sources.Tables
 
 /** Continuous-ingestion near-dup screening: the streaming face of the
   * materialized LSH band index.
@@ -21,11 +19,12 @@ import graft.sources.Tables
   * historical document text — the property that makes this viable when
   * the corpus no longer fits anywhere.
   *
-  * Idempotence: both writes land under `batch=<id>` subdirectories with
-  * overwrite, so a microbatch replayed after a failure rewrites its own
-  * output instead of duplicating it (the checkpoint makes batch ids
-  * stable). At 100 TB the per-batch index append is a partitioned
-  * parquet write of (delta × bands) narrow rows.
+  * Idempotence: both writes are per-batch overwrites through
+  * [[Microbatch]], so a microbatch replayed after a failure rewrites its
+  * own output instead of duplicating it, and its screen reads only
+  * earlier batches — its own failed attempt's rows would emit every pair
+  * in both orientations. At 100 TB the per-batch index append is a
+  * partitioned parquet write of (delta × bands) narrow rows.
   */
 object DedupStream {
 
@@ -36,51 +35,36 @@ object DedupStream {
     */
   def start(docs: DataFrame, indexDir: String, pairsDir: String,
             checkpointDir: String, minMatching: Int = 9): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // computed once, used for screening AND the index append
-        val newRows = Dedup.bandSigRows(batch).localCheckpoint(true)
-        val fs = new Path(indexDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val index =
-          if (fs.exists(new Path(indexDir)))
-            Tables.parquet(s, indexDir)
-              // a replayed batch must not screen against its own rows from
-              // a failed earlier attempt — that would emit every pair in
-              // both orientations and break the idempotence contract
-              .filter(col("batch") < batchId)
-              .select("doc_id", "sigs", "band_idx", "band_val")
-          else newRows.limit(0)
-        // cross: every prior doc sharing a band with a new doc. Output
-        // pairs are least/greatest-normalized like every batch dedup
-        // operator (keep-first consumers drop doc_b = the GREATER id, so
-        // orientation must not depend on arrival order); n_matching is
-        // symmetric in (sa, sb), so the signature sides need no swap.
-        val cross = index.as("a").join(newRows.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_val") === col("b.band_val") &&
-              col("a.doc_id") =!= col("b.doc_id"))
-          .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-            greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-            col("a.sigs").as("sa"), col("b.sigs").as("sb"))
-        // intra-batch pairs, each once
-        val intra = newRows.as("a").join(newRows.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_val") === col("b.band_val") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            col("a.sigs").as("sa"), col("b.sigs").as("sb"))
-        val flagged = cross.unionByName(intra)
-          .distinct() // a pair hit via several bands carries identical sigs
-          .withColumn("n_matching", expr(
-            "aggregate(zip_with(sa, sb, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (a, b) -> a + b)"))
-          .filter(col("n_matching") >= minMatching)
-          .select(col("doc_a"), col("doc_b"), col("n_matching"))
-        flagged.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-        newRows.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      }
-      .start()
+    Microbatch.start(docs, checkpointDir) { (batch, batchId) =>
+      // computed once, used for screening AND the index append
+      val newRows = Dedup.bandSigRows(batch).localCheckpoint(true)
+      val index = Microbatch.prior(indexDir, batchId, newRows)
+      // cross: every prior doc sharing a band with a new doc. Output
+      // pairs are least/greatest-normalized like every batch dedup
+      // operator (keep-first consumers drop doc_b = the GREATER id, so
+      // orientation must not depend on arrival order); n_matching is
+      // symmetric in (sa, sb), so the signature sides need no swap.
+      val cross = index.as("a").join(newRows.as("b"),
+          col("a.band_idx") === col("b.band_idx") &&
+            col("a.band_val") === col("b.band_val") &&
+            col("a.doc_id") =!= col("b.doc_id"))
+        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
+          col("a.sigs").as("sa"), col("b.sigs").as("sb"))
+      // intra-batch pairs, each once
+      val intra = newRows.as("a").join(newRows.as("b"),
+          col("a.band_idx") === col("b.band_idx") &&
+            col("a.band_val") === col("b.band_val") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col("a.sigs").as("sa"), col("b.sigs").as("sb"))
+      val flagged = cross.unionByName(intra)
+        .distinct() // a pair hit via several bands carries identical sigs
+        .withColumn("n_matching", expr(
+          "aggregate(zip_with(sa, sb, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (a, b) -> a + b)"))
+        .filter(col("n_matching") >= minMatching)
+        .select(col("doc_a"), col("doc_b"), col("n_matching"))
+      Microbatch.write(flagged, pairsDir, batchId)
+      Microbatch.write(newRows, indexDir, batchId)
+    }
 }

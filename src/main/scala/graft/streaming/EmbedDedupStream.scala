@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sources.Tables
 
 /** Continuous embedding near-dup screening: the streaming face of
   * Similarity.embeddingLshPairs, and the embedding sibling of DedupStream.
@@ -20,12 +18,11 @@ import graft.sources.Tables
   * vector's embedding and norm, so verification never re-reads history),
   * and (3) appended, so batch N+1 sees batch N.
   *
-  * Idempotence: both writes land under `batch=<id>` with overwrite, and a
-  * replayed batch never screens against its own rows from a failed
-  * attempt (`batch < batchId` filter) — the DedupStream contract. Pairs
-  * are least/greatest-normalized so keep-first consumers can drop vec_b
-  * regardless of arrival order; cosine is symmetric, so the payload sides
-  * need no swap.
+  * Idempotence: both writes are per-batch overwrites, and a replayed
+  * batch screens only earlier batches — the [[Microbatch]] discipline.
+  * Pairs are least/greatest-normalized so keep-first consumers can drop
+  * vec_b regardless of arrival order; cosine is symmetric, so the
+  * payload sides need no swap.
   */
 object EmbedDedupStream {
 
@@ -37,54 +34,42 @@ object EmbedDedupStream {
     */
   def start(vectors: DataFrame, indexDir: String, pairsDir: String,
             checkpointDir: String, minScoreMicros: Long = 300000L): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val withNorm = batch
-          .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-        // one row per (vector, band), payload carried alongside — computed
-        // once, used for screening AND the index append
-        val newRows = Similarity.lshSignaturesOf(batch)
-          .selectExpr("vec_id",
-            "stack(2, 0, sig & 255, 1, (sig >> 8) & 255) AS (band_idx, band_val)")
-          .join(withNorm, Seq("vec_id"))
-          .select(col("vec_id"), col("band_idx"), col("band_val"),
-            col("embedding"), col("vnorm"))
-          .localCheckpoint(true)
-        val fs = new Path(indexDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val index =
-          if (fs.exists(new Path(indexDir)))
-            Tables.parquet(s, indexDir)
-              .filter(col("batch") < batchId)
-              .select("vec_id", "band_idx", "band_val", "embedding", "vnorm")
-          else newRows.limit(0)
-        val cross = index.as("a").join(newRows.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_val") === col("b.band_val") &&
-              col("a.vec_id") =!= col("b.vec_id"))
-          .select(least(col("a.vec_id"), col("b.vec_id")).as("vec_a"),
-            greatest(col("a.vec_id"), col("b.vec_id")).as("vec_b"),
-            col("a.embedding").as("ea"), col("a.vnorm").as("na"),
-            col("b.embedding").as("eb"), col("b.vnorm").as("nb"))
-        val intra = newRows.as("a").join(newRows.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_val") === col("b.band_val") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-            col("a.embedding").as("ea"), col("a.vnorm").as("na"),
-            col("b.embedding").as("eb"), col("b.vnorm").as("nb"))
-        val flagged = cross.unionByName(intra)
-          .withColumn("m", expr(Similarity.scoreMicrosFromNorms(
-            "dot_f(ea, eb)", "na", "nb")))
-          .filter(col("m") >= minScoreMicros)
-          .select(col("vec_a"), col("vec_b"), expr(Similarity.Micro4).as("score"))
-          .distinct() // a pair hit via both bands carries an identical score
-        flagged.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-        newRows.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      }
-      .start()
+    Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
+      graft.functions.GraftFunctions.register(batch.sparkSession)
+      val withNorm = batch
+        .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
+      // one row per (vector, band), payload carried alongside — computed
+      // once, used for screening AND the index append
+      val newRows = Similarity.lshSignaturesOf(batch)
+        .selectExpr("vec_id",
+          "stack(2, 0, sig & 255, 1, (sig >> 8) & 255) AS (band_idx, band_val)")
+        .join(withNorm, Seq("vec_id"))
+        .select(col("vec_id"), col("band_idx"), col("band_val"),
+          col("embedding"), col("vnorm"))
+        .localCheckpoint(true)
+      val index = Microbatch.prior(indexDir, batchId, newRows)
+      val cross = index.as("a").join(newRows.as("b"),
+          col("a.band_idx") === col("b.band_idx") &&
+            col("a.band_val") === col("b.band_val") &&
+            col("a.vec_id") =!= col("b.vec_id"))
+        .select(least(col("a.vec_id"), col("b.vec_id")).as("vec_a"),
+          greatest(col("a.vec_id"), col("b.vec_id")).as("vec_b"),
+          col("a.embedding").as("ea"), col("a.vnorm").as("na"),
+          col("b.embedding").as("eb"), col("b.vnorm").as("nb"))
+      val intra = newRows.as("a").join(newRows.as("b"),
+          col("a.band_idx") === col("b.band_idx") &&
+            col("a.band_val") === col("b.band_val") &&
+            col("a.vec_id") < col("b.vec_id"))
+        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+          col("a.embedding").as("ea"), col("a.vnorm").as("na"),
+          col("b.embedding").as("eb"), col("b.vnorm").as("nb"))
+      val flagged = cross.unionByName(intra)
+        .withColumn("m", expr(Similarity.scoreMicrosFromNorms(
+          "dot_f(ea, eb)", "na", "nb")))
+        .filter(col("m") >= minScoreMicros)
+        .select(col("vec_a"), col("vec_b"), expr(Similarity.Micro4).as("score"))
+        .distinct() // a pair hit via both bands carries an identical score
+      Microbatch.write(flagged, pairsDir, batchId)
+      Microbatch.write(newRows, indexDir, batchId)
+    }
 }

@@ -34,6 +34,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventsStream {
 
+  /** Epoch microseconds of `t`, exact to the microsecond — the
+    * `unix_micros` every batch twin orders and gaps by.
+    */
+  private def toUs(t: Timestamp): Long =
+    t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+
+  /** The timestamp at `us` epoch microseconds, sub-millisecond part kept
+    * (the inverse of [[toUs]]).
+    */
+  private def fromUs(us: Long): Timestamp = Timestamp.from(
+    java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
+      Math.floorMod(us, 1000000L) * 1000L))
+
   /** Watermarked tumbling-window aggregation: 1-hour windows, tolerating
     * 30 minutes of event-time lateness. State is bounded: windows older
     * than watermark - 30min are finalized and dropped.
@@ -134,10 +147,8 @@ object EventsStream {
       .flatMapGroupsWithState[SessionState, UserSession](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          def toUs(t: Timestamp): Long = t.getTime * 1000L
           def emit(st: SessionState): UserSession = UserSession(
-            userId, new Timestamp(st.startUs / 1000), new Timestamp(st.lastUs / 1000),
-            st.nEvents, st.sumValue)
+            userId, fromUs(st.startUs), fromUs(st.lastUs), st.nEvents, st.sumValue)
           if (state.hasTimedOut) {
             val out = state.getOption.map(emit).toSeq
             state.remove()
@@ -186,8 +197,6 @@ object EventsStream {
     */
   def scd2(events: Dataset[Event]): Dataset[ClosedInterval] = {
     import events.sparkSession.implicits._
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[Scd2State, ClosedInterval](
@@ -226,8 +235,6 @@ object EventsStream {
     */
   def ewma(events: Dataset[Event]): Dataset[EwmaPoint] = {
     import events.sparkSession.implicits._
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[EwmaState, EwmaPoint](
@@ -276,8 +283,6 @@ object EventsStream {
     */
   def attribution(events: Dataset[Event]): Dataset[AttributedPurchase] = {
     import events.sparkSession.implicits._
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[TouchState, AttributedPurchase](
@@ -339,8 +344,6 @@ object EventsStream {
                   windowDays: Int = 7): Dataset[ConversionOutcome] = {
     import events.sparkSession.implicits._
     val horizonUs = windowDays * 86400L * 1000000L
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     events
       .withWatermark("ts", "1 hour")
       .groupByKey(_.user_id)
@@ -390,8 +393,6 @@ object EventsStream {
   def throttle(events: Dataset[Event], windowHours: Int = 24): Dataset[KeptEvent] = {
     import events.sparkSession.implicits._
     val winUs = windowHours * 3600L * 1000000L
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     events
       .withWatermark("ts", "1 hour")
       .groupByKey(e => (e.user_id, e.event_type))
@@ -445,8 +446,6 @@ object EventsStream {
   def newVsReturning(events: Dataset[Event]): Dataset[UserDayFlag] = {
     import events.sparkSession.implicits._
     val dayFmt = "yyyy-MM-dd"
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     def dayOf(t: Timestamp): String =
       java.time.format.DateTimeFormatter.ofPattern(dayFmt)
         .withZone(java.time.ZoneOffset.UTC).format(t.toInstant)
@@ -560,8 +559,6 @@ object EventsStream {
     */
   def journeyTrigrams(events: Dataset[Event]): Dataset[TrigramHit] = {
     import events.sparkSession.implicits._
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[TrigramState, TrigramHit](
@@ -604,8 +601,6 @@ object EventsStream {
     */
   def twapIntervals(events: Dataset[Event]): Dataset[HeldInterval] = {
     import events.sparkSession.implicits._
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[HoldState, HeldInterval](
@@ -655,8 +650,6 @@ object EventsStream {
     */
   def markovSteps(events: Dataset[Event]): Dataset[MarkovStep] = {
     import events.sparkSession.implicits._
-    def toUs(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[MarkovState, MarkovStep](

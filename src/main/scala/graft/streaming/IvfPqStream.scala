@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sources.Tables
 
 /** Continuous embedding ingestion into a materialized IVF-PQ index: the
   * streaming face of Similarity.buildIvfPqIndex, composing IvfStream's
@@ -18,15 +16,15 @@ import graft.sources.Tables
   * dir. Each microbatch then (1) routes its vectors to their nearest
   * inverted list against the frozen coarse centroids, (2) PQ-encodes
   * them against the frozen codebooks, and (3) lands (vec_id, pcode, xn)
-  * under `batch=<id>` partitioned by centroid_id — the uniform
+  * in its own batch directory partitioned by centroid_id — the uniform
   * two-level layout under which a query's probe still partition-prunes
   * and never reads a float vector. In-stream retraining of either
   * quantizer would scatter neighbors across lists or re-code history;
   * frozen artifacts are what make stream-built and batch-built indexes
   * answer identically (StreamingSpec pins it via ivfPqTopKFromIndex).
   *
-  * Idempotence: a replayed microbatch overwrites its own `batch=<id>`
-  * directory — the DedupStream contract.
+  * Idempotence: a replayed microbatch overwrites its own batch
+  * directory — the [[Microbatch]] discipline.
   */
 object IvfPqStream {
 
@@ -37,30 +35,20 @@ object IvfPqStream {
     */
   def start(vectors: DataFrame, indexDir: String, checkpointDir: String,
             m: Int = 8, subDim: Int = 8, ksub: Int = 16): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val fs = new Path(indexDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        for (artifact <- Seq("_centroids", "_codebooks"))
-          require(fs.exists(new Path(indexDir, artifact)),
-            s"IvfPqStream needs staged quantizers — run Similarity.stageIvfQuantizer " +
-              s"and Similarity.stagePqCodebooks on $indexDir first")
-        val coarse = Tables.parquet(s, new Path(indexDir, "_centroids").toString)
-        val books = Tables.parquet(s, new Path(indexDir, "_codebooks").toString)
-        val withNorm = batch
-          .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-        val codes = Similarity.vectorCodes(withNorm)
-        val assign = Similarity.nearestCentroid(
-          Similarity.scoreAgainstCentroids(codes, coarse))
-        Similarity.pqEncode(Similarity.subCodes(codes, m, subDim), books, ksub)
-          .join(assign.hint("shuffle_hash"), Seq("vec_id"))
-          .select(col("centroid_id"), col("vec_id"), col("pcode"), col("xn"))
-          .write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(s"$indexDir/batch=$batchId")
-      }
-      .start()
+    Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      def missing = s"IvfPqStream needs staged quantizers — run Similarity.stageIvfQuantizer " +
+        s"and Similarity.stagePqCodebooks on $indexDir first"
+      val coarse = Microbatch.staged(s, indexDir, "_centroids", missing)
+      val books = Microbatch.staged(s, indexDir, "_codebooks", missing)
+      val withNorm = batch
+        .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
+      val codes = Similarity.vectorCodes(withNorm)
+      val assign = Similarity.assignNearest(codes, coarse)
+      val lists = Similarity.pqEncode(Similarity.subCodes(codes, m, subDim), books, ksub)
+        .join(assign.hint("shuffle_hash"), Seq("vec_id"))
+        .select(col("centroid_id"), col("vec_id"), col("pcode"), col("xn"))
+      Microbatch.write(lists, indexDir, batchId, "centroid_id")
+    }
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sources.Tables
 
 /** Continuous embedding ingestion into a materialized IVF index: the
   * streaming face of Similarity.buildIvfIndex, and the ANN sibling of
@@ -15,19 +13,19 @@ import graft.sources.Tables
   * Prerequisite: the coarse quantizer is STAGED (frozen) before the first
   * batch — `Similarity.stageIvfQuantizer` writes `_centroids` into the
   * index dir. Every microbatch then (1) quantizes its vectors and assigns
-  * each to its nearest list with the same sort-free packed-max_by shape
-  * the batch builder uses, scored against the frozen centroids, and (2)
-  * lands under `batch=<id>` partitioned by centroid_id, so the index
-  * layout is uniform two-level (batch, centroid_id) and a query's list
-  * probe still partition-prunes. Training never reruns in-stream: a
+  * each to its nearest list against the frozen centroids with the
+  * codegen'd `Similarity.assignNearest` the batch builder uses, and (2)
+  * lands in its own batch directory partitioned by centroid_id, so the
+  * index layout is uniform two-level (batch, centroid_id) and a query's
+  * list probe still partition-prunes. Training never reruns in-stream: a
   * quantizer that drifted per-batch would scatter one vector's neighbors
   * across lists and silently destroy recall — frozen centroids are what
   * make stream-built and batch-built indexes answer identically
   * (StreamingSpec pins that equality through ivfTopKFromIndex).
   *
-  * Idempotence: a replayed microbatch overwrites its own `batch=<id>`
-  * directory (checkpointed ids are stable), never duplicating rows — the
-  * DedupStream contract.
+  * Idempotence: a replayed microbatch overwrites its own batch directory
+  * (checkpointed ids are stable), never duplicating rows — the
+  * [[Microbatch]] discipline.
   */
 object IvfStream {
 
@@ -37,25 +35,16 @@ object IvfStream {
     */
   def start(vectors: DataFrame, indexDir: String,
             checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val centsPath = new Path(indexDir, "_centroids")
-        val fs = centsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        require(fs.exists(centsPath),
-          s"IvfStream needs a staged quantizer — run Similarity.stageIvfQuantizer($indexDir) first")
-        val cents = Tables.parquet(s, centsPath.toString)
-        val withNorm = batch
-          .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-        val assign = Similarity.nearestCentroid(
-          Similarity.scoreAgainstCentroids(Similarity.vectorCodes(withNorm), cents))
-        withNorm.join(assign.hint("shuffle_hash"), Seq("vec_id"))
-          .select(col("centroid_id"), col("vec_id"), col("embedding"), col("vnorm"))
-          .write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(s"$indexDir/batch=$batchId")
-      }
-      .start()
+    Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val cents = Microbatch.staged(s, indexDir, "_centroids",
+        s"IvfStream needs a staged quantizer — run Similarity.stageIvfQuantizer($indexDir) first")
+      val withNorm = batch
+        .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
+      val assign = Similarity.assignNearest(Similarity.vectorCodes(withNorm), cents)
+      val lists = withNorm.join(assign.hint("shuffle_hash"), Seq("vec_id"))
+        .select(col("centroid_id"), col("vec_id"), col("embedding"), col("vnorm"))
+      Microbatch.write(lists, indexDir, batchId, "centroid_id")
+    }
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
-import graft.sources.Tables
 
 /** Continuous sequence packing: the streaming face of
   * [[graft.operators.Curation.packSequencesSlice]].
@@ -22,55 +20,41 @@ import graft.sources.Tables
   * Replay safety: a failed-and-replayed microbatch must not double-count
   * offsets, so offsets are NOT kept as one mutable running total.
   * Instead each batch overwrites its OWN per-source totals under
-  * `offsets/batch=<id>`, and a batch derives its starting offsets by
-  * summing strictly-prior batch dirs — the same idempotence contract as
-  * [[DedupStream]]'s index appends. Both writes are tiny: packed rows
-  * are delta_tokens/budget, offsets are one row per source.
+  * `offsets/`, and a batch derives its starting offsets by summing
+  * strictly-prior batches' totals — the [[Microbatch]] discipline. Both
+  * writes are tiny: packed rows are delta_tokens/budget, offsets are one
+  * row per source.
   */
 object PackStream {
 
   def start(docs: DataFrame, outDir: String, checkpointDir: String,
             budget: Int = 512): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("source").orderBy("doc_id")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val offsetsDir = s"$outDir/offsets"
-        val fs = new Path(outDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-        val withStart = {
-          val local = batch
-            .withColumn("n_tokens",
-              expr(s"CAST(size(${TextAnalysis.TokensExpr}) AS BIGINT)"))
-            .withColumn("local_strt", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-          if (fs.exists(new Path(offsetsDir))) {
-            val prior = Tables.parquet(s, offsetsDir)
-              // a replayed batch must not see the offsets its own failed
-              // attempt wrote
-              .filter(col("batch") < batchId)
-              .groupBy(col("source"))
-              .agg(sum(col("batch_tokens")).as("base_tokens"))
-            local.join(broadcast(prior), Seq("source"), "left")
-              .withColumn("strt", col("local_strt") + coalesce(col("base_tokens"), lit(0L)))
-          } else local.withColumn("strt", col("local_strt"))
-        }
-        val packed = withStart
-          .withColumn("seq_id", expr(s"strt DIV $budget"))
-          .groupBy(col("source"), col("seq_id"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("seq_tokens"),
-            min(col("doc_id")).as("first_doc"),
-            max(col("doc_id")).as("last_doc"))
-          .localCheckpoint(true) // consumed twice: packed rows + totals
-        packed.write.mode("overwrite").parquet(s"$outDir/packed/batch=$batchId")
-        packed.groupBy(col("source"))
-          .agg(sum(col("seq_tokens")).as("batch_tokens"))
-          .write.mode("overwrite").parquet(s"$offsetsDir/batch=$batchId")
-        ()
-      }
-      .start()
+    Microbatch.start(docs, checkpointDir) { (batch, batchId) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("source").orderBy("doc_id")
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+      val offsetsDir = s"$outDir/offsets"
+      val base = Microbatch.prior(offsetsDir, batchId,
+          batch.select(col("source"), lit(0L).as("batch_tokens")))
+        .groupBy(col("source"))
+        .agg(sum(col("batch_tokens")).as("base_tokens"))
+      val packed = batch
+        .withColumn("n_tokens",
+          expr(s"CAST(size(${TextAnalysis.TokensExpr}) AS BIGINT)"))
+        .withColumn("local_strt", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+        .join(broadcast(base), Seq("source"), "left")
+        .withColumn("strt", col("local_strt") + coalesce(col("base_tokens"), lit(0L)))
+        .withColumn("seq_id", expr(s"strt DIV $budget"))
+        .groupBy(col("source"), col("seq_id"))
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("seq_tokens"),
+          min(col("doc_id")).as("first_doc"),
+          max(col("doc_id")).as("last_doc"))
+        .localCheckpoint(true) // consumed twice: packed rows + totals
+      Microbatch.write(packed, s"$outDir/packed", batchId)
+      val totals = packed.groupBy(col("source"))
+        .agg(sum(col("seq_tokens")).as("batch_tokens"))
+      Microbatch.write(totals, offsetsDir, batchId)
+    }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -14,16 +13,16 @@ import graft.operators.Similarity
   * batch — `Similarity.stagePqCodebooks` writes `_codebooks` into the
   * index dir. Every microbatch then PQ-encodes its vectors against the
   * frozen codebooks (the same pqEncode the batch builder uses — packed
-  * code + reconstruction norm, nothing else persists) and lands under its
-  * own `batch=<id>` directory. Codebooks never retrain in-stream:
+  * code + reconstruction norm, nothing else persists) and lands in its
+  * own batch directory. Codebooks never retrain in-stream:
   * re-coding would silently re-rank the existing corpus — frozen
   * codebooks are what make stream-built and batch-built indexes answer
   * identically (StreamingSpec pins that equality through
   * pqTopKFromIndex).
   *
-  * Idempotence: a replayed microbatch overwrites its own `batch=<id>`
-  * directory (checkpointed ids are stable), never duplicating rows — the
-  * DedupStream contract.
+  * Idempotence: a replayed microbatch overwrites its own batch directory
+  * (checkpointed ids are stable), never duplicating rows — the
+  * [[Microbatch]] discipline.
   */
 object PqStream {
 
@@ -33,21 +32,12 @@ object PqStream {
     */
   def start(vectors: DataFrame, indexDir: String, checkpointDir: String,
             m: Int = 8, subDim: Int = 8, ksub: Int = 16): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val cbPath = new Path(indexDir, "_codebooks")
-        val fs = cbPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        require(fs.exists(cbPath),
-          s"PqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first")
-        val cents = Similarity.storedCodebooks(s, indexDir)
-        Similarity.pqEncode(
-          Similarity.subCodes(Similarity.vectorCodes(batch), m, subDim),
-          cents, ksub)
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      }
-      .start()
+    Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val books = Microbatch.staged(s, indexDir, "_codebooks",
+        s"PqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first")
+      val codes = Similarity.subCodes(Similarity.vectorCodes(batch), m, subDim)
+      Microbatch.write(Similarity.pqEncode(codes, books, ksub), indexDir, batchId)
+    }
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sources.Tables
 
 /** Continuous SemDeDup-style semantic deduplication: the streaming face
   * of Similarity.semanticDedup, completing the family's lifecycle
@@ -16,9 +14,9 @@ import graft.sources.Tables
   * Prerequisite: the coarse quantizer is STAGED (frozen) before the
   * first batch — `Similarity.stageIvfQuantizer` writes `_centroids`
   * into the labels dir. Each microbatch of (vec_id, embedding) rows is
-  * (1) cluster-assigned against the frozen centroids with the sort-free
-  * packed-max_by shape the batch operator uses, (2) screened for drops
-  * against every same-cluster smaller-id row — prior batches via the
+  * (1) cluster-assigned against the frozen centroids with the codegen'd
+  * `Similarity.assignNearest` the batch operator uses, (2) screened for
+  * drops against every same-cluster smaller-id row — prior batches via the
   * persistent labels index (which carries each vector's embedding and
   * norm, so screening never re-reads history) plus the batch's own
   * smaller ids — and (3) appended with its kept/dropped labels, so
@@ -34,11 +32,11 @@ import graft.sources.Tables
   * both scatter neighbors across clusters and flip prior labels —
   * frozen centroids are what make the labeling append-only.
   *
-  * Idempotence: a replayed microbatch overwrites its own `batch=<id>`
+  * Idempotence: a replayed microbatch overwrites its own batch
   * directory and never screens against its own rows from a failed
-  * attempt (`batch < batchId` filter) — the DedupStream contract.
-  * Labels land partitioned by cluster_id, so a steady-state delta's
-  * screening join prunes to touched clusters at the parquet scan.
+  * attempt — the [[Microbatch]] discipline. Labels land partitioned by
+  * cluster_id, so a steady-state delta's screening join prunes to
+  * touched clusters at the parquet scan.
   */
 object SemDedupStream {
 
@@ -52,53 +50,38 @@ object SemDedupStream {
     */
   def start(vectors: DataFrame, labelsDir: String, checkpointDir: String,
             thresholdMicros: Long = 400000L): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val centsPath = new Path(labelsDir, "_centroids")
-        val fs = centsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        require(fs.exists(centsPath),
-          s"SemDedupStream needs a staged quantizer — run Similarity.stageIvfQuantizer($labelsDir) first")
-        val cents = Tables.parquet(s, centsPath.toString)
-        val withNorm = batch
-          .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-        val assign = Similarity.nearestCentroid(
-          Similarity.scoreAgainstCentroids(Similarity.vectorCodes(withNorm), cents))
-          .select(col("vec_id"), col("centroid_id").as("cluster_id"))
-        val newRows = withNorm.join(assign.hint("shuffle_hash"), Seq("vec_id"))
-          .select(col("cluster_id"), col("vec_id"), col("embedding"), col("vnorm"))
-          .localCheckpoint(true)
-        // the comparison corpus: prior batches' members (all of them —
-        // dropped rows still witness drops) plus this batch's own rows;
-        // the vec_b < vec_id filter keeps exactly the smaller-id side
-        val prior =
-          if (Option(fs.globStatus(new Path(labelsDir, "batch=*")))
-              .exists(_.nonEmpty))
-            Tables.parquet(s, labelsDir)
-              .filter(col("batch") < batchId)
-              .select("cluster_id", "vec_id", "embedding", "vnorm")
-          else newRows.limit(0)
-        val earlier = prior.unionByName(newRows)
-          .select(col("cluster_id"), col("vec_id").as("vec_b"),
-            col("embedding").as("eb"), col("vnorm").as("nb"))
-        val drops = newRows
-          .select(col("cluster_id"), col("vec_id"),
-            col("embedding").as("ea"), col("vnorm").as("na"))
-          .join(earlier, Seq("cluster_id"))
-          .filter(col("vec_b") < col("vec_id"))
-          .withColumn("m", expr(Similarity.scoreMicrosFromNorms(
-            "dot_f(ea, eb)", "na", "nb")))
-          .filter(col("m") >= thresholdMicros)
-          .select(col("vec_id")).distinct()
-        newRows
-          .join(drops.withColumn("dropped", lit(true)), Seq("vec_id"), "left")
-          .select(col("cluster_id"), col("vec_id"), col("embedding"),
-            col("vnorm"), not(coalesce(col("dropped"), lit(false))).as("kept"))
-          .write.mode("overwrite").partitionBy("cluster_id")
-          .parquet(s"$labelsDir/batch=$batchId")
-      }
-      .start()
+    Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val cents = Microbatch.staged(s, labelsDir, "_centroids",
+        s"SemDedupStream needs a staged quantizer — run Similarity.stageIvfQuantizer($labelsDir) first")
+      val withNorm = batch
+        .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
+      val assign = Similarity.assignNearest(Similarity.vectorCodes(withNorm), cents)
+        .select(col("vec_id"), col("centroid_id").as("cluster_id"))
+      val newRows = withNorm.join(assign.hint("shuffle_hash"), Seq("vec_id"))
+        .select(col("cluster_id"), col("vec_id"), col("embedding"), col("vnorm"))
+        .localCheckpoint(true)
+      // the comparison corpus: prior batches' members (all of them —
+      // dropped rows still witness drops) plus this batch's own rows;
+      // the vec_b < vec_id filter keeps exactly the smaller-id side
+      val earlier = Microbatch.prior(labelsDir, batchId, newRows)
+        .unionByName(newRows)
+        .select(col("cluster_id"), col("vec_id").as("vec_b"),
+          col("embedding").as("eb"), col("vnorm").as("nb"))
+      val drops = newRows
+        .select(col("cluster_id"), col("vec_id"),
+          col("embedding").as("ea"), col("vnorm").as("na"))
+        .join(earlier, Seq("cluster_id"))
+        .filter(col("vec_b") < col("vec_id"))
+        .withColumn("m", expr(Similarity.scoreMicrosFromNorms(
+          "dot_f(ea, eb)", "na", "nb")))
+        .filter(col("m") >= thresholdMicros)
+        .select(col("vec_id")).distinct()
+      val labels = newRows
+        .join(drops.withColumn("dropped", lit(true)), Seq("vec_id"), "left")
+        .select(col("cluster_id"), col("vec_id"), col("embedding"),
+          col("vnorm"), not(coalesce(col("dropped"), lit(false))).as("kept"))
+      Microbatch.write(labels, labelsDir, batchId, "cluster_id")
+    }
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
-import graft.sources.Tables
 
 /** Continuous-ingestion EXACT substring screening: the streaming face of
   * [[graft.operators.Dedup.substringDedup]], completing the family's
@@ -36,9 +34,8 @@ import graft.sources.Tables
   * semantics; a gram that later turns boilerplate does not retract
   * them).
   *
-  * Idempotence: both writes land under `batch=<id>` subdirectories with
-  * overwrite, and a replayed batch filters its own earlier rows out of
-  * the screen — the DedupStream discipline verbatim.
+  * Idempotence: both writes are per-batch overwrites, and a replayed
+  * batch screens only earlier batches — the [[Microbatch]] discipline.
   */
 object SubstringStream {
 
@@ -49,52 +46,38 @@ object SubstringStream {
   def start(docs: DataFrame, indexDir: String, spansDir: String,
             checkpointDir: String, k: Int = 16, dfCap: Long = 100,
             minLen: Long = 32): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val newGrams = Dedup.gramRows(batch, k)
-          .localCheckpoint(true) // screen + df census + index append
-        val fs = new Path(indexDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val prior =
-          if (fs.exists(new Path(indexDir)))
-            Tables.parquet(s, indexDir)
-              // a replayed batch must not screen against its own rows
-              // from a failed earlier attempt
-              .filter(col("batch") < batchId)
-              .select("doc_id", "pos", "gram")
-          else newGrams.limit(0).select("doc_id", "pos", "gram")
-        // rarity over the WHOLE current corpus — the batch operator's
-        // df-cap semantics as of this batch
-        val all = prior.unionByName(newGrams)
-        val rare = all.select(col("gram"), col("doc_id")).distinct()
-          .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= dfCap).select(col("gram"))
-        val newIds = newGrams.select(col("doc_id")).distinct()
-        val keptNew = newGrams.join(rare, Seq("gram"))
-        val keptPrior = all.join(rare, Seq("gram"))
-          .join(newIds, Seq("doc_id"), "left_anti")
-        // canonical least/greatest orientation with positions following
-        // the swap — a non-monotone arrival pairs correctly with a
-        // LARGER prior id
-        val cross = keptPrior.as("a").join(keptNew.as("b"),
-            col("a.gram") === col("b.gram"))
-          .select(
-            least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-            greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-            when(col("a.doc_id") < col("b.doc_id"), col("a.pos"))
-              .otherwise(col("b.pos")).as("pa"),
-            when(col("a.doc_id") < col("b.doc_id"), col("b.pos"))
-              .otherwise(col("a.pos")).as("pb"))
-        val intra = keptNew.as("a").join(keptNew.as("b"),
-            col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            col("a.pos").as("pa"), col("b.pos").as("pb"))
-        val spans = Dedup.mergeSpans(cross.unionByName(intra), k, minLen)
-        spans.write.mode("overwrite").parquet(s"$spansDir/batch=$batchId")
-        newGrams.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      }
-      .start()
+    Microbatch.start(docs, checkpointDir) { (batch, batchId) =>
+      val newGrams = Dedup.gramRows(batch, k)
+        .localCheckpoint(true) // screen + df census + index append
+      val prior = Microbatch.prior(indexDir, batchId, newGrams)
+      // rarity over the WHOLE current corpus — the batch operator's
+      // df-cap semantics as of this batch
+      val all = prior.unionByName(newGrams)
+      val rare = all.select(col("gram"), col("doc_id")).distinct()
+        .groupBy(col("gram")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= dfCap).select(col("gram"))
+      val newIds = newGrams.select(col("doc_id")).distinct()
+      val keptNew = newGrams.join(rare, Seq("gram"))
+      val keptPrior = all.join(rare, Seq("gram"))
+        .join(newIds, Seq("doc_id"), "left_anti")
+      // canonical least/greatest orientation with positions following
+      // the swap — a non-monotone arrival pairs correctly with a
+      // LARGER prior id
+      val cross = keptPrior.as("a").join(keptNew.as("b"),
+          col("a.gram") === col("b.gram"))
+        .select(
+          least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
+          when(col("a.doc_id") < col("b.doc_id"), col("a.pos"))
+            .otherwise(col("b.pos")).as("pa"),
+          when(col("a.doc_id") < col("b.doc_id"), col("b.pos"))
+            .otherwise(col("a.pos")).as("pb"))
+      val intra = keptNew.as("a").join(keptNew.as("b"),
+          col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col("a.pos").as("pa"), col("b.pos").as("pb"))
+      val spans = Dedup.mergeSpans(cross.unionByName(intra), k, minLen)
+      Microbatch.write(spans, spansDir, batchId)
+      Microbatch.write(newGrams, indexDir, batchId)
+    }
 }

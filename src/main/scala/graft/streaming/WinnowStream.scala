@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
-import graft.sources.Tables
 
 /** Continuous-ingestion partial-copy screening: the streaming face of
   * the winnowed near-dup pair join ([[graft.operators.Dedup.winnowPairs]]).
@@ -36,9 +34,8 @@ import graft.sources.Tables
   * a fingerprint that later turns boilerplate does not retract them
   * (the at-arrival semantics every streaming face here documents).
   *
-  * Idempotence: both writes land under `batch=<id>` subdirectories with
-  * overwrite, and a replayed batch filters its own earlier rows out of
-  * the screen — the DedupStream discipline verbatim.
+  * Idempotence: both writes are per-batch overwrites, and a replayed
+  * batch screens only earlier batches — the [[Microbatch]] discipline.
   */
 object WinnowStream {
 
@@ -50,59 +47,45 @@ object WinnowStream {
             checkpointDir: String, k: Int = 16, w: Int = 8,
             minShared: Long = 3, dfCap: Long = 100,
             overlapMin1e4: Long = 2500): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val newFps = TextAnalysis.winnowSelections(batch, k, w)
-          .select(col("doc_id"), expr("substring(wmin, 1, 32)").as("fp"))
-          .distinct()
-          .localCheckpoint(true) // screen + df census + index append
-        val fs = new Path(indexDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val prior =
-          if (fs.exists(new Path(indexDir)))
-            Tables.parquet(s, indexDir)
-              // a replayed batch must not screen against its own rows
-              // from a failed earlier attempt
-              .filter(col("batch") < batchId)
-              .select("doc_id", "fp")
-          else newFps.limit(0).select("doc_id", "fp")
-        // rarity and containment denominators over the WHOLE current
-        // corpus — the batch operator's df-cap semantics as of this batch
-        val all = prior.unionByName(newFps).localCheckpoint(true)
-        val rare = all.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= dfCap).select(col("fp"))
-        val kept = all.join(rare, Seq("fp"))
-        val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
-        val newIds = newFps.select(col("doc_id")).distinct()
-        val keptNew = kept.join(newIds, Seq("doc_id"))
-        val keptPrior = kept.join(newIds, Seq("doc_id"), "left_anti")
-        // one row per shared KEPT fingerprint; orientation is
-        // least/greatest so keep-first consumers never depend on
-        // arrival order
-        val cross = keptPrior.as("a").join(keptNew.as("b"),
-            col("a.fp") === col("b.fp") && col("a.doc_id") =!= col("b.doc_id"))
-          .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-            greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-        val intra = keptNew.as("a").join(keptNew.as("b"),
-            col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        val flagged = cross.unionByName(intra)
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") >= minShared)
-          .join(sizes.select(col("doc_id").as("doc_a"), col("n_fp").as("na")),
-            Seq("doc_a"))
-          .join(sizes.select(col("doc_id").as("doc_b"), col("n_fp").as("nb")),
-            Seq("doc_b"))
-          .withColumn("overlap_1e4", expr(
-            "CAST((20000 * n_shared + least(na, nb)) DIV (2 * least(na, nb)) AS BIGINT)"))
-          .filter(col("overlap_1e4") >= overlapMin1e4)
-          .select(col("doc_a"), col("doc_b"), col("n_shared"), col("overlap_1e4"))
-        flagged.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-        newFps.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      }
-      .start()
+    Microbatch.start(docs, checkpointDir) { (batch, batchId) =>
+      val newFps = TextAnalysis.winnowSelections(batch, k, w)
+        .select(col("doc_id"), expr("substring(wmin, 1, 32)").as("fp"))
+        .distinct()
+        .localCheckpoint(true) // screen + df census + index append
+      val prior = Microbatch.prior(indexDir, batchId, newFps)
+      // rarity and containment denominators over the WHOLE current
+      // corpus — the batch operator's df-cap semantics as of this batch
+      val all = prior.unionByName(newFps).localCheckpoint(true)
+      val rare = all.groupBy(col("fp")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= dfCap).select(col("fp"))
+      val kept = all.join(rare, Seq("fp"))
+      val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
+      val newIds = newFps.select(col("doc_id")).distinct()
+      val keptNew = kept.join(newIds, Seq("doc_id"))
+      val keptPrior = kept.join(newIds, Seq("doc_id"), "left_anti")
+      // one row per shared KEPT fingerprint; orientation is
+      // least/greatest so keep-first consumers never depend on
+      // arrival order
+      val cross = keptPrior.as("a").join(keptNew.as("b"),
+          col("a.fp") === col("b.fp") && col("a.doc_id") =!= col("b.doc_id"))
+        .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+          greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
+      val intra = keptNew.as("a").join(keptNew.as("b"),
+          col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      val flagged = cross.unionByName(intra)
+        .groupBy(col("doc_a"), col("doc_b"))
+        .agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared)
+        .join(sizes.select(col("doc_id").as("doc_a"), col("n_fp").as("na")),
+          Seq("doc_a"))
+        .join(sizes.select(col("doc_id").as("doc_b"), col("n_fp").as("nb")),
+          Seq("doc_b"))
+        .withColumn("overlap_1e4", expr(
+          "CAST((20000 * n_shared + least(na, nb)) DIV (2 * least(na, nb)) AS BIGINT)"))
+        .filter(col("overlap_1e4") >= overlapMin1e4)
+        .select(col("doc_a"), col("doc_b"), col("n_shared"), col("overlap_1e4"))
+      Microbatch.write(flagged, pairsDir, batchId)
+      Microbatch.write(newFps, indexDir, batchId)
+    }
 }

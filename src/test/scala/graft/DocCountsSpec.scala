@@ -86,6 +86,29 @@ class DocCountsSpec extends AnyFunSuite {
       s"workbook decoded outside sources/xls/: ${hits.mkString(", ")}")
   }
 
+  test("only Microbatch knows the streams' batch-directory layout") {
+    // the per-batch index policy (batch=<id> paths, the replay filter,
+    // what counts as a written batch) lives in one module; a stream that
+    // spells it again drifts from it. TrafficStream.startUpsert keeps its
+    // own, deliberately different, empty-table rule for a whole table.
+    val hits = mainSources().collect {
+      case (p, text) if p.startsWith("src/main/scala/graft/streaming/") &&
+          Seq("batch=$", "col(\"batch\")", "getFileSystem(").exists(text.contains) => p
+    }
+    assert(hits === Seq("src/main/scala/graft/streaming/Microbatch.scala",
+      "src/main/scala/graft/streaming/TrafficStream.scala"))
+  }
+
+  test("streams assign centroids through Similarity.assignNearest") {
+    // assignNearest is the codegen'd twin of the crossJoin + hash-aggregate
+    // spelling; the batch operators use it, so the streams must too
+    val hits = mainSources().collect {
+      case (p, text) if p.startsWith("src/main/scala/graft/streaming/") &&
+          text.contains("nearestCentroid(") => p
+    }
+    assert(hits.isEmpty, s"nearestCentroid called from streaming/: ${hits.mkString(", ")}")
+  }
+
   test("README.md states the derived counts") {
     val readme = read("README.md")
     assert(readme.contains(s"${SparkEntry.queries.size} named queries"),

@@ -985,6 +985,38 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("sessionization splits a gap longer than 30 min by microseconds, as the batch twin does") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // 10:00:00 -> 10:30:00.0005 is 1,800,000,500 us: over the gap by 500 us
+    val events = Seq(
+      Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
+      Event(2, ts("2024-01-01 10:30:00.0005"), 1, "click", 2.0))
+    val input = MemoryStream[Event]
+    val q = EventsStream.sessionize(input.toDS()).writeStream.format("memory")
+      .queryName("subms_sessions").outputMode(OutputMode.Append()).start()
+    try {
+      input.addData(events: _*)
+      q.processAllAvailable()
+      // push the watermark past both sessions so the open one times out
+      input.addData(Event(9, ts("2024-01-01 15:00:00"), 2, "view", 0.0))
+      q.processAllAvailable()
+      input.addData(Event(10, ts("2024-01-01 20:00:00"), 3, "view", 0.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    def us(t: Timestamp) = t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+    val streamed = spark.table("subms_sessions").as[EventsStream.UserSession]
+      .collect().filter(_.user_id == 1)
+      .map(x => (x.n_events, us(x.session_start), us(x.session_end))).toSet
+    val dir = tmpDir("submsevents")
+    events.toDF().write.parquet(s"$dir/events.parquet")
+    val batch = graft.operators.Analytics.sessionizeBatch(spark, dir)
+      .select("n_events", "start_us", "end_us").as[(Long, Long, Long)]
+      .collect().toSet
+    assert(batch.size == 2, s"the batch rule splits the pair: $batch")
+    assert(streamed == batch)
+  }
+
   test("streaming ingestion dedup: later batches screen against earlier ones") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1027,6 +1059,65 @@ class StreamingSpec extends SparkTestBase {
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
       assert(indexed == Set(0L, 1L, 2L, 3L, 10L))
     } finally q.stop()
+  }
+
+  /** What a crash during a batch's first write leaves behind: an
+    * uncommitted attempt under `dir/batch=0` and no committed file.
+    */
+  private def strandFirstAttempt(dir: String): Unit = {
+    val part = java.nio.file.Paths.get(dir,
+      "batch=0/_temporary/0/_temporary/attempt_0/part-00000.snappy.parquet")
+    java.nio.file.Files.createDirectories(part.getParent)
+    java.nio.file.Files.write(part, Array[Byte](1, 2, 3))
+  }
+
+  test("streaming ingestion dedup: a stranded first attempt reads as an empty index") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = tmpDir("dedupstranded")
+    strandFirstAttempt(s"$base/index")
+    val input = MemoryStream[(Long, String)]
+    val body = "the quick brown fox jumps over the lazy dog and runs far away home"
+    val q = graft.streaming.DedupStream.start(
+      input.toDF().toDF("doc_id", "text"),
+      s"$base/index", s"$base/pairs", s"$base/ckpt")
+    try {
+      input.addData((1L, body), (2L, body + " tonight"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val pairs = spark.read.parquet(s"$base/pairs")
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(pairs == Set((1L, 2L)))
+  }
+
+  test("streaming ingestion dedup: a replayed batch screens only earlier batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = tmpDir("dedupreplay")
+    val body = "the quick brown fox jumps over the lazy dog and runs far away home"
+    val other = "completely different words about streaming parquet indexes here"
+    // rows a failed earlier attempt of batch 1 committed: an index entry
+    // that batch 1's doc 10 would pair with, and a pair batch 1 never finds
+    Dedup.bandSigRows(Seq((50L, body)).toDF("doc_id", "text"))
+      .write.parquet(s"$base/index/batch=1")
+    Seq((98L, 99L, 12)).toDF("doc_a", "doc_b", "n_matching")
+      .write.parquet(s"$base/pairs/batch=1")
+    val input = MemoryStream[(Long, String)]
+    val q = graft.streaming.DedupStream.start(
+      input.toDF().toDF("doc_id", "text"),
+      s"$base/index", s"$base/pairs", s"$base/ckpt")
+    try {
+      input.addData((1L, other))
+      q.processAllAvailable()
+      input.addData((10L, body + " tonight"), (11L, other + " again"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val replayed = spark.read.parquet(s"$base/pairs/batch=1")
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(replayed == Set((1L, 11L)), s"batch 1 must pair only with batch 0: $replayed")
+    val indexed = spark.read.parquet(s"$base/index/batch=1")
+      .select("doc_id").distinct().as[Long].collect().toSet
+    assert(indexed == Set(10L, 11L))
   }
 
   test("streaming embedding dedup: later batches screen against earlier ones") {
@@ -1313,6 +1404,26 @@ class StreamingSpec extends SparkTestBase {
     // least one later-half row dropped against an earlier-half keeper
     assert(streamed.exists(t => t._1 > split && !t._3),
       "fixture delta must exercise the cross-batch drop path")
+  }
+
+  test("streaming semantic dedup: a stranded first attempt reads as an empty index") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = tmpDir("semdedupstranded")
+    graft.operators.Similarity.stageIvfQuantizer(spark, Sf, s"$base/labels")
+    strandFirstAttempt(s"$base/labels")
+    val v = spark.read.parquet(s"$Sf/embeddings.parquet")
+      .select("embedding").as[Array[Float]].head()
+    val input = MemoryStream[(Long, Array[Float])]
+    val q = graft.streaming.SemDedupStream.start(
+      input.toDF().toDF("vec_id", "embedding"), s"$base/labels", s"$base/ckpt")
+    try {
+      input.addData((1L, v), (2L, v))
+      q.processAllAvailable()
+    } finally q.stop()
+    val kept = spark.read.parquet(s"$base/labels")
+      .select("vec_id", "kept").as[(Long, Boolean)].collect().toSet
+    assert(kept == Set((1L, true), (2L, false)))
   }
 
   test("streaming semantic decontamination screens identically to the batch operator") {
