@@ -374,10 +374,10 @@ object SparkEntry {
       // prefix index (overwrite — keeps the entry idempotent across
       // reruns), APPEND the newest 20% through the r14 boundary guard,
       // then screen from the grown index. The frozen first-N quantizer
-      // (centroids = vec_id < 16 < split) makes every assignment
-      // identical to the one-shot build, so the parent's oracle text is
-      // exact — the incremental face moves index maintenance, never the
-      // verdict arithmetic.
+      // the build stores (centroids = vec_id < 16 < split) makes every
+      // assignment identical to the one-shot build, so the parent's
+      // oracle text is exact — the incremental face moves index
+      // maintenance, never the verdict arithmetic.
       val maxId = sources.Tables.embeddings(s, d)
         .agg(max(col("vec_id"))).head().getLong(0)
       val split = maxId * 4 / 5
@@ -390,7 +390,7 @@ object SparkEntry {
       val idx = Similarity.appScratchDir(s, "graft_decon_inc", d)
       Similarity.buildIvfIndex(s, d, idx, nLists = 16,
         maxVecIdExclusive = split)
-      Similarity.appendToIvfIndex(s, d, idx, minVecId = split, nLists = 16)
+      Similarity.appendToIvfIndex(s, d, idx, minVecId = split)
       Similarity.semanticDecontaminateFromIndex(s, d, idx)
     }),
     "q_mmr_rerank" -> (Similarity.mmrRerank(_, _)),

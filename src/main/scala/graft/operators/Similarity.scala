@@ -278,30 +278,33 @@ object Similarity {
       .agg(max_by(col("centroid_id"),
         expr("cm * CAST(65536 AS BIGINT) - centroid_id")).as("centroid_id"))
 
+  /** Corpus assignment and query probes both go through [[selectLists]]:
+    * the codegen'd [[graft.functions.TopCentroidsFloat]] twin of the
+    * crossJoin + [[nearestCentroid]] spelling, bit-identical to it (same
+    * dot_f fold, floor and (cm DESC, centroid_id) order), so the DuckDB
+    * oracle's row_number text is unchanged.
+    */
   def ivfTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
               nLists: Int = 16, nProbe: Int = 3): DataFrame = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
     registerFunctions(s)
     val emb = embWithNorm(s, dir)
-    val centroids = emb.filter(col("vec_id") < nLists)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"),
-        col("vnorm").as("cnorm"))
-    val scoredC = emb.crossJoin(broadcast(centroids))
-      .withColumn("cm",
-        expr(scoreMicrosFromNorms("dot_f(embedding, cv)", "vnorm", "cnorm")))
-    val assign = nearestCentroid(scoredC)
-    // per query: the nProbe nearest lists. nQueries×nLists rows — a window
-    // over this side is bounded by the query set, not the corpus.
-    val wProbe = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cm").desc, col("centroid_id"))
-    val probes = scoredC.filter(col("vec_id") < nQueries)
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
+    val q = FloatCentroids(firstNCentroids(emb, nLists))
+    rerankTopK(probeCandidates(selectLists(emb, q, 1), emb, q, nQueries, nProbe), emb, k)
+  }
+
+  /** The IVF candidate screen shared by every top-k path, inline or from
+    * an index: each query (vec_id < nQueries of `emb`) selects its nProbe
+    * lists of `q`, and every other vector those lists hold in `lists`
+    * (centroid_id, vec_id) is a distinct (query_id, vec_id) candidate.
+    */
+  private def probeCandidates(lists: DataFrame, emb: DataFrame, q: Centroids,
+                              nQueries: Int, nProbe: Int): DataFrame = {
+    val probes = selectLists(emb.filter(col("vec_id") < nQueries), q, nProbe)
       .select(col("vec_id").as("query_id"), col("centroid_id"))
-    val candidates = assign.join(broadcast(probes), Seq("centroid_id"))
+    lists.join(broadcast(probes), Seq("centroid_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
-    rerankTopK(candidates, emb, k)
   }
 
   /** BIGINT quantization codes of the embedding: floor(x·2^20 + 0.5) per
@@ -358,8 +361,11 @@ object Similarity {
     * fold, same floor/packing — the DuckDB oracle is unchanged); the
     * packed key unpacks exactly because ids are < 65536.
     *
-    * Returns (vec_id, centroid_id). Query-sized probe scoring (top-nProbe
-    * per query, needs ALL centroid scores) stays on
+    * Returns (vec_id, centroid_id, best_cm): the winning score rides in
+    * the packed key (packed = cm·65536 − centroid_id, so
+    * cm = (packed + centroid_id) / 65536 exactly); consumers that drop
+    * best_cm have it pruned from the plan. Query-sized probe scoring
+    * (top-nProbe per query, needs ALL centroid scores) stays on
     * [[scoreAgainstCentroids]] — bounded by the query set there.
     */
   private[graft] def assignNearest(codes: DataFrame, centroids: DataFrame): DataFrame = {
@@ -371,29 +377,6 @@ object Similarity {
     val mats = rows.map(_.getSeq[Long](1).toSeq)
     // cqn replicated from the dataflow spelling: left-to-right double
     // fold of CAST(c)*CAST(c), then sqrt — identical IEEE sequence
-    val cqns = mats.map { m =>
-      var acc = 0.0; val it = m.iterator
-      while (it.hasNext) { val v = it.next().toDouble; acc += v * v }
-      math.sqrt(acc)
-    }
-    codes.withColumn("packed", call_function("nearest_centroid",
-        col("code"), col("vqn"),
-        typedlit(mats.toSeq), typedlit(cqns.toSeq), typedlit(ids.toSeq)))
-      .select(col("vec_id"),
-        expr("pmod(-packed, CAST(65536 AS BIGINT))").as("centroid_id"))
-  }
-
-  /** [[assignNearest]] keeping the winning score: (vec_id, centroid_id,
-    * best_cm) — the clusterReport consumer.
-    */
-  private[graft] def assignNearestWithCm(codes: DataFrame,
-                                         centroids: DataFrame): DataFrame = {
-    registerFunctions(codes.sparkSession)
-    val rows = centroids.select(col("centroid_id"), col("csum")).collect()
-    val ids = rows.map(_.getLong(0))
-    require(ids.forall(id => id >= 0 && id < 65536),
-      "packed assignment requires 0 <= centroid_id < 65536")
-    val mats = rows.map(_.getSeq[Long](1).toSeq)
     val cqns = mats.map { m =>
       var acc = 0.0; val it = m.iterator
       while (it.hasNext) { val v = it.next().toDouble; acc += v * v }
@@ -459,22 +442,8 @@ object Similarity {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
     registerFunctions(s)
     val emb = embWithNorm(s, dir)
-    val codes = vectorCodes(emb)
-    val centroids = trainCentroids(codes, nLists, iters)
-    // corpus side through the codegen'd argmax; ONLY the query rows pay
-    // the all-centroid scoring (the probe window needs every score)
-    val assign = assignNearest(codes, centroids)
-    val wProbe = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cm").desc, col("centroid_id"))
-    val probes = scoreAgainstCentroids(
-        codes.filter(col("vec_id") < nQueries), centroids)
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-    val candidates = assign.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id").distinct()
-    rerankTopK(candidates, emb, k)
+    val q = CodeCentroids(trainCentroids(vectorCodes(emb), nLists, iters))
+    rerankTopK(probeCandidates(selectLists(emb, q, 1), emb, q, nQueries, nProbe), emb, k)
   }
 
   /** Hard-negative mining for contrastive training: for each query
@@ -526,7 +495,7 @@ object Similarity {
     val emb = embWithNorm(s, dir)
     val codes = vectorCodes(emb)
     val centroids = trainCentroids(codes, nLists, iters)
-    assignNearestWithCm(codes, centroids)
+    assignNearest(codes, centroids)
       .groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("best_cm")).as("cm_sum"))
       .withColumn("mean_sim_micro", expr("(cm_sum - cm_sum % n_vecs) DIV n_vecs"))
@@ -801,9 +770,12 @@ object Similarity {
     * against a materialized index (the IVF layout partitioned by list,
     * payload = packed codes instead of float vectors) the probed lists
     * prune at the scan and the float embeddings are never read at query
-    * time. Candidate generation reuses the sort-free packed max_by
-    * assignment; scoring joins candidates to packed codes by vec_id
-    * (shuffle-hash — no sort) and broadcasts the per-query luts.
+    * time. Candidate generation goes through [[selectLists]]: the corpus
+    * assignment is the codegen'd [[graft.functions.NearestCentroidPacked]]
+    * twin of the crossJoin + [[nearestCentroid]] spelling, bit-identical
+    * to it, so the DuckDB oracle is unchanged; scoring joins candidates
+    * to packed codes by vec_id (shuffle-hash — no sort) and broadcasts
+    * the per-query luts.
     */
   def ivfPqTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
                 nLists: Int = 16, nProbe: Int = 3, coarseIters: Int = 2,
@@ -814,18 +786,8 @@ object Similarity {
     val emb = embWithNorm(s, dir)
     val codes = vectorCodes(emb)
     // coarse routing: trained centroids, probe the nProbe nearest lists
-    val centroids = trainCentroids(codes, nLists, coarseIters)
-    val scoredC = scoreAgainstCentroids(codes, centroids)
-    val assign = nearestCentroid(scoredC)
-    val wProbe = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cm").desc, col("centroid_id"))
-    val probes = scoredC.filter(col("vec_id") < nQueries)
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-    val candidates = assign.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id").distinct()
+    val q = CodeCentroids(trainCentroids(codes, nLists, coarseIters))
+    val candidates = probeCandidates(selectLists(emb, q, 1), emb, q, nQueries, nProbe)
     // fine scoring: ADC over the candidates only
     val (withNorm, lutArr) = pqArtifacts(codes, nQueries, m, subDim, ksub, pqIters)
     val scored = candidates.join(withNorm.hint("shuffle_hash"), Seq("vec_id"))
@@ -993,15 +955,14 @@ object Similarity {
     val emb = embWithNorm(s, dir).filter(col("vec_id") < maxVecIdExclusive)
     val codes = vectorCodes(emb)
     val trainCodes = codes.filter(col("vec_id") < trainMaxVecIdExclusive)
-    val coarse = trainCentroids(trainCodes, nLists, coarseIters)
+    val coarse = CodeCentroids(trainCentroids(trainCodes, nLists, coarseIters))
     val books = trainPqCodebooks(subCodes(trainCodes, m, subDim), ksub, pqIters)
-    val assign = assignNearest(codes, coarse)
     pqEncode(subCodes(codes, m, subDim), books, ksub)
-      .join(assign.hint("shuffle_hash"), Seq("vec_id"))
+      .join(selectLists(emb, coarse, 1).hint("shuffle_hash"), Seq("vec_id"))
       .select(col("centroid_id"), col("vec_id"), col("pcode"), col("xn"))
       .repartition(col("centroid_id")) // one file per list (see buildIvfIndex)
       .write.mode("overwrite").partitionBy("centroid_id").parquet(indexDir)
-    coarse.write.mode("overwrite").parquet(centroidsPath(indexDir).toString)
+    saveQuantizer(coarse, indexDir)
     books.write.mode("overwrite").parquet(codebooksPath(indexDir).toString)
     indexDir
   }
@@ -1017,11 +978,9 @@ object Similarity {
                          ksub: Int = 16): String = {
     registerFunctions(s)
     val delta = embWithNorm(s, dir).filter(col("vec_id") >= minVecId)
-    val codes = vectorCodes(delta)
-    val coarse = Tables.parquet(s, centroidsPath(indexDir).toString)
     val books = storedCodebooks(s, indexDir)
-    val assign = assignNearest(codes, coarse)
-    pqEncode(subCodes(codes, m, subDim), books, ksub)
+    val assign = selectLists(delta, loadQuantizer(s, indexDir), 1)
+    pqEncode(subCodes(vectorCodes(delta), m, subDim), books, ksub)
       .join(assign.hint("shuffle_hash"), Seq("vec_id"))
       .select(col("centroid_id"), col("vec_id"), col("pcode"), col("xn"))
       .repartition(col("centroid_id")) // one file per touched list (see buildIvfIndex)
@@ -1045,11 +1004,7 @@ object Similarity {
     registerFunctions(s)
     val queries = embWithNorm(s, dir).filter(col("vec_id") < nQueries)
     val qCodes = vectorCodes(queries)
-    val coarse = Tables.parquet(s, centroidsPath(indexDir).toString)
-    val probes = scoreAgainstCentroids(qCodes, coarse)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cm").desc, col("centroid_id"))))
-      .filter(col("rn") <= nProbe)
+    val probes = selectLists(queries, loadQuantizer(s, indexDir), nProbe)
       .select(col("vec_id").as("query_id"), col("centroid_id"))
     val lutArr = pqLuts(qCodes, subCodes(qCodes, m, subDim),
       storedCodebooks(s, indexDir), nQueries, ksub)
@@ -1192,11 +1147,9 @@ object Similarity {
                                thresholdMicros: Long = 400000L,
                                maxBlock: Int = 1 << 16): DataFrame = {
     registerFunctions(s)
-    val cents = Tables.parquet(s,
-      centroidsPath(quantizerDir).toString)
     val emb = embWithNorm(s, dir)
     val delta = emb.filter(col("vec_id") >= minDeltaId)
-    val deltaAssign = assignNearest(vectorCodes(delta), cents)
+    val deltaAssign = selectLists(delta, loadQuantizer(s, quantizerDir), 1)
       .select(col("vec_id"), col("centroid_id").as("cluster_id"))
     // every (vec, cluster) the delta can collide with: prior members plus
     // the delta's own smaller ids
@@ -1227,10 +1180,11 @@ object Similarity {
   /** Coarse-quantizer choice for the materialized IVF index lifecycle.
     * FirstN is the deterministic baseline (centroids = the first nLists
     * vectors, scored in exact float space). Trained runs the fixed-
-    * iteration spherical k-means ([[trainCentroids]]) at build time and
-    * PERSISTS the centroids inside the index (`_centroids/`, invisible to
-    * the posting-list scan — Spark ignores underscore-prefixed paths), so
-    * append and query reuse the frozen quantizer instead of retraining:
+    * iteration spherical k-means ([[trainCentroids]]) at build time.
+    * Either way the build PERSISTS the quantizer inside the index
+    * (`_centroids_f/` or `_centroids/`, invisible to the posting-list
+    * scan — Spark ignores underscore-prefixed paths), so append and query
+    * reuse the frozen quantizer, and its width, instead of rebuilding it:
     * train once, append forever — the standard IVF contract, and the only
     * one under which build(prefix) + append(rest) == build(all).
     * trainMaxVecIdExclusive bounds the TRAINING corpus (not the indexed
@@ -1242,17 +1196,82 @@ object Similarity {
   final case class TrainedQuantizer(iters: Int = 2,
       trainMaxVecIdExclusive: Long = Long.MaxValue) extends IvfQuantizer
 
-  private def centroidsPath(indexDir: String) =
-    new org.apache.hadoop.fs.Path(indexDir, "_centroids")
-
-  /** The persisted trained centroids, if this index was built with
-    * [[TrainedQuantizer]] — append/query auto-detect the quantizer from
-    * the index itself, so the two can never disagree with the build.
+  /** A built coarse quantizer: the centroid table list selection scores
+    * against, and the artifact name it persists under.
+    *  - [[FloatCentroids]]: (centroid_id, cv, cnorm), exact float space —
+    *    the first-N table ([[firstNCentroids]]), stored as `_centroids_f`;
+    *  - [[CodeCentroids]]: (centroid_id, csum), integer code space — the
+    *    k-means sums ([[trainCentroids]]), stored as `_centroids`.
     */
-  private def storedCentroids(s: SparkSession, indexDir: String): Option[DataFrame] = {
-    val p = centroidsPath(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(Tables.parquet(s, p.toString)) else None
+  private[graft] sealed trait Centroids {
+    def table: DataFrame
+    def artifact: String
+  }
+  private[graft] final case class FloatCentroids(table: DataFrame) extends Centroids {
+    def artifact: String = "_centroids_f"
+  }
+  private[graft] final case class CodeCentroids(table: DataFrame) extends Centroids {
+    def artifact: String = "_centroids"
+  }
+
+  /** The first-N float quantizer table: the first nLists vectors of
+    * `emb` (vec_id, embedding, vnorm) as (centroid_id, cv, cnorm).
+    */
+  private def firstNCentroids(emb: DataFrame, nLists: Int): DataFrame =
+    emb.filter(col("vec_id") < nLists)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"),
+        col("vnorm").as("cnorm"))
+
+  /** THE IVF list selector: the k lists of `q` each (vec_id, embedding,
+    * vnorm) row of `vecs` routes to, as (vec_id, centroid_id) rows —
+    * k = 1 is assignment, k = nProbe is the probe fan-out. Every build,
+    * append, probe and stream in the IVF family selects through here, so
+    * they all rank lists by the same (cm DESC, centroid_id) order:
+    *  - float centroids: the codegen'd top-k expression
+    *    ([[selectListsFloat]]), any k;
+    *  - code centroids, k = 1: the codegen'd argmax ([[assignNearest]]);
+    *  - code centroids, k > 1: all-centroid scoring plus a row_number
+    *    window — nLists rows per vector, used where `vecs` is query-sized.
+    */
+  private[graft] def selectLists(vecs: DataFrame, q: Centroids, k: Int): DataFrame =
+    q match {
+      case FloatCentroids(t) => selectListsFloat(vecs, t, k)
+      case CodeCentroids(t) if k == 1 =>
+        assignNearest(vectorCodes(vecs), t).select(col("vec_id"), col("centroid_id"))
+      case CodeCentroids(t) =>
+        scoreAgainstCentroids(vectorCodes(vecs), t)
+          .withColumn("rn", row_number().over(Window.partitionBy(col("vec_id"))
+            .orderBy(col("cm").desc, col("centroid_id"))))
+          .filter(col("rn") <= k)
+          .select(col("vec_id"), col("centroid_id"))
+    }
+
+  /** Persist `q` into `dir` as its artifact (overwriting). */
+  private def saveQuantizer(q: Centroids, dir: String): Unit =
+    q.table.write.mode("overwrite")
+      .parquet(new org.apache.hadoop.fs.Path(dir, q.artifact).toString)
+
+  /** The quantizer an index or stage directory holds — `_centroids`
+    * (trained) or `_centroids_f` (first-N) — so append, query and stream
+    * can never disagree with the build about the quantizer or its width.
+    * A directory holding neither, or both, is rejected.
+    */
+  private[graft] def loadQuantizer(s: SparkSession, dir: String): Centroids = {
+    val conf = s.sparkContext.hadoopConfiguration
+    def open(artifact: String): Option[DataFrame] = {
+      val p = new org.apache.hadoop.fs.Path(dir, artifact)
+      if (p.getFileSystem(conf).exists(p)) Some(Tables.parquet(s, p.toString)) else None
+    }
+    (open("_centroids"), open("_centroids_f")) match {
+      case (Some(t), None) => CodeCentroids(t)
+      case (None, Some(t)) => FloatCentroids(t)
+      case (None, None) => throw new IllegalArgumentException(
+        s"no IVF quantizer in $dir (neither _centroids nor _centroids_f): build " +
+          "the index with Similarity.buildIvfIndex, or stage a quantizer with " +
+          "Similarity.stageIvfQuantizer (or stageEvalScreen) first")
+      case _ => throw new IllegalArgumentException(
+        s"$dir holds both _centroids and _centroids_f; an index has one quantizer")
+    }
   }
 
   /** Train the coarse quantizer and persist ONLY the `_centroids`
@@ -1272,8 +1291,7 @@ object Similarity {
     // frozen at build time, and downstream incremental/streaming faces
     // inherit its width from `_centroids` — they never re-derive
     val lists = resolveNLists(nLists, emb)
-    trainCentroids(vectorCodes(emb), lists, iters)
-      .write.mode("overwrite").parquet(centroidsPath(indexDir).toString)
+    saveQuantizer(CodeCentroids(trainCentroids(vectorCodes(emb), lists, iters)), indexDir)
     indexDir
   }
 
@@ -1295,8 +1313,8 @@ object Similarity {
     * Returns (vec_id, centroid_id), one row per (vector, selected list):
     * k=1 is assignment, k=nProbe is the probe fan-out.
     */
-  private[graft] def selectListsFloat(emb: DataFrame, centroids: DataFrame,
-                                      k: Int): DataFrame = {
+  private def selectListsFloat(emb: DataFrame, centroids: DataFrame,
+                               k: Int): DataFrame = {
     registerFunctions(emb.sparkSession)
     val rows = centroids.select(col("centroid_id"), col("cv"), col("cnorm")).collect()
     val ids = rows.map(_.getLong(0))
@@ -1311,28 +1329,12 @@ object Similarity {
         lit(k))).as("centroid_id"))
   }
 
-  /** Sort-free (vec_id, centroid_id) assignment of `emb` rows: exact
-    * float scoring against the first-N centroids, or code-space scoring
-    * against an explicit trained centroid table.
-    */
-  private def assignToLists(emb: DataFrame, nLists: Int,
-                            trained: Option[DataFrame]): DataFrame =
-    trained match {
-      case Some(cents) =>
-        assignNearest(vectorCodes(emb), cents)
-      case None =>
-        val centroids = emb.filter(col("vec_id") < nLists)
-          .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"),
-            col("vnorm").as("cnorm"))
-        selectListsFloat(emb, centroids, 1)
-    }
-
   /** Materialized IVF index — the pay-at-load path SCALE.md describes:
     * assignment runs ONCE (one corpus pass against broadcast centroids),
     * lands as parquet partitioned by centroid list, and every subsequent
     * query prunes to its probed lists' partitions instead of recomputing
-    * the quantizer. With [[TrainedQuantizer]] the k-means centroids are
-    * trained first and persisted alongside the lists. Returns the index
+    * the quantizer. The quantizer — first-N table or trained k-means
+    * centroids — is persisted alongside the lists. Returns the index
     * directory.
     */
   def buildIvfIndex(s: SparkSession, dir: String, indexDir: String,
@@ -1345,17 +1347,15 @@ object Similarity {
     registerFunctions(s)
     val emb = embWithNorm(s, dir)
       .filter(col("vec_id") < maxVecIdExclusive)
-    val trained = quantizer match {
+    val q = quantizer match {
       case TrainedQuantizer(iters, trainMax) =>
-        Some(trainCentroids(
+        CodeCentroids(trainCentroids(
           vectorCodes(emb.filter(col("vec_id") < trainMax)), nLists, iters))
-      case FirstNQuantizer => None
+      case FirstNQuantizer => FloatCentroids(firstNCentroids(emb, nLists))
     }
-    // same sort-free max_by assignment as ivfTopK. The embedding payload
-    // is re-attached by a shuffled-hash join on vec_id AFTER the agg
-    // (carrying it through the agg buffer would force SortAggregate;
-    // joining back shuffles the corpus once with no sort — shuffle_hash
-    // hint keeps AQE from planning a sort-merge join at scale)
+    // sort-free assignment; the embedding payload is re-attached by a
+    // shuffled-hash join on vec_id (shuffle_hash hint keeps AQE from
+    // planning a sort-merge join at scale)
     // repartition ON the partition column before the partitioned write:
     // without it every one of the ~32 upstream tasks opens a file in
     // every centroid directory — nLists × tasks files (sf10 at
@@ -1363,26 +1363,24 @@ object Similarity {
     // write+relist at 145s, dwarfing the mining itself). One skinny
     // shuffle co-locates each list into a single task => one file per
     // list, and every later probe read plans against nLists files.
-    emb.join(assignToLists(emb, nLists, trained).hint("shuffle_hash"), Seq("vec_id"))
+    emb.join(selectLists(emb, q, 1).hint("shuffle_hash"), Seq("vec_id"))
       .select(col("centroid_id"), col("vec_id"), col("embedding"), col("vnorm"))
       .repartition(col("centroid_id"))
       .write.mode("overwrite").partitionBy("centroid_id").parquet(indexDir)
-    trained.foreach(_.write.mode("overwrite")
-      .parquet(centroidsPath(indexDir).toString))
+    saveQuantizer(q, indexDir)
     indexDir
   }
 
   /** Append a vector delta (vec_id >= minVecId) to a prebuilt IVF index:
-    * assignment runs over the DELTA ONLY against the same deterministic
-    * centroids, and the new rows land inside the existing list partitions
+    * assignment runs over the DELTA ONLY against the index's stored
+    * quantizer, and the new rows land inside the existing list partitions
     * (parquet append) without touching prior rows — the incremental path
     * a continuously-embedded corpus needs, symmetric with
     * Dedup.minHashLshIncremental. OperatorSpec pins build(all) ==
     * build(prefix) + append(rest) at the query level.
     */
   def appendToIvfIndex(s: SparkSession, dir: String, indexDir: String,
-                       minVecId: Long, nLists: Int = 16): String = {
-    require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
+                       minVecId: Long): String = {
     registerFunctions(s)
     // Uniqueness guard at the APPEND BOUNDARY: every from-index consumer
     // (bitextMarginFromIndex dropped its defensive dropDuplicates on this
@@ -1397,21 +1395,9 @@ object Similarity {
       s"appendToIvfIndex: index at $indexDir already contains vec_id " +
         s"${clash.head.getLong(0)} >= minVecId=$minVecId — appending would " +
         "duplicate index rows; rebuild the index or append a disjoint delta")
-    val emb = embWithNorm(s, dir)
-    val delta = emb.filter(col("vec_id") >= minVecId)
-    // quantizer auto-detected from the index: a trained index appends
-    // with its own frozen centroids (first-N uses the corpus head, which
-    // predates any delta — deterministic under appends either way)
-    val trained = storedCentroids(s, indexDir)
-    val assignSrc = trained match {
-      case Some(_) => assignToLists(delta, nLists, trained)
-      case None =>
-        val centroids = emb.filter(col("vec_id") < nLists)
-          .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"),
-            col("vnorm").as("cnorm"))
-        selectListsFloat(delta, centroids, 1)
-    }
-    delta.join(assignSrc.hint("shuffle_hash"), Seq("vec_id"))
+    val delta = embWithNorm(s, dir).filter(col("vec_id") >= minVecId)
+    delta.join(selectLists(delta, loadQuantizer(s, indexDir), 1).hint("shuffle_hash"),
+        Seq("vec_id"))
       .select(col("centroid_id"), col("vec_id"), col("embedding"), col("vnorm"))
       .repartition(col("centroid_id")) // one file per touched list (see buildIvfIndex)
       .write.mode("append").partitionBy("centroid_id").parquet(indexDir)
@@ -1441,7 +1427,7 @@ object Similarity {
                       targetFileBytes: Long = 128L * 1024 * 1024): String =
     compactIndexDir(s, indexDir, targetFileBytes,
       Seq("centroid_id", "vec_id", "embedding", "vnorm"),
-      partitionCol = Some("centroid_id"), artifacts = Seq("_centroids"))
+      partitionCol = Some("centroid_id"), artifacts = Seq("_centroids", "_centroids_f"))
 
   /** compactIvfIndex's sibling for the PQ index layout (flat packed-code
     * table, `_codebooks` carried across) — the maintenance step after
@@ -1588,34 +1574,12 @@ object Similarity {
     */
   def ivfTopKFromIndex(s: SparkSession, dir: String, indexDir: String,
                        nQueries: Int = 10, k: Int = 5,
-                       nLists: Int = 16, nProbe: Int = 3): DataFrame = {
+                       nProbe: Int = 3): DataFrame = {
     registerFunctions(s)
     val emb = embWithNorm(s, dir)
-    val queries = emb.filter(col("vec_id") < nQueries)
-    // probe scoring matches the index's quantizer (auto-detected): code-
-    // space cosine vs stored trained centroids, or exact float vs first-N.
-    // nQueries×nLists rows either way — the window is bounded by the
-    // query set, never the corpus.
-    val scoredQ = storedCentroids(s, indexDir) match {
-      case Some(cents) => scoreAgainstCentroids(vectorCodes(queries), cents)
-      case None =>
-        val centroids = emb.filter(col("vec_id") < nLists)
-          .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"),
-            col("vnorm").as("cnorm"))
-        queries.crossJoin(broadcast(centroids))
-          .withColumn("cm",
-            expr(scoreMicrosFromNorms("dot_f(embedding, cv)", "vnorm", "cnorm")))
-    }
-    val probes = scoredQ
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cm").desc, col("centroid_id"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
     val index = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
-    val candidates = index.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id").distinct()
-    rerankTopK(candidates, emb, k)
+    rerankTopK(probeCandidates(index, emb, loadQuantizer(s, indexDir), nQueries, nProbe),
+      emb, k)
   }
 
   /** Per-label centroid affinity in EXACT integer arithmetic: components
@@ -2376,32 +2340,14 @@ object Similarity {
     */
   def bitextMarginFromIndex(s: SparkSession, dir: String, indexDir: String,
                             k: Int = 4, thresholdMicro: Long = 1060000L,
-                            nLists: Int = 16, nProbe: Int = 3): DataFrame = {
+                            nProbe: Int = 3): DataFrame = {
     registerFunctions(s)
-    val emb = embWithNorm(s, dir)
-    val aSide = emb.filter(col("vec_id") % 2 === 0)
-    // probe selection matches the index's quantizer (the ivfTopKFromIndex
-    // dispatch): code-space vs stored trained centroids, exact vs first-N.
+    val aSide = embWithNorm(s, dir).filter(col("vec_id") % 2 === 0)
     // The A side is CORPUS-sized here (a whole crawl, not a bounded query
-    // set), so the first-N branch runs the codegen'd top-k expression —
-    // the crossJoin + corpus-wide window spelling materialized
-    // |A| × nLists rows and measured 14x/decade at sf10 under AutoNLists
-    // (the r12 semanticDedup assignment lesson, probe edition).
-    val probes = storedCentroids(s, indexDir) match {
-      case Some(cents) =>
-        scoreAgainstCentroids(vectorCodes(aSide), cents)
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("vec_id"))
-              .orderBy(col("cm").desc, col("centroid_id"))))
-          .filter(col("rn") <= nProbe)
-          .select(col("vec_id").as("a_id"), col("centroid_id"))
-      case None =>
-        val centroids = emb.filter(col("vec_id") < nLists)
-          .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"),
-            col("vnorm").as("cnorm"))
-        selectListsFloat(aSide, centroids, nProbe)
-          .select(col("vec_id").as("a_id"), col("centroid_id"))
-    }
+    // set): a first-N index selects through the codegen'd top-k
+    // expression, never an |A| × nLists crossJoin + window
+    val probes = selectLists(aSide, loadQuantizer(s, indexDir), nProbe)
+      .select(col("vec_id").as("a_id"), col("centroid_id"))
     val index = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
       .filter(col("vec_id") % 2 === 1)
       .select(col("centroid_id"), col("vec_id").as("b_id"),
@@ -2473,7 +2419,7 @@ object Similarity {
     val lists = resolveNLists(nLists, embWithNorm(s, dir))
     val scratch = appScratchDir(s, "graft_bitext_ivf", dir)
     buildIvfIndex(s, dir, scratch, lists)
-    bitextMarginFromIndex(s, dir, scratch, k, thresholdMicro, lists, nProbe)
+    bitextMarginFromIndex(s, dir, scratch, k, thresholdMicro, nProbe)
   }
 
   /** [[bitextMarginIndexed]] as DuckDB SQL: the
@@ -2599,29 +2545,12 @@ object Similarity {
   def semanticDecontaminateFromIndex(s: SparkSession, dir: String,
                                      indexDir: String,
                                      thresholdMicro: Long = 350000L,
-                                     evalMod: Int = 97, nLists: Int = 16,
+                                     evalMod: Int = 97,
                                      nProbe: Int = 3): DataFrame = {
     registerFunctions(s)
-    val emb = embWithNorm(s, dir)
-    val evalQ = emb.filter(pmod(col("vec_id"), lit(evalMod)) === 0)
-    // probe selection matches the index's quantizer (the ivfTopKFromIndex
-    // dispatch): code-space vs stored trained centroids, exact vs
-    // first-N via the codegen'd top-k expression (the r13 probe lesson).
-    val probes = storedCentroids(s, indexDir) match {
-      case Some(cents) =>
-        scoreAgainstCentroids(vectorCodes(evalQ), cents)
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("vec_id"))
-              .orderBy(col("cm").desc, col("centroid_id"))))
-          .filter(col("rn") <= nProbe)
-          .select(col("vec_id").as("eval_id"), col("centroid_id"))
-      case None =>
-        val centroids = emb.filter(col("vec_id") < nLists)
-          .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"),
-            col("vnorm").as("cnorm"))
-        selectListsFloat(evalQ, centroids, nProbe)
-          .select(col("vec_id").as("eval_id"), col("centroid_id"))
-    }
+    val evalQ = embWithNorm(s, dir).filter(pmod(col("vec_id"), lit(evalMod)) === 0)
+    val probes = selectLists(evalQ, loadQuantizer(s, indexDir), nProbe)
+      .select(col("vec_id").as("eval_id"), col("centroid_id"))
     val index = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
       .filter(pmod(col("vec_id"), lit(evalMod)) =!= 0)
       .select(col("centroid_id"), col("vec_id"), col("embedding").as("bv"),
@@ -2659,7 +2588,7 @@ object Similarity {
     val scratch = appScratchDir(s, "graft_decon_ivf", dir)
     buildIvfIndex(s, dir, scratch, lists)
     semanticDecontaminateFromIndex(s, dir, scratch, thresholdMicro, evalMod,
-      lists, nProbe)
+      nProbe)
   }
 
   private def evalProbesDir(stageDir: String): String =
@@ -2686,27 +2615,18 @@ object Similarity {
                       nProbe: Int = 3): String = {
     registerFunctions(s)
     val emb = embWithNorm(s, dir)
-    val lists = resolveNLists(nLists, emb)
-    val centroids = emb.filter(col("vec_id") < lists)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"),
-        col("vnorm").as("cnorm"))
-    centroids.write.mode("overwrite").parquet(
-      new org.apache.hadoop.fs.Path(stageDir, "_centroids_f").toString)
+    val q = FloatCentroids(firstNCentroids(emb, resolveNLists(nLists, emb)))
+    saveQuantizer(q, stageDir)
     val evalQ = emb.filter(pmod(col("vec_id"), lit(evalMod)) === 0)
     // the eval id is stored AS vec_id so the probe table shares the index
     // family's tombstone artifact verbatim (_tombstones keys on vec_id)
-    selectListsFloat(evalQ, centroids, nProbe)
+    selectLists(evalQ, q, nProbe)
       .join(evalQ.select(col("vec_id"), col("embedding").as("ev"),
         col("vnorm").as("en")), Seq("vec_id"))
       .select(col("centroid_id"), col("vec_id"), col("ev"), col("en"))
       .write.mode("overwrite").parquet(evalProbesDir(stageDir))
     stageDir
   }
-
-  /** The staged quantizer table of [[stageEvalScreen]]. */
-  def stagedScreenCentroids(s: SparkSession, stageDir: String): DataFrame =
-    Tables.parquet(s,
-      new org.apache.hadoop.fs.Path(stageDir, "_centroids_f").toString)
 
   /** The staged eval-probe table, with pending `_tombstones` (retired
     * eval docs) screened out — read-time semantics identical to the

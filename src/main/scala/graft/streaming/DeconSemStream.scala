@@ -66,14 +66,12 @@ object DeconSemStream {
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
       graft.functions.GraftFunctions.register(s)
-      val cents = Microbatch.staged(s, stageDir, "_centroids_f",
-        s"DeconSemStream needs a staged eval screen — run " +
-          s"Similarity.stageEvalScreen(..., $stageDir) first")
+      val cents = Similarity.loadQuantizer(s, stageDir)
       val probes = Similarity.stagedEvalProbes(s, stageDir)
       val corpus = batch
         .filter(pmod(col("vec_id"), lit(evalMod)) =!= 0)
         .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-      val assign = Similarity.selectListsFloat(corpus, cents, 1)
+      val assign = Similarity.selectLists(corpus, cents, 1)
       val verdicts = corpus.join(assign.hint("shuffle_hash"), Seq("vec_id"))
         .select(col("centroid_id"), col("vec_id"),
           col("embedding").as("bv"), col("vnorm").as("bn"))

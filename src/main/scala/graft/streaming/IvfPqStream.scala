@@ -38,15 +38,13 @@ object IvfPqStream {
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
       graft.functions.GraftFunctions.register(s)
-      def missing = s"IvfPqStream needs staged quantizers — run Similarity.stageIvfQuantizer " +
-        s"and Similarity.stagePqCodebooks on $indexDir first"
-      val coarse = Microbatch.staged(s, indexDir, "_centroids", missing)
-      val books = Microbatch.staged(s, indexDir, "_codebooks", missing)
+      val books = Microbatch.staged(s, indexDir, "_codebooks",
+        s"IvfPqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first")
       val withNorm = batch
         .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-      val codes = Similarity.vectorCodes(withNorm)
-      val assign = Similarity.assignNearest(codes, coarse)
-      val lists = Similarity.pqEncode(Similarity.subCodes(codes, m, subDim), books, ksub)
+      val assign = Similarity.selectLists(withNorm, Similarity.loadQuantizer(s, indexDir), 1)
+      val lists = Similarity.pqEncode(
+          Similarity.subCodes(Similarity.vectorCodes(withNorm), m, subDim), books, ksub)
         .join(assign.hint("shuffle_hash"), Seq("vec_id"))
         .select(col("centroid_id"), col("vec_id"), col("pcode"), col("xn"))
       Microbatch.write(lists, indexDir, batchId, "centroid_id")

@@ -12,9 +12,9 @@ import graft.operators.Similarity
   *
   * Prerequisite: the coarse quantizer is STAGED (frozen) before the first
   * batch — `Similarity.stageIvfQuantizer` writes `_centroids` into the
-  * index dir. Every microbatch then (1) quantizes its vectors and assigns
-  * each to its nearest list against the frozen centroids with the
-  * codegen'd `Similarity.assignNearest` the batch builder uses, and (2)
+  * index dir. Every microbatch then (1) assigns each vector to its
+  * nearest list against the frozen quantizer through
+  * `Similarity.selectLists`, the selector the batch builder uses, and (2)
   * lands in its own batch directory partitioned by centroid_id, so the
   * index layout is uniform two-level (batch, centroid_id) and a query's
   * list probe still partition-prunes. Training never reruns in-stream: a
@@ -38,11 +38,9 @@ object IvfStream {
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
       graft.functions.GraftFunctions.register(s)
-      val cents = Microbatch.staged(s, indexDir, "_centroids",
-        s"IvfStream needs a staged quantizer — run Similarity.stageIvfQuantizer($indexDir) first")
       val withNorm = batch
         .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-      val assign = Similarity.assignNearest(Similarity.vectorCodes(withNorm), cents)
+      val assign = Similarity.selectLists(withNorm, Similarity.loadQuantizer(s, indexDir), 1)
       val lists = withNorm.join(assign.hint("shuffle_hash"), Seq("vec_id"))
         .select(col("centroid_id"), col("vec_id"), col("embedding"), col("vnorm"))
       Microbatch.write(lists, indexDir, batchId, "centroid_id")

@@ -14,8 +14,8 @@ import graft.operators.Similarity
   * Prerequisite: the coarse quantizer is STAGED (frozen) before the
   * first batch — `Similarity.stageIvfQuantizer` writes `_centroids`
   * into the labels dir. Each microbatch of (vec_id, embedding) rows is
-  * (1) cluster-assigned against the frozen centroids with the codegen'd
-  * `Similarity.assignNearest` the batch operator uses, (2) screened for
+  * (1) cluster-assigned against the frozen centroids through
+  * `Similarity.selectLists` (the codegen'd argmax), (2) screened for
   * drops against every same-cluster smaller-id row — prior batches via the
   * persistent labels index (which carries each vector's embedding and
   * norm, so screening never re-reads history) plus the batch's own
@@ -53,11 +53,9 @@ object SemDedupStream {
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
       graft.functions.GraftFunctions.register(s)
-      val cents = Microbatch.staged(s, labelsDir, "_centroids",
-        s"SemDedupStream needs a staged quantizer — run Similarity.stageIvfQuantizer($labelsDir) first")
       val withNorm = batch
         .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
-      val assign = Similarity.assignNearest(Similarity.vectorCodes(withNorm), cents)
+      val assign = Similarity.selectLists(withNorm, Similarity.loadQuantizer(s, labelsDir), 1)
         .select(col("vec_id"), col("centroid_id").as("cluster_id"))
       val newRows = withNorm.join(assign.hint("shuffle_hash"), Seq("vec_id"))
         .select(col("cluster_id"), col("vec_id"), col("embedding"), col("vnorm"))

@@ -109,6 +109,21 @@ class DocCountsSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"nearestCentroid called from streaming/: ${hits.mkString(", ")}")
   }
 
+  test("IVF list selection is spelled once, in Similarity") {
+    // every IVF build, append, probe and stream picks lists through
+    // Similarity.selectLists; a second probe window or first-N projection
+    // is a second list-selection rule that can drift from it, and
+    // nearestCentroid is the reference the specs compare against
+    val sim = "src/main/scala/graft/operators/Similarity.scala"
+    def hits(spelling: String) = mainSources().map { case (p, text) =>
+      p -> (text.split(java.util.regex.Pattern.quote(spelling), -1).length - 1)
+    }.filter(_._2 > 0)
+    for (spelling <- Seq("orderBy(col(\"cm\").desc, col(\"centroid_id\"))",
+                         "col(\"embedding\").as(\"cv\")", "nearestCentroid("))
+      assert(hits(spelling) === Seq(sim -> 1), s"$spelling must appear once, in $sim")
+    assert(read(sim).contains("def nearestCentroid("))
+  }
+
   test("README.md states the derived counts") {
     val readme = read("README.md")
     assert(readme.contains(s"${SparkEntry.queries.size} named queries"),

@@ -171,6 +171,37 @@ class OperatorSpec extends SparkTestBase {
       .exists(r => victims.contains(r.getAs[Long]("vec_id"))))
     assert(Similarity.ivfTopKFromIndex(spark, Sf, idx).collect().toSeq == after,
       "query results must be identical before and after physical deletion")
+    assert(new java.io.File(idx, "_centroids_f").exists(),
+      "compaction must carry the first-N quantizer across the swap")
+  }
+
+  test("first-N IVF index consumers read the list count from the index") {
+    // built at nLists = 32; neither consumer is told, so each must take
+    // the quantizer (and its width) from the index's _centroids_f
+    val idx = tmpDir("ivf32")
+    Similarity.buildIvfIndex(spark, Sf, idx, nLists = 32)
+    assert(Similarity.ivfTopKFromIndex(spark, Sf, idx).collect().toSeq ==
+      Similarity.ivfTopK(spark, Sf, nLists = 32).collect().toSeq)
+    val inc = tmpDir("ivf32inc")
+    Similarity.buildIvfIndex(spark, Sf, inc, nLists = 32, maxVecIdExclusive = 400)
+    Similarity.appendToIvfIndex(spark, Sf, inc, minVecId = 400)
+    def lists(dir: String) = spark.read.parquet(dir)
+      .select("vec_id", "centroid_id").collect()
+      .map(r => (r.getLong(0), r.getAs[Number](1).longValue)).toSet
+    val all = lists(idx)
+    assert(all.exists(_._1 >= 400), "fixture must leave a delta to append")
+    assert(lists(inc) == all)
+  }
+
+  test("an index directory without a stored quantizer is rejected by name") {
+    val idx = tmpDir("ivfnoq")
+    Similarity.buildIvfIndex(spark, Sf, idx)
+    val q = new org.apache.hadoop.fs.Path(idx, "_centroids_f")
+    assert(q.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(q, true))
+    val err = intercept[IllegalArgumentException](
+      Similarity.ivfTopKFromIndex(spark, Sf, idx))
+    assert(err.getMessage.contains("buildIvfIndex") &&
+      err.getMessage.contains("stageIvfQuantizer"), err.getMessage)
   }
 
   test("winnowing fingerprints equal a driver-side reference implementation") {
