@@ -586,7 +586,7 @@ object Similarity {
     * sqn). One posexplode, no joins; sub_id ordering is positional so
     * every engine agrees on which dimensions belong to which subspace.
     */
-  private[graft] def subCodes(codes: DataFrame, m: Int, subDim: Int): DataFrame =
+  private def subCodes(codes: DataFrame, m: Int, subDim: Int): DataFrame =
     codes.select(col("vec_id"),
       posexplode(expr(
         s"transform(sequence(0, ${m - 1}), s -> slice(code, s * $subDim + 1, $subDim))"))
@@ -686,7 +686,7 @@ object Similarity {
     * index payload (what a 100 TB deployment persists: ~8 bytes + one
     * double per vector instead of the float array).
     */
-  private[graft] def pqEncode(sub: DataFrame, cents: DataFrame, ksub: Int): DataFrame = {
+  private def pqEncode(sub: DataFrame, cents: DataFrame, ksub: Int): DataFrame = {
     val assignF = nearestSubCentroid(scoreSubCentroids(sub, cents))
     // reconstruction norm² of each codebook entry: |csum/cnt|²
     val nsq = cents.withColumn("nsq", expr(
@@ -802,8 +802,34 @@ object Similarity {
   private def codebooksPath(indexDir: String) =
     new org.apache.hadoop.fs.Path(indexDir, "_codebooks")
 
-  private[graft] def storedCodebooks(s: SparkSession, indexDir: String): DataFrame =
-    Tables.parquet(s, codebooksPath(indexDir).toString)
+  /** A codebook table (sub_id, centroid_id, csum, cnt) with the shape
+    * read back from its rows: m = the sub_id count, subDim = the csum
+    * length, ksub = the largest centroid_id + 1. Training drops ids and
+    * never adds one, so the dense ksub-wide arrays still cover every
+    * code. Queries and appends take the shape from here, never from a
+    * caller, so they cannot disagree with the build.
+    */
+  private[graft] final case class PqCodebooks(table: DataFrame, m: Int, subDim: Int,
+                                              ksub: Int) {
+    /** `codes` (vec_id, code, ...) as (vec_id, pcode, xn) rows. */
+    def encode(codes: DataFrame): DataFrame = pqEncode(subCodes(codes, m, subDim), table, ksub)
+
+    /** Per-query ADC luts for the first `nQueries` rows of `qCodes`. */
+    def luts(qCodes: DataFrame, nQueries: Int): DataFrame =
+      pqLuts(qCodes, subCodes(qCodes, m, subDim), table, nQueries, ksub)
+  }
+
+  private[graft] object PqCodebooks {
+    def apply(table: DataFrame): PqCodebooks = {
+      val shape = table.agg(countDistinct(col("sub_id")), max(size(col("csum"))),
+        max(col("centroid_id"))).head()
+      require(!shape.isNullAt(2), "empty PQ codebooks")
+      PqCodebooks(table, shape.getLong(0).toInt, shape.getInt(1), shape.getLong(2).toInt + 1)
+    }
+  }
+
+  private[graft] def storedCodebooks(s: SparkSession, indexDir: String): PqCodebooks =
+    PqCodebooks(Tables.parquet(s, codebooksPath(indexDir).toString))
 
   /** Train the PQ codebooks and persist ONLY the `_codebooks` artifact —
     * the staging step graft.streaming.PqStream needs before its first
@@ -857,12 +883,10 @@ object Similarity {
     * contract is what keeps the index append-monotone.
     */
   def appendToPqIndex(s: SparkSession, dir: String, indexDir: String,
-                      minVecId: Long, m: Int = 8, subDim: Int = 8,
-                      ksub: Int = 16): String = {
+                      minVecId: Long): String = {
     registerFunctions(s)
     val delta = embWithNorm(s, dir).filter(col("vec_id") >= minVecId)
-    val cents = storedCodebooks(s, indexDir)
-    pqEncode(subCodes(vectorCodes(delta), m, subDim), cents, ksub)
+    storedCodebooks(s, indexDir).encode(vectorCodes(delta))
       .write.mode("append").parquet(indexDir)
     indexDir
   }
@@ -871,16 +895,14 @@ object Similarity {
     * embeddings table (subcodes + luts); the corpus side is one map-only
     * pass over the packed-code parquet — broadcast luts, codegen'd ADC
     * fold, map-side-combining top-k. Same output contract as the inline
-    * pqTopK (OperatorSpec pins equality).
+    * pqTopK with the build's shape (OperatorSpec pins equality); the
+    * shape comes from `_codebooks`.
     */
   def pqTopKFromIndex(s: SparkSession, dir: String, indexDir: String,
-                      nQueries: Int = 10, k: Int = 5, m: Int = 8,
-                      subDim: Int = 8, ksub: Int = 16): DataFrame = {
+                      nQueries: Int = 10, k: Int = 5): DataFrame = {
     registerFunctions(s)
     val queries = embWithNorm(s, dir).filter(col("vec_id") < nQueries)
-    val qCodes = vectorCodes(queries)
-    val lutArr = pqLuts(qCodes, subCodes(qCodes, m, subDim),
-      storedCodebooks(s, indexDir), nQueries, ksub)
+    val lutArr = storedCodebooks(s, indexDir).luts(vectorCodes(queries), nQueries)
     val scored = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
       // stream-built indexes carry a batch=<id> partition level; a query
       // only ever needs the payload columns
@@ -974,13 +996,11 @@ object Similarity {
     * across lists (coarse) or re-code the corpus (PQ).
     */
   def appendToIvfPqIndex(s: SparkSession, dir: String, indexDir: String,
-                         minVecId: Long, m: Int = 8, subDim: Int = 8,
-                         ksub: Int = 16): String = {
+                         minVecId: Long): String = {
     registerFunctions(s)
     val delta = embWithNorm(s, dir).filter(col("vec_id") >= minVecId)
-    val books = storedCodebooks(s, indexDir)
     val assign = selectLists(delta, loadQuantizer(s, indexDir), 1)
-    pqEncode(subCodes(vectorCodes(delta), m, subDim), books, ksub)
+    storedCodebooks(s, indexDir).encode(vectorCodes(delta))
       .join(assign.hint("shuffle_hash"), Seq("vec_id"))
       .select(col("centroid_id"), col("vec_id"), col("pcode"), col("xn"))
       .repartition(col("centroid_id")) // one file per touched list (see buildIvfIndex)
@@ -998,16 +1018,12 @@ object Similarity {
     * index trained on the same slice (OperatorSpec pins equality).
     */
   def ivfPqTopKFromIndex(s: SparkSession, dir: String, indexDir: String,
-                         nQueries: Int = 10, k: Int = 5, nProbe: Int = 3,
-                         m: Int = 8, subDim: Int = 8,
-                         ksub: Int = 16): DataFrame = {
+                         nQueries: Int = 10, k: Int = 5, nProbe: Int = 3): DataFrame = {
     registerFunctions(s)
     val queries = embWithNorm(s, dir).filter(col("vec_id") < nQueries)
-    val qCodes = vectorCodes(queries)
     val probes = selectLists(queries, loadQuantizer(s, indexDir), nProbe)
       .select(col("vec_id").as("query_id"), col("centroid_id"))
-    val lutArr = pqLuts(qCodes, subCodes(qCodes, m, subDim),
-      storedCodebooks(s, indexDir), nQueries, ksub)
+    val lutArr = storedCodebooks(s, indexDir).luts(vectorCodes(queries), nQueries)
     // stream-built indexes carry a batch=<id> level; a candidate row is
     // its list key plus the packed payload either way
     val index = screenTombstones(s, indexDir,

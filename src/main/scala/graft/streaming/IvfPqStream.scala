@@ -33,18 +33,16 @@ object IvfPqStream {
     *                      must already be staged
     * @param checkpointDir streaming checkpoint location
     */
-  def start(vectors: DataFrame, indexDir: String, checkpointDir: String,
-            m: Int = 8, subDim: Int = 8, ksub: Int = 16): StreamingQuery =
+  def start(vectors: DataFrame, indexDir: String, checkpointDir: String): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
       graft.functions.GraftFunctions.register(s)
-      val books = Microbatch.staged(s, indexDir, "_codebooks",
-        s"IvfPqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first")
+      val books = Similarity.PqCodebooks(Microbatch.staged(s, indexDir, "_codebooks",
+        s"IvfPqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first"))
       val withNorm = batch
         .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
       val assign = Similarity.selectLists(withNorm, Similarity.loadQuantizer(s, indexDir), 1)
-      val lists = Similarity.pqEncode(
-          Similarity.subCodes(Similarity.vectorCodes(withNorm), m, subDim), books, ksub)
+      val lists = books.encode(Similarity.vectorCodes(withNorm))
         .join(assign.hint("shuffle_hash"), Seq("vec_id"))
         .select(col("centroid_id"), col("vec_id"), col("pcode"), col("xn"))
       Microbatch.write(lists, indexDir, batchId, "centroid_id")

@@ -30,14 +30,12 @@ object PqStream {
     * @param indexDir      PQ index dir; `_codebooks` must already be staged
     * @param checkpointDir streaming checkpoint location
     */
-  def start(vectors: DataFrame, indexDir: String, checkpointDir: String,
-            m: Int = 8, subDim: Int = 8, ksub: Int = 16): StreamingQuery =
+  def start(vectors: DataFrame, indexDir: String, checkpointDir: String): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
       graft.functions.GraftFunctions.register(s)
-      val books = Microbatch.staged(s, indexDir, "_codebooks",
-        s"PqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first")
-      val codes = Similarity.subCodes(Similarity.vectorCodes(batch), m, subDim)
-      Microbatch.write(Similarity.pqEncode(codes, books, ksub), indexDir, batchId)
+      val books = Similarity.PqCodebooks(Microbatch.staged(s, indexDir, "_codebooks",
+        s"PqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first"))
+      Microbatch.write(books.encode(Similarity.vectorCodes(batch)), indexDir, batchId)
     }
 }

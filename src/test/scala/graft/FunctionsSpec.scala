@@ -297,14 +297,7 @@ class FunctionsSpec extends SparkTestBase {
         .foreach(_.stop())
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()
-      SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      SparkTestBase.builder().getOrCreate()
     }
   }
 }

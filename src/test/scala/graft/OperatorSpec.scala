@@ -605,6 +605,19 @@ class OperatorSpec extends SparkTestBase {
     assert(new java.io.File(idx, "_codebooks").exists())
   }
 
+  test("PQ index queries read the codebook shape from _codebooks") {
+    // a non-default shape: a query that assumed the default m = 8,
+    // subDim = 8 would slice the wrong subvectors and score nothing
+    val idx = tmpDir("pqshape")
+    Similarity.buildPqIndex(spark, Sf, idx, m = 4, subDim = 16)
+    val books = Similarity.storedCodebooks(spark, idx)
+    assert((books.m, books.subDim, books.ksub) == (4, 16, 16))
+    val fromIndex = Similarity.pqTopKFromIndex(spark, Sf, idx).collect().toSeq
+    val inline = Similarity.pqTopK(spark, Sf, m = 4, subDim = 16).collect().toSeq
+    assert(fromIndex == inline)
+    assert(inline.nonEmpty)
+  }
+
   test("PQ index: build(prefix) + append(rest) == build(all) with frozen codebooks") {
     val full = tmpDir("pqfull")
     val inc = tmpDir("pqinc")

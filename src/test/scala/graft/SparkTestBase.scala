@@ -5,17 +5,23 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for specs: one local session per suite, UTC, small
-  * shuffle fan-out, nanos-tolerant parquet reads.
+  * shuffle fan-out, nanos-tolerant parquet reads, and the engine's own
+  * `file:` filesystem (`GraftSession.LocalFsConf`), so every spec writes
+  * through it.
   */
-trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
+object SparkTestBase {
+  def builder(): SparkSession.Builder = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    .config(GraftSession.LocalFsConf)
+}
+
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
+  lazy val spark: SparkSession = SparkTestBase.builder().getOrCreate()
 
   val Sf = "/root/testdata/sf0.001"
 
