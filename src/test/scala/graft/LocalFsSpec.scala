@@ -156,7 +156,8 @@ class LocalFsSpec extends SparkTestBase {
     }
     assert(starts.isEmpty, s"processes started: ${starts.mkString("; ")}")
     assert(spark.read.parquet(out).count() == 200)
-    assert(fc.open(new Path(graftDir, "b")).readAllBytes().sameElements("second".getBytes(UTF_8)))
+    val in = fc.open(new Path(graftDir, "b"))
+    try assert(new String(in.readAllBytes(), UTF_8) === "second") finally in.close()
     // the counter sees the stock local filesystem's processes
     if (!NativeIO.isAvailable) {
       val stock = FileContext.getFileContext(URI.create("file:///"), new Configuration())
