@@ -73,10 +73,23 @@ object GraftSession {
     "spark.hadoop.fs.file.impl" -> classOf[sinks.GraftLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[sinks.GraftLocalFs].getName)
 
+  /** What every graft session carries, whoever sets the rest of its
+    * builder: the `file:` filesystem above and graft's SQL functions
+    * ([[functions.GraftExtensions]]). The functions go in with
+    * `withExtensions`, so a job's own `spark.sql.extensions` still applies,
+    * and they reach every `newSession()` and `foreachBatch` session of the
+    * context. Operators do not install functions themselves: on a session
+    * built without this (or without
+    * `--conf spark.sql.extensions=graft.functions.GraftExtensions`), a
+    * query that calls one fails at analysis with `UNRESOLVED_ROUTINE`.
+    */
+  def install(b: SparkSession.Builder): SparkSession.Builder =
+    b.config(LocalFsConf).withExtensions(new functions.GraftExtensions)
+
   def builder(appName: String = "graft",
               master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
               shufflePartitions: Int = 32): SparkSession.Builder =
-    shuffleTuning(SparkSession.builder()
+    shuffleTuning(install(SparkSession.builder())
       .appName(appName)
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -84,8 +97,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(LocalFsConf))
+      .config("spark.ui.enabled", "false"))
 
   def create(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -550,129 +547,4 @@ case class MinSumBytes(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): MinSumBytes =
     copy(left = newLeft, right = newRight)
-}
-
-/** Function registration: session-local (register) or via
-  * spark.sql.extensions=graft.functions.GraftExtensions.
-  */
-object GraftFunctions {
-  val DotFInfo = new ExpressionInfo(
-    classOf[DotProductFloat].getName, "", "dot_f",
-    "dot_f(a, b) - dot product of two ARRAY<FLOAT> columns in double precision",
-    "")
-
-  private[graft] def build(exprs: Seq[Expression]): DotProductFloat = {
-    if (exprs.length != 2)
-      throw new IllegalArgumentException(
-        s"dot_f requires exactly 2 arguments, got ${exprs.length}")
-    DotProductFloat(exprs(0), exprs(1))
-  }
-
-  /** Idempotent session-local registration; call before using dot_f /
-    * minhash_sig in SQL.
-    */
-  def register(spark: SparkSession): Unit = {
-    // createOrReplaceTempFunction logs a WARN per replacement; call sites
-    // register eagerly, so skip when both names already resolve to keep
-    // bench/test logs readable.
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("dot_f")))
-      reg.createOrReplaceTempFunction("dot_f", build, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("minhash_sig")))
-      reg.createOrReplaceTempFunction(
-        "minhash_sig", exprs => {
-          if (exprs.length != 1)
-            throw new IllegalArgumentException(
-              s"minhash_sig requires exactly 1 argument, got ${exprs.length}")
-          MinHashSignature(exprs.head)
-        }, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("gram_pack")))
-      reg.createOrReplaceTempFunction(
-        "gram_pack", exprs => {
-          require(exprs.length == 3,
-            s"gram_pack(s, lo, hi) takes 3 arguments, got ${exprs.length}")
-          def lit(e: Expression): Int = e.eval(null) match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              s"gram_pack bounds must be INT literals, got $other")
-          }
-          GramPack(exprs.head, lit(exprs(1)), lit(exprs(2)))
-        }, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("hex_pack")))
-      reg.createOrReplaceTempFunction(
-        "hex_pack", exprs => {
-          require(exprs.length == 3,
-            s"hex_pack(s, lo, hi) takes 3 arguments, got ${exprs.length}")
-          def lit(e: Expression): Int = e.eval(null) match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              s"hex_pack bounds must be INT literals, got $other")
-          }
-          HexPack(exprs.head, lit(exprs(1)), lit(exprs(2)))
-        }, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("kll_agg")))
-      reg.createOrReplaceTempFunction(
-        "kll_agg", KllFunctions.buildAgg, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("kll_merge_agg")))
-      reg.createOrReplaceTempFunction(
-        "kll_merge_agg", KllFunctions.buildMerge, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("nearest_centroid")))
-      reg.createOrReplaceTempFunction(
-        "nearest_centroid", exprs => {
-          require(exprs.length == 5,
-            s"nearest_centroid takes 5 arguments, got ${exprs.length}")
-          NearestCentroidPacked(exprs)
-        }, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("top_centroids_f")))
-      reg.createOrReplaceTempFunction(
-        "top_centroids_f", exprs => {
-          require(exprs.length == 6,
-            s"top_centroids_f takes 6 arguments, got ${exprs.length}")
-          TopCentroidsFloat(exprs)
-        }, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("jacc_summary")))
-      reg.createOrReplaceTempFunction(
-        "jacc_summary", exprs => {
-          require(exprs.length == 2,
-            s"jacc_summary(shingles, buckets) takes 2 arguments, got ${exprs.length}")
-          JaccardSummaryBytes(exprs(0), exprs(1))
-        }, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("minsum_b")))
-      reg.createOrReplaceTempFunction(
-        "minsum_b", exprs => {
-          require(exprs.length == 2,
-            s"minsum_b(a, b) takes 2 arguments, got ${exprs.length}")
-          MinSumBytes(exprs(0), exprs(1))
-        }, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("theta_agg")))
-      reg.createOrReplaceTempFunction(
-        "theta_agg", exprs => {
-          require(exprs.length == 1,
-            s"theta_agg(id) takes 1 argument, got ${exprs.length}")
-          ThetaAgg(exprs.head)
-        }, "built-in")
-  }
-}
-
-/** SparkSessionExtensions injector: enables
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_f"),
-      GraftFunctions.DotFInfo,
-      (exprs: Seq[Expression]) => GraftFunctions.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "", "minhash_sig",
-        "minhash_sig(shingles) - 12-slot MinHash signature of an ARRAY<STRING>",
-        ""),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"minhash_sig requires exactly 1 argument, got ${exprs.length}")
-        MinHashSignature(exprs.head)
-      }))
-  }
 }

@@ -136,7 +136,6 @@ object Dedup {
     */
   def prefixFilterJaccard(s: SparkSession, dir: String,
                           threshold: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t1e4 = math.round(threshold * 10000)
     // MATERIALIZED (eager localCheckpoint): shingling is the compute-bound
     // step and five consumers read this frame (the explode feeding both
@@ -444,7 +443,6 @@ object Dedup {
   def bloomScreen(s: SparkSession, dir: String, nBits: Int = 65536,
       seenRate: Double = 0.8): DataFrame = {
     require(nBits == 65536, "position math is fixed to 16-bit windows")
-    graft.functions.GraftFunctions.register(s)
     val docs = withShingles(s, dir)
     val bands = stackBands(docs.select(col("doc_id"), col("sh")), carrySigs = false)
       .withColumn("bkey", expr("concat(CAST(band_idx AS STRING), band_val)"))
@@ -567,7 +565,6 @@ object Dedup {
 
   def minHashLsh(s: SparkSession, dir: String, threshold: Double = 0.5,
                  maxDocIdExclusive: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = withShingles(s, dir).select(col("doc_id"), col("sh"))
       .filter(col("doc_id") < maxDocIdExclusive)
     // Measured r9: pre-joining a broadcast candidate-id frame ahead of the
@@ -590,7 +587,6 @@ object Dedup {
     */
   def buildLshBandIndex(s: SparkSession, dir: String, indexDir: String,
                         maxDocIdExclusive: Long = Long.MaxValue): String = {
-    graft.functions.GraftFunctions.register(s)
     val docs = withShingles(s, dir).select(col("doc_id"), col("sh"))
       .filter(col("doc_id") < maxDocIdExclusive)
     bandRowsInline(docs)
@@ -624,7 +620,6 @@ object Dedup {
     */
   def minHashLshIncremental(s: SparkSession, dir: String, indexDir: String,
                             minDeltaId: Long, threshold: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = withShingles(s, dir).select(col("doc_id"), col("sh"))
     val deltaBands = bandRowsInline(docs.filter(col("doc_id") >= minDeltaId))
     val corpusBands = Tables.parquet(s, indexDir)
@@ -645,7 +640,6 @@ object Dedup {
     * have no shingles and emit no rows (they cannot near-dup by trigram).
     */
   def bandSigRows(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val shingled = docs
       .withColumn("ws", expr(TextAnalysis.TokensExpr))
       .filter(expr("size(ws) >= 3"))
@@ -1178,7 +1172,6 @@ object Dedup {
     // two 4-bit-per-char longs (hex_pack; packed equality IS string
     // equality), so the corpus-wide exchange carries 16 fixed key bytes
     // per row and every keyed operator hashes longs (§2.3 narrower types)
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val byFp = TextAnalysis.winnowSelections(docs, k, w)
       .select(col("doc_id"),
         expr("hex_pack(wmin, 0, 15)").as("f1"),
@@ -1361,7 +1354,6 @@ object Dedup {
     // off the document text — the per-gram string is never materialized
     // at all. A gram of k <= 8 chars fits g1 alone; g2 is then constant.
     val byDoc = (if (k <= 16) {
-      graft.functions.GraftFunctions.register(docs.sparkSession)
       gramRows(docs, k).select(col("doc_id"), col("pos"),
         expr(s"gram_pack(gram, 0, ${math.min(7, k - 1)})").as("g1"),
         (if (k <= 8) lit(0L) else expr(s"gram_pack(gram, 8, ${k - 1})")).as("g2"))

@@ -53,7 +53,7 @@ object Similarity {
     * DOUBLE[]). Uses the native codegen'd dot_f expression
     * (graft.functions.DotProductFloat) — bit-identical to the HOF
     * `aggregate(zip_with(...))` form, ~10x faster in the inner loop.
-    * Callers must register it first (registerFunctions).
+    * The session must carry graft's functions (`GraftSession.builder`).
     */
   def cosineExpr(a: String, b: String): String =
     s"dot_f($a, $b) / (sqrt(dot_f($a, $a)) * sqrt(dot_f($b, $b)))"
@@ -96,9 +96,6 @@ object Similarity {
   val Micro4: String =
     "CAST(CASE WHEN m >= 0 THEN (m + 50) div 100 ELSE -((-m + 50) div 100) END AS BIGINT)"
 
-  private def registerFunctions(s: SparkSession): Unit =
-    graft.functions.GraftFunctions.register(s)
-
   /** Exact brute-force top-k neighbors for query vectors (vec_id < nQueries).
     * Rank on the 6-decimal-rounded score with vec_id tiebreak so ordering
     * is engine-stable.
@@ -128,7 +125,6 @@ object Similarity {
 
   def bruteForceTopK(s: SparkSession, dir: String,
                      nQueries: Int = 10, k: Int = 5): DataFrame = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -161,7 +157,6 @@ object Similarity {
     * tiny aggregate on vec_id.
     */
   def lshSignatures(s: SparkSession, dir: String): DataFrame = {
-    registerFunctions(s)
     lshSignaturesOf(Tables.spread(s, dir, "embeddings"))
   }
 
@@ -200,7 +195,6 @@ object Similarity {
     */
   def annLshTopK(s: SparkSession, dir: String,
                  nQueries: Int = 10, k: Int = 5): DataFrame = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val sigs = lshSignatures(s, dir)
       .selectExpr("vec_id",
@@ -226,7 +220,6 @@ object Similarity {
     */
   def embeddingLshPairs(s: SparkSession, dir: String,
                         minScoreMicros: Long = 300000L): DataFrame = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val bands = lshSignatures(s, dir).selectExpr("vec_id",
       "stack(2, 0, sig & 255, 1, (sig >> 8) & 255) AS (band_idx, band_val)")
@@ -287,7 +280,6 @@ object Similarity {
   def ivfTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
               nLists: Int = 16, nProbe: Int = 3): DataFrame = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val q = FloatCentroids(firstNCentroids(emb, nLists))
     rerankTopK(probeCandidates(selectLists(emb, q, 1), emb, q, nQueries, nProbe), emb, k)
@@ -369,7 +361,6 @@ object Similarity {
     * [[scoreAgainstCentroids]] — bounded by the query set there.
     */
   private[graft] def assignNearest(codes: DataFrame, centroids: DataFrame): DataFrame = {
-    registerFunctions(codes.sparkSession)
     val rows = centroids.select(col("centroid_id"), col("csum")).collect()
     val ids = rows.map(_.getLong(0))
     require(ids.forall(id => id >= 0 && id < 65536),
@@ -440,7 +431,6 @@ object Similarity {
   def ivfTopKTrained(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
                      nLists: Int = 16, nProbe: Int = 3, iters: Int = 2): DataFrame = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val q = CodeCentroids(trainCentroids(vectorCodes(emb), nLists, iters))
     rerankTopK(probeCandidates(selectLists(emb, q, 1), emb, q, nQueries, nProbe), emb, k)
@@ -457,7 +447,6 @@ object Similarity {
     */
   def hardNegatives(s: SparkSession, dir: String,
                     nQueries: Int = 10, k: Int = 5): DataFrame = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
@@ -491,7 +480,6 @@ object Similarity {
   def clusterReport(s: SparkSession, dir: String, nLists: Int = 16,
                     iters: Int = 2): DataFrame = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val codes = vectorCodes(emb)
     val centroids = trainCentroids(codes, nLists, iters)
@@ -552,7 +540,6 @@ object Similarity {
     */
   def dimAblation(s: SparkSession, dir: String, dims: Seq[Int] = Seq(8, 16, 32),
                   nQueries: Int = 10, k: Int = 5): DataFrame = {
-    registerFunctions(s)
     val truth = bruteForceTopK(s, dir, nQueries, k)
       .select(col("query_id"), col("neighbor_id")).withColumn("hit", lit(1L))
     val perDim = dims.map { d =>
@@ -747,7 +734,6 @@ object Similarity {
 
   def pqTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
              m: Int = 8, subDim: Int = 8, ksub: Int = 16, iters: Int = 2): DataFrame = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val codes = vectorCodes(emb)
     val (withNorm, lutArr) = pqArtifacts(codes, nQueries, m, subDim, ksub, iters)
@@ -782,7 +768,6 @@ object Similarity {
                 m: Int = 8, subDim: Int = 8, ksub: Int = 16,
                 pqIters: Int = 2): DataFrame = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val codes = vectorCodes(emb)
     // coarse routing: trained centroids, probe the nProbe nearest lists
@@ -841,7 +826,6 @@ object Similarity {
                        iters: Int = 2,
                        trainMaxVecIdExclusive: Long = Long.MaxValue): String = {
     require(ksub <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir).filter(col("vec_id") < trainMaxVecIdExclusive)
     trainPqCodebooks(subCodes(vectorCodes(emb), m, subDim), ksub, iters)
       .write.mode("overwrite").parquet(codebooksPath(indexDir).toString)
@@ -864,7 +848,6 @@ object Similarity {
                    maxVecIdExclusive: Long = Long.MaxValue,
                    trainMaxVecIdExclusive: Long = Long.MaxValue): String = {
     require(ksub <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir).filter(col("vec_id") < maxVecIdExclusive)
     val codes = vectorCodes(emb)
     val trainSub = subCodes(
@@ -884,7 +867,6 @@ object Similarity {
     */
   def appendToPqIndex(s: SparkSession, dir: String, indexDir: String,
                       minVecId: Long): String = {
-    registerFunctions(s)
     val delta = embWithNorm(s, dir).filter(col("vec_id") >= minVecId)
     storedCodebooks(s, indexDir).encode(vectorCodes(delta))
       .write.mode("append").parquet(indexDir)
@@ -900,7 +882,6 @@ object Similarity {
     */
   def pqTopKFromIndex(s: SparkSession, dir: String, indexDir: String,
                       nQueries: Int = 10, k: Int = 5): DataFrame = {
-    registerFunctions(s)
     val queries = embWithNorm(s, dir).filter(col("vec_id") < nQueries)
     val lutArr = storedCodebooks(s, indexDir).luts(vectorCodes(queries), nQueries)
     val scored = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
@@ -933,7 +914,6 @@ object Similarity {
   def clusterBalancedSample(s: SparkSession, dir: String, nLists: Int = 16,
                             iters: Int = 2, perCluster: Int = 12): DataFrame = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val codes = vectorCodes(embWithNorm(s, dir))
     val centroids = trainCentroids(codes, nLists, iters)
     assignNearest(codes, centroids)
@@ -973,7 +953,6 @@ object Similarity {
                       trainMaxVecIdExclusive: Long = Long.MaxValue): String = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
     require(ksub <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir).filter(col("vec_id") < maxVecIdExclusive)
     val codes = vectorCodes(emb)
     val trainCodes = codes.filter(col("vec_id") < trainMaxVecIdExclusive)
@@ -997,7 +976,6 @@ object Similarity {
     */
   def appendToIvfPqIndex(s: SparkSession, dir: String, indexDir: String,
                          minVecId: Long): String = {
-    registerFunctions(s)
     val delta = embWithNorm(s, dir).filter(col("vec_id") >= minVecId)
     val assign = selectLists(delta, loadQuantizer(s, indexDir), 1)
     storedCodebooks(s, indexDir).encode(vectorCodes(delta))
@@ -1019,7 +997,6 @@ object Similarity {
     */
   def ivfPqTopKFromIndex(s: SparkSession, dir: String, indexDir: String,
                          nQueries: Int = 10, k: Int = 5, nProbe: Int = 3): DataFrame = {
-    registerFunctions(s)
     val queries = embWithNorm(s, dir).filter(col("vec_id") < nQueries)
     val probes = selectLists(queries, loadQuantizer(s, indexDir), nProbe)
       .select(col("vec_id").as("query_id"), col("centroid_id"))
@@ -1077,7 +1054,6 @@ object Similarity {
                     trainMaxVecIdExclusive: Long = Long.MaxValue,
                     maxBlock: Int = 1 << 16): DataFrame = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir).filter(col("vec_id") < maxVecIdExclusive)
     val codes = vectorCodes(emb)
     val lists = resolveNLists(nLists, emb)
@@ -1123,7 +1099,6 @@ object Similarity {
                                        thresholdMicros: Long, maxBlock: Int,
                                        laterMinId: Long): DataFrame = {
     require(maxBlock > 0, "maxBlock must be positive")
-    registerFunctions(withCluster.sparkSession)
     val nSub = withCluster.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("block_n"))
       .select(col("cluster_id"),
@@ -1162,7 +1137,6 @@ object Similarity {
                                prior: DataFrame,
                                thresholdMicros: Long = 400000L,
                                maxBlock: Int = 1 << 16): DataFrame = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val delta = emb.filter(col("vec_id") >= minDeltaId)
     val deltaAssign = selectLists(delta, loadQuantizer(s, quantizerDir), 1)
@@ -1301,7 +1275,6 @@ object Similarity {
                         nLists: Int = 16, iters: Int = 2,
                         trainMaxVecIdExclusive: Long = Long.MaxValue): String = {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir).filter(col("vec_id") < trainMaxVecIdExclusive)
     // AutoNLists derives from the TRAINING slice: the staged quantizer is
     // frozen at build time, and downstream incremental/streaming faces
@@ -1331,7 +1304,6 @@ object Similarity {
     */
   private def selectListsFloat(emb: DataFrame, centroids: DataFrame,
                                k: Int): DataFrame = {
-    registerFunctions(emb.sparkSession)
     val rows = centroids.select(col("centroid_id"), col("cv"), col("cnorm")).collect()
     val ids = rows.map(_.getLong(0))
     require(ids.forall(id => id >= 0 && id < 65536),
@@ -1360,7 +1332,6 @@ object Similarity {
     require(nLists <= 65536, "packed assignment ordering assumes centroid_id < 65536")
     require(maxVecIdExclusive > nLists,
       "the index must at least cover the centroid vectors")
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
       .filter(col("vec_id") < maxVecIdExclusive)
     val q = quantizer match {
@@ -1397,7 +1368,6 @@ object Similarity {
     */
   def appendToIvfIndex(s: SparkSession, dir: String, indexDir: String,
                        minVecId: Long): String = {
-    registerFunctions(s)
     // Uniqueness guard at the APPEND BOUNDARY: every from-index consumer
     // (bitextMarginFromIndex dropped its defensive dropDuplicates on this
     // contract) relies on a vector living in exactly ONE index row — an
@@ -1591,7 +1561,6 @@ object Similarity {
   def ivfTopKFromIndex(s: SparkSession, dir: String, indexDir: String,
                        nQueries: Int = 10, k: Int = 5,
                        nProbe: Int = 3): DataFrame = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val index = screenTombstones(s, indexDir, Tables.parquet(s, indexDir))
     rerankTopK(probeCandidates(index, emb, loadQuantizer(s, indexDir), nQueries, nProbe),
@@ -1682,7 +1651,6 @@ object Similarity {
     */
   def nearestInLabel(s: SparkSession, dir: String,
                      maxBlock: Int = 1 << 16): DataFrame = {
-    registerFunctions(s)
     nearestInLabelCore(embWithNorm(s, dir), maxBlock).orderBy(col("vec_id"))
   }
 
@@ -1692,7 +1660,6 @@ object Similarity {
     */
   private[graft] def nearestInLabelCore(emb: DataFrame, maxBlock: Int): DataFrame = {
     require(maxBlock > 0, "maxBlock must be positive")
-    registerFunctions(emb.sparkSession)
     // one row per label; left unhinted — AQE broadcasts it from runtime
     // stats when small, and a genuinely huge label dimension still joins
     val nSub = emb.groupBy(col("label"))
@@ -2104,7 +2071,6 @@ object Similarity {
     */
   def mmrRerank(s: SparkSession, dir: String, nQueries: Int = 5,
                 pool: Int = 10, k: Int = 5): DataFrame = {
-    registerFunctions(s)
     import s.implicits._
     val emb = embWithNorm(s, dir)
     val queries = emb.filter(col("vec_id") < nQueries)
@@ -2257,7 +2223,6 @@ object Similarity {
     */
   def bitextMarginMine(s: SparkSession, dir: String, k: Int = 4,
                        thresholdMicro: Long = 1060000L): DataFrame = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     bitextMarginOf(
       emb.filter(col("vec_id") % 2 === 0),
@@ -2357,7 +2322,6 @@ object Similarity {
   def bitextMarginFromIndex(s: SparkSession, dir: String, indexDir: String,
                             k: Int = 4, thresholdMicro: Long = 1060000L,
                             nProbe: Int = 3): DataFrame = {
-    registerFunctions(s)
     val aSide = embWithNorm(s, dir).filter(col("vec_id") % 2 === 0)
     // The A side is CORPUS-sized here (a whole crawl, not a bounded query
     // set): a first-N index selects through the codegen'd top-k
@@ -2431,7 +2395,6 @@ object Similarity {
   def bitextMarginIndexed(s: SparkSession, dir: String, k: Int = 4,
                           thresholdMicro: Long = 1060000L,
                           nLists: Int = AutoNLists, nProbe: Int = 3): DataFrame = {
-    registerFunctions(s)
     val lists = resolveNLists(nLists, embWithNorm(s, dir))
     val scratch = appScratchDir(s, "graft_bitext_ivf", dir)
     buildIvfIndex(s, dir, scratch, lists)
@@ -2563,7 +2526,6 @@ object Similarity {
                                      thresholdMicro: Long = 350000L,
                                      evalMod: Int = 97,
                                      nProbe: Int = 3): DataFrame = {
-    registerFunctions(s)
     val evalQ = embWithNorm(s, dir).filter(pmod(col("vec_id"), lit(evalMod)) === 0)
     val probes = selectLists(evalQ, loadQuantizer(s, indexDir), nProbe)
       .select(col("vec_id").as("eval_id"), col("centroid_id"))
@@ -2599,7 +2561,6 @@ object Similarity {
                             thresholdMicro: Long = 350000L,
                             evalMod: Int = 97, nLists: Int = AutoNLists,
                             nProbe: Int = 3): DataFrame = {
-    registerFunctions(s)
     val lists = resolveNLists(nLists, embWithNorm(s, dir))
     val scratch = appScratchDir(s, "graft_decon_ivf", dir)
     buildIvfIndex(s, dir, scratch, lists)
@@ -2629,7 +2590,6 @@ object Similarity {
   def stageEvalScreen(s: SparkSession, dir: String, stageDir: String,
                       evalMod: Int = 97, nLists: Int = AutoNLists,
                       nProbe: Int = 3): String = {
-    registerFunctions(s)
     val emb = embWithNorm(s, dir)
     val q = FloatCentroids(firstNCentroids(emb, resolveNLists(nLists, emb)))
     saveQuantizer(q, stageDir)

@@ -158,8 +158,9 @@ object Sketches {
 
   /** Mergeable KLL quantile-sketch cube rollup — the quantile analog of
     * [[hllSketchRollup]], closing the value-monitoring gap: per-(type,
-    * day) KLL sketches of `value` built in ONE raw pass, unioned up to
-    * per-type totals via `kll_merge_agg` with NO second scan, then read
+    * day) KLL sketches of `value` built in ONE raw pass (Spark's
+    * `kll_sketch_agg_double`), unioned up to per-type totals via
+    * `kll_merge_agg_double` with NO second scan, then read
     * out at P50/P90/P99. At 100 TB every coarser rollup (weekly, monthly,
     * any type subset) is a merge of catalog-sized ~O(k log n)-byte blobs
     * — exact percentile() would buffer every group value and
@@ -175,11 +176,11 @@ object Sketches {
     * sketch) pins everything else.
     */
   def quantileRollup(s: SparkSession, dir: String, k: Int = 200): DataFrame =
-    quantileReadout(s, dir, kllDailyCells(s, Tables.events(s, dir), k), k)
+    quantileReadout(s, dir, kllDailyCells(Tables.events(s, dir), k), k)
 
   /** Incremental cube maintenance for quantiles: prior (events before a
     * 4/5 event-time split) and delta cells merged CELL-WISE via
-    * `kll_merge_agg`, then the identical readout. KLL merge keeps the
+    * `kll_merge_agg_double`, then the identical readout. KLL merge keeps the
     * rank-error bound under any merge tree (the mergeable-summaries
     * guarantee — Agarwal et al., PODS 2012, and the KLL paper), so the
     * steady-state warehouse refresh touches the delta rows plus
@@ -193,22 +194,19 @@ object Sketches {
     val ev = Tables.events(s, dir)
     val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
     val split = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 4 / 5
-    val prior = kllDailyCells(s, ev.filter(unix_micros(col("ts")) < split), k)
-    val delta = kllDailyCells(s, ev.filter(unix_micros(col("ts")) >= split), k)
+    val prior = kllDailyCells(ev.filter(unix_micros(col("ts")) < split), k)
+    val delta = kllDailyCells(ev.filter(unix_micros(col("ts")) >= split), k)
     val merged = prior.unionByName(delta)
       .groupBy(col("event_type"), col("day"))
-      .agg(expr(s"kll_merge_agg(sk, $k)").as("sk"))
+      .agg(expr(s"kll_merge_agg_double(sk, $k)").as("sk"))
     quantileReadout(s, dir, merged, k)
   }
 
   /** One KLL sketch per (event_type, day) cell — the cube's raw pass. */
-  private def kllDailyCells(s: SparkSession, events: DataFrame,
-                            k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  private def kllDailyCells(events: DataFrame, k: Int): DataFrame =
     events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(expr(s"kll_agg(value, $k)").as("sk"))
-  }
+      .agg(expr(s"kll_sketch_agg_double(value, $k)").as("sk"))
 
   /** Merge a cell cube to per-type sketches, estimate P50/P90/P99, and
     * audit each estimate's true rank against the KLL bound.
@@ -216,17 +214,14 @@ object Sketches {
   private[graft] def quantileReadout(s: SparkSession, dir: String,
                                      cells: DataFrame, k: Int): DataFrame = {
     val eps = org.apache.datasketches.kll.KllSketch.getNormalizedRankError(k, false)
-    val kllQ = udf { (blob: Array[Byte], q: Double) =>
-      org.apache.datasketches.kll.KllDoublesSketch
-        .heapify(org.apache.datasketches.memory.Memory.wrap(blob)).getQuantile(q)
-    }
     val ps = Seq(0.5, 0.9, 0.99)
     val rolled = cells
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_days"), expr(s"kll_merge_agg(sk, $k)").as("sk"))
+      .agg(count(lit(1)).as("n_days"), expr(s"kll_merge_agg_double(sk, $k)").as("sk"))
       .select(col("event_type"), col("n_days"),
         explode(array(ps.map(p =>
-          struct(lit(p).as("pct"), kllQ(col("sk"), lit(p)).as("est"))): _*))
+          struct(lit(p).as("pct"),
+            expr(s"kll_sketch_get_quantile_double(sk, ${p}D)").as("est"))): _*))
           .as("z"))
       .select(col("event_type"), col("n_days"),
         col("z.pct").as("pct"), col("z.est").as("est"))
@@ -279,7 +274,8 @@ object Sketches {
   }
 
   /** Theta-sketch SET ALGEBRA per event-type pair: estimated |A∩B| and
-    * |A\B| from per-type sketches via the native Intersection and AnotB
+    * |A\B| from per-type sketches (Spark's `theta_sketch_agg`, lgK = 12)
+    * via the native `theta_intersection` and `theta_difference`
     * operations — the operations HLL structurally lacks ([[hllOverlap]]
     * routes intersection through inclusion-exclusion with compounding
     * error and cannot express difference at all; theta sketches keep a
@@ -295,27 +291,17 @@ object Sketches {
     * ride along from the (user, type) distinct self-join, audit-only.
     */
   def thetaSetOps(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    import org.apache.datasketches.memory.Memory
-    import org.apache.datasketches.theta.{CompactSketch, SetOperation}
-    val andBounds = udf { (a: Array[Byte], b: Array[Byte], exact: Long) =>
-      val i = SetOperation.builder().buildIntersection()
-      i.intersect(CompactSketch.heapify(Memory.wrap(a)))
-      i.intersect(CompactSketch.heapify(Memory.wrap(b)))
-      val r = i.getResult
-      if (r.getLowerBound(3) <= exact && exact <= r.getUpperBound(3)) 1 else 0
-    }
-    val anotbBounds = udf { (a: Array[Byte], b: Array[Byte], exact: Long) =>
-      val r = SetOperation.builder().buildANotB().aNotB(
-        CompactSketch.heapify(Memory.wrap(a)),
-        CompactSketch.heapify(Memory.wrap(b)))
+    // Spark reads out only the estimate; the 3σ bounds come off the blob
+    val brackets = udf { (blob: Array[Byte], exact: Long) =>
+      val r = org.apache.datasketches.theta.CompactSketch.heapify(
+        org.apache.datasketches.memory.Memory.wrap(blob))
       if (r.getLowerBound(3) <= exact && exact <= r.getUpperBound(3)) 1 else 0
     }
     val tu = Tables.events(s, dir)
       .select(col("event_type"), col("user_id")).distinct()
     val sk = Tables.events(s, dir)
       .groupBy(col("event_type"))
-      .agg(expr("theta_agg(user_id)").as("sk"),
+      .agg(expr("theta_sketch_agg(user_id, 12)").as("sk"),
         countDistinct(col("user_id")).as("card"))
     val pairs = sk.select(col("event_type").as("type_a"), col("sk").as("sk_a"),
         col("card").as("card_a"))
@@ -330,9 +316,9 @@ object Sketches {
     exact.join(broadcast(pairs), Seq("type_a", "type_b"))
       .select(col("type_a"), col("type_b"), col("exact_and"),
         (col("card_a") - col("exact_and")).as("exact_anotb"),
-        andBounds(col("sk_a"), col("sk_b"), col("exact_and"))
+        brackets(expr("theta_intersection(sk_a, sk_b)"), col("exact_and"))
           .as("within_bound_and"),
-        anotbBounds(col("sk_a"), col("sk_b"),
+        brackets(expr("theta_difference(sk_a, sk_b)"),
           col("card_a") - col("exact_and")).as("within_bound_anotb"))
       .orderBy(col("type_a"), col("type_b"))
   }

@@ -131,35 +131,48 @@ final class EtlPipeline(spark: SparkSession, config: EtlConfig) {
   * (reference: __main__.py:77-97, flag override __main__.py:33-34).
   */
 object EtlCli {
+  val Usage = "usage: EtlCli run [--truncate]"
+
+  /** `Right(truncate)` for `run [--truncate]`, else the error to print
+    * above the usage line. Anything else exits 1 (argparse parity,
+    * __main__.py:77-93): a typo'd cron entry must not register as a
+    * successful run, and `run --truncat` must not append the day again.
+    */
+  def parseArgs(args: Seq[String]): Either[String, Boolean] = args match {
+    case "run" +: flags =>
+      val unknown = flags.filterNot(_ == "--truncate")
+      if (unknown.isEmpty) Right(flags.nonEmpty)
+      else Left(s"Unrecognized arguments: ${unknown.mkString(" ")}")
+    case cmd +: _ => Left(s"Unknown command: $cmd")
+    case _ => Left("Missing command")
+  }
+
   def main(args: Array[String]): Unit = {
-    args.headOption match {
-      case Some("run") =>
-        val config =
-          try {
-            val base = EtlConfig.fromEnv()
-            if (args.contains("--truncate"))
-              base.copy(writeDisposition = WriteDisposition.Truncate)
-            else base
-          } catch {
-            case e: PipelineError =>
-              System.err.println(s"Pipeline failed: ${e.getMessage}")
-              sys.exit(1)
-          }
-        val spark = GraftSession.create("graft-etl")
-        try {
-          val report = new EtlPipeline(spark, config).run()
-          println(s"Loaded ${report.rowsLoaded} rows")
-        } catch {
-          case e: PipelineError =>
-            System.err.println(s"Pipeline failed: ${e.getMessage}")
-            sys.exit(1)
-        } finally spark.stop()
-      case other =>
-        // exit 1 on unknown subcommands too — a typo'd cron entry must not
-        // register as a successful run (argparse parity, __main__.py:77-93)
-        other.foreach(cmd => System.err.println(s"Unknown command: $cmd"))
-        println("usage: EtlCli run [--truncate]")
+    val truncate = parseArgs(args.toSeq) match {
+      case Right(t) => t
+      case Left(err) =>
+        System.err.println(err)
+        println(Usage)
         sys.exit(1)
     }
+    val config =
+      try {
+        val base = EtlConfig.fromEnv()
+        if (truncate) base.copy(writeDisposition = WriteDisposition.Truncate)
+        else base
+      } catch {
+        case e: PipelineError =>
+          System.err.println(s"Pipeline failed: ${e.getMessage}")
+          sys.exit(1)
+      }
+    val spark = GraftSession.create("graft-etl")
+    try {
+      val report = new EtlPipeline(spark, config).run()
+      println(s"Loaded ${report.rowsLoaded} rows")
+    } catch {
+      case e: PipelineError =>
+        System.err.println(s"Pipeline failed: ${e.getMessage}")
+        sys.exit(1)
+    } finally spark.stop()
   }
 }

@@ -42,7 +42,6 @@ object BitextStream {
     * drifted per-batch would make margins incomparable across batches.
     */
   def stageCorpus(bSide: DataFrame, indexDir: String): Unit = {
-    graft.functions.GraftFunctions.register(bSide.sparkSession)
     bSide.select(col("vec_id"), col("embedding"))
       .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
       .write.mode("overwrite").parquet(s"$indexDir/_corpus")
@@ -58,7 +57,6 @@ object BitextStream {
             thresholdMicro: Long = 1060000L): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
       val bSide = Microbatch.staged(s, indexDir, "_corpus",
           s"BitextStream needs a staged counter-corpus — run BitextStream.stageCorpus($indexDir) first")
         .select(col("vec_id").as("b_id"), col("embedding").as("bv"),

@@ -65,7 +65,6 @@ object DeconSemStream {
             evalMod: Int = 97): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
       val cents = Similarity.loadQuantizer(s, stageDir)
       val probes = Similarity.stagedEvalProbes(s, stageDir)
       val corpus = batch

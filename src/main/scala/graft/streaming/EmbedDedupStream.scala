@@ -35,7 +35,6 @@ object EmbedDedupStream {
   def start(vectors: DataFrame, indexDir: String, pairsDir: String,
             checkpointDir: String, minScoreMicros: Long = 300000L): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
-      graft.functions.GraftFunctions.register(batch.sparkSession)
       val withNorm = batch
         .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
       // one row per (vector, band), payload carried alongside — computed

@@ -768,22 +768,20 @@ object EventsStream {
 
   /** Per-(event_type, day) KLL quantile-sketch cells for the streaming
     * value monitor — the ingest face of the batch quantile cube
-    * ([[graft.operators.Sketches.quantileRollup]]): `kll_agg` runs as
-    * complete-mode aggregation state, one O(k log n) blob per touched
-    * cell forever (an exact streaming percentile would buffer every
-    * value). Partials merge like any aggregate — KLL merge keeps the
+    * ([[graft.operators.Sketches.quantileRollup]]): Spark's
+    * `kll_sketch_agg_double` runs as complete-mode aggregation state, one
+    * O(k log n) blob per touched cell forever (an exact streaming
+    * percentile would buffer every value). Partials merge like any aggregate — KLL merge keeps the
     * rank bound under any merge tree — so a cell whose day straddles
     * triggers converges to a valid sketch of all its values, and the
-    * per-type rollup + P50/P90/P99 readout (`kll_merge_agg` +
+    * per-type rollup + P50/P90/P99 readout (`kll_merge_agg_double` +
     * quantileReadout's audit) runs downstream of the sink over
     * catalog-sized blobs, never the feed.
     */
-  def quantileCells(events: DataFrame, k: Int = 200): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
+  def quantileCells(events: DataFrame, k: Int = 200): DataFrame =
     events
       .groupBy(col("event_type"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(expr(s"kll_agg(value, $k)").as("sk"))
-  }
+      .agg(expr(s"kll_sketch_agg_double(value, $k)").as("sk"))
 
   /** Hour-of-week traffic cells for the streaming seasonal monitor: one
     * state row per (day, dow, hour) — complete-mode count state, the same

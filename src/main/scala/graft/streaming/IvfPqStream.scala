@@ -36,7 +36,6 @@ object IvfPqStream {
   def start(vectors: DataFrame, indexDir: String, checkpointDir: String): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
       val books = Similarity.PqCodebooks(Microbatch.staged(s, indexDir, "_codebooks",
         s"IvfPqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first"))
       val withNorm = batch

@@ -37,7 +37,6 @@ object IvfStream {
             checkpointDir: String): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
       val withNorm = batch
         .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
       val assign = Similarity.selectLists(withNorm, Similarity.loadQuantizer(s, indexDir), 1)

@@ -33,7 +33,6 @@ object PqStream {
   def start(vectors: DataFrame, indexDir: String, checkpointDir: String): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
       val books = Similarity.PqCodebooks(Microbatch.staged(s, indexDir, "_codebooks",
         s"PqStream needs staged codebooks — run Similarity.stagePqCodebooks($indexDir) first"))
       Microbatch.write(books.encode(Similarity.vectorCodes(batch)), indexDir, batchId)

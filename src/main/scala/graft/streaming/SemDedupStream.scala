@@ -52,7 +52,6 @@ object SemDedupStream {
             thresholdMicros: Long = 400000L): StreamingQuery =
     Microbatch.start(vectors, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
       val withNorm = batch
         .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
       val assign = Similarity.selectLists(withNorm, Similarity.loadQuantizer(s, labelsDir), 1)

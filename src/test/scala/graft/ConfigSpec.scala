@@ -71,4 +71,17 @@ class ConfigSpec extends AnyFunSuite {
       EtlConfig.fromMap(full + ("BQ_WRITE_DISPOSITION" -> "replace")))
     assert(e.getMessage.contains("replace"))
   }
+
+  test("EtlCli accepts only run [--truncate]; a mistyped flag is an error") {
+    import graft.pipeline.EtlCli.parseArgs
+    assert(parseArgs(Seq("run")) == Right(false))
+    assert(parseArgs(Seq("run", "--truncate")) == Right(true))
+    // a typo must not fall back to append and load the day twice
+    assert(parseArgs(Seq("run", "--truncat")) ==
+      Left("Unrecognized arguments: --truncat"))
+    assert(parseArgs(Seq("run", "--truncate", "extra")) ==
+      Left("Unrecognized arguments: extra"))
+    assert(parseArgs(Seq("load")) == Left("Unknown command: load"))
+    assert(parseArgs(Seq.empty).isLeft)
+  }
 }

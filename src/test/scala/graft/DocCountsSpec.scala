@@ -61,6 +61,18 @@ class DocCountsSpec extends AnyFunSuite {
     assert(hits === Seq("src/main/scala/graft/GraftSession.scala"))
   }
 
+  test("only functions/ touches the function registry in src/main") {
+    // graft's functions are installed once, when GraftSession builds the
+    // session (GraftExtensions); an operator that registers them again
+    // is a second installer that can drift from the one list
+    val hits = mainSources().collect {
+      case (p, text) if Seq("GraftFunctions.register(", "createOrReplaceTempFunction",
+          "functionRegistry").exists(text.contains) => p
+    }
+    assert(hits.filterNot(_.startsWith("src/main/scala/graft/functions/")).isEmpty,
+      s"function registry touched outside functions/: ${hits.mkString(", ")}")
+  }
+
   test("only Tables opens parquet in src/main") {
     // every read goes through Tables.parquet, which reads the schema from
     // one footer on the driver; a bare spark.read.parquet runs a Spark

@@ -2,12 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, MinHashAggregator}
-
 class FunctionsSpec extends SparkTestBase {
 
   test("dot_f is bit-identical to the HOF aggregate/zip_with form") {
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$Sf/embeddings.parquet").limit(50)
     val hof = """aggregate(zip_with(a, b, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)),
                  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"""
@@ -19,7 +16,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("dot_f null semantics: null array or length mismatch yields null") {
-    GraftFunctions.register(spark)
     val out = spark.sql(
       "SELECT dot_f(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT))) AS d")
       .head()
@@ -32,7 +28,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("dot_f rejects non-FLOAT arrays and a wrong arity at analysis") {
-    GraftFunctions.register(spark)
     // no action: spark.sql analyzes eagerly, so these fail before any job
     val wrongType = intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT dot_f(array(1, 2), array(3, 4))"))
@@ -62,35 +57,7 @@ class FunctionsSpec extends SparkTestBase {
     assert(one == many)
   }
 
-  test("MinHash aggregator: signature matches column-expression minhash semantics") {
-    // identical shingle multisets -> identical signatures; estimate ~ jaccard
-    val a = Set("a b c", "b c d", "c d e", "d e f", "e f g", "f g h")
-    val b = Set("a b c", "b c d", "c d e", "d e f", "x y z", "y z w")
-    def sig(sh: Set[String]) =
-      sh.foldLeft(MinHashAggregator.agg.zero)((buf, s) =>
-        MinHashAggregator.agg.reduce(buf, s))
-    val est = MinHashAggregator.estimateJaccard(sig(a), sig(b))
-    val trueJ = (a intersect b).size.toDouble / (a union b).size
-    assert(est >= 0.0 && est <= 1.0)
-    // 12 hashes -> crude estimate; just require the right ballpark ordering
-    assert(MinHashAggregator.estimateJaccard(sig(a), sig(a)) == 1.0)
-    assert(est < 1.0)
-    info(f"estimated=$est%.2f true=$trueJ%.2f")
-  }
-
-  test("MinHash aggregator works as a typed Dataset aggregation") {
-    import spark.implicits._
-    val ds = Seq(
-      (1L, "a b c"), (1L, "b c d"), (1L, "c d e"),
-      (2L, "a b c"), (2L, "b c d"), (2L, "c d e")).toDS()
-    val sigs = ds.groupByKey(_._1).mapValues(_._2)
-      .agg(MinHashAggregator.agg.toColumn.name("sig"))
-      .collect().toMap
-    assert(sigs(1L).sameElements(sigs(2L))) // same shingles -> same signature
-  }
-
   test("minhash_sig native expression matches the composed HOF definition") {
-    GraftFunctions.register(spark)
     import graft.operators.Dedup
     val docs = spark.read.parquet(s"$Sf/documents.parquet")
       .selectExpr("doc_id", "regexp_extract_all(lower(text), '[a-z0-9]+', 0) AS ws")
@@ -175,14 +142,7 @@ class FunctionsSpec extends SparkTestBase {
       HeavyHitter("c", 1, 0)))
   }
 
-  // LAST test in this suite on purpose: spark.sql.extensions is a static
-  // conf read at CONTEXT creation, so proving the cluster-deploy path
-  // (--conf spark.sql.extensions=graft.functions.GraftExtensions) needs a
-  // fresh SparkContext. Suites run sequentially in the forked test JVM,
-  // and the finally block restores a SparkTestBase-identical baseline
-  // session for whatever runs next.
   test("jacc_summary: bytes are the murmur3-bucket histogram, saturating at 255") {
-    GraftFunctions.register(spark)
     val b = 32
     // histogram semantics: the expression's buckets must agree with the
     // engine's own hash() (murmur3 seed 42) bucketed the composed way
@@ -218,7 +178,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("minsum_b upper-bounds the true intersection on real shingle sets") {
-    GraftFunctions.register(spark)
     val b = graft.operators.Dedup.SummaryBuckets
     val docs = graft.operators.Dedup.withShingles(spark, Sf)
       .selectExpr("doc_id", "sh", s"jacc_summary(sh, $b) AS sm")
@@ -236,7 +195,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("minsum_b null semantics: null input or length mismatch yields null") {
-    GraftFunctions.register(spark)
     assert(spark.sql("SELECT minsum_b(CAST(NULL AS BINARY), X'00')").head().isNullAt(0))
     assert(spark.sql("SELECT minsum_b(X'0102', X'01')").head().isNullAt(0))
     // byte-wise unsigned min: min(0x02,0xFF)=2, min(0x80,0x7F)=127
@@ -244,7 +202,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("top_centroids_f / nearest_centroid reject k < 1 and out-of-range ids loudly") {
-    GraftFunctions.register(spark)
     val cm = "array(array(CAST(1 AS FLOAT)))"
     val v = "array(CAST(1 AS FLOAT)), CAST(1.0 AS DOUBLE)"
     def fails(sql: String, frag: String): Unit = {
@@ -273,6 +230,24 @@ class FunctionsSpec extends SparkTestBase {
     assert(ok == Seq(7L))
   }
 
+  /** Every function graft installs; Spark's own sketches stay out. */
+  private val graftNames = Seq("dot_f", "minhash_sig", "gram_pack", "hex_pack",
+    "nearest_centroid", "top_centroids_f", "jacc_summary", "minsum_b")
+
+  test("the SparkTestBase session resolves every graft function with no install call") {
+    assert(graft.functions.GraftFunctions.All.map(_.name) === graftNames)
+    graftNames.foreach(n => assert(spark.catalog.functionExists(n), n))
+    // the same functions on a sibling session of the context
+    val sibling = spark.newSession()
+    graftNames.foreach(n => assert(sibling.catalog.functionExists(n), n))
+  }
+
+  // LAST test in this suite on purpose: spark.sql.extensions is a static
+  // conf read at CONTEXT creation, so proving the cluster-deploy path
+  // (--conf spark.sql.extensions=graft.functions.GraftExtensions) needs a
+  // fresh SparkContext. Suites run sequentially in the forked test JVM,
+  // and the finally block restores a SparkTestBase-identical baseline
+  // session for whatever runs next.
   test("GraftExtensions injects dot_f/minhash_sig via spark.sql.extensions") {
     import org.apache.spark.sql.SparkSession
     spark.stop()
@@ -292,6 +267,8 @@ class FunctionsSpec extends SparkTestBase {
       assert(dot == 11.0)
       val sig = s2.sql("SELECT minhash_sig(array('a b c'))").collect().head.getSeq[String](0)
       assert(sig.length == graft.operators.Dedup.NumHashes)
+      graftNames.foreach(n => assert(s2.catalog.functionExists(n), n))
+      assert(s2.sql("SELECT minsum_b(X'0280', X'FF7F')").head().getInt(0) == 2 + 127)
     } finally {
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
         .foreach(_.stop())

@@ -11,7 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class GramPackSpec extends AnyFunSuite with SparkTestBase {
 
   test("gram_pack is injective on 7-bit strings and matches the positional formula") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val grams = Seq(
       "abcdefgh01234567", "abcdefgh01234568", "bbcdefgh01234567",
@@ -34,7 +33,6 @@ class GramPackSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("gram_pack empty slice (lo > hi) folds to zero and nulls propagate") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT gram_pack('abcdefgh', 8, 7), gram_pack(CAST(NULL AS STRING), 0, 7)")
       .collect().head
@@ -43,7 +41,6 @@ class GramPackSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("gram_pack rejects a byte with the high bit set instead of colliding") {
-    graft.functions.GraftFunctions.register(spark)
     // 'é' is two UTF-8 bytes, both >= 0x80; masked to 7 bits they would
     // pack equal to some 7-bit gram
     val err = intercept[Exception] {
@@ -54,7 +51,6 @@ class GramPackSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("hex_pack is the base-16 positional fold and rejects non-hex bytes") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq("0123456789abcdef0123456789abcdef",
       "ffffffffffffffff0000000000000000").toDF("h")

@@ -166,4 +166,28 @@ class LocalFsSpec extends SparkTestBase {
       assert(tree(Paths.get(URI.create(stockDir))) === tree(Paths.get(URI.create(graftDir))))
     }
   }
+
+  test("an AvailableNow file-source to parquet-sink stream with a checkpoint starts no process") {
+    val root = tmpPath("stream")
+    val Seq(in, out, ckpt) = Seq("in", "out", "ckpt").map(root.resolve(_).toUri.toString)
+    spark.range(50).selectExpr("id", "id * 2 AS v").write.parquet(in)
+    val schema = spark.read.parquet(in).schema
+    def drain(): Unit = {
+      val q = spark.readStream.schema(schema).parquet(in)
+        .writeStream.format("parquet").option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start(out)
+      try q.awaitTermination() finally q.stop()
+    }
+    // two runs over one checkpoint: the second reads its offsets, commits
+    // and sink log back, then appends to each
+    val starts = processStarts {
+      drain()
+      spark.range(50, 80).selectExpr("id", "id * 2 AS v").write.mode("append").parquet(in)
+      drain()
+    }
+    assert(starts.isEmpty, s"processes started: ${starts.mkString("; ")}")
+    assert(spark.read.parquet(out).count() == 80)
+    assert(Files.exists(root.resolve("ckpt/commits/1")))
+    assert(Files.exists(root.resolve("out/_spark_metadata/1")))
+  }
 }

@@ -2127,7 +2127,6 @@ class OperatorSpec extends SparkTestBase {
     // full fixture (the arithmetic claim every oracle already rides) —
     // including a non-contiguous centroid id set (dropped-cluster shape)
     import graft.operators.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val emb = sources.Tables.spread(spark, Sf, "embeddings")
       .withColumn("vnorm", org.apache.spark.sql.functions.expr(
         "sqrt(dot_f(embedding, embedding))"))

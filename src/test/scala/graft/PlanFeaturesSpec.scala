@@ -85,7 +85,6 @@ class PlanFeaturesSpec extends SparkTestBase {
     // window or SortAggregate — at corpus scale a sort of corpus×nLists
     // scored rows is the difference between one pass and a spill storm
     import graft.operators.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$Sf/embeddings.parquet")
       .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
     val centroids = emb.filter(col("vec_id") < 16)
@@ -108,7 +107,6 @@ class PlanFeaturesSpec extends SparkTestBase {
     // row_number() window shuffled AND sorted all scored pairs, which at
     // corpus scale is the dominant cost of the whole query
     import graft.operators.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$Sf/embeddings.parquet")
       .withColumn("vnorm", expr("sqrt(dot_f(embedding, embedding))"))
     val out = Similarity.nearestInLabelCore(emb, maxBlock = 1 << 16)

@@ -166,19 +166,16 @@ class SketchesSpec extends SparkTestBase {
     // planted case: exact-mode sketches (< 4096 entries) intersect and
     // subtract EXACTLY — |[0,1000) ∩ [500,1500)| = 500, A\B = 500
     import org.apache.datasketches.memory.Memory
-    import org.apache.datasketches.theta.{CompactSketch, SetOperation}
-    graft.functions.GraftFunctions.register(spark)
-    def blob(lo: Int, hi: Int): Array[Byte] =
-      spark.range(lo, hi).selectExpr("theta_agg(id) AS sk")
-        .head().getAs[Array[Byte]](0)
-    val (a, b) = (blob(0, 1000), blob(500, 1500))
-    val i = SetOperation.builder().buildIntersection()
-    i.intersect(CompactSketch.heapify(Memory.wrap(a)))
-    i.intersect(CompactSketch.heapify(Memory.wrap(b)))
-    assert(i.getResult.getEstimate === 500.0)
-    assert(SetOperation.builder().buildANotB().aNotB(
-      CompactSketch.heapify(Memory.wrap(a)),
-      CompactSketch.heapify(Memory.wrap(b))).getEstimate === 500.0)
+    import org.apache.datasketches.theta.CompactSketch
+    val ab = spark.range(0, 1000).selectExpr("theta_sketch_agg(id, 12) AS a")
+      .crossJoin(spark.range(500, 1500).selectExpr("theta_sketch_agg(id, 12) AS b"))
+      .selectExpr("theta_intersection(a, b) AS i", "theta_difference(a, b) AS d")
+      .head()
+    for (i <- 0 to 1) {
+      val r = CompactSketch.heapify(Memory.wrap(ab.getAs[Array[Byte]](i)))
+      assert(r.getEstimate === 500.0)
+      assert(r.getLowerBound(3) === 500.0 && r.getUpperBound(3) === 500.0)
+    }
   }
 
   test("q_quantile_rollup: exact columns match, every rank-audit flag passes") {
@@ -216,7 +213,6 @@ class SketchesSpec extends SparkTestBase {
   test("kll_agg rank accuracy on a known distribution; merge keeps the bound") {
     import org.apache.datasketches.kll.{KllDoublesSketch, KllSketch}
     import org.apache.datasketches.memory.Memory
-    graft.functions.GraftFunctions.register(spark)
     val k = SparkEntry.Sketch.kllK
     val n = 20000
     val eps = KllSketch.getNormalizedRankError(k, false)
@@ -233,19 +229,19 @@ class SketchesSpec extends SparkTestBase {
           s"estimate $est for p=$p has true rank $trueRank (eps=$eps)")
       }
     }
-    val oneShot = df.selectExpr(s"kll_agg(v, $k) AS sk")
+    val oneShot = df.selectExpr(s"kll_sketch_agg_double(v, $k) AS sk")
       .head().getAs[Array[Byte]](0)
     checkBlob(oneShot)
     // per-part sketches merged must satisfy the same bound (mergeability)
     val mergedBlob = df.groupBy(col("part"))
-      .agg(expr(s"kll_agg(v, $k)").as("sk"))
-      .selectExpr(s"kll_merge_agg(sk, $k) AS sk")
+      .agg(expr(s"kll_sketch_agg_double(v, $k)").as("sk"))
+      .selectExpr(s"kll_merge_agg_double(sk, $k) AS sk")
       .head().getAs[Array[Byte]](0)
     checkBlob(mergedBlob)
     // NULL inputs are skipped, not counted
     val withNulls = spark.range(100)
       .selectExpr("CASE WHEN id % 2 = 0 THEN CAST(id AS DOUBLE) END AS v")
-      .selectExpr(s"kll_agg(v, $k) AS sk").head().getAs[Array[Byte]](0)
+      .selectExpr(s"kll_sketch_agg_double(v, $k) AS sk").head().getAs[Array[Byte]](0)
     assert(KllDoublesSketch.heapify(Memory.wrap(withNulls)).getN === 50L)
   }
 }

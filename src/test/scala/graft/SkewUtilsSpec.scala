@@ -88,7 +88,6 @@ class SkewUtilsSpec extends SparkTestBase {
     * same (vec_id, label, embedding, vnorm) shape nearestInLabelCore reads.
     */
   private def embFixture(rows: Seq[(Long, Int)]) = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     rows.map { case (id, label) =>
       val rnd = new java.util.Random(7700L + id)
@@ -173,7 +172,6 @@ class SkewUtilsSpec extends SparkTestBase {
 
   test("semanticDedup whale-cluster cap: probe-rule-exact drops, sound, exact under the cap") {
     import graft.operators.Similarity
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // cluster 1 is a whale (30 members, cap 8 -> 4 hash sub-blocks);
     // cluster 2 fits the cap (6 members) and must be bit-identical to the

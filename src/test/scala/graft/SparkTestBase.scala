@@ -5,19 +5,19 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for specs: one local session per suite, UTC, small
-  * shuffle fan-out, nanos-tolerant parquet reads, and the engine's own
-  * `file:` filesystem (`GraftSession.LocalFsConf`), so every spec writes
-  * through it.
+  * shuffle fan-out, nanos-tolerant parquet reads, and what every engine
+  * session carries (`GraftSession.install`): the engine's own `file:`
+  * filesystem and graft's SQL functions, so every spec writes through the
+  * one and calls the other without installing anything.
   */
 object SparkTestBase {
-  def builder(): SparkSession.Builder = SparkSession.builder()
+  def builder(): SparkSession.Builder = GraftSession.install(SparkSession.builder())
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
-    .config(GraftSession.LocalFsConf)
 }
 
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {

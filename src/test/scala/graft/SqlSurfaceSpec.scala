@@ -57,7 +57,6 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("registered graft functions are callable from SQL") {
-    functions.GraftFunctions.register(spark)
     Tables.registerAll(spark, Sf)
     val r = spark.sql(
       """SELECT vec_id, dot_f(embedding, embedding) AS sq_norm

@@ -1566,7 +1566,6 @@ class StreamingSpec extends SparkTestBase {
   test("streaming bitext screen: per-batch matches equal the batch operator over A-so-far") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val base = tmpDir("bitextstream")
     val all = spark.read.parquet(s"$Sf/embeddings.parquet")
       .select("vec_id", "embedding").collect()
